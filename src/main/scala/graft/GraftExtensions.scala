@@ -1,42 +1,22 @@
 package graft
 
-import graft.plans.{ArrayDotProduct, BottomKIds, CountMinAgg, WadaSnrExpr, ZOrderExpr}
+import graft.plans.ArrayOps
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** Session extension wiring: makes the native functions available to
-  * any session via
+/** Session extension wiring: makes the native functions
+  * ([[ArrayOps.sqlFunctions]]) available to any session via
   * `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`); per-session
-  * registration is also available as `plans.ArrayOps.register(spark)`.
+  * registration of the same list is `plans.ArrayOps.register(spark)`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDotProduct].getName, "array_dot"),
-      (exprs: Seq[Expression]) => ArrayDotProduct(exprs(0), exprs(1))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("wada_snr"),
-      new ExpressionInfo(classOf[WadaSnrExpr].getName, "wada_snr"),
-      (exprs: Seq[Expression]) => WadaSnrExpr(exprs.head)
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("bottom_k_ids"),
-      new ExpressionInfo(classOf[BottomKIds].getName, "bottom_k_ids"),
-      (exprs: Seq[Expression]) => BottomKIds(exprs(0), exprs(1), exprs(2))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("count_min"),
-      new ExpressionInfo(classOf[CountMinAgg].getName, "count_min"),
-      (exprs: Seq[Expression]) => CountMinAgg(exprs(0), exprs(1), exprs(2))
-    ))
-    ext.injectFunction((
-      FunctionIdentifier("z_order"),
-      new ExpressionInfo(classOf[ZOrderExpr].getName, "z_order"),
-      (exprs: Seq[Expression]) => ZOrderExpr(exprs(0), exprs(1))
-    ))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    ArrayOps.sqlFunctions.foreach { case (name, builder) =>
+      ext.injectFunction((
+        FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name),
+        builder))
+    }
 }

@@ -418,7 +418,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * The occurrence stream IS computed twice (agg branch + probe
     * branch — column pruning makes the two subtrees structurally
     * different, so ReuseExchange cannot collapse them). Measured
-    * (FirstOccAB, sf0.1, 32-word windows, min-of-3): window 0.58 s,
+    * (NOTES.md Round 15, sf0.1, 32-word windows, min-of-3): window 0.58 s,
     * this 0.54 s, shared-repartition 0.50 s, localCheckpoint 0.39 s —
     * the double compute costs ≈0.1 s at bench scale, and the two
     * alternatives that remove it either add an unreused exchange at
@@ -934,9 +934,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       val nonce = java.util.UUID.randomUUID.toString.replace("-", "")
       val tblA = s"graft_verify_docs_a_$nonce"
       val tblB = s"graft_verify_docs_b_$nonce"
-      val buckets = spark.conf.getOption("spark.graft.verify.buckets")
-        .map(_.toInt)
-        .getOrElse(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
       graft.layout.Layout.writeBucketed(
         docsA.select(col(idCol), col("xs")), tblA, idCol, buckets)
       if (!same) graft.layout.Layout.writeBucketed(

@@ -107,7 +107,7 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     * [[simHashPairs128]] (the committed ≥10⁸-doc configuration —
     * wider fingerprints move the floor itself).
     *
-    * MEASURED recall of the capped posture (tools/SimHashRecallProbe,
+    * MEASURED recall of the capped posture (NOTES.md, Round 12 #4:
     * capped-vs-forced-exact at maxHamming=7, cap=512): 99.33% at sf1,
     * 99.09% at sf10, strict subset both times; adversarial
     * one-hot-bucket floor 27.4% (SimHashRecallSpec). Under the r13
@@ -512,7 +512,7 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       "__id", "__fp", maxHamming, maxPerBucket)
       .select(col("a"), col("b"))
     // Components are computed at the REP level only (one node per
-    // distinct fingerprint — DhashGraphProbe r13: 579 reps for 500k
+    // distinct fingerprint — NOTES.md r13 dhash probe: 579 reps for 500k
     // images), then every member INHERITS its rep's label through one
     // linear join. The pre-r13 formulation unioned the ~corpus-sized
     // member→rep star edges into the generic clusterize, which (a)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpr}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
 
 /** Catalyst-native expressions for the similarity hot path (SURVEY §7.3
   * tier (b): custom Expression where built-ins interpret lambdas).
@@ -711,26 +711,24 @@ object ArrayOps {
 
   def wada_snr_native(c: Column): Column = toColumn(WadaSnrExpr(toExpr(c)))
 
-  /** Register `array_dot` / `wada_snr` for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "array_dot", exprs => ArrayDotProduct(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wada_snr", exprs => WadaSnrExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottom_k_ids", exprs => BottomKIds(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "count_min", exprs => CountMinAgg(exprs(0), exprs(1), exprs(2)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "z_order", exprs => ZOrderExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "script_counts", exprs => ScriptCountsExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "fold_diacritics", exprs => FoldDiacriticsExpr(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => SortedIntersectCount(exprs(0), exprs(1)), "built-in")
-  }
+  /** Every native function callable from SQL, by name. The one list
+    * both install paths read: [[register]] (one session) and
+    * [[graft.GraftExtensions]] (`spark.sql.extensions`).
+    */
+  val sqlFunctions: Seq[(String, FunctionRegistry.FunctionBuilder)] = Seq(
+    ("array_dot", e => ArrayDotProduct(e(0), e(1))),
+    ("wada_snr", e => WadaSnrExpr(e.head)),
+    ("bottom_k_ids", e => BottomKIds(e(0), e(1), e(2))),
+    ("count_min", e => CountMinAgg(e(0), e(1), e(2))),
+    ("z_order", e => ZOrderExpr(e(0), e(1))),
+    ("script_counts", e => ScriptCountsExpr(e.head)),
+    ("fold_diacritics", e => FoldDiacriticsExpr(e.head)),
+    ("sorted_intersect_count", e => SortedIntersectCount(e(0), e(1))))
+
+  /** Register [[sqlFunctions]] for SQL use on a session. */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "built-in")
+    }
 }

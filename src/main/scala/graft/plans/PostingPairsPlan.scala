@@ -166,7 +166,10 @@ case class PostingPairsExec(
               }
             }
             if (!overflow && d >= 2) { i = 0; j = 1; return true }
-            if (!groupDone && !havePending) return false
+            // input ended inside a skipped (overflowing) group: drop its
+            // buffer so a repeated hasNext cannot re-enter the stale
+            // pair cursor
+            if (!groupDone && !havePending) { d = 0; return false }
           }
           false // unreachable
         }

@@ -28,7 +28,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * idempotent).
   *
   * `fn` callers remain self-preparing (build-if-stale on first read),
-  * so Verify/IsoBench stay correct standalone; Bench additionally runs
+  * so Verify/QTime stay correct standalone; Bench additionally runs
   * the builds in its untimed prepare phase.
   */
 object FixtureCache {

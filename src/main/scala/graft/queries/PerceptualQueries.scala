@@ -37,7 +37,7 @@ object PerceptualQueries {
     * actually costs at scale: parquet scan → decode → dHash → band
     * join. Same pattern as [[LayoutQueries.compactionFixture]]:
     * signature = documents.parquet listing, stale fixture rebuilt,
-    * `fn` self-prepares so Verify/IsoBench stay correct standalone.
+    * `fn` self-prepares so Verify/QTime stay correct standalone.
     */
   private[graft] def payloadFixture(
       s: org.apache.spark.sql.SparkSession, dir: String): String =

@@ -54,7 +54,7 @@ final case class QueryDef(
       * layout the query exists to read). Bench runs every prepare at
       * the bench scale factor before the timed loop, so the recorded
       * time measures the query, not its fixture write. `fn` must still
-      * self-prepare idempotently (skip-if-built) so Verify/IsoBench
+      * self-prepare idempotently (skip-if-built) so Verify/QTime
       * stay correct standalone.
       */
     prepare: Option[(SparkSession, String) => Unit] = None

@@ -1,8 +1,5 @@
 package graft.signal
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.udf
-
 /** Signal-domain scalar/generator operators (SURVEY §2.8), implemented
   * as pure deterministic Scala so they run identically on every
   * executor with no model downloads. Heavy per-row work stays inside a
@@ -113,12 +110,6 @@ object Signal {
     val sigEng = eng * factor / (1.0 + factor)
     10.0 * math.log10(sigEng / noiseEng)
   }
-
-  val wadaSnrUdf = udf((wav: Seq[Double]) => if (wav == null) null else {
-    java.lang.Double.valueOf(wadaSnr(wav.toArray))
-  })
-
-  def wada_snr(wav: Column): Column = wadaSnrUdf(wav)
 
   // ------------------------------------------------------------------
   // G1 — VAD split. Deterministic energy-threshold detector with the

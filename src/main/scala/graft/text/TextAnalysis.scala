@@ -377,8 +377,8 @@ object TextAnalysis {
     val stride = maxTokens - overlap
     // ONE compiled loop per document (split once, StringBuilder per
     // chunk) — ~4× the interpreted transform/slice/concat_ws HOF chain
-    // it replaces at sf0.1 (MicroBench A-B); output is field-for-field
-    // identical, including the HOF chain's null-text row
+    // it replaces at sf0.1 (MicroBench A-B, NOTES.md); output is
+    // field-for-field identical, including the HOF chain's null-text row
     // (chunk_idx 0, chunk '', n_tok null) and its ceil/clamp shapes.
     val chunkUdf = udf { (text: String) =>
       if (text == null) Array((0L, "", null: java.lang.Long))
@@ -716,12 +716,14 @@ object TextAnalysis {
   ): DataFrame = {
     // the join runs on 64-bit FNV gram hashes, not gram strings: the
     // corpus side never BUILDS a string per bigram position (measured
-    // half the tally at sf0.1 — LmBucketsAB: 0.85 → 0.41 s), join keys
+    // half the tally at sf0.1 — NOTES.md r15: 0.85 → 0.41 s), join keys
     // are 8 bytes, and the model side hashes once (model-sized). Hash
     // layout matches hashing the ngramsUdf string (gramHashesUdf doc);
     // an aliasing collision (~n²/2^64) is the same vanishing
     // perturbation class every shingle-hash path carries.
-    val hashedModel = model.select(fnvUdf(col("bigram")).as("__gh"), col("c2"))
+    // c2 widened to long: the broadcast path reads it with getLong
+    val hashedModel = model.select(
+      fnvUdf(col("bigram")).as("__gh"), col("c2").cast("long").as("c2"))
     // ONE model scan (round 16): the normalizing total used to be a
     // separate scalar aggregate over the model subtree, so the model
     // evaluated twice per call. When the model broadcasts (the default)

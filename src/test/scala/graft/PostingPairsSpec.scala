@@ -52,6 +52,36 @@ class PostingPairsSpec extends SparkTestBase {
     assert(pairCount(Long.MaxValue) == 4L)
   }
 
+  test("iterator stays exhausted when the input ends inside a skipped " +
+    "group (repeated hasNext, next throws)") {
+    import graft.plans.PostingPairsExec
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.LongType
+    val maxDf = 3L
+    // shingle 1 emits one pair; the LAST group holds maxDf + 1 postings
+    val postings = (Seq((1L, 1L, 1L), (1L, 2L, 1L)) ++
+      (1L to maxDf + 1).map(id => (2L, id, 1L))).toDF("shingle", "id", "n")
+    // one partition already in the exec's required (shingle, id) order,
+    // so the test drives the exec's own partition iterator
+    val child = postings.repartition(1).sortWithinPartitions("shingle", "id")
+      .queryExecution.executedPlan
+    val Seq(sh, id, n) = child.output
+    val out = Seq("a", "b", "n_a", "n_b")
+      .map(c => AttributeReference(c, LongType, nullable = false)())
+    val probes = PostingPairsExec(sh, id, n, maxDf, out, child).execute()
+      .mapPartitions { it =>
+        var emitted = 0
+        while (it.hasNext) { it.next(); emitted += 1 }
+        val again = Seq.fill(3)(it.hasNext)
+        val nextThrows =
+          try { it.next(); false }
+          catch { case _: NoSuchElementException => true }
+        Iterator((emitted, again, nextThrows))
+      }
+      .collect().toSeq
+    assert(probes == Seq((1, Seq(false, false, false), true)))
+  }
+
   test("string ids: binary order, values copied out of reused rows") {
     val postings = Seq(
       ("s", "docB", 2L), ("s", "docA", 3L), ("s", "docC", 1L)

@@ -1,7 +1,9 @@
 package graft
 
 import graft.text.{Sampling, TextAnalysis}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 class SamplingSpec extends SparkTestBase {
   import spark.implicits._
@@ -184,10 +186,15 @@ class SamplingSpec extends SparkTestBase {
       (2L, "dogs bark at the moon"),  // 4 bigrams, 0 hits → drop
       (3L, "word")                    // 0 bigrams → drop
     ).toDF("doc_id", "text")
-    val got = TextAnalysis
-      .lmQuality(docs, "doc_id", "text", model, minHitPermille = 500)
+    def run(m: DataFrame) = TextAnalysis
+      .lmQuality(docs, "doc_id", "text", m, minHitPermille = 500)
       .orderBy("doc_id")
       .collect()
+    val got = run(model)
+    // an int-typed c2 (a hand-built or external model) gives the same rows
+    val intModel = model.withColumn("c2", col("c2").cast("int"))
+    assert(intModel.schema("c2").dataType == IntegerType)
+    assert(run(intModel).toSeq == got.toSeq)
     assert(got(0).getAs[Long]("n_bigrams") == 5L)
     assert(got(0).getAs[Long]("n_hits") == 4L)
     assert(got(0).getAs[Long]("n_oov") == 1L)

@@ -158,20 +158,44 @@ class ScaleSpec extends SparkTestBase {
   }
 
   test("GraftExtensions injects native SQL functions") {
-    val s3 = SparkSession.builder()
-      .master("local[2]")
-      .appName("ext-test")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
-    // note: getOrCreate may return the shared session; register directly
-    // if extensions didn't apply (session reuse), the API contract is
-    // exercised either way
-    graft.plans.ArrayOps.register(s3)
-    val r = s3.sql("SELECT array_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head()
-    assert(r.getDouble(0) == 11.0)
-    // z_order(3, 5) = interleave(011, 101) = 100111 = 39
-    val z = s3.sql("SELECT z_order(3L, 5L) AS z").head()
-    assert(z.getLong(0) == 39L)
+    // A FRESH session whose only function source is the extension:
+    // getOrCreate would otherwise hand back the shared suite session.
+    val shared = spark
+    val active = SparkSession.getActiveSession
+    val default = SparkSession.getDefaultSession
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val s3 = SparkSession.builder()
+        .withExtensions(new GraftExtensions)
+        .getOrCreate()
+      assert(s3 ne shared)
+      val r = s3.sql(
+        """SELECT array_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d,
+          |  z_order(3L, 5L) AS z,
+          |  wada_snr(array(0.1D, -0.5D, 0.9D, -0.2D)) AS snr,
+          |  script_counts('ab 1') AS sc,
+          |  fold_diacritics('café') AS fd,
+          |  sorted_intersect_count(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS sic
+          |""".stripMargin).head()
+      assert(r.getDouble(0) == 11.0)
+      // z_order(3, 5) = interleave(011, 101) = 100111 = 39
+      assert(r.getLong(1) == 39L)
+      assert(r.getDouble(2) ==
+        graft.signal.Signal.wadaSnr(Array(0.1, -0.5, 0.9, -0.2)))
+      assert(r.getSeq[Long](3) == Seq(2L, 0L, 0L, 0L, 0L, 0L, 0L, 0L, 1L, 1L, 0L))
+      assert(r.getString(4) == "cafe")
+      assert(r.getLong(5) == 2L)
+      val agg = s3.sql(
+        """SELECT bottom_k_ids(CAST(id AS STRING), 's', 2) AS bk,
+          |  count_min(id, 2, 8) AS cm
+          |FROM range(5)""".stripMargin).head()
+      assert(agg.getSeq[String](0).size == 2)
+      // each of the 2 sketch rows counts all 5 keys
+      assert(agg.getSeq[Long](1).sum == 10L)
+    } finally {
+      active.foreach(SparkSession.setActiveSession)
+      default.foreach(SparkSession.setDefaultSession)
+    }
   }
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * so the pair shares band (0,1) alone — if either member ranks past
   * the 512-print cap in that bucket, the pair is lost. This is the
   * measured number the simHashPairs scaladoc cites; the corpus-level
-  * sf1/sf10 recall lives in NOTES.md (tools/SimHashRecallProbe).
+  * sf1/sf10 recall lives in NOTES.md (Round 12 #4).
   */
 class SimHashRecallSpec extends SparkTestBase {
   import spark.implicits._

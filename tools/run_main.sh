@@ -1,7 +1,7 @@
 #!/bin/sh
 # Run a graft main directly on the compiled classes + Spark jars,
 # bypassing sbt (safe to use while an sbt test run holds the lock).
-# Usage: tools/run_main.sh graft.tools.CurationProfile [args...]
+# Usage: tools/run_main.sh graft.tools.QTime <q1,q2,...> [sfDir]
 set -e
 cd "$(dirname "$0")/.."
 SCALA_LIB=$(find ~/.sbt ~/.cache/coursier -name 'scala-library-2.13*.jar' 2>/dev/null | head -1)
