@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.plans.GramHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -602,26 +603,6 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       explode(array_distinct(
         graft.text.CorpusAudit.gramsUdf(n)(col(textCol)))).as("shingle"))
 
-  /** Distinct hashed word n-gram shingles of one document as a sorted
-    * primitive array. Since round 16 this is the NATIVE codegen
-    * expression [[graft.plans.GramHashesExpr]] (name kept — call sites
-    * apply it as before): the former Scala UDF paid the UDF
-    * String-boxing seam, an Array[Long] → Catalyst converter per row,
-    * and a broken whole-stage-codegen span on the engine's single
-    * most-traversed per-row pass (every minhash / ngram-pair /
-    * containment corpus path). FNV-1a 64-bit over the window's UTF-16
-    * chars with ' ' separators — the hash LAYOUT is bit-identical to
-    * the UDF's (the expression takes a raw-byte fast path on ASCII
-    * text, provably equal, and replays the exact char loop otherwise),
-    * so every downstream hash join and oracle replay is unchanged.
-    * Collisions (~n²/2^64) can only merge two shingles, which the
-    * downstream exact set-arithmetic absorbs as a vanishingly small
-    * Jaccard perturbation.
-    */
-  private[graft] def shingleHashesUdf(
-      n: Int): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    c => graft.plans.GramHash.shingle_hashes(c, n)
-
   /** Exact n-gram Jaccard similar pairs (a<b, J ≥ minJaccard) via a
     * shingle inverted index: postings shuffle ONCE into shingle-
     * clustered, (shingle, id)-sorted runs and every co-occurring pair
@@ -660,7 +641,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     // gives a < b by construction, exactly as the join's filter did.
     val ex = df
       .filter(col(idCol).isNotNull)
-      .select(col(idCol), shingleHashesUdf(n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
       .select(col(idCol), size(col("xs")).cast("long").as("n_sh"),
         explode(col("xs")).as("shingle"))
     val pairs = graft.plans.PostingPairs
@@ -727,10 +708,10 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       maxDf: Long = 1000L
   ): DataFrame = {
     val t = minJaccard
-    // xs is sorted ascending + distinct (shingleHashesUdf) — the global
+    // xs is sorted ascending + distinct (shingle_hashes) — the global
     // prefix order and the merge-intersect both rely on it
     val docs = df
-      .select(col(idCol), shingleHashesUdf(n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
       .filter(size(col("xs")) > 0)
       .cache()
     // prefix tokens carry their 0-based POSITION and the doc's set
@@ -1070,7 +1051,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   ): DataFrame = {
     val t = minContainment
     val docs = df
-      .select(col(idCol), shingleHashesUdf(n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
       .filter(size(col("xs")) > 0)
       .cache()
     val withSz = docs.withColumn("sz", size(col("xs")).cast("long"))
@@ -1210,7 +1191,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       maxDf: Long = 1000L
   ): ContainmentHistory = {
     val histDocs = histDf
-      .select(col(idCol), shingleHashesUdf(n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
       .filter(size(col("xs")) > 0)
       .cache()
     // index: EVERY posting of the HISTORY (containing) side
@@ -1248,7 +1229,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     val t = minContainment
     val idCol = hist.idCol
     val newDocs = newDf
-      .select(col(idCol), shingleHashesUdf(hist.n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), hist.n).as("xs"))
       .filter(size(col("xs")) > 0)
       .cache()
     // probe: prefix postings of the NEW (contained-candidate) side
@@ -1371,22 +1352,14 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     sh.groupBy(idCol).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH banding over MinHash signatures: a pair agreeing on any band
-    * becomes a candidate; candidates are then verified with exact
-    * Jaccard. bands*rowsPerBand hash functions total. Returns verified
-    * pairs (a<b, jaccard ≥ minJaccard).
+  /** Full MinHash signature of a hashed-shingle array column under
+    * the first `numHashes` permutations of [[perm]] (shared by the
+    * batch LSH join and the streaming bucket-state face); the native
+    * [[graft.plans.MinHashSigExpr]] evaluates it.
     */
-  /** Full MinHash signature of a hashed-shingle set (shared by the
-    * batch LSH join and the streaming bucket-state face). Since round
-    * 16 a NATIVE codegen expression ([[graft.plans.MinHashSigExpr]] —
-    * name kept, applies as before): the UDF seam converted the 8-byte
-    * hash array to a boxed Seq[Long] per corpus row and back.
-    * Signature values bit-identical (same Long modular arithmetic).
-    */
-  private[graft] def minHashSigUdf(numHashes: Int)
-      : org.apache.spark.sql.Column => org.apache.spark.sql.Column = {
+  private[graft] def minHashSig(numHashes: Int): Column => Column = {
     val coeffs = (0 until numHashes).map(perm)
-    c => graft.plans.GramHash.minhash_sig(
+    c => GramHash.minhash_sig(
       c, coeffs.map(_._1).toArray, coeffs.map(_._2).toArray, MinHashP)
   }
 
@@ -1413,6 +1386,11 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     c
   }
 
+  /** LSH banding over MinHash signatures: a pair agreeing on any band
+    * becomes a candidate; candidates are then verified with exact
+    * Jaccard. bands*rowsPerBand hash functions total. Returns verified
+    * pairs (a<b, jaccard ≥ minJaccard).
+    */
   def minHashLshPairs(
       df: DataFrame,
       idCol: String,
@@ -1424,24 +1402,24 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   ): DataFrame = {
     val numHashes = bands * rowsPerBand
     // Explode-free: the doc's distinct hashed-shingle SET rides as one
-    // array column (built by the compiled shingleHashesUdf loop, not an
+    // array column (built by the compiled shingle_hashes loop, not an
     // interpreted HOF chain); signatures are per-row primitive loops
     // and exact verification is array_intersect on the (few) candidate
     // pairs. The only shuffles are the tiny band-bucket join and the
     // candidate lookups.
     // cache: tiny (|docs| × shingle-count longs) and referenced by three
-    // plan branches — without it Spark recomputes the UDF per branch
+    // plan branches — without it Spark recomputes the hashes per branch
     // (no cross-branch CSE)
     val base = df
-      .select(col(idCol), shingleHashesUdf(n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
       .filter(size(col("xs")) > 0)
       .cache()
-    // one primitive-loop UDF call per doc beats numHashes interpreted
+    // one primitive-loop signature per doc beats numHashes interpreted
     // HOF lambdas per element (~80×32 boxed evals per row)
-    val sigUdf = minHashSigUdf(numHashes)
+    val sig = minHashSig(numHashes)
     val bandCols = bandKeyStructs(bands, rowsPerBand)
     val buckets = base
-      .select(col(idCol), sigUdf(col("xs")).as("sig"))
+      .select(col(idCol), sig(col("xs")).as("sig"))
       .select(col(idCol), explode(array(bandCols: _*)).as("bk"))
       .select(col(idCol), col("bk.band").as("band"), col("bk.h").as("h"))
       .cache() // bands × |docs| rows of three longs — the self-join
@@ -1502,13 +1480,13 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       minJaccard: Double = 0.5
   ): DataFrame = {
     val numHashes = bands * rowsPerBand
-    val sigUdf = minHashSigUdf(numHashes)
+    val sig = minHashSig(numHashes)
     def prep(df: DataFrame) = df
-      .select(col(idCol), shingleHashesUdf(n)(col(textCol)).as("xs"))
+      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
       .filter(size(col("xs")) > 0)
       .cache()
     def buckets(base: DataFrame) = base
-      .select(col(idCol), sigUdf(col("xs")).as("sig"))
+      .select(col(idCol), sig(col("xs")).as("sig"))
       .select(col(idCol), explode(array(bandKeyStructs(bands, rowsPerBand): _*)).as("bk"))
       .select(col(idCol), col("bk.band").as("band"), col("bk.h").as("h"))
     val nb = prep(newDf)

@@ -1,8 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, SortOrder}
-import org.apache.spark.sql.graft.bridge.{ofRows, toExprEager}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.graft.bridge.{ofRows, sortOrderOn}
 import org.apache.spark.sql.types.LongType
 
 /** Distributed global row numbering — `row_number() OVER (ORDER BY
@@ -37,23 +37,9 @@ object GlobalSeq {
       order: Seq[Column],
       seqName: String): DataFrame = {
     val spark = df.sparkSession
-    graft.plans.GlobalSeqPlan.ensureRegistered(spark)
+    graft.GraftExtensions.install(spark)
     val plan = df.queryExecution.analyzed
-    def resolve(c: Column): org.apache.spark.sql.catalyst.expressions.Expression = {
-      val e = toExprEager(spark, c)
-      e.transformUp {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          plan.output.find(a => spark.sessionState.conf.resolver(a.name, u.name))
-            .getOrElse(throw new IllegalArgumentException(
-              s"column ${u.name} not in ${plan.output.map(_.name).mkString(",")}"))
-      }
-    }
-    val sortOrders = order.map { c =>
-      resolve(c) match {
-        case so: SortOrder => so
-        case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
-      }
-    }
+    val sortOrders = order.map(sortOrderOn(spark, plan, _))
     val seqAttr = AttributeReference(seqName, LongType, nullable = false)()
     ofRows(spark, graft.plans.GlobalSeqNode(sortOrders, seqAttr, plan))
   }

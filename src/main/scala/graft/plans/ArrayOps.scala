@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpr}
-import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import scala.collection.immutable.ArraySeq
 
 /** Catalyst-native expressions for the similarity hot path (SURVEY §7.3
   * tier (b): custom Expression where built-ins interpret lambdas).
@@ -287,7 +288,7 @@ case class QuantizeExpr(child: Expression) extends UnaryExpression {
   */
 case class SignLshExpr(
     child: Expression,
-    planes: Array[Long],
+    planes: ArraySeq.ofLong, // structural ==, unlike Array; loops read unsafeArray
     tables: Int,
     bits: Int,
     dimCap: Int)
@@ -307,6 +308,7 @@ case class SignLshExpr(
     val n = v.numElements()
     if (n > dimCap) throw new IllegalArgumentException(
       s"sign_lsh: vector has $n dims > plane cap $dimCap — raise dimCap")
+    val pl = planes.unsafeArray
     val q = new Array[Long](n)
     var j = 0
     while (j < n) {
@@ -323,7 +325,7 @@ case class SignLshExpr(
         val base = (t * bits + i) * dimCap
         var s = 0L
         j = 0
-        while (j < n) { s += q(j) * planes(base + j); j += 1 }
+        while (j < n) { s += q(j) * pl(base + j); j += 1 }
         if (s >= 0L) bucket |= (1L << i)
         i += 1
       }
@@ -335,7 +337,7 @@ case class SignLshExpr(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
-      val pl = ctx.addReferenceObj("lshPlanes", planes, "long[]")
+      val pl = ctx.addReferenceObj("lshPlanes", planes.unsafeArray, "long[]")
       val n = ctx.freshName("n")
       val q = ctx.freshName("q")
       val x = ctx.freshName("x")
@@ -385,7 +387,7 @@ case class SignLshExpr(
   */
 case class JlProjectExpr(
     child: Expression,
-    planes: Array[Long],
+    planes: ArraySeq.ofLong, // structural ==, unlike Array; loops read unsafeArray
     outDims: Int,
     dimCap: Int)
     extends UnaryExpression {
@@ -404,6 +406,7 @@ case class JlProjectExpr(
     val n = v.numElements()
     if (n > dimCap) throw new IllegalArgumentException(
       s"jl_project: vector has $n dims > plane cap $dimCap — raise dimCap")
+    val pl = planes.unsafeArray
     val q = new Array[Long](n)
     var j = 0
     while (j < n) {
@@ -417,7 +420,7 @@ case class JlProjectExpr(
       val base = i * dimCap
       var s = 0L
       j = 0
-      while (j < n) { s += q(j) * planes(base + j); j += 1 }
+      while (j < n) { s += q(j) * pl(base + j); j += 1 }
       out(i) = s
       i += 1
     }
@@ -426,7 +429,7 @@ case class JlProjectExpr(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
-      val pl = ctx.addReferenceObj("jlPlanes", planes, "long[]")
+      val pl = ctx.addReferenceObj("jlPlanes", planes.unsafeArray, "long[]")
       val n = ctx.freshName("n")
       val q = ctx.freshName("q")
       val x = ctx.freshName("x")
@@ -477,7 +480,7 @@ case class JlProjectExpr(
   */
 case class PqEncodeExpr(
     child: Expression,
-    flat: Array[Double],
+    flat: ArraySeq.ofDouble, // structural ==, unlike Array; loops read unsafeArray
     m: Int,
     k: Int,
     sd: Int)
@@ -494,6 +497,7 @@ case class PqEncodeExpr(
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
+    val cb = flat.unsafeArray
     val out = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -506,7 +510,7 @@ case class PqEncodeExpr(
         var d = 0.0
         var j = 0
         while (j < sd) {
-          val t = v.getFloat(vbase + j).toDouble - flat(cbase + j)
+          val t = v.getFloat(vbase + j).toDouble - cb(cbase + j)
           d += t * t
           j += 1
         }
@@ -521,7 +525,7 @@ case class PqEncodeExpr(
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
-      val cb = ctx.addReferenceObj("pqCodebooks", flat, "double[]")
+      val cb = ctx.addReferenceObj("pqCodebooks", flat.unsafeArray, "double[]")
       val out = ctx.freshName("out")
       val s = ctx.freshName("s")
       val c = ctx.freshName("c")
@@ -662,12 +666,14 @@ object ArrayOps {
     */
   def sign_lsh_buckets(
       v: Column, planes: Array[Long], tables: Int, bits: Int, dimCap: Int): Column =
-    toColumn(SignLshExpr(toExpr(v), planes, tables, bits, dimCap))
+    toColumn(SignLshExpr(
+      toExpr(v), new ArraySeq.ofLong(planes.clone()), tables, bits, dimCap))
 
   /** Native JL integer projection (see [[JlProjectExpr]]). */
   def jl_project(
       v: Column, planes: Array[Long], outDims: Int, dimCap: Int): Column =
-    toColumn(JlProjectExpr(toExpr(v), planes, outDims, dimCap))
+    toColumn(JlProjectExpr(
+      toExpr(v), new ArraySeq.ofLong(planes.clone()), outDims, dimCap))
 
   /** Native PQ encode: array<float> → array<int> of `m` codes under
     * `codebooks(s)(c)(d)`. The codebook snapshot is flattened at call
@@ -687,7 +693,7 @@ object ArrayOps {
       }
       s += 1
     }
-    toColumn(PqEncodeExpr(toExpr(v), flat, m, k, sd))
+    toColumn(PqEncodeExpr(toExpr(v), new ArraySeq.ofDouble(flat), m, k, sd))
   }
 
   /** Native k-means assignment (IVF): the m=1 PQ-encode special case —
@@ -710,25 +716,4 @@ object ArrayOps {
   }
 
   def wada_snr_native(c: Column): Column = toColumn(WadaSnrExpr(toExpr(c)))
-
-  /** Every native function callable from SQL, by name. The one list
-    * both install paths read: [[register]] (one session) and
-    * [[graft.GraftExtensions]] (`spark.sql.extensions`).
-    */
-  val sqlFunctions: Seq[(String, FunctionRegistry.FunctionBuilder)] = Seq(
-    ("array_dot", e => ArrayDotProduct(e(0), e(1))),
-    ("wada_snr", e => WadaSnrExpr(e.head)),
-    ("bottom_k_ids", e => BottomKIds(e(0), e(1), e(2))),
-    ("count_min", e => CountMinAgg(e(0), e(1), e(2))),
-    ("z_order", e => ZOrderExpr(e(0), e(1))),
-    ("script_counts", e => ScriptCountsExpr(e.head)),
-    ("fold_diacritics", e => FoldDiacriticsExpr(e.head)),
-    ("sorted_intersect_count", e => SortedIntersectCount(e(0), e(1))))
-
-  /** Register [[sqlFunctions]] for SQL use on a session. */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    sqlFunctions.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
 }

@@ -1,7 +1,6 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, JoinedRow, SortOrder, SpecificInternalRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
@@ -102,11 +101,4 @@ object GlobalSeqStrategy extends SparkStrategy {
       GlobalSeqExec(order, attr, planLater(child)) :: Nil
     case _ => Nil
   }
-}
-
-object GlobalSeqPlan {
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GlobalSeqStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GlobalSeqStrategy
 }

@@ -11,12 +11,13 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpr}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import scala.collection.immutable.ArraySeq
 
 /** Word n-gram FNV-1a 64-bit hashes of one document as a NATIVE
   * codegen expression — the round-16 replacement for the Scala UDFs
-  * `Dedup.shingleHashesUdf` (distinctSorted = true: dedup set
-  * arithmetic) and `TextAnalysis.gramHashesUdf` (distinctSorted =
-  * false: one hash per position, duplicates kept — the counting twin).
+  * behind [[GramHash.shingle_hashes]] (distinctSorted = true: dedup set
+  * arithmetic) and [[GramHash.gram_hashes]] (distinctSorted = false:
+  * one hash per position, duplicates kept — the counting twin).
   * These are the single most-traversed per-row passes in the engine
   * (every minhash / ngram-pair / containment / LM-tally / decontam
   * corpus pass); the UDF form paid the UDF String-boxing seam, an
@@ -166,8 +167,8 @@ object GramHashesExpr {
 /** FNV-1a 64-bit of one string's UTF-16 chars — the model-side twin of
   * [[GramHashesExpr]] (hash a reference relation's gram strings once,
   * model-sized, so corpus-side joins run on 8-byte keys). Replaces
-  * `TextAnalysis.fnvUdf`; same ASCII byte fast path / exact char-loop
-  * fallback, values bit-identical.
+  * the former fnv Scala UDF; same ASCII byte fast path / exact
+  * char-loop fallback, values bit-identical.
   */
 case class FnvHashExpr(child: Expression) extends UnaryExpression {
 
@@ -217,7 +218,7 @@ object FnvHashExpr {
 }
 
 /** Full MinHash signature of a hashed-shingle set as ONE compiled
-  * primitive loop — replaces `Dedup.minHashSigUdf`, whose Scala-UDF
+  * primitive loop — replaces the former MinHash Scala UDF, whose
   * seam converted the 8-byte hash array to a boxed Seq[Long] per
   * corpus row (and back) on every minhash/LSH path. Arithmetic is the
   * UDF's exactly: per permutation i, h = ((((x % p)+p if <0) · aᵢ) +
@@ -225,7 +226,11 @@ object FnvHashExpr {
   * xm·aᵢ ≪ 2⁶³, no overflow). An empty set yields Long.MaxValue per
   * slot, as the UDF did.
   */
-case class MinHashSigExpr(child: Expression, as: Array[Long], bs: Array[Long], p: Long)
+case class MinHashSigExpr(
+    child: Expression,
+    as: ArraySeq.ofLong, // structural ==, unlike Array; loops read unsafeArray
+    bs: ArraySeq.ofLong,
+    p: Long)
     extends UnaryExpression {
 
   override def nullIntolerant: Boolean = true
@@ -238,12 +243,12 @@ case class MinHashSigExpr(child: Expression, as: Array[Long], bs: Array[Long], p
   }
 
   override def nullSafeEval(input: Any): Any =
-    MinHashSigExpr.evalSig(input.asInstanceOf[ArrayData], as, bs, p)
+    MinHashSigExpr.evalSig(input.asInstanceOf[ArrayData], as.unsafeArray, bs.unsafeArray, p)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c => {
-      val aRef = ctx.addReferenceObj("mhA", as, "long[]")
-      val bRef = ctx.addReferenceObj("mhB", bs, "long[]")
+      val aRef = ctx.addReferenceObj("mhA", as.unsafeArray, "long[]")
+      val bRef = ctx.addReferenceObj("mhB", bs.unsafeArray, "long[]")
       s"${ev.value} = graft.plans.MinHashSigExpr.evalSig($c, $aRef, $bRef, ${p}L);"
     })
 
@@ -283,11 +288,18 @@ object MinHashSigExpr {
 /** Column-level API for the gram/fnv hash expressions. */
 object GramHash {
 
-  /** Distinct sorted shingle hashes (set arithmetic substrate). */
+  /** Distinct sorted shingle hashes (set arithmetic substrate). A
+    * collision (~n²/2^64) can only merge two shingles, which the
+    * downstream exact set arithmetic absorbs as a vanishingly small
+    * Jaccard perturbation.
+    */
   def shingle_hashes(c: Column, n: Int): Column =
     toColumn(GramHashesExpr(toExpr(c), n, distinctSorted = true))
 
-  /** All positional gram hashes (counting substrate). */
+  /** All positional gram hashes (counting substrate). Each equals
+    * [[fnv64]] of the gram's ' '-joined string, so a model side hashed
+    * from its gram strings joins exactly.
+    */
   def gram_hashes(c: Column, n: Int): Column =
     toColumn(GramHashesExpr(toExpr(c), n, distinctSorted = false))
 
@@ -296,5 +308,6 @@ object GramHash {
 
   /** Full MinHash signature of a hashed-shingle array. */
   def minhash_sig(c: Column, as: Array[Long], bs: Array[Long], p: Long): Column =
-    toColumn(MinHashSigExpr(toExpr(c), as, bs, p))
+    toColumn(MinHashSigExpr(
+      toExpr(c), new ArraySeq.ofLong(as.clone()), new ArraySeq.ofLong(bs.clone()), p))
 }

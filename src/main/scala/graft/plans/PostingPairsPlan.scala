@@ -1,13 +1,13 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, AttributeReference, AttributeSet, Expression, GenericInternalRow, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.graft.bridge.{ofRows, toExprEager}
+import org.apache.spark.sql.graft.bridge.{ofRows, resolveOn}
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
 
 /** Whole-operator custom plan (SURVEY §7.3 tier (c)): co-occurring
@@ -222,20 +222,11 @@ object PostingPairs {
       nCol: Column,
       maxDf: Long): DataFrame = {
     val spark = df.sparkSession
-    ensureRegistered(spark)
+    graft.GraftExtensions.install(spark)
     val plan = df.queryExecution.analyzed
-    def resolve(c: Column): Expression = {
-      val e = toExprEager(spark, c)
-      e.transformUp {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          plan.output.find(a => spark.sessionState.conf.resolver(a.name, u.name))
-            .getOrElse(throw new IllegalArgumentException(
-              s"column ${u.name} not in ${plan.output.map(_.name).mkString(",")}"))
-      }
-    }
-    val sh = resolve(shingleCol)
-    val idE = resolve(idCol)
-    val nE = resolve(nCol)
+    val sh = resolveOn(spark, plan, shingleCol)
+    val idE = resolveOn(spark, plan, idCol)
+    val nE = resolveOn(spark, plan, nCol)
     require(
       idE.dataType == LongType || idE.dataType == StringType ||
         idE.dataType == IntegerType,
@@ -249,9 +240,4 @@ object PostingPairs {
       AttributeReference("n_b", LongType, nullable = false)())
     ofRows(spark, PostingPairsNode(sh, idE, nE, maxDf, outAttrs, plan))
   }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(PostingPairsStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ PostingPairsStrategy
 }

@@ -1,13 +1,13 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BaseOrdering, Expression, RowOrdering, SortOrder, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
-import org.apache.spark.sql.graft.bridge.{ofRows, toExprEager}
+import org.apache.spark.sql.graft.bridge.{ofRows, resolveOn, sortOrderOn}
 
 /** Whole-operator custom plan (SURVEY §7.3 tier (c)): top-k rows per
   * key — the physical shape behind the reference's per-channel video
@@ -162,33 +162,13 @@ object TopKPerKeyStrategy extends SparkStrategy {
 
 object TopKPerKey {
 
-  /** Column-level API: top `k` rows per `keys`, best-first by `order`.
-    * Registers the planner strategy on the session once.
-    */
+  /** Column-level API: top `k` rows per `keys`, best-first by `order`. */
   def topKPerKey(df: DataFrame, keyCols: Seq[Column], orderCols: Seq[Column], k: Int): DataFrame = {
     val spark = df.sparkSession
-    ensureRegistered(spark)
+    graft.GraftExtensions.install(spark)
     val plan = df.queryExecution.analyzed
-    def resolve(c: Column): Expression = {
-      val e = toExprEager(spark, c)
-      e.transformUp {
-        case u: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-          plan.output.find(a => spark.sessionState.conf.resolver(a.name, u.name))
-            .getOrElse(throw new IllegalArgumentException(
-              s"column ${u.name} not in ${plan.output.map(_.name).mkString(",")}"))
-      }
-    }
-    val sortOrders = orderCols.map { c =>
-      resolve(c) match {
-        case so: SortOrder => so
-        case e => SortOrder(e, org.apache.spark.sql.catalyst.expressions.Ascending)
-      }
-    }
-    ofRows(spark, TopKPerKey(keyCols.map(resolve), sortOrders, k, plan))
+    ofRows(spark, TopKPerKey(
+      keyCols.map(resolveOn(spark, plan, _)),
+      orderCols.map(sortOrderOn(spark, plan, _)), k, plan))
   }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.io.{Publisher, Retry}
+import graft.plans.GramHash
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -291,10 +292,10 @@ object Incremental {
       else lit(null).cast("timestamp")
     val base = withWm
       .select(col(idCol).cast("string").as("id"),
-        Dedup.shingleHashesUdf(n)(col(textCol)).as("xs"),
+        GramHash.shingle_hashes(col(textCol), n).as("xs"),
         evCol.as("ev"))
       .filter(size(col("xs")) > 0)
-      .withColumn("sig", Dedup.minHashSigUdf(bands * rowsPerBand)(col("xs")))
+      .withColumn("sig", Dedup.minHashSig(bands * rowsPerBand)(col("xs")))
       .select(col("id"), col("xs"), col("ev"),
         explode(array(Dedup.bandKeyStructs(bands, rowsPerBand): _*)).as("bk"))
       .select(col("bk.band").as("band"), col("bk.h").as("h"),
@@ -513,18 +514,12 @@ object Incremental {
       }
       override def explain(): Unit = query.explain()
       override def explain(extended: Boolean): Unit = query.explain(extended)
-      // Identity delegates to the wrapped query: callers comparing the
-      // returned handle against spark.streams.get(id)/active (different
-      // object, same query) must see equality. NOTE the synchronous
+      // A distinct object from spark.streams.get(id)/active, equal only
+      // to itself: compare handles by `.id`. NOTE the synchronous
       // release guarantee holds only through THIS handle's
       // awaitTermination/stop — draining via
       // StreamingQueryManager.awaitAnyTermination or the manager's
       // handle still releases, but through the async listener path.
-      override def equals(other: Any): Boolean = other match {
-        case sq: StreamingQuery => sq.id == query.id && sq.runId == query.runId
-        case _ => false
-      }
-      override def hashCode(): Int = query.id.hashCode()
     }
   }
 

@@ -21,7 +21,7 @@ object CorpusAudit {
     *
     * Scale shape: occurrences are generated per-row by ONE compiled
     * loop per document ([[gramsUdf]] — the same HOF-replacement
-    * discipline as `Dedup.shingleHashesUdf`: transform/slice/concat_ws
+    * discipline as `GramHash.shingle_hashes`: transform/slice/concat_ws
     * lambdas are interpreted expression trees in Spark, measured ~4×
     * slower than the loop at 26M grams), then one count-by-gram
     * shuffle and a TakeOrderedAndProject top-k. At 100 TB the gram
@@ -59,7 +59,7 @@ object CorpusAudit {
     * per row, replacing the interpreted transform/slice/concat_ws HOF
     * pipeline. Token split matches Spark's `split(text, " ")` (Java
     * regex, trailing empties KEPT); each gram is built once into a
-    * shared StringBuilder. Unlike [[graft.dedup.Dedup.shingleHashesUdf]]
+    * shared StringBuilder. Unlike [[graft.plans.GramHash.shingle_hashes]]
     * this keeps the STRINGS (the audit's output is quotable gram text,
     * not a set-arithmetic digest) and keeps duplicates (occurrence
     * counting needs multiplicity, shingling wants distinct).

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.plans.GramHash
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -499,11 +500,10 @@ object TextAnalysis {
   }
 
   /** Word n-grams of one document as one compiled loop per row (HOF
-    * transform/slice/concat_ws chains are interpreted — see
-    * Dedup.shingleHashesUdf for the measurement). Emits the n-gram
+    * transform/slice/concat_ws chains are interpreted). Emits the n-gram
     * STRINGS (joined with ' ') so both engines of an oracle pair can
     * agree on the values; `distinct` dedupes per document. At corpus
-    * scale prefer joining on hashes of these (Dedup.shingleHashesUdf).
+    * scale prefer joining on hashes of these (GramHash.shingle_hashes).
     */
   def ngramsUdf(n: Int, distinct: Boolean)
       : org.apache.spark.sql.expressions.UserDefinedFunction = udf {
@@ -533,30 +533,6 @@ object TextAnalysis {
       }
   }
 
-  /** ALL word n-gram hashes of one document, one per position
-    * (duplicates kept — the counting twin of
-    * [[graft.dedup.Dedup.shingleHashesUdf]], which dedupes and sorts
-    * for set arithmetic). FNV-1a 64-bit over the window's chars with
-    * ' ' separators — identical value layout to hashing the
-    * ngramsUdf-built string, so a model side hashed with [[fnvUdf]]
-    * over its gram STRINGS joins exactly. Collisions (~n²/2^64) can
-    * only alias two grams — the same vanishing perturbation class the
-    * shingle-hash paths carry.
-    */
-  private[graft] def gramHashesUdf(
-      n: Int): org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    c => graft.plans.GramHash.gram_hashes(c, n)
-
-  /** FNV-1a 64-bit of a string's chars — the model-side twin of
-    * [[gramHashesUdf]] (hash the (bigram, c2) relation's gram strings
-    * once, model-sized, so the corpus-side join runs on 8-byte keys).
-    * Since round 16 a native codegen expression
-    * ([[graft.plans.FnvHashExpr]] — name kept, applies as before);
-    * values bit-identical to the former UDF's char loop.
-    */
-  private[graft] val fnvUdf: org.apache.spark.sql.Column => org.apache.spark.sql.Column =
-    c => graft.plans.GramHash.fnv64(c)
-
   /** Benchmark decontamination: flag corpus documents sharing any word
     * n-gram with a benchmark/eval set — the standard guard against
     * test-set leakage into training data. The benchmark side is tiny
@@ -574,7 +550,7 @@ object TextAnalysis {
     // the match runs on 64-bit FNV gram hashes (round 16 — the LM-tally
     // layout): the corpus side never BUILDS a gram string per position,
     // broadcast probe keys are 8 bytes, and the eval-suite side hashes
-    // its distinct gram strings once (suite-sized). shingleHashesUdf =
+    // its distinct gram strings once (suite-sized). shingle_hashes =
     // distinct sorted FNV hashes, value-identical to fnv64 of the
     // ngramsUdf strings; an aliasing collision (~n²/2^64) is the same
     // vanishing perturbation class every shingle-hash path carries.
@@ -582,11 +558,11 @@ object TextAnalysis {
     val grams = ngramsUdf(n, distinct = true)
     val benchGrams = benchmark
       .select(explode(grams(col(textCol))).as("gram"))
-      .select(fnvUdf(col("gram")).as("__gh"))
+      .select(GramHash.fnv64(col("gram")).as("__gh"))
       .distinct()
     val hits = corpus
       .select(col(idCol),
-        explode(graft.dedup.Dedup.shingleHashesUdf(n)(col(textCol))).as("__gh"))
+        explode(GramHash.shingle_hashes(col(textCol), n)).as("__gh"))
       .join(broadcast(benchGrams), Seq("__gh"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_shared"))
@@ -718,12 +694,12 @@ object TextAnalysis {
     // corpus side never BUILDS a string per bigram position (measured
     // half the tally at sf0.1 — NOTES.md r15: 0.85 → 0.41 s), join keys
     // are 8 bytes, and the model side hashes once (model-sized). Hash
-    // layout matches hashing the ngramsUdf string (gramHashesUdf doc);
+    // layout matches hashing the ngramsUdf string (GramHashesExpr doc);
     // an aliasing collision (~n²/2^64) is the same vanishing
     // perturbation class every shingle-hash path carries.
     // c2 widened to long: the broadcast path reads it with getLong
     val hashedModel = model.select(
-      fnvUdf(col("bigram")).as("__gh"), col("c2").cast("long").as("c2"))
+      GramHash.fnv64(col("bigram")).as("__gh"), col("c2").cast("long").as("c2"))
     // ONE model scan (round 16): the normalizing total used to be a
     // separate scalar aggregate over the model subtree, so the model
     // evaluated twice per call. When the model broadcasts (the default)
@@ -748,7 +724,7 @@ object TextAnalysis {
     val perDoc = docs
       .select(
         col(idCol),
-        explode(gramHashesUdf(2)(col(textCol))).as("__gh"))
+        explode(GramHash.gram_hashes(col(textCol), 2)).as("__gh"))
       .join(m, Seq("__gh"), "left")
       .groupBy(idCol)
       .agg(

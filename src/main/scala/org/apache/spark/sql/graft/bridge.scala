@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge into Spark's package-private Column ↔ Expression converters
@@ -16,13 +18,30 @@ object bridge {
     * lazy ColumnNodeExpression wrapper from toExpr is opaque to
     * analyzer rules that must rewrite attributes inside custom nodes).
     */
-  def toExprEager(spark: org.apache.spark.sql.SparkSession, c: Column): Expression =
+  def toExprEager(spark: SparkSession, c: Column): Expression =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].expression(c)
 
-  def ofRows(
-      spark: org.apache.spark.sql.SparkSession,
-      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-  ): org.apache.spark.sql.DataFrame =
+  /** `c` over `plan`'s output: converted eagerly, with every column
+    * name bound to the plan's attribute by the session's resolver —
+    * how the column-level entry points of the custom logical nodes
+    * build the expressions they hand to the planner.
+    */
+  def resolveOn(spark: SparkSession, plan: LogicalPlan, c: Column): Expression =
+    toExprEager(spark, c).transformUp {
+      case u: UnresolvedAttribute =>
+        plan.output.find(a => spark.sessionState.conf.resolver(a.name, u.name))
+          .getOrElse(throw new IllegalArgumentException(
+            s"column ${u.name} not in ${plan.output.map(_.name).mkString(",")}"))
+    }
+
+  /** [[resolveOn]] as a sort key: `c`'s own order, ascending if none. */
+  def sortOrderOn(spark: SparkSession, plan: LogicalPlan, c: Column): SortOrder =
+    resolveOn(spark, plan, c) match {
+      case so: SortOrder => so
+      case e => SortOrder(e, Ascending)
+    }
+
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 }

@@ -1,0 +1,27 @@
+package graft
+
+import graft.ops.GlobalSeq
+import graft.plans.{GlobalSeqExec, PostingPairs, PostingPairsExec, TopKPerKey, TopKPerKeyExec}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.col
+
+/** The three column-level entry points that plan a custom exec, run
+  * on a tiny frame of one session.
+  */
+object CustomExecs {
+
+  /** For each entry point, whether its physical plan holds its exec. */
+  def planned(s: SparkSession): Map[String, Boolean] = {
+    val df = s.range(4).selectExpr("id", "id % 2 AS k", "2L AS n")
+    Map(
+      "TopKPerKeyExec" -> TopKPerKey
+        .topKPerKey(df, Seq(col("k")), Seq(col("id").desc), 1)
+        .queryExecution.sparkPlan.exists(_.isInstanceOf[TopKPerKeyExec]),
+      "PostingPairsExec" -> PostingPairs
+        .pairs(df, col("k"), col("id"), col("n"), 10L)
+        .queryExecution.sparkPlan.exists(_.isInstanceOf[PostingPairsExec]),
+      "GlobalSeqExec" -> GlobalSeq
+        .withGlobalSeq(df, Seq(col("id")), "seq")
+        .queryExecution.sparkPlan.exists(_.isInstanceOf[GlobalSeqExec]))
+  }
+}

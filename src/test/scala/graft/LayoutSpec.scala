@@ -281,7 +281,7 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("bottom_k_ids is callable from SQL once registered") {
-    graft.plans.ArrayOps.register(spark)
+    GraftExtensions.install(spark)
     val got = spark.sql(
       "SELECT bottom_k_ids(id, 'q', 2) AS ids FROM VALUES ('a'),('b'),('c') t(id)")
       .as[Seq[String]].head()

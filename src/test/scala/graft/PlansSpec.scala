@@ -1,12 +1,16 @@
 package graft
 
-import graft.plans.ArrayOps
+import graft.plans.{ArrayOps, GramHash}
 import graft.signal.Signal
 import graft.similarity.Ann
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
 
 /** Native Catalyst expressions: codegen path vs interpreted vs HOF
-  * parity, null semantics, SQL registration.
+  * parity, null semantics, structural equality, SQL registration and
+  * strategy install.
   */
 class PlansSpec extends SparkTestBase {
   import spark.implicits._
@@ -53,7 +57,7 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("SQL registration: array_dot and wada_snr callable from SQL") {
-    ArrayOps.register(spark)
+    GraftExtensions.install(spark)
     vecs.createOrReplaceTempView("plans_vecs")
     val r = spark.sql(
       "SELECT id, array_dot(vf, vd) AS d, wada_snr(vd) AS s FROM plans_vecs WHERE id = 1"
@@ -115,7 +119,7 @@ class PlansSpec extends SparkTestBase {
       .agg(CountMinAgg.countMin(col("k"), depth = 2, width = 8).as("cms"))
       .head().getSeq[Long](0)
     assert(grid.slice(0, 8).sum == 3L) // null contributed nothing
-    ArrayOps.register(spark)
+    GraftExtensions.install(spark)
     df.createOrReplaceTempView("plans_cms")
     val viaSql = spark.sql(
       "SELECT count_min(k, 2, 8) FROM plans_cms").head().getSeq[Long](0)
@@ -157,7 +161,7 @@ class PlansSpec extends SparkTestBase {
       .select(ArrayOps.sorted_intersect_count($"xa", $"xb"))
       .head().isNullAt(0))
     // SQL registration
-    ArrayOps.register(spark)
+    GraftExtensions.install(spark)
     df.createOrReplaceTempView("plans_sic")
     val viaSql = spark.sql(
       "SELECT id, sorted_intersect_count(xa, xb) AS c FROM plans_sic")
@@ -169,5 +173,40 @@ class PlansSpec extends SparkTestBase {
     }
     assert(err.getMessage.toLowerCase.contains("sorted_intersect_count") ||
       err.getMessage.toLowerCase.contains("type"))
+  }
+
+  test("array-parameter expressions compare structurally: independently " +
+    "built copies are ==, hash alike and are semanticEquals") {
+    val longs = Seq(Tuple1(Array(3L, 5L))).toDF("xs")
+    def native(df: org.apache.spark.sql.DataFrame, c: Column): Expression =
+      df.select(c.as("x")).queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), _) => e
+        case p => fail(s"unexpected plan $p")
+      }
+    // every call builds fresh parameter arrays
+    def planes = Array.tabulate(8)(i => 7L * i - 3L)
+    def build(): Seq[Expression] = Seq(
+      native(vecs, ArrayOps.sign_lsh_buckets($"vf", planes, 2, 2, 3)),
+      native(vecs, ArrayOps.jl_project($"vf", planes, 2, 3)),
+      native(vecs, ArrayOps.pq_encode($"vf",
+        Array(Array(Array(0.5, 1.0, 1.5), Array(2.0, 2.5, 3.0))))),
+      native(longs, GramHash.minhash_sig($"xs", planes, planes, 2147483647L)))
+    build().zip(build()).foreach { case (a, b) =>
+      assert(a ne b)
+      assert(a == b, a.prettyName)
+      assert(a.hashCode == b.hashCode, a.prettyName)
+      assert(a.semanticEquals(b), a.prettyName)
+    }
+  }
+
+  test("install on first use: the plain session plans every custom exec " +
+    "and holds each strategy once after repeated calls") {
+    assert(CustomExecs.planned(spark).values.forall(identity))
+    assert(CustomExecs.planned(spark).values.forall(identity))
+    GraftExtensions.install(spark)
+    val planned = spark.sessionState.planner.strategies
+    GraftExtensions.strategies.foreach { s =>
+      assert(planned.count(_ == s) == 1, s)
+    }
   }
 }

@@ -8,7 +8,7 @@ import java.nio.file.Files
 
 /** Scale-posture evidence: salting preserves join semantics, bucketed
   * tables co-locate joins (no Exchange in the plan), and the session
-  * extension registers native SQL functions.
+  * extension registers native SQL functions and planner strategies.
   */
 class ScaleSpec extends SparkTestBase {
   import spark.implicits._
@@ -193,6 +193,10 @@ class ScaleSpec extends SparkTestBase {
       assert(agg.getSeq[String](0).size == 2)
       // each of the 2 sketch rows counts all 5 keys
       assert(agg.getSeq[Long](1).sum == 10L)
+      // the strategies come in through the same extension: the custom
+      // execs plan, and install-on-first-use adds nothing on top
+      assert(CustomExecs.planned(s3).values.forall(identity), CustomExecs.planned(s3))
+      assert(s3.experimental.extraStrategies.isEmpty)
     } finally {
       active.foreach(SparkSession.setActiveSession)
       default.foreach(SparkSession.setDefaultSession)

@@ -1,0 +1,47 @@
+package graft
+
+import org.scalatest.funsuite.AnyFunSuite
+import java.nio.file.{Files, Path, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Source-scan guards over `src/main/scala`: session wiring stays in
+  * one file, and a `*Udf` name stays a Spark UDF.
+  */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private lazy val sources: Seq[(Path, String)] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      .map(p => p -> new String(Files.readAllBytes(p), "UTF-8"))
+    finally walk.close()
+  }
+
+  test("functions and planner strategies are installed only in GraftExtensions") {
+    val hooks = Seq("extraStrategies", "createOrReplaceTempFunction",
+      "registerFunction", "injectFunction", "injectPlannerStrategy")
+    val offenders = for {
+      (path, text) <- sources
+      if path.getFileName.toString != "GraftExtensions.scala"
+      hook <- hooks
+      if text.contains(hook)
+    } yield s"$path: $hook"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no *Udf name holds a plain Column => Column function") {
+    // a def/val named *Udf whose declared type (before its `=`) is a
+    // Column => Column function: a forwarder to a native expression
+    // wearing a UDF's name
+    val forwarder =
+      """(?s)\b(?:def|val)\s+(\w+Udf)\b((?:[^=]|=>)*?)=(?!>)""".r
+    val fn = """Column\s*=>\s*(?:[\w.]+\.)?Column""".r
+    val offenders = for {
+      (path, text) <- sources
+      m <- forwarder.findAllMatchIn(text)
+      if fn.findFirstIn(m.group(2)).isDefined
+    } yield s"$path: ${m.group(1)}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}

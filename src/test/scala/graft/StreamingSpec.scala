@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.{CountDownLatch, TimeUnit}
 
 /** T1-T4 streaming semantics over MemoryStream (no network, no files). */
 class StreamingSpec extends SparkTestBase {
@@ -115,4 +116,39 @@ class StreamingSpec extends SparkTestBase {
     assert(byId("v4") == (false, "TOO_MANY_PREMIERES"))
     assert(byId("v5") == (false, "CHANNEL_ABORTED"))
   }
+
+  test("stream handles compare by id: equality with the manager's handle " +
+    "is symmetric") {
+    val root = Files.createTempDirectory("grafthandle")
+    val docs = Seq((1L, "a b c d"), (2L, "e f g h")).toDF("doc_id", "text")
+    docs.write.parquet(root.resolve("in/a").toString)
+    val history = Seq((9L, "a b c d")).toDF("doc_id", "text")
+    // holds the first micro-batch open, so the query stays active
+    // (the manager hands out active queries only) until released
+    StreamHandleGate.latch = new CountDownLatch(1)
+    val hold = udf { (s: String) =>
+      StreamHandleGate.latch.await(60, TimeUnit.SECONDS); s
+    }
+    val stream = spark.readStream.schema(docs.schema)
+      .parquet(root.resolve("in").toString + "/*")
+      .withColumn("text", hold(col("text")))
+    val handle = Incremental.containmentFilterStream(stream, history,
+      "doc_id", "text", root.resolve("out").toString,
+      root.resolve("ckpt").toString, n = 2)
+    try {
+      val managed = spark.streams.get(handle.id)
+      assert(managed != null, "the query ended before the check")
+      assert(handle.id == managed.id)
+      assert((handle == managed) == (managed == handle))
+      assert(handle == handle)
+    } finally {
+      StreamHandleGate.latch.countDown()
+      handle.awaitTermination()
+    }
+  }
+}
+
+/** Read by a task-side UDF: a static, so the closure captures nothing. */
+object StreamHandleGate {
+  @volatile var latch = new CountDownLatch(0)
 }
