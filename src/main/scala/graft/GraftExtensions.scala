@@ -19,7 +19,7 @@ import org.apache.spark.sql.execution.SparkStrategy
   *  - [[GraftExtensions.install]] adds both lists to a session built
   *    without the extension. Every entry point that plans a custom
   *    exec (`TopKPerKey.topKPerKey`, `PostingPairs.pairs`,
-  *    `GlobalSeq.withGlobalSeq`) calls it first, so any session —
+  *    `GlobalSeq.withRunningSum`) calls it first, so any session —
   *    `Graft.session`, a caller's own, a test's — plans them.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -49,7 +49,7 @@ object GraftExtensions {
 
   /** Every custom planner strategy, one per custom logical node. */
   val strategies: Seq[SparkStrategy] =
-    Seq(TopKPerKeyStrategy, PostingPairsStrategy, GlobalSeqStrategy)
+    Seq(TopKPerKeyStrategy, PostingPairsStrategy, RunningSumStrategy)
 
   /** Add [[functions]] and [[strategies]] to `spark`. A no-op once the
     * session's planner has every strategy — through the extension or

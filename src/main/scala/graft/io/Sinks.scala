@@ -72,7 +72,7 @@ object Sinks {
 
   /** Training-shard writer — the last mile of the curation pipeline:
     * materialize the corpus as token-balanced shards. Shard assignment
-    * rides the SAME distributed prefix sum as sequence packing
+    * rides the SAME running sum as sequence packing
     * ([[graft.text.TextAnalysis.packSequences]] with seqLen =
     * tokensPerShard): a document lands in the shard its global start
     * offset falls into, so documents stay whole, shard boundaries are
@@ -85,43 +85,27 @@ object Sinks {
     * File-count posture (guide §6): a bare partitionBy write emits one
     * file per (task, shard) pair — T tasks × S shards small files once
     * the corpus grows (every write task holds rows of many shards).
-    * When the shard count crosses
-    * `spark.graft.shards.clusterWriteMinShards` (default 4× the
-    * session's default parallelism) the write is first CLUSTERED by
-    * shard (`repartition(col("shard"))`) so each shard lands as one
-    * ~tokensPerShard-sized file regardless of task layout; below the
-    * threshold the direct path stands (AQE coalescing already yields
-    * one file per shard at small scale, and the extra exchange would
-    * only cost). The shard count is a cached-read aggregate —
-    * packSequences returns its packing materialized.
+    * From [[clusterMinShards]] shards on, the write is first
+    * CLUSTERED by shard (`repartition(col("shard"))`) so each shard
+    * lands as one ~tokensPerShard-sized file regardless of task
+    * layout; below it the direct path stands (AQE coalescing already
+    * yields one file per shard at small scale, and the extra exchange
+    * would only cost). The shard count is the length of the per-shard
+    * summary, which is collected from the cached packing before the
+    * write — no extra pass. The packing cache is released before
+    * returning.
     *
     * Returns the per-shard summary (shard, n_docs, n_tokens,
-    * min_start, max_end) — integer-exact and oracle-checkable against
-    * the prefix-sum replay.
+    * min_start, max_end) as a local relation — integer-exact and
+    * oracle-checkable against the prefix-sum replay.
     */
   def writeTrainingShards(
       df: DataFrame,
       idCol: String,
       textCol: String,
       path: String,
-      tokensPerShard: Long): DataFrame = {
-    val packed = graft.text.TextAnalysis
-      .packSequences(df.select(col(idCol), col(textCol)), idCol, textCol,
-        seqLen = tokensPerShard)
-      .withColumn("shard", col("first_seq"))
-    val joined = df.join(
-      packed.select(col(idCol), col("shard"), col("start_off"), col("end_off")),
-      Seq(idCol))
-    clusterIfManyShards(joined, packed)
-      .write.mode("overwrite").partitionBy("shard").parquet(path)
-    packed
-      .groupBy(col("shard"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("n_tokens"),
-        min(col("start_off")).as("min_start"),
-        max(col("end_off")).as("max_end"))
-  }
+      tokensPerShard: Long): DataFrame =
+    writeShards(df, idCol, textCol, path, tokensPerShard, base = 0L, "overwrite")
 
   /** Incremental face of [[writeTrainingShards]] — one micro-batch (or
     * ingest increment) APPENDED to an existing sharded corpus: the
@@ -188,44 +172,51 @@ object Sinks {
       if (existing)
         spark.read.parquet(path).agg(max(col("end_off"))).first().getLong(0)
       else 0L
+    val summary = writeShards(df, idCol, textCol, path, tokensPerShard, base, "append")
+    if (batchId >= 0L) recordShardBatch(fs, root, batchId, batchTag)
+    summary
+  }
+
+  /** Shard count from which a shard write is clustered by shard (see
+    * [[writeTrainingShards]]).
+    */
+  private val clusterMinShards = 16
+
+  /** The body of both shard writers: pack `df` from global offset
+    * `base`, write it `partitionBy(shard)` in `mode`, and return the
+    * per-shard summary as a local relation.
+    */
+  private def writeShards(
+      df: DataFrame,
+      idCol: String,
+      textCol: String,
+      path: String,
+      tokensPerShard: Long,
+      base: Long,
+      mode: String): DataFrame = {
     val packed = graft.text.TextAnalysis
       .packSequences(df.select(col(idCol), col(textCol)), idCol, textCol,
         seqLen = tokensPerShard)
       .withColumn("start_off", col("start_off") + base)
       .withColumn("end_off", col("end_off") + base)
       .withColumn("shard", expr(s"start_off div $tokensPerShard"))
-    val joined = df.join(
-      packed.select(col(idCol), col("shard"), col("start_off"), col("end_off")),
-      Seq(idCol))
-    // same §6 posture as the batch writer; a micro-batch rarely crosses
-    // the threshold, but a bulk backfill through this face would
-    clusterIfManyShards(joined, packed)
-      .write.mode("append").partitionBy("shard").parquet(path)
-    if (batchId >= 0L) recordShardBatch(fs, root, batchId, batchTag)
-    packed
+      .cache()
+    val summary = packed
       .groupBy(col("shard"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(col("n_tok")).as("n_tokens"),
         min(col("start_off")).as("min_start"),
         max(col("end_off")).as("max_end"))
-  }
-
-  /** Cluster a shard-carrying relation by shard before its partitionBy
-    * write when the shard count crosses the threshold (guide §6 — see
-    * [[writeTrainingShards]]); `packed` is the materialized packing, so
-    * the distinct-shard count is a cached read, not a corpus pass.
-    */
-  private def clusterIfManyShards(
-      joined: DataFrame, packed: DataFrame): DataFrame = {
-    val spark = joined.sparkSession
-    val minShards = spark.conf
-      .getOption("spark.graft.shards.clusterWriteMinShards")
-      .map(_.toLong)
-      .getOrElse(4L * spark.sparkContext.defaultParallelism)
-    val nShards = packed
-      .agg(countDistinct(col("shard"))).first().getLong(0)
-    if (nShards >= minShards) joined.repartition(col("shard")) else joined
+    val rows = summary.collect()
+    val joined = df.join(
+      packed.select(col(idCol), col("shard"), col("start_off"), col("end_off")),
+      Seq(idCol))
+    (if (rows.length >= clusterMinShards) joined.repartition(col("shard"))
+     else joined)
+      .write.mode(mode).partitionBy("shard").parquet(path)
+    packed.unpersist()
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), summary.schema)
   }
 
   /** Last (batchTag, batchId) applied to the shard corpus at `root`,

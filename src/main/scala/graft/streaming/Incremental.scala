@@ -115,13 +115,7 @@ object Incremental {
     import graft.text.TextAnalysis
     TextAnalysis
       .withGateSignals(docs, textCol)
-      .filter(
-        col("lang_pred").isin(cfg.allowedLangs: _*) &&
-          col("quality") >= cfg.minQuality &&
-          col("n_tok") >= cfg.minTokens &&
-          graft.text.CurationPipeline.gopherPredicate(col(textCol), cfg) &&
-          graft.text.CurationPipeline.repetitionPredicate(col(textCol), cfg)
-      )
+      .filter(graft.text.CurationPipeline.gatePredicate(col(textCol), cfg))
       .withColumn("content_key", md5(col(textCol)))
       .withWatermark(eventTimeCol, watermarkDelay)
       .dropDuplicatesWithinWatermark("content_key")

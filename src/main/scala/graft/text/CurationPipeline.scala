@@ -110,6 +110,17 @@ object CurationPipeline {
     else TextAnalysis.repetitionKeep(text,
       cfg.maxTop2gramPermille, cfg.minDistinctPermille)
 
+  /** The shared (batch + streaming) gate over [[TextAnalysis.withGateSignals]]
+    * columns: allowed language, quality floor, token floor, and the
+    * optional Gopher and repetition rules on `text`.
+    */
+  def gatePredicate(text: org.apache.spark.sql.Column, cfg: Config): org.apache.spark.sql.Column =
+    col("lang_pred").isin(cfg.allowedLangs: _*) &&
+      col("quality") >= cfg.minQuality &&
+      col("n_tok") >= cfg.minTokens &&
+      gopherPredicate(text, cfg) &&
+      repetitionPredicate(text, cfg)
+
   def run(input: DataFrame, idCol: String, textCol: String,
       cfg: Config = Config()): Outputs = {
     require(!cfg.useLmGate || cfg.lmModel.isDefined,
@@ -157,13 +168,7 @@ object CurationPipeline {
     // q_text_tokens_quality).
     val gated = TextAnalysis
       .withGateSignals(urlDeduped, textCol)
-      .filter(
-        col("lang_pred").isin(cfg.allowedLangs: _*) &&
-          col("quality") >= cfg.minQuality &&
-          col("n_tok") >= cfg.minTokens &&
-          gopherPredicate(col(textCol), cfg) &&
-          repetitionPredicate(col(textCol), cfg)
-      )
+      .filter(gatePredicate(col(textCol), cfg))
       .cache()
     val n1 = gated.count()
     if (cfg.urlCol.isDefined) urlDeduped.unpersist()

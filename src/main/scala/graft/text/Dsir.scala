@@ -207,74 +207,30 @@ object Dsir {
     * same scan-until rule the mixture planner uses (emit while tokens
     * BEFORE the doc < budget; overshoot < one document, docs whole).
     *
-    * Scale: the global running sum is the packSequences two-phase
-    * prefix sum, not a single-partition window — survivors range-
-    * partition on the draw key, per-shard subtotals (one tiny
-    * aggregate) broadcast each shard its base, and a shard-local
-    * window finishes. The sharded relation is materialized once so
-    * both consumers read the SAME RangePartitioner boundaries
-    * (cache for one session, localCheckpoint for cluster scale —
-    * identical contract and rationale as
-    * [[TextAnalysis.packSequences]]).
+    * Scale: bef is the global running sum of n_toks in draw order
+    * ([[graft.ops.GlobalSeq.withRunningSum]]: survivors range-partition
+    * on the draw key and the native running-sum exec adds each
+    * partition's offset), not a single-partition window.
     *
     * Returns (id, n_toks, bef) where bef is the exact token count
     * drawn before this doc — strictly increasing along the draw, so
     * it doubles as the selection sequence. The returned relation is
-    * CACHED (materialized before the sharded base is released, the
-    * packSequences discipline); callers owning a long-lived session
-    * should unpersist it when done.
+    * lazy; like [[TextAnalysis.packSequences]] it needs no cache for
+    * correctness.
     */
   def resampleToBudget(
       scored: DataFrame,
       idCol: String,
       salt: String,
-      budgetTokens: Long,
-      materialize: String = "cache"
+      budgetTokens: Long
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = scored.sparkSession
-    val p = math.max(2, spark.sparkContext.defaultParallelism / 2)
-    val sharded = scored
+    val survivors = scored
       .filter(col("keep"))
       .select(col(idCol), col("n_toks"),
         Sampling.saltedHex(salt, col(idCol)).as("__hk"))
-      .repartitionByRange(p, col("__hk"), col(idCol))
-      .withColumn("__shard", spark_partition_id())
-    val (base, release) = materialize match {
-      case "checkpoint" => (sharded.localCheckpoint(true), () => ())
-      case "cache" =>
-        val c = sharded.cache(); (c, () => { c.unpersist(); () })
-      case other =>
-        throw new IllegalArgumentException(
-          s"resampleToBudget materialize must be cache|checkpoint, got $other")
-    }
-    val wShards = Window
-      .orderBy(col("__shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val shardBases = base
-      .groupBy("__shard")
-      .agg(sum(col("n_toks")).as("__shard_tok"))
-      .withColumn("__shard_base",
-        coalesce(sum(col("__shard_tok")).over(wShards), lit(0L)))
-      .select(col("__shard"), col("__shard_base"))
-    val wLocal = Window
-      .partitionBy(col("__shard"))
-      .orderBy(col("__hk"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val out = base
-      .join(broadcast(shardBases), Seq("__shard"))
-      .withColumn(
-        "bef",
-        col("__shard_base") +
-          coalesce(sum(col("n_toks")).over(wLocal), lit(0L)))
+    graft.ops.GlobalSeq
+      .withRunningSum(survivors, Seq(col("__hk"), col(idCol)), col("n_toks"), "bef")
       .filter(col("bef") < budgetTokens)
       .select(col(idCol), col("n_toks"), col("bef"))
-      .cache()
-    // materialize the result before releasing the sharded base (the
-    // packSequences discipline; on eviction the SAME plan instance —
-    // same RDD ids, same sampled boundaries — recomputes correctly)
-    out.count()
-    release()
-    out
   }
 }

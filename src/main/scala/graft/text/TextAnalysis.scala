@@ -417,87 +417,30 @@ object TextAnalysis {
     * [start, end) offset in the global token stream plus the
     * training-sequence ids it lands in (seqLen-sized bins).
     *
-    * Distributed two-phase prefix sum — never a corpus-wide
-    * single-partition window: (1) range-repartition by id so every id
-    * in shard i sorts below every id in shard i+1, (2) one branch
-    * reduces each shard to its token subtotal and turns those P rows
-    * into cumulative base offsets (the only un-partitioned window here
-    * runs over P≈parallelism rows, not the corpus), (3) a broadcast
-    * join hands each shard its base and a shard-local running sum
-    * finishes the job.
-    *
-    * The sharded relation is MATERIALIZED before either consumer runs,
-    * and released before returning. This is load-bearing for
-    * correctness, not a speedup: RangePartitioner samples split
-    * boundaries with an RDD-id-derived seed, so two separate plan
-    * instantiations of the same repartitionByRange may choose
-    * DIFFERENT boundaries — the subtotal branch and the output branch
-    * must read one materialized sharding.
-    *
-    * `materialize` picks how:
-    *  - "cache" (default): memory cache. Evicted partitions recompute
-    *    from the SAME plan instance (same RDD ids → same sampled
-    *    boundaries), so this is correct on one session — but at
-    *    cluster scale a large corpus thrashes executor storage memory.
-    *  - "checkpoint": `localCheckpoint(eager)` — computed partitions
-    *    are pinned and the lineage is TRUNCATED, so no recompute can
-    *    ever resample boundaries and no storage-memory pressure from
-    *    the cache tier; the cluster-scale choice (swap for a reliable
-    *    `checkpoint()` when an HDFS checkpoint dir is configured).
-    * Both branches produce identical output (ScaleSpec proves it).
+    * `start_off` is the global running sum of `n_tok` in id order
+    * ([[graft.ops.GlobalSeq.withRunningSum]]): a range exchange on id
+    * plus the native running-sum exec — never a corpus-wide
+    * single-partition window. The returned frame is lazy and needs no
+    * cache for correctness: the exec reads its partition sums and its
+    * output from one child RDD, so the offsets never depend on where
+    * the sampled range boundaries fall, and every evaluation — a
+    * recompute included — yields the same offsets. Callers cache it
+    * only when several consumers read it.
     */
   def packSequences(
       df: org.apache.spark.sql.DataFrame,
       idCol: String,
       textCol: String,
-      seqLen: Long,
-      materialize: String = "cache"
-  ): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = df.sparkSession
-    val p = math.max(2, spark.sparkContext.defaultParallelism / 2)
-    val sharded = df
-      .select(col(idCol), tokenCountWs(col(textCol)).as("n_tok"))
-      .repartitionByRange(p, col(idCol))
-      .withColumn("shard", spark_partition_id())
-    val (base, release) = materialize match {
-      case "checkpoint" =>
-        // eager: computed + pinned NOW; released by GC when unreferenced
-        (sharded.localCheckpoint(true), () => ())
-      case "cache" =>
-        val c = sharded.cache()
-        (c, () => { c.unpersist(); () })
-      case other =>
-        throw new IllegalArgumentException(
-          s"packSequences materialize must be cache|checkpoint, got $other")
-    }
-    val wShards = Window
-      .orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val shardBases = base
-      .groupBy("shard")
-      .agg(sum(col("n_tok")).as("shard_tok"))
-      .withColumn("shard_base", coalesce(sum(col("shard_tok")).over(wShards), lit(0L)))
-      .select(col("shard"), col("shard_base"))
-    val wLocal = Window
-      .partitionBy(col("shard"))
-      .orderBy(col(idCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val packed = base
-      .join(broadcast(shardBases), Seq("shard"))
-      .withColumn(
-        "start_off",
-        coalesce(sum(col("n_tok")).over(wLocal), lit(0L)) + col("shard_base"))
+      seqLen: Long
+  ): org.apache.spark.sql.DataFrame =
+    graft.ops.GlobalSeq
+      .withRunningSum(
+        df.select(col(idCol), tokenCountWs(col(textCol)).as("n_tok")),
+        Seq(col(idCol)), col("n_tok"), "start_off")
       .withColumn("end_off", col("start_off") + col("n_tok"))
       .withColumn("first_seq", expr(s"start_off div $seqLen"))
       .withColumn("last_seq", expr(s"(end_off - 1) div $seqLen"))
       .withColumn("n_seqs", col("last_seq") - col("first_seq") + 1)
-      .drop("shard", "shard_base")
-    val out = packed.cache()
-    out.count()
-    release()
-    out
-  }
 
   /** Word n-grams of one document as one compiled loop per row (HOF
     * transform/slice/concat_ws chains are interpreted). Emits the n-gram
@@ -758,13 +701,16 @@ object TextAnalysis {
     * crosses a cut lands in the bucket of its END offset, so head and
     * middle each hold at most ⌈mass/3⌉ tokens.
     *
-    * Scale: the per-language running token mass is the packSequences
-    * two-phase distributed prefix sum — one range repartition on
-    * (lang, -score, id), per-shard partial sums, and a broadcast of
-    * the (lang × shard)-sized base table — never a single-partition
-    * window over a language's full corpus. CCNet itself pays this
-    * same per-language global sort; nothing wider than
-    * (id, lang, two longs) ever shuffles.
+    * Scale: the per-language running token mass is ONE global running
+    * sum of n_tok over (lang, -score, id)
+    * ([[graft.ops.GlobalSeq.withRunningSum]]: a range exchange plus the
+    * native running-sum exec) — never a single-partition window over a
+    * language's full corpus. Each language's rows are contiguous in
+    * that order, so one aggregate per language (min of the sum = the
+    * tokens of the languages before it, max of the sum plus n_tok =
+    * its end) broadcasts back each language's base and total. CCNet
+    * itself pays this same per-language global sort; nothing wider
+    * than (id, lang, two longs) ever shuffles.
     *
     * Returns one row per document:
     * (idCol, langCol, score_key, n_tok, cum_tok, lang_tok, bucket).
@@ -777,45 +723,29 @@ object TextAnalysis {
       model: DataFrame,
       broadcastModel: Boolean = true
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = docs.sparkSession
     val tally = lmQuality(docs, idCol, textCol, model,
       broadcastModel = broadcastModel)
       .select(col(idCol), col("n_bigrams"), col("n_hits"))
-    val base = docs
+    val scored = docs
       .select(col(idCol), col(langCol), tokenCountWs(col(textCol)).as("n_tok"))
       .join(tally, Seq(idCol))
       .withColumn("score_key",
         when(col("n_bigrams") > 0L,
           expr("CAST((n_hits * CAST(1000000 AS BIGINT)) div n_bigrams AS BIGINT)"))
           .otherwise(lit(0L)))
-      .withColumn("__neg", -col("score_key"))
-    val p = math.max(2, spark.sparkContext.defaultParallelism / 2)
-    val sharded = base
-      .repartitionByRange(p, col(langCol), col("__neg"), col(idCol))
-      .withColumn("shard", spark_partition_id())
+    val summed = graft.ops.GlobalSeq
+      .withRunningSum(scored, Seq(col(langCol), -col("score_key"), col(idCol)),
+        col("n_tok"), "__before")
       .cache()
-    val shardAgg = sharded
-      .groupBy(col(langCol), col("shard"))
-      .agg(sum(col("n_tok")).as("shard_tok"))
-    // (lang × shard) rows — metadata at any corpus size; the window
-    // below runs over that tiny table, not the corpus
-    val wShards = Window.partitionBy(col(langCol)).orderBy(col("shard"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = shardAgg
-      .withColumn("shard_base",
-        coalesce(sum(col("shard_tok")).over(wShards), lit(0L)))
-      .select(col(langCol), col("shard"), col("shard_base"))
-    val totals = shardAgg
+    // one row per language — metadata at any corpus size
+    val langs = summed
       .groupBy(col(langCol))
-      .agg(sum(col("shard_tok")).as("lang_tok"))
-    val wLocal = Window.partitionBy(col(langCol), col("shard"))
-      .orderBy(col("__neg"), col(idCol))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val out = sharded
-      .join(broadcast(bases), Seq(langCol, "shard"))
-      .join(broadcast(totals), Seq(langCol))
-      .withColumn("cum_tok", sum(col("n_tok")).over(wLocal) + col("shard_base"))
+      .agg(min(col("__before")).as("__base"),
+        max(col("__before") + col("n_tok")).as("__end"))
+    val out = summed
+      .join(broadcast(langs), Seq(langCol))
+      .withColumn("cum_tok", col("__before") + col("n_tok") - col("__base"))
+      .withColumn("lang_tok", col("__end") - col("__base"))
       .withColumn("bucket",
         when(col("cum_tok") * 3 <= col("lang_tok"), lit("head"))
           .when(col("cum_tok") * 3 <= col("lang_tok") * 2, lit("middle"))
@@ -824,7 +754,7 @@ object TextAnalysis {
         col("cum_tok"), col("lang_tok"), col("bucket"))
     val res = out.cache()
     res.count()
-    sharded.unpersist()
+    summed.unpersist()
     res
   }
 

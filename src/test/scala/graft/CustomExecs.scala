@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.GlobalSeq
-import graft.plans.{GlobalSeqExec, PostingPairs, PostingPairsExec, TopKPerKey, TopKPerKeyExec}
+import graft.plans.{PostingPairs, PostingPairsExec, RunningSumExec, TopKPerKey, TopKPerKeyExec}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -20,8 +20,8 @@ object CustomExecs {
       "PostingPairsExec" -> PostingPairs
         .pairs(df, col("k"), col("id"), col("n"), 10L)
         .queryExecution.sparkPlan.exists(_.isInstanceOf[PostingPairsExec]),
-      "GlobalSeqExec" -> GlobalSeq
-        .withGlobalSeq(df, Seq(col("id")), "seq")
-        .queryExecution.sparkPlan.exists(_.isInstanceOf[GlobalSeqExec]))
+      "RunningSumExec" -> GlobalSeq
+        .withRunningSum(df, Seq(col("id")), col("n"), "sum")
+        .queryExecution.sparkPlan.exists(_.isInstanceOf[RunningSumExec]))
   }
 }

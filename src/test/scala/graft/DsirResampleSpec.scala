@@ -4,8 +4,8 @@ import graft.text.Dsir
 import org.apache.spark.sql.functions._
 
 /** The DSIR resampling draw: scan-until semantics (emit while
-  * tokens-before < budget), overshoot bound, cache/checkpoint parity
-  * of the two-phase prefix sum, and degenerate budgets.
+  * tokens-before < budget), overshoot bound, draw order, and
+  * degenerate budgets.
   */
 class DsirResampleSpec extends SparkTestBase {
   import spark.implicits._
@@ -15,8 +15,8 @@ class DsirResampleSpec extends SparkTestBase {
     Seq((90L, 5L, false), (91L, 0L, false)))
     .toDF("doc_id", "n_toks", "keep")
 
-  private def draw(budget: Long, mat: String = "cache") = Dsir
-    .resampleToBudget(scored, "doc_id", "s", budget, materialize = mat)
+  private def draw(budget: Long) = Dsir
+    .resampleToBudget(scored, "doc_id", "s", budget)
     .select($"doc_id", $"n_toks", $"bef")
     .as[(Long, Long, Long)].collect().sortBy(_._3).toSeq
 
@@ -41,10 +41,6 @@ class DsirResampleSpec extends SparkTestBase {
 
   test("budget zero emits nothing") {
     assert(draw(0L).isEmpty)
-  }
-
-  test("cache and localCheckpoint materializations draw identically") {
-    assert(draw(55L, "cache") == draw(55L, "checkpoint"))
   }
 
   test("the draw order is the salted-md5 order") {

@@ -196,10 +196,29 @@ class LayoutSpec extends SparkTestBase {
   }
 
   test("partitioned layout: dim filter prunes fact partitions at runtime (DPP)") {
+    // Runtime pruning reuses the dim side's broadcast
+    // (dynamicPartitionPruning.reuseBroadcastOnly), so it needs the
+    // broadcast join. Pin the confs it depends on to their defaults:
+    // an earlier suite on the shared session may have switched
+    // broadcast joins off, and the pruning filter then plans as
+    // dynamicpruningexpression(true) and prunes nothing.
+    import org.apache.spark.sql.internal.SQLConf
+    val pinned = Seq(SQLConf.AUTO_BROADCASTJOIN_THRESHOLD,
+      SQLConf.DYNAMIC_PARTITION_PRUNING_ENABLED,
+      SQLConf.DYNAMIC_PARTITION_PRUNING_REUSE_BROADCAST_ONLY)
+      .map(e => e.key -> e.defaultValueString)
+    val prior = pinned.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pinned.foreach { case (k, v) => spark.conf.set(k, v) }
+    try dppPrunesFactScan()
+    finally prior.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def dppPrunesFactScan(): Unit = {
     val df = Registry.byName("q_layout_partition_dpp").fn(spark, dir)
     // the optimizer inserted a runtime pruning subquery on the fact scan
     val planned = df.queryExecution.executedPlan.toString
     assert(planned.contains("dynamicpruningexpression"), planned)
+    assert(!planned.contains("dynamicpruningexpression(true)"), planned)
     df.collect()
     // after execution: the fact scan only read the surviving month
     // directories — its output is a small fraction of the full table

@@ -349,22 +349,18 @@ class IoSpec extends SparkTestBase {
       (i.toLong, Seq.fill(8)("w").mkString(" "))
     }.toDF("doc_id", "text").repartition(4)
     val path = Files.createTempDirectory("graftshardcluster").toString + "/out"
-    val key = "spark.graft.shards.clusterWriteMinShards"
-    spark.conf.set(key, "4")
-    try {
-      val summary = Sinks
-        .writeTrainingShards(docs, "doc_id", "text", path, tokensPerShard = 16L)
-        .collect()
-      assert(summary.length == 30)
-      val dirs = new java.io.File(path).listFiles()
-        .filter(_.getName.startsWith("shard="))
-      assert(dirs.length == 30, dirs.length)
-      dirs.foreach { d =>
-        val parts = d.listFiles().filter(_.getName.startsWith("part-"))
-        assert(parts.length == 1,
-          s"${d.getName}: ${parts.length} files — shard not clustered")
-      }
-    } finally spark.conf.unset(key)
+    val summary = Sinks
+      .writeTrainingShards(docs, "doc_id", "text", path, tokensPerShard = 16L)
+      .collect()
+    assert(summary.length == 30)
+    val dirs = new java.io.File(path).listFiles()
+      .filter(_.getName.startsWith("shard="))
+    assert(dirs.length == 30, dirs.length)
+    dirs.foreach { d =>
+      val parts = d.listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1,
+        s"${d.getName}: ${parts.length} files — shard not clustered")
+    }
   }
 
   test("appendTrainingShards out of order still packs contiguously") {

@@ -87,10 +87,13 @@ class PlanShapeSpec extends SparkTestBase {
   test("q_text_packing shards by range — the corpus never hits one window partition") {
     val p = plan("q_text_packing")
     assert(p.contains("rangepartitioning"), p)
-    // the corpus-side window must be partitioned (by shard); the only
-    // un-partitioned window allowed is the P-row shard-base prefix,
-    // which sits under a broadcast
-    assert(p.contains("BroadcastExchange"), p)
+    // the offsets are the native running sum over the range exchange —
+    // no window of any kind, partitioned or not
+    val lines = p.linesIterator.toSeq
+    val sumAt = lines.indexWhere(_.contains("RunningSum"))
+    assert(sumAt >= 0, p)
+    assert(lines.indexWhere(_.contains("Exchange rangepartitioning"), sumAt) > sumAt, p)
+    assert(!p.contains("Window"), p)
   }
 
   test("q_text_gopher_gate is one scan, zero hash exchanges (pure per-row gate)") {

@@ -38,35 +38,49 @@ class ScaleSpec extends SparkTestBase {
     assert(pm == sm)
   }
 
-  test("packSequences: cache and localCheckpoint branches produce identical offsets") {
+  test("packSequences equals a single-partition window oracle") {
     // adversarial shape for RangePartitioner sampling: many ids, very
-    // skewed token counts — if the two materialization branches ever
-    // read differently-sampled shard boundaries, global offsets shift
+    // skewed token counts — if the running sum ever read shards in the
+    // wrong order or dropped a partition's offset, global offsets shift
     // and this comparison breaks
     val docs = (1 to 3000).map { i =>
       val words = (i * 2654435761L % 97 + 1).toInt
       (f"d$i%06d", Seq.fill(words)("w").mkString(" "))
-    }.toDF("doc_id", "text")
-    val viaCache = graft.text.TextAnalysis
-      .packSequences(docs, "doc_id", "text", seqLen = 128L, materialize = "cache")
-      .select("doc_id", "start_off", "end_off", "first_seq", "last_seq", "n_seqs")
-    val viaCp = graft.text.TextAnalysis
-      .packSequences(docs, "doc_id", "text", seqLen = 128L, materialize = "checkpoint")
-      .select("doc_id", "start_off", "end_off", "first_seq", "last_seq", "n_seqs")
-    val a = viaCache.orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = viaCp.orderBy("doc_id").collect().map(_.toSeq).toSeq
+    }.toDF("doc_id", "text").repartition(7)
+    val cols = Seq("doc_id", "start_off", "end_off", "first_seq", "last_seq", "n_seqs")
+    val packed = graft.text.TextAnalysis
+      .packSequences(docs, "doc_id", "text", seqLen = 128L)
+      .select(cols.map(col): _*)
+    import org.apache.spark.sql.expressions.Window
+    val before = Window.orderBy("doc_id")
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val oracle = docs
+      .select($"doc_id", graft.text.TextAnalysis.tokenCountWs($"text").as("n_tok"))
+      .withColumn("start_off", coalesce(sum($"n_tok").over(before), lit(0L)))
+      .withColumn("end_off", $"start_off" + $"n_tok")
+      .withColumn("first_seq", expr("start_off div 128"))
+      .withColumn("last_seq", expr("(end_off - 1) div 128"))
+      .withColumn("n_seqs", $"last_seq" - $"first_seq" + 1)
+      .select(cols.map(col): _*)
+    val a = packed.orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val b = oracle.orderBy("doc_id").collect().map(_.toSeq).toSeq
+    assert(a.length == 3000)
     assert(a == b)
     // offsets tile the token stream exactly: sorted starts are gapless
     val sorted = a.sortBy(_(1).asInstanceOf[Long])
+    assert(sorted.head(1) == 0L)
     sorted.sliding(2).foreach {
       case Seq(x, y) => assert(x(2) == y(1), s"gap between $x and $y")
       case _ => ()
     }
-    viaCache.unpersist(); viaCp.unpersist()
   }
 
   test("bucketed tables join with zero shuffle exchanges") {
     val wh = Files.createTempDirectory("graftwh").toString
+    // getOrCreate hands back the shared suite session and sets the
+    // runtime confs below on it; restore the broadcast threshold after
+    val bcKey = "spark.sql.autoBroadcastJoinThreshold"
+    val prevBc = spark.conf.getOption(bcKey)
     val s2 = SparkSession.builder()
       .master("local[4]")
       .config("spark.sql.warehouse.dir", wh)
@@ -86,6 +100,7 @@ class ScaleSpec extends SparkTestBase {
     } finally {
       s2.sql("DROP TABLE IF EXISTS bkt_a")
       s2.sql("DROP TABLE IF EXISTS bkt_b")
+      prevBc.fold(spark.conf.unset(bcKey))(spark.conf.set(bcKey, _))
     }
   }
 

@@ -5,7 +5,8 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-scan guards over `src/main/scala`: session wiring stays in
-  * one file, and a `*Udf` name stays a Spark UDF.
+  * one file, a `*Udf` name stays a Spark UDF, and global running sums
+  * go through the one running-sum operator.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -42,6 +43,17 @@ class SourceGuardSpec extends AnyFunSuite {
       m <- forwarder.findAllMatchIn(text)
       if fn.findFirstIn(m.group(2)).isDefined
     } yield s"$path: ${m.group(1)}"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("no hand-rolled running sum: the partition-id function appears nowhere") {
+    // sharding rows by their partition id was the per-shard subtotal +
+    // broadcast-base recipe that GlobalSeq.withRunningSum replaces;
+    // the name is spelled in parts so a grep over src finds only uses
+    val partitionId = Seq("spark", "partition", "id").mkString("_")
+    val offenders = sources.collect {
+      case (path, text) if text.contains(partitionId) => path.toString
+    }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
