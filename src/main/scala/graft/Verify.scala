@@ -42,11 +42,6 @@ object Verify {
       // memory to build and broadcast", seen at sf10). Verify is
       // untimed, so nudge the reaper between queries.
       spark.catalog.clearCache()
-      // the above-bound verify's materialized pair-list dirs are
-      // consumed once the result parquet is written — reclaim /tmp
-      // before the next query (ADVICE r12: the dirs otherwise leak
-      // for the session lifetime)
-      graft.dedup.Dedup.cleanupVerifyOutputs()
       System.gc()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

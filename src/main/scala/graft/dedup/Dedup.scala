@@ -603,6 +603,21 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       explode(array_distinct(
         graft.text.CorpusAudit.gramsUdf(n)(col(textCol)))).as("shingle"))
 
+  /** (idCol, xs) per doc — its sorted, distinct shingle-hash array,
+    * docs with none dropped — cached: the docs side every exact pair
+    * finder probes and [[verifyPairs]] reads. The caller unpersists.
+    */
+  private def shingleHashDocs(
+      df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
+    df.select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
+      .filter(size(col("xs")) > 0)
+      .cache()
+
+  /** J = |A∩B| / (|A| + |B| − |A∩B|) over a verified pair's counts. */
+  private def jaccard: Column =
+    col("n_common").cast("double") /
+      (col("n_a") + col("n_b") - col("n_common")).cast("double")
+
   /** Exact n-gram Jaccard similar pairs (a<b, J ≥ minJaccard) via a
     * shingle inverted index: postings shuffle ONCE into shingle-
     * clustered, (shingle, id)-sorted runs and every co-occurring pair
@@ -648,11 +663,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       .pairs(ex, col("shingle"), col(idCol), col("n_sh"), maxDf)
       .groupBy("a", "b", "n_a", "n_b")
       .agg(count(lit(1)).as("n_common"))
-      .withColumn(
-        "jaccard",
-        col("n_common").cast("double") /
-          (col("n_a") + col("n_b") - col("n_common")).cast("double")
-      )
+      .withColumn("jaccard", jaccard)
       .filter(col("jaccard") >= minJaccard)
       .select(col("a"), col("b"), col("n_common"), col("n_a"), col("n_b"), col("jaccard"))
     // materialize the (small) pair set — callers (clusterize's CC
@@ -710,10 +721,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     val t = minJaccard
     // xs is sorted ascending + distinct (shingle_hashes) — the global
     // prefix order and the merge-intersect both rely on it
-    val docs = df
-      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .cache()
+    val docs = shingleHashDocs(df, idCol, textCol, n)
     // prefix tokens carry their 0-based POSITION and the doc's set
     // size — the two integers the PPJoin filters below run on
     val pre = docs
@@ -771,14 +779,8 @@ object Dedup extends SpanRemovalOps with SimHashOps {
           col("sb") - col("pb") - 1L)).cast("double") >=
           lit(t / (1.0 + t)) * (col("sa") + col("sb")).cast("double") - lit(1e-9))
       .select("a", "b")
-    // Verify = broadcast joins under the bound / bucketed-by-id
-    // co-location above it, with the native codegen merge-intersect —
-    // see [[verifyPairsExact]] for the full shuffle-volume argument.
-    val out = verifyPairsExact(docs, cand, idCol) { v =>
-      v.withColumn(
-          "jaccard",
-          col("n_common").cast("double") /
-            (col("n_a") + col("n_b") - col("n_common")).cast("double"))
+    val out = verifyPairs(docs, docs, cand, idCol) { v =>
+      v.withColumn("jaccard", jaccard)
         .filter(col("jaccard") >= minJaccard)
         .select(col("a"), col("b"), col("n_common"), col("n_a"), col("n_b"),
           col("jaccard"))
@@ -787,63 +789,52 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     out
   }
 
-  /** Verify-join broadcast bound for the prefix-filtered pair paths:
-    * docs-with-shingle-arrays relations at or under this row count are
-    * broadcast to both verify joins (≈0.8 GB at ~1 kB/doc of hashes —
-    * sized for 8 GiB+ executors). Beyond it the verify co-locates on a
-    * bucketed-by-id docs layout (see [[verifyPairsExact]]). Override
-    * with the session conf `spark.graft.verify.broadcastMaxDocs`
-    * (PlanShapeSpec forces the above-bound path this way).
+  /** Docs-side row count at or under which both verify joins broadcast
+    * their arrays (≈0.8 GB at ~1 kB/doc of hashes — sized for 8 GiB+
+    * executors). A session with broadcast joins switched off
+    * (`spark.sql.autoBroadcastJoinThreshold` < 0) co-locates at any
+    * size.
     */
   private val VerifyBroadcastMaxDocs = 1000000L
 
-  /** Exact verify of prefix-filter candidates: attach both sorted
-    * shingle-hash arrays to each (a, b) candidate, count the true
+  /** The one exact verify of every near-dup pair finder: attach the
+    * sorted shingle-hash arrays of a (from `docsA`) and of b (from
+    * `docsB`) to each (a, b) candidate of `cand`, count the true
     * intersection with the native codegen merge loop
     * ([[graft.plans.SortedIntersectCount]] — the former Seq[Long] UDF
     * boxed ~10¹⁰ longs at sf10 and was ~80% of the operator wall), and
     * hand (a, b, n_common, n_a, n_b) to `finish` for the metric filter.
-    * The result is materialized (cache + count) before returning so
-    * the bucketed path can drop its temp table.
+    * Both docs frames carry (idCol, xs); pass the same frame twice for
+    * the self-join shape — it is then broadcast or co-located once. The
+    * result is materialized (cache + count) before returning.
     *
-    * Two physical postures, chosen by corpus size:
+    * Two physical postures:
     *
-    *  - docs ≤ broadcast bound: both array sides broadcast — candidate
-    *    rows never re-shuffle (the 25 GB regression the r11 broadcast
-    *    killed), arrays move once per executor.
-    *  - above the bound: docs are written ONCE to a bucketed-by-id
-    *    table ([[graft.layout.Layout.writeBucketed]] — on a real
-    *    deployment the corpus already lives bucketed by id and this
-    *    write is free), and both verify joins read the arrays
-    *    SCAN-LOCALLY: the a-side join shuffles only the narrow id
-    *    pairs to the bucketing, and exactly one intermediate exchange
-    *    carries one array per candidate (the a-side's xs, en route to
-    *    the b-side join), which is the irreducible minimum for exact
-    *    pairwise verification
-    *    without broadcast (Vernica et al., SIGMOD'10 §5 ship exactly
-    *    one record's token set per candidate in their verify phase;
-    *    any exact |A∩B| needs both sets in one place, and bucketing
-    *    can co-locate only one join key at a time). The docs-side
-    *    scans themselves are PROVABLY exchange-free
-    *    (PlanShapeSpec: no Exchange between either bucketed scan and
-    *    its join), so total verify shuffle volume is
-    *    |cand| × (2 ids) + |cand| × |xs_a| — at the containment
-    *    defaults the contained side's (smaller) array — versus the
-    *    pre-r11 |cand| × (|xs_a| + |xs_b|) BOTH ways plus two full
-    *    docs-relation shuffles.
+    *  - larger side ≤ [[VerifyBroadcastMaxDocs]] and broadcast joins
+    *    allowed: both array sides broadcast — candidate rows never
+    *    re-shuffle (the 25 GB regression the r11 broadcast killed),
+    *    arrays move once per executor.
+    *  - otherwise both joins co-locate on an id hash partitioning. A
+    *    side that already lives hash-partitioned by id (a bucketed
+    *    corpus scan; projections and the cache keep its partitioning)
+    *    is used as is. Any other side becomes a cached id-repartition
+    *    of its (id, xs), counted before the joins are planned, so they
+    *    are planned against a materialized cache and its settled hash
+    *    partitioning. The docs-side scans are then exchange-free
+    *    (PlanShapeSpec): the a-side join shuffles only the narrow id
+    *    pairs, and exactly one intermediate exchange carries one array
+    *    per candidate (the a-side's xs, en route to the b-side join) —
+    *    the irreducible minimum for exact pairwise verification without
+    *    broadcast (Vernica et al., SIGMOD'10 §5 ship exactly one
+    *    record's token set per candidate; any exact |A∩B| needs both
+    *    sets in one place, and one partitioning co-locates one join key
+    *    at a time). Total verify shuffle volume is |cand| × (2 ids) +
+    *    |cand| × |xs_a| plus the one-time docs repartition. The
+    *    repartition caches are released once the result is
+    *    materialized; `unpersist` does not cascade, so the result keeps
+    *    its cached rows.
     */
-  private[graft] def verifyPairsExact(
-      docs: DataFrame,
-      cand: DataFrame,
-      idCol: String)(finish: DataFrame => DataFrame): DataFrame =
-    verifyPairsExact2(docs, docs, cand, idCol)(finish)
-
-  /** Two-sided form of [[verifyPairsExact]] for the cross-shaped
-    * (new × history) verifies: the a side's arrays come from `docsA`,
-    * the b side's from `docsB` (pass the same relation twice for the
-    * self-join shape — it is broadcast/bucketed once, not twice).
-    */
-  private[graft] def verifyPairsExact2(
+  private[graft] def verifyPairs(
       docsA: DataFrame,
       docsB: DataFrame,
       cand: DataFrame,
@@ -851,8 +842,6 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     import graft.plans.ArrayOps.sorted_intersect_count
     val spark = docsA.sparkSession
     val same = docsA eq docsB
-    val bound = spark.conf.getOption("spark.graft.verify.broadcastMaxDocs")
-      .map(_.toLong).getOrElse(VerifyBroadcastMaxDocs)
     // Both array sides project to the SAME column shape/constraints so
     // their broadcast subtrees canonicalize equal — a prerequisite for
     // exchange reuse, though AQE's TableCacheQueryStage wrapping still
@@ -880,14 +869,9 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     def proj(d: DataFrame) =
       d.select(col(idCol).as("__vid"), col("xs").as("__vxs"))
         .where(col("__vid").isNotNull && col("__vxs").isNotNull)
-    // A corpus that ALREADY lives hash-partitioned on the id (a
-    // bucketed table scan, projected per-row to (id, xs) — projections
-    // and the cache preserve the scan's partitioning) needs no layout
-    // work at all above the bound: both verify joins co-locate on the
-    // existing bucketing, so the temp-table write is skipped entirely.
-    // This is the VERDICT r11 "accept a pre-bucketed input" posture —
-    // at 100 TB the corpus is born bucketed (SCALE.md) and the verify
-    // is then pure join work.
+    // the VERDICT r11 "accept a pre-bucketed input" posture — at 100 TB
+    // the corpus is born bucketed (SCALE.md) and the verify is then
+    // pure join work
     def bucketedById(d: DataFrame): Boolean =
       d.queryExecution.sparkPlan.outputPartitioning match {
         case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
@@ -898,117 +882,35 @@ object Dedup extends SpanRemovalOps with SimHashOps {
           }
         case _ => false
       }
-    val nDocs =
-      if (same) docsA.count() else math.max(docsA.count(), docsB.count())
-    if (nDocs <= bound) {
-      val out = finish(
-        verified(broadcast(proj(docsA)), broadcast(proj(docsB)))).cache()
-      out.count()
-      out
-    } else if (bucketedById(docsA) && (same || bucketedById(docsB))) {
-      val res = finish(verified(proj(docsA), proj(docsB)))
-      captureVerifyPlan(spark, res)
+    def colocated(d: DataFrame): DataFrame =
+      if (bucketedById(d)) d
+      else {
+        val c = d.select(col(idCol), col("xs"))
+          .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+            col(idCol))
+          .cache()
+        c.count()
+        c
+      }
+    def materialized(res: DataFrame): DataFrame = {
       val out = res.cache()
       out.count()
       out
-    } else {
-      val nonce = java.util.UUID.randomUUID.toString.replace("-", "")
-      val tblA = s"graft_verify_docs_a_$nonce"
-      val tblB = s"graft_verify_docs_b_$nonce"
-      val buckets = spark.conf.get("spark.sql.shuffle.partitions").toInt
-      graft.layout.Layout.writeBucketed(
-        docsA.select(col(idCol), col("xs")), tblA, idCol, buckets)
-      if (!same) graft.layout.Layout.writeBucketed(
-        docsB.select(col(idCol), col("xs")), tblB, idCol, buckets)
-      try {
-        val res = finish(verified(
-          proj(spark.table(tblA)),
-          proj(spark.table(if (same) tblA else tblB))))
-        captureVerifyPlan(spark, res)
-        // The verified-and-filtered output is PAIR-LIST sized (the
-        // dedup hits, not the corpus) — materialize it to a temp
-        // parquet before dropping the docs table. cache() alone is NOT
-        // enough: DROP TABLE cascade-uncaches every plan referencing
-        // the dropped relation, silently turning later reads of the
-        // "materialized" result into recomputes against deleted files.
-        val outDir = new java.io.File(
-          sys.props("java.io.tmpdir"), s"graft_verify_out_$nonce").getPath
-        res.write.mode("overwrite").parquet(outDir)
-        registerVerifyOutputDir(outDir)
-        val back = spark.read.parquet(outDir).cache()
-        back.count()
-        back
-      } finally {
-        graft.layout.Layout.dropWithLocation(spark, tblA)
-        if (!same) graft.layout.Layout.dropWithLocation(spark, tblB)
-      }
     }
-  }
-
-  /** Test hook: the physical plan of the most recent above-bound
-    * verify ([[verifyPairsExact]]'s bucketed branch) — the returned
-    * frame reads the materialized pair list, so the verify plan is
-    * not reachable from it (PlanShapeSpec asserts the bucketed scans
-    * and the single array-bearing exchange here instead).
-    *
-    * Capture is OFF unless `spark.graft.verify.capturePlan=true`
-    * (PlanShapeSpec sets it): an executed plan pins exchanges/metrics
-    * for the session lifetime, and the object-level var is not safe
-    * under concurrent queries — production runs never populate it.
-    */
-  private[graft] var lastVerifyPlan
-      : Option[org.apache.spark.sql.execution.SparkPlan] = None
-
-  private def captureVerifyPlan(
-      spark: org.apache.spark.sql.SparkSession,
-      res: DataFrame): Unit =
-    if (spark.conf.getOption("spark.graft.verify.capturePlan")
-          .contains("true"))
-      lastVerifyPlan = Some(res.queryExecution.executedPlan)
-
-  // --- above-bound verify output lifecycle -------------------------
-  // The materialized pair-list dirs (graft_verify_out_*) must outlive
-  // the DROP TABLE of the bucketed docs temp tables (see the cascade-
-  // uncache note above), so they cannot be deleted inside the verify
-  // call — but a long-running ingest session that calls the above-
-  // bound path repeatedly would otherwise grow java.io.tmpdir without
-  // bound (ADVICE r12). Every created dir is registered here; a JVM
-  // shutdown hook sweeps whatever is left, and callers that have
-  // released all returned frames (end of an ingest run, between
-  // Verify/ScaleBench catalogs) can reclaim eagerly via
-  // [[cleanupVerifyOutputs]].
-  private val verifyOutputDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  private lazy val verifyShutdownHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      verifyOutputDirs.forEach(d => deleteRecursively(new java.io.File(d)))))
-
-  private def registerVerifyOutputDir(dir: String): Unit = {
-    verifyShutdownHook
-    verifyOutputDirs.add(dir)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) {
-      val cs = f.listFiles()
-      if (cs != null) cs.foreach(deleteRecursively)
-    }
-    f.delete(): Unit
-  }
-
-  /** Delete every above-bound verify output dir this JVM has
-    * materialized so far. Safe ONLY once all DataFrames returned by
-    * above-bound [[containmentPairs]]/[[minHashLshPairs]]/… calls have
-    * been fully consumed or written out — the returned frames READ
-    * these dirs (their cache can be evicted and recomputed from them).
-    * Verify/ScaleBench call this between catalog runs; unswept dirs
-    * are also reaped by the shutdown hook.
-    */
-  def cleanupVerifyOutputs(): Unit = {
-    var d = verifyOutputDirs.poll()
-    while (d != null) {
-      deleteRecursively(new java.io.File(d))
-      d = verifyOutputDirs.poll()
+    val broadcastOk =
+      spark.sessionState.conf.autoBroadcastJoinThreshold >= 0 &&
+        (if (same) docsA.count()
+         else math.max(docsA.count(), docsB.count())) <= VerifyBroadcastMaxDocs
+    if (broadcastOk)
+      materialized(finish(
+        verified(broadcast(proj(docsA)), broadcast(proj(docsB)))))
+    else {
+      val sideA = colocated(docsA)
+      val sideB = if (same) sideA else colocated(docsB)
+      val out = materialized(finish(verified(proj(sideA), proj(sideB))))
+      if (sideA ne docsA) sideA.unpersist()
+      if (!same && (sideB ne docsB)) sideB.unpersist()
+      out
     }
   }
 
@@ -1049,86 +951,17 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       minContainment: Double,
       maxDf: Long = 1000L
   ): DataFrame = {
-    val t = minContainment
-    val docs = df
-      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .cache()
-    val withSz = docs.withColumn("sz", size(col("xs")).cast("long"))
-    // probe side: prefix postings of the CONTAINED candidate a
-    // (codegen slice — see [[prefixSlice]])
-    val pa0 = withSz.select(col(idCol).as("a"), col("sz").as("sa"),
-      posexplode(prefixSlice(col("xs"), t)).as(Seq("pa", "shingle")))
-    // index side: EVERY posting of the containing candidate b
-    val pb0 = withSz.select(col(idCol).as("b"), col("sz").as("sb"),
-      posexplode(col("xs")).as(Seq("pb", "shingle_b")))
-    // df computed over the FULL index side (true document frequency);
-    // the probe side prunes against the same hot set
-    val hot =
-      if (maxDf == Long.MaxValue) None
-      else Some(
-        pb0.groupBy(col("shingle_b").as("shingle"))
-          .agg(count(lit(1)).as("df"))
-          .filter(col("df") > maxDf)
-          .select("shingle")
-          .cache())
-    val (pra, prb) = hot match {
-      case None => (pa0, pb0)
-      case Some(h) =>
-        (pa0.join(h, Seq("shingle"), "left_anti"),
-          pb0.join(h.select(col("shingle").as("shingle_b")),
-            Seq("shingle_b"), "left_anti"))
-    }
-    // Positional filter PER POSTING, inside the join condition — ahead
-    // of the pair-aggregation shuffle. Lossless: a qualifying pair's
-    // first common element e has >= ceil(t*sa) common elements at
-    // positions >= pb(e) in b, so sb - pb(e) >= t*sa and e's posting
-    // survives; min(pa)/min(pb) are achieved AT e, so the aggregated
-    // values are unchanged. Every pruned row was either a non-first
-    // posting of a surviving pair (redundant for the min-agg) or a
-    // candidate no qualifying pair needs — at scale this is the cut
-    // that keeps hot cross-corpus shingles (boilerplate, numerics)
-    // from exploding the shuffle.
-    val cand = pra
-      .join(prb,
-        col("shingle") === col("shingle_b") && col("a") =!= col("b") &&
-          col("sb").cast("double") >= lit(t) * col("sa").cast("double") - lit(1e-9) &&
-          (col("sb") - col("pb")).cast("double") >=
-            lit(t) * col("sa").cast("double") - lit(1e-9))
-      .groupBy("a", "b")
-      .agg(min("pa").as("pa"), min("pb").as("pb"),
-        min("sa").as("sa"), min("sb").as("sb"))
-      .filter(
-        (lit(1L) + least(col("sa") - col("pa") - 1L,
-          col("sb") - col("pb") - 1L)).cast("double") >=
-          lit(t) * col("sa").cast("double") - lit(1e-9))
-      .select("a", "b")
-    // Verify = broadcast joins under the bound / bucketed-by-id
-    // co-location above it, with the native codegen merge-intersect —
-    // see [[verifyPairsExact]] for the full shuffle-volume argument
-    // (here the exchange-crossing array is xs_a: the CONTAINED side,
-    // the smaller one on the quotation face this operator exists for).
-    val out = verifyPairsExact(docs, cand, idCol) { v =>
-      v.withColumn("containment",
-          col("n_common").cast("double") / col("n_a").cast("double"))
-        .filter(col("containment") >= minContainment)
-        .select(col("a"), col("b"), col("n_common"), col("n_a"), col("n_b"),
-          col("containment"))
-    }
-    hot.foreach(_.unpersist())
-    docs.unpersist()
+    // the self shape of the prepared cross path: the docs are both the
+    // index and the probe, so the verify sees ONE docs frame
+    val hist = containmentIndex(
+      shingleHashDocs(df, idCol, textCol, n), idCol, n, maxDf)
+    val out = containmentProbe(hist.histDocs, hist, minContainment)(
+      _.select(col("a"), col("b"), col("n_common"), col("n_a"), col("n_b"),
+        col("containment")))
+    hist.unpersist()
     out
   }
 
-  /** The ACTION face of [[containmentPairs]]: drop each doc that is
-    * >= t contained in a LARGER doc (strictly more shingles; equal
-    * sizes tie-break on smaller id so a mutual-containment pair —
-    * near-identical docs — keeps exactly one). This is the curation
-    * step real pipelines take on a containment hit: the short quoted
-    * copy dies, the page that quotes it survives. Docs with no
-    * shingles (shorter than n tokens) pass through untouched — they
-    * carry no containment signal either way.
-    */
   /** Incremental (refresh-shape) containment join: every NEW document
     * checked for ≥ t containment IN a standing-history document, with
     * no history-internal and no new-internal pairwork — the T2
@@ -1189,15 +1022,22 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       textCol: String,
       n: Int,
       maxDf: Long = 1000L
-  ): ContainmentHistory = {
-    val histDocs = histDf
-      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .cache()
-    // index: EVERY posting of the HISTORY (containing) side
+  ): ContainmentHistory =
+    containmentIndex(shingleHashDocs(histDf, idCol, textCol, n), idCol, n, maxDf)
+
+  /** The containing-side index over cached (idCol, xs) docs: EVERY
+    * posting, with the hot set (document frequency > `maxDf`) pruned.
+    */
+  private def containmentIndex(
+      histDocs: DataFrame,
+      idCol: String,
+      n: Int,
+      maxDf: Long): ContainmentHistory = {
     val pb0 = histDocs.withColumn("sz", size(col("xs")).cast("long"))
       .select(col(idCol).as("b"), col("sz").as("sb"),
         posexplode(col("xs")).as(Seq("pb", "shingle_b")))
+    // df computed over the FULL index side (true document frequency);
+    // the probe side prunes against the same hot set
     val hot =
       if (maxDf == Long.MaxValue) None
       else Some(
@@ -1216,8 +1056,8 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   }
 
   /** [[containmentPairsAgainst]] with the history side supplied by
-    * [[prepareContainmentHistory]] — identical pair output (the plan
-    * below is the batch form's verbatim, reading the prepared
+    * [[prepareContainmentHistory]] — identical pair output (the same
+    * probe-and-verify body as the batch form, reading the prepared
     * relations instead of rebuilding them).
     */
   def containmentPairsAgainstPrepared(
@@ -1226,28 +1066,47 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       minContainment: Double,
       hist: ContainmentHistory
   ): DataFrame = {
-    val t = minContainment
+    val newDocs = shingleHashDocs(newDf, hist.idCol, textCol, hist.n)
+    val out = containmentProbe(newDocs, hist, minContainment)(
+      _.select(col("a").as("new_id"), col("b").as("hist_id"),
+        col("n_common"), col("n_a"), col("n_b"), col("containment")))
+    newDocs.unpersist()
+    out
+  }
+
+  /** Probe the prefix postings of the contained-candidate `docs`
+    * (cached (idCol, xs)) against the `hist` index, prune, and verify:
+    * `finish` receives the verified (a, b, n_common, n_a, n_b,
+    * containment ≥ t) rows. `docs` may be `hist.histDocs` itself — the
+    * batch self shape — and the verify then reads one docs frame.
+    */
+  private def containmentProbe(
+      docs: DataFrame,
+      hist: ContainmentHistory,
+      t: Double)(finish: DataFrame => DataFrame): DataFrame = {
     val idCol = hist.idCol
-    val newDocs = newDf
-      .select(col(idCol), GramHash.shingle_hashes(col(textCol), hist.n).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .cache()
-    // probe: prefix postings of the NEW (contained-candidate) side
-    // (codegen slice — see [[prefixSlice]])
-    val pa0 = newDocs.withColumn("sz", size(col("xs")).cast("long"))
+    // probe: prefix postings of the CONTAINED candidate a (codegen
+    // slice — see [[prefixSlice]])
+    val pa0 = docs.withColumn("sz", size(col("xs")).cast("long"))
       .select(col(idCol).as("a"), col("sz").as("sa"),
         posexplode(prefixSlice(col("xs"), t)).as(Seq("pa", "shingle")))
     val pra = hist.hot match {
       case None    => pa0
       case Some(h) => pa0.join(h, Seq("shingle"), "left_anti")
     }
-    val prb = hist.prb
-    val histDocs = hist.histDocs
-    // identical length + per-posting positional prunes as
-    // [[containmentPairs]] (the cross shape changes nothing in the
-    // bound: a still needs ceil(t·sa) common elements inside b)
+    // Positional filter PER POSTING, inside the join condition — ahead
+    // of the pair-aggregation shuffle. Lossless: a qualifying pair's
+    // first common element e has >= ceil(t*sa) common elements at
+    // positions >= pb(e) in b, so sb - pb(e) >= t*sa and e's posting
+    // survives; min(pa)/min(pb) are achieved AT e, so the aggregated
+    // values are unchanged. Every pruned row was either a non-first
+    // posting of a surviving pair (redundant for the min-agg) or a
+    // candidate no qualifying pair needs — at scale this is the cut
+    // that keeps hot cross-corpus shingles (boilerplate, numerics)
+    // from exploding the shuffle. The cross shape changes nothing in
+    // the bound: a still needs ceil(t·sa) common elements inside b.
     val cand = pra
-      .join(prb,
+      .join(hist.prb,
         col("shingle") === col("shingle_b") && col("a") =!= col("b") &&
           col("sb").cast("double") >= lit(t) * col("sa").cast("double") - lit(1e-9) &&
           (col("sb") - col("pb")).cast("double") >=
@@ -1260,15 +1119,14 @@ object Dedup extends SpanRemovalOps with SimHashOps {
           col("sb") - col("pb") - 1L)).cast("double") >=
           lit(t) * col("sa").cast("double") - lit(1e-9))
       .select("a", "b")
-    val out = verifyPairsExact2(newDocs, histDocs, cand, idCol) { v =>
-      v.withColumn("containment",
+    // the exchange-crossing array of the co-located verify is xs_a:
+    // the CONTAINED side, the smaller one on the quotation face this
+    // operator exists for
+    verifyPairs(docs, hist.histDocs, cand, idCol) { v =>
+      finish(v.withColumn("containment",
           col("n_common").cast("double") / col("n_a").cast("double"))
-        .filter(col("containment") >= minContainment)
-        .select(col("a").as("new_id"), col("b").as("hist_id"),
-          col("n_common"), col("n_a"), col("n_b"), col("containment"))
+        .filter(col("containment") >= t))
     }
-    newDocs.unpersist()
-    out
   }
 
   /** The ACTION face of [[containmentPairsAgainst]] — the ingest
@@ -1295,6 +1153,15 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     newDf.join(doomed, Seq(idCol), "left_anti")
   }
 
+  /** The ACTION face of [[containmentPairs]]: drop each doc that is
+    * >= t contained in a LARGER doc (strictly more shingles; equal
+    * sizes tie-break on smaller id so a mutual-containment pair —
+    * near-identical docs — keeps exactly one). This is the curation
+    * step real pipelines take on a containment hit: the short quoted
+    * copy dies, the page that quotes it survives. Docs with no
+    * shingles (shorter than n tokens) pass through untouched — they
+    * carry no containment signal either way.
+    */
   def containmentDedup(
       df: DataFrame,
       idCol: String,
@@ -1312,21 +1179,9 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     df.join(doomed, Seq(idCol), "left_anti")
   }
 
-  /** Distinct shingles hashed to longs IN-ROW (xxhash64 inside the
-    * transform lambda) before exploding — the exploded relation carries
-    * 8-byte longs instead of strings, which is what shuffles/joins in
-    * the MinHash path. Collisions (~2^-64) only affect candidate
-    * generation, which exact verification absorbs.
-    */
-  def hashedShingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    df.select(col(idCol),
-      explode(array_distinct(
-        transform(graft.text.CorpusAudit.gramsUdf(n)(col(textCol)),
-          g => xxhash64(g)))).as("xh"))
-
-  /** MinHash signature columns: h_i(doc) = min over shingles of
-    * ((a_i·x + b_i) mod p) where x = xxhash64(shingle). Permutation
-    * seeds are fixed → fully deterministic across runs and executors.
+  /** MinHash modulus: [[minHashSig]]'s h_i(doc) = min over the doc's
+    * shingle hashes x of ((a_i·x + b_i) mod p). Permutation seeds are
+    * fixed → fully deterministic across runs and executors.
     */
   val MinHashP: Long = 2147483647L // 2^31-1, prime
 
@@ -1335,22 +1190,6 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     */
   private def perm(i: Int): (Long, Long) =
     (104729L * i + 12345L, 15485863L * (i + 1))
-
-  def minHashSignatures(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      n: Int,
-      numHashes: Int
-  ): DataFrame = {
-    val sh = shingles(df, idCol, textCol, n)
-      .withColumn("x", pmod(xxhash64(col("shingle")), lit(MinHashP)))
-    val aggs = (0 until numHashes).map { i =>
-      val (a, b) = perm(i)
-      min(pmod(col("x") * a + b, lit(MinHashP))).as(s"mh_$i")
-    }
-    sh.groupBy(idCol).agg(aggs.head, aggs.tail: _*)
-  }
 
   /** Full MinHash signature of a hashed-shingle array column under
     * the first `numHashes` permutations of [[perm]] (shared by the
@@ -1373,8 +1212,8 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       struct(lit(bIdx).as("band"), xxhash64(cols: _*).as("h"))
     }
 
-  /** Sorted-array intersection count — the exact-verify core shared by
-    * the batch path's array_intersect and the streaming state face.
+  /** Sorted-array intersection count — the streaming state face's
+    * exact verify (the batch faces count with [[verifyPairs]]).
     */
   private[graft] def interCount(a: Array[Long], b: Array[Long]): Int = {
     var i = 0; var j = 0; var c = 0
@@ -1385,6 +1224,20 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     }
     c
   }
+
+  /** Band-bucket rows (idCol, band, h) of cached (idCol, xs) docs: the
+    * `bands` band keys of each doc's MinHash signature — the candidate
+    * generator of both LSH pair finders. One primitive-loop signature
+    * per doc beats numHashes interpreted HOF lambdas per element
+    * (~80×32 boxed evals per row).
+    */
+  private def lshBuckets(
+      docs: DataFrame, idCol: String, bands: Int, rowsPerBand: Int): DataFrame =
+    docs
+      .select(col(idCol), minHashSig(bands * rowsPerBand)(col("xs")).as("sig"))
+      .select(col(idCol),
+        explode(array(bandKeyStructs(bands, rowsPerBand): _*)).as("bk"))
+      .select(col(idCol), col("bk.band").as("band"), col("bk.h").as("h"))
 
   /** LSH banding over MinHash signatures: a pair agreeing on any band
     * becomes a candidate; candidates are then verified with exact
@@ -1400,28 +1253,16 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       rowsPerBand: Int = 4,
       minJaccard: Double = 0.5
   ): DataFrame = {
-    val numHashes = bands * rowsPerBand
     // Explode-free: the doc's distinct hashed-shingle SET rides as one
     // array column (built by the compiled shingle_hashes loop, not an
     // interpreted HOF chain); signatures are per-row primitive loops
-    // and exact verification is array_intersect on the (few) candidate
-    // pairs. The only shuffles are the tiny band-bucket join and the
-    // candidate lookups.
+    // and exact verification counts on the (few) candidate pairs. The
+    // only shuffles are the tiny band-bucket join and the verify.
     // cache: tiny (|docs| × shingle-count longs) and referenced by three
     // plan branches — without it Spark recomputes the hashes per branch
     // (no cross-branch CSE)
-    val base = df
-      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .cache()
-    // one primitive-loop signature per doc beats numHashes interpreted
-    // HOF lambdas per element (~80×32 boxed evals per row)
-    val sig = minHashSig(numHashes)
-    val bandCols = bandKeyStructs(bands, rowsPerBand)
-    val buckets = base
-      .select(col(idCol), sig(col("xs")).as("sig"))
-      .select(col(idCol), explode(array(bandCols: _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.h").as("h"))
+    val base = shingleHashDocs(df, idCol, textCol, n)
+    val buckets = lshBuckets(base, idCol, bands, rowsPerBand)
       .cache() // bands × |docs| rows of three longs — the self-join
                // below would otherwise compute the signatures twice
     val l = buckets.select(col(idCol).as("a"), col("band"), col("h"))
@@ -1431,26 +1272,13 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       .filter(col("a") < col("b"))
       .select("a", "b")
       .distinct()
-    val verified = cand
-      .join(base.select(col(idCol).as("a"), col("xs").as("xs_a")), Seq("a"))
-      .join(base.select(col(idCol).as("b"), col("xs").as("xs_b")), Seq("b"))
-      // xs is sorted+distinct, so the native count equals
-      // size(array_intersect(..)) without materializing the
-      // intersection array per candidate pair
-      .withColumn("n_common", graft.plans.ArrayOps
-        .sorted_intersect_count(col("xs_a"), col("xs_b")))
-      .withColumn(
-        "jaccard",
-        col("n_common").cast("double") /
-          (size(col("xs_a")) + size(col("xs_b")) - col("n_common")).cast("double")
-      )
-      .filter(col("jaccard") >= minJaccard)
-      .select("a", "b", "jaccard")
-    // materialize the verified pairs (orders of magnitude smaller than
-    // the corpus), then release the corpus-sized intermediates — the
-    // caches must not outlive the call in a long-lived session
-    val out = verified.cache()
-    out.count()
+    // the verified pairs are orders of magnitude smaller than the
+    // corpus; release the corpus-sized intermediates — the caches must
+    // not outlive the call in a long-lived session
+    val out = verifyPairs(base, base, cand, idCol)(
+      _.withColumn("jaccard", jaccard)
+        .filter(col("jaccard") >= minJaccard)
+        .select("a", "b", "jaccard"))
     base.unpersist()
     buckets.unpersist()
     out
@@ -1479,42 +1307,23 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       rowsPerBand: Int = 4,
       minJaccard: Double = 0.5
   ): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val sig = minHashSig(numHashes)
-    def prep(df: DataFrame) = df
-      .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
-      .filter(size(col("xs")) > 0)
-      .cache()
-    def buckets(base: DataFrame) = base
-      .select(col(idCol), sig(col("xs")).as("sig"))
-      .select(col(idCol), explode(array(bandKeyStructs(bands, rowsPerBand): _*)).as("bk"))
-      .select(col(idCol), col("bk.band").as("band"), col("bk.h").as("h"))
-    val nb = prep(newDf)
-    val hb = prep(histDf)
-    val cand = buckets(nb).select(col(idCol).as("new_id"), col("band"), col("h"))
-      .join(buckets(hb).select(col(idCol).as("hist_id"), col("band"), col("h")),
-        Seq("band", "h"))
+    val nb = shingleHashDocs(newDf, idCol, textCol, n)
+    val hb = shingleHashDocs(histDf, idCol, textCol, n)
+    val cand = lshBuckets(nb, idCol, bands, rowsPerBand)
+      .select(col(idCol).as("a"), col("band"), col("h"))
+      .join(lshBuckets(hb, idCol, bands, rowsPerBand)
+        .select(col(idCol).as("b"), col("band"), col("h")), Seq("band", "h"))
       // a re-delivered id present in both batch and history would pair
       // with itself at jaccard 1.0 and be flagged a duplicate of
       // itself, breaking the composition contract with the self-join
       // path (which enforces a < b) — drop self-pairs at candidate time
-      .filter(col("new_id") =!= col("hist_id"))
-      .select("new_id", "hist_id")
+      .filter(col("a") =!= col("b"))
+      .select("a", "b")
       .distinct()
-    val verified = cand
-      .join(nb.select(col(idCol).as("new_id"), col("xs").as("xs_n")), Seq("new_id"))
-      .join(hb.select(col(idCol).as("hist_id"), col("xs").as("xs_h")), Seq("hist_id"))
-      // sorted+distinct arrays — native merge count, no per-pair
-      // intersection array (see [[minHashLshPairs]])
-      .withColumn("n_common", graft.plans.ArrayOps
-        .sorted_intersect_count(col("xs_n"), col("xs_h")))
-      .withColumn("jaccard",
-        col("n_common").cast("double") /
-          (size(col("xs_n")) + size(col("xs_h")) - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= minJaccard)
-      .select("new_id", "hist_id", "jaccard")
-    val out = verified.cache()
-    out.count()
+    val out = verifyPairs(nb, hb, cand, idCol)(
+      _.withColumn("jaccard", jaccard)
+        .filter(col("jaccard") >= minJaccard)
+        .select(col("a").as("new_id"), col("b").as("hist_id"), col("jaccard")))
     nb.unpersist(); hb.unpersist()
     out
   }
@@ -1536,53 +1345,59 @@ object Dedup extends SpanRemovalOps with SimHashOps {
         * small-side-threshold idea as broadcast joins; identical output
         */
       localThreshold: Long = 500000L
-  ): DataFrame = {
-    val spark = pairs.sparkSession
-    // keep the ORIGINAL id type end-to-end: casting to long would turn
-    // non-numeric string ids into null and silently corrupt components,
-    // and the distributed path (no cast) would then disagree with this
-    // one. Row values (Long/Integer/String/...) are all Comparable, so
-    // min-labeling works generically.
-    //
-    // ONE job decides tier AND fetches the edges: limit(threshold+1)
-    // collects every edge iff the graph is local-sized (the +1 row is
-    // the over-threshold sentinel) — the previous count()-then-
-    // collect() shape paid two jobs over the pair relation.
-    val rawEdges = pairs.select(col(aCol), col(bCol))
-    val es = rawEdges.limit(localThreshold.toInt + 1).collect()
-    if (es.length <= localThreshold) {
-      val idType = rawEdges.schema.head.dataType
-      val parent = unionFind(es)
-      val out = parent.keys.toSeq
-        .map(n => org.apache.spark.sql.Row(n, ufFind(parent, n)))
+  ): DataFrame = localComponents(pairs, aCol, bCol, localThreshold) match {
+    case Some((labels, idType)) =>
+      val spark = pairs.sparkSession
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("node", idType),
         org.apache.spark.sql.types.StructField("comp", idType)
       ))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toSeq, 1), schema)
-    }
-    connectedComponentsDistributed(pairs, aCol, bCol, maxIters)
+      spark.createDataFrame(spark.sparkContext.parallelize(
+        labels.map { case (n, c) => org.apache.spark.sql.Row(n, c) }, 1), schema)
+    case None => connectedComponentsDistributed(pairs, aCol, bCol, maxIters)
   }
 
-  /** Path-compressed union-find over collected (a, b) edge rows,
-    * components labeled by min member — the driver-side tier shared by
-    * [[connectedComponents]] and [[clusterize]].
+  /** The driver-side components tier shared by [[connectedComponents]]
+    * and [[clusterize]]: (node, component = min member) for every node
+    * of the (a, b) edge graph plus the id type, or None when the graph
+    * has more than `localThreshold` edges.
+    *
+    * The ORIGINAL id type is kept end-to-end: casting to long would
+    * turn non-numeric string ids into null and silently corrupt
+    * components, and the distributed path (no cast) would then
+    * disagree with this one. Row values (Long/Integer/String/...) are
+    * all Comparable, so min-labeling works generically.
+    *
+    * ONE job decides the tier AND fetches the edges: limit(threshold+1)
+    * collects every edge iff the graph is local-sized (the +1 row is
+    * the over-threshold sentinel) — a count()-then-collect() shape
+    * would pay two jobs over the pair relation.
     */
-  private def unionFind(
-      es: Array[org.apache.spark.sql.Row]): scala.collection.mutable.HashMap[Any, Any] = {
-    @inline def less(x: Any, y: Any): Boolean =
-      x.asInstanceOf[Comparable[Any]].compareTo(y.asInstanceOf[Comparable[Any]]) < 0
-    val parent = scala.collection.mutable.HashMap.empty[Any, Any]
-    es.foreach { row =>
-      val a = row.get(0); val b = row.get(1)
-      if (a != null && b != null) {
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (ufFind(parent, a), ufFind(parent, b))
-        if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+  private def localComponents(
+      pairs: DataFrame,
+      aCol: String,
+      bCol: String,
+      localThreshold: Long
+  ): Option[(Seq[(Any, Any)], org.apache.spark.sql.types.DataType)] = {
+    val rawEdges = pairs.select(col(aCol), col(bCol))
+    val es = rawEdges.limit(localThreshold.toInt + 1).collect()
+    if (es.length > localThreshold) None
+    else {
+      // path-compressed union-find, components labeled by min member
+      @inline def less(x: Any, y: Any): Boolean =
+        x.asInstanceOf[Comparable[Any]].compareTo(y.asInstanceOf[Comparable[Any]]) < 0
+      val parent = scala.collection.mutable.HashMap.empty[Any, Any]
+      es.foreach { row =>
+        val a = row.get(0); val b = row.get(1)
+        if (a != null && b != null) {
+          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+          val (ra, rb) = (ufFind(parent, a), ufFind(parent, b))
+          if (ra != rb) { if (less(ra, rb)) parent(rb) = ra else parent(ra) = rb }
+        }
       }
+      Some((parent.keys.toSeq.map(n => n -> ufFind(parent, n)),
+        rawEdges.schema.head.dataType))
     }
-    parent
   }
 
   private def ufFind(
@@ -1632,12 +1447,6 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       maxIters: Int = 20
   ): DataFrame =
     connectedComponentsDistributedWithCleanup(pairs, aCol, bCol, maxIters)._1
-
-  /** The localCheckpoint RDD backing a just-checkpointed frame — see
-    * [[graft.core.Graft.checkpointRdd]] (shared with the layout merge).
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    graft.core.Graft.checkpointRdd(df)
 
   /** [[connectedComponentsDistributed]] plus an explicit storage
     * release handle: the returned frame is backed by the final round's
@@ -1704,7 +1513,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       // above was the previous round's last reader — free the previous
       // checkpoint's BLOCKS now (DataFrame.unpersist would be a no-op
       // on the LogicalRDD-backed frame)
-      checkpointRdd(e).foreach(_.unpersist(blocking = false))
+      graft.core.Graft.checkpointRdd(e).foreach(_.unpersist(blocking = false))
       e = ss
       eCount = ssCount
       iter += 1
@@ -1726,7 +1535,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     val roots = e.select(col("v").as("node")).distinct()
       .join(members.select("node"), Seq("node"), "left_anti")
       .withColumn("comp", col("node"))
-    val lastCheckpoint = checkpointRdd(e)
+    val lastCheckpoint = graft.core.Graft.checkpointRdd(e)
     (members.unionByName(roots).repartition(p, col("node")),
       () => lastCheckpoint.foreach(_.unpersist(blocking = false)))
   }
@@ -1747,57 +1556,51 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   def clusterize(
       pairs: DataFrame,
       idCol: String,
-      localThreshold: Long = 500000L): DataFrame = {
-    val spark = pairs.sparkSession
+      localThreshold: Long = 500000L): DataFrame =
     // Local-sized graphs (the common case: near-dup pair relations are
     // orders of magnitude smaller than the corpus) finish entirely
     // driver-side in the ONE job that fetched the edges — components,
-    // sizes, and canonical flags are all derived from the union-find
-    // table, where the previous formulation paid a count job, a
-    // collect job, and a shuffle-stage materialization job.
-    val rawEdges = pairs.select(col("a"), col("b"))
-    val es = rawEdges.limit(localThreshold.toInt + 1).collect()
-    if (es.length <= localThreshold) {
-      val idType = rawEdges.schema.head.dataType
-      val parent = unionFind(es)
-      val byComp = parent.keys.toSeq.groupBy(n => ufFind(parent, n))
-      val rows = byComp.toSeq.flatMap { case (comp, members) =>
-        val size = members.size.toLong
-        members.map(n =>
-          org.apache.spark.sql.Row(n, comp, size, n == comp))
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol, idType),
-        org.apache.spark.sql.types.StructField("component", idType),
-        org.apache.spark.sql.types.StructField("cluster_size",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("is_canonical",
-          org.apache.spark.sql.types.BooleanType)
-      ))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1), schema)
+    // sizes, and canonical flags all come from the union-find labels,
+    // with no count, collect or shuffle-stage materialization job.
+    localComponents(pairs, "a", "b", localThreshold) match {
+      case Some((labels, idType)) =>
+        val spark = pairs.sparkSession
+        val rows = labels.groupBy(_._2).toSeq.flatMap { case (comp, members) =>
+          val size = members.size.toLong
+          members.map { case (n, _) =>
+            org.apache.spark.sql.Row(n, comp, size, n == comp) }
+        }
+        val schema = org.apache.spark.sql.types.StructType(Seq(
+          org.apache.spark.sql.types.StructField(idCol, idType),
+          org.apache.spark.sql.types.StructField("component", idType),
+          org.apache.spark.sql.types.StructField("cluster_size",
+            org.apache.spark.sql.types.LongType),
+          org.apache.spark.sql.types.StructField("is_canonical",
+            org.apache.spark.sql.types.BooleanType)
+        ))
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      case None =>
+        val (comps, releaseCheckpoint) =
+          connectedComponentsDistributedWithCleanup(pairs)
+        val sizes = comps.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
+        // materialize the (small — one row per node that appears in a
+        // pair) label table, then release the distributed-path iteration
+        // storage (the final round's localCheckpoint blocks — a plain
+        // comps.unpersist() would be a no-op on the checkpoint-backed
+        // frame); intermediates must not outlive the call
+        val out = comps
+          .join(sizes, Seq("comp"))
+          .select(
+            col("node").as(idCol),
+            col("comp").as("component"),
+            col("cluster_size"),
+            (col("node") === col("comp")).as("is_canonical")
+          )
+          .cache()
+        out.count()
+        releaseCheckpoint()
+        out
     }
-    val (comps, releaseCheckpoint) =
-      connectedComponentsDistributedWithCleanup(pairs)
-    val sizes = comps.groupBy("comp").agg(count(lit(1)).as("cluster_size"))
-    // materialize the (small — one row per node that appears in a
-    // pair) label table, then release the distributed-path iteration
-    // storage (the final round's localCheckpoint blocks — a plain
-    // comps.unpersist() would be a no-op on the checkpoint-backed
-    // frame); intermediates must not outlive the call
-    val out = comps
-      .join(sizes, Seq("comp"))
-      .select(
-        col("node").as(idCol),
-        col("comp").as("component"),
-        col("cluster_size"),
-        (col("node") === col("comp")).as("is_canonical")
-      )
-      .cache()
-    out.count()
-    releaseCheckpoint()
-    out
-  }
 
   /** Quality-aware representative selection over near-dup clusters:
     * instead of [[clusterize]]'s min-id canonical, keep per cluster

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * Scale shape (the 100 TB story): this is the canonical Pregel/GraphX
   * iteration expressed as DataFrame joins, with a two-posture plan
   * keyed on the RANK-TABLE size (the same broadcast-or-shuffle
-  * discipline as `Dedup.verifyPairsExact2`):
+  * discipline as `Dedup.verifyPairs`):
   *   - **node count ≤ `spark.graft.pagerank.broadcastMaxNodes`
   *     (default 4M)**: the rank table is a few MB per round, so it is
   *     BROADCAST into a map-side hash join against the edge list
@@ -54,9 +54,8 @@ import org.apache.spark.sql.functions._
 object LinkGraph {
 
   /** Executed plan of the final pre-checkpoint rank build, captured
-    * ONLY when `spark.graft.pagerank.capturePlan=true` (test-only, the
-    * same discipline as `Dedup.lastVerifyPlan`): production runs never
-    * pin dead executed plans. PlanShapeSpec reads it to prove the
+    * ONLY when `spark.graft.pagerank.capturePlan=true` (test-only):
+    * production runs never pin dead executed plans. PlanShapeSpec reads it to prove the
     * broadcast posture's per-round plan is exchange-free and clears it
     * after the read.
     */

@@ -1223,8 +1223,8 @@ object CurationOpsQueries {
       doc = "CCNet head/middle/tail perplexity bucketing (Wenzek et " +
         "al. '20 §4.3): per language, rank best-LM-explained first " +
         "and cut into three equal token-mass buckets — rank key and " +
-        "cuts are integer-exact; running mass is the two-phase " +
-        "distributed prefix sum, never a single-partition window"
+        "cuts are integer-exact; running mass is the native " +
+        "RunningSumExec running sum, never a single-partition window"
     )
   )
 }

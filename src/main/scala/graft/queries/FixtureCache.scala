@@ -39,28 +39,18 @@ object FixtureCache {
     * input parquet + checkpoint per run into java.io.tmpdir (ADVICE
     * r13). Deletion must be deferred to exit because the face RETURNS
     * a lazy DataFrame over the sink path — the caller reads it after
-    * `fn` returns. ONE static shutdown hook drains a queue of
-    * registered roots (ADVICE r14): the faces call this per bench
-    * repetition (min-of-3+ in ScaleBench), and a hook per call
-    * accumulates threads without bound in a long bench JVM.
+    * `fn` returns. The cached Hadoop local file system holds the set of
+    * roots and deletes them when its cache closes at exit — one set
+    * entry per call, no thread per call (ADVICE r14: the faces call
+    * this per bench repetition).
     */
   def scratchDir(prefix: String): java.nio.file.Path = {
     val root = java.nio.file.Files.createTempDirectory(prefix)
-    scratchRoots.add(root)
+    org.apache.hadoop.fs.FileSystem
+      .getLocal(new org.apache.hadoop.conf.Configuration())
+      .deleteOnExit(new org.apache.hadoop.fs.Path(root.toUri))
     root
   }
-
-  private val scratchRoots =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(rm)
-      f.delete(); ()
-    }
-    var p = scratchRoots.poll()
-    while (p != null) { rm(p.toFile); p = scratchRoots.poll() }
-  }))
 
   /** The one source-table path every builder reads (Graft.table
     * resolves the same `$sfDir/$name.parquet`) — signature and build

@@ -790,9 +790,9 @@ FROM cum WHERE bef < 8000 ORDER BY bef"""),
       doc = "the DSIR resampling step, determinized: gate survivors " +
         "drawn in salted-md5 order until an 8000-token budget (emit " +
         "while tokens-before < budget; overshoot < one doc, docs " +
-        "whole) — the global running sum is the packSequences " +
-        "two-phase distributed prefix sum, never a single-partition " +
-        "window"
+        "whole) — the global running sum is the native " +
+        "RunningSumExec (range exchange + per-partition offsets), " +
+        "never a single-partition window"
     )
   )
 }

@@ -715,8 +715,8 @@ object TextQueries {
           |FROM o ORDER BY doc_id""".stripMargin
       ),
       doc = "concat-then-split sequence packing: global token offsets " +
-        "as a prefix sum → training-sequence assignment (per-shard + " +
-        "broadcast shard bases at scale)"
+        "as a prefix sum → training-sequence assignment (the native " +
+        "RunningSumExec: range exchange + per-partition offsets at scale)"
     ),
     // ----------------------------------------------------------------
     QueryDef(

@@ -242,19 +242,13 @@ object Ann {
   }
 
   /** Deterministic pseudo-random hyperplanes: component j of plane i is
-    * a fixed integer hash mapped into [-0.5, 0.5). Same plane set on
-    * every executor without shipping state; hashed through catalyst's
-    * own XXH64 (seed 42, int widening) so the SQL face
-    * `pmod(xxhash64(i, j), 1000003)/1000003 - 0.5` is the same number
-    * (AnnLshSpec asserts the grid).
-    */
-  private[graft] def planeComponent(i: Int, j: Int): Double =
-    planeInt(i, j).toDouble / (2.0d * 1000003.0d)
-
-  /** The same hyperplane as an exact INTEGER: 2·m − 1000003 where
-    * m = pmod(xxhash64(i, j), 1000003). sign(Σ x_j·(m/1000003 − 0.5))
-    * equals sign(Σ x_j·planeInt) — scaling by the positive constant
-    * 2·1000003 never flips a sign.
+    * a fixed integer hash, the same plane set on every executor without
+    * shipping state; hashed through catalyst's own XXH64 (seed 42, int
+    * widening) so m = pmod(xxhash64(i, j), 1000003) is the SQL face's
+    * number (AnnLshSpec asserts the grid). The component is the exact
+    * INTEGER 2·m − 1000003: sign(Σ x_j·(m/1000003 − 0.5)) equals
+    * sign(Σ x_j·planeInt) — scaling by the positive constant 2·1000003
+    * never flips a sign.
     */
   private[graft] def planeInt(i: Int, j: Int): Long = {
     val h = XXH64.hashInt(j, XXH64.hashInt(i, 42L))

@@ -282,17 +282,6 @@ object TextAnalysis {
   def normalizedText(text: Column): Column =
     graft.plans.ArrayOps.normalize_text(text)
 
-  /** The original built-in composition of [[normalizedText]] — kept as
-    * the semantic reference the native single-pass expression
-    * ([[graft.plans.NormalizeTextExpr]]) is spec-pinned against
-    * (NormalizeTextSpec): two regex passes + lower + trim cost ~2× the
-    * one compiled byte loop on the corpus-sized normalized-dedup key
-    * paths.
-    */
-  private[graft] def normalizedTextComposed(text: Column): Column =
-    trim(regexp_replace(
-      regexp_replace(lower(text), "[!-/:-@\\[-`{-~]", ""), "\\s+", " "))
-
   /** Digest of [[normalizedText]]: two documents that differ only in
     * case, punctuation, or spacing share a key; real wording changes
     * do not.

@@ -51,9 +51,6 @@ object ScaleBench {
     val results = defs.map { q =>
       def once(): Double = {
         spark.catalog.clearCache()
-        // reclaim any above-bound verify output dirs from the prior
-        // run — every frame of that run is fully consumed (counted)
-        graft.dedup.Dedup.cleanupVerifyOutputs()
         // big-SF sessions accumulate dead plans' broadcast blocks
         // (reaped only after a JVM GC notices the weak refs — the
         // same failure Verify hit at sf10: heap OOM mid-aggregation

@@ -386,49 +386,104 @@ class PlanShapeSpec extends SparkTestBase {
     case other => Seq(other) ++ other.children.flatMap(allNodes)
   }
 
-  test("containment + jaccard verify ABOVE the broadcast bound: bucketed " +
-    "docs co-location, identical pairs, both array scans exchange-free, " +
-    "at most one array-bearing exchange (the irreducible per-candidate ship)") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+  /** The plan a pair finder's verify ran: the returned frame is the
+    * verify result's cache, so its one in-memory scan carries the plan
+    * that built it.
+    */
+  private def verifyPlan(out: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.SparkPlan = {
+    val scans = allNodes(out.queryExecution.executedPlan).collect {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    }
+    assert(scans.size == 1, out.queryExecution.executedPlan.toString)
+    scans.head.relation.cachedPlan
+  }
+
+  /** [[allNodes]], descending also into the plans of cached relations. */
+  private def deepNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    allNodes(p).flatMap {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+        s +: deepNodes(s.relation.cachedPlan)
+      case o => Seq(o)
+    }
+
+  /** An explicit `repartition(n, col)` exchange. */
+  private def isRepartitionByNum(p: org.apache.spark.sql.execution.SparkPlan) =
+    p match {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec =>
+        e.shuffleOrigin == org.apache.spark.sql.execution.exchange.REPARTITION_BY_NUM
+      case _ => false
+    }
+
+  test("pair verify ABOVE the broadcast bound: containment, jaccard, LSH " +
+    "self and LSH against co-locate on an id-repartitioned docs cache, " +
+    "identical pairs, exchange-free docs scans, at most one array-bearing " +
+    "exchange, no cache, table or temp dir left behind") {
+    import graft.dedup.Dedup
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec, TableCacheQueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.ArrayType
     val docs = graft.core.Graft.table(spark, dir, "documents")
-    def runContain() = graft.dedup.Dedup.containmentPairs(
-      docs, "doc_id", "text", n = 3, minContainment = 0.8, maxDf = Long.MaxValue)
-    def runJaccard() = graft.dedup.Dedup.ngramJaccardPairsPrefix(
-      docs, "doc_id", "text", n = 3, minJaccard = 0.8, maxDf = Long.MaxValue)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.get(0), r.get(1), r.getLong(2),
-        r.getLong(3), r.getLong(4))).toSet
-    val baseC = runContain(); val wantC = rows(baseC); baseC.unpersist()
-    val baseJ = runJaccard(); val wantJ = rows(baseJ); baseJ.unpersist()
-    val prevBound = spark.conf.getOption("spark.graft.verify.broadcastMaxDocs")
+    val runs = Seq[(String, () => DataFrame)](
+      "containment" -> (() => Dedup.containmentPairs(
+        docs, "doc_id", "text", n = 3, minContainment = 0.8, maxDf = Long.MaxValue)),
+      "jaccard" -> (() => Dedup.ngramJaccardPairsPrefix(
+        docs, "doc_id", "text", n = 3, minJaccard = 0.8, maxDf = Long.MaxValue)),
+      "lsh self" -> (() => Dedup.minHashLshPairs(
+        docs, "doc_id", "text", n = 3, minJaccard = 0.5)),
+      "lsh against" -> (() => Dedup.minHashLshPairsAgainst(
+        docs.filter(col("doc_id") % 3 === 0), docs, "doc_id", "text",
+        n = 3, minJaccard = 0.5)))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val wants = runs.map { case (_, run) =>
+      val base = run(); val want = rows(base); base.unpersist(); want
+    }
+    def leftovers() = (
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(_.startsWith("graft_verify_")).toSet,
+      Option(new java.io.File(sys.props("java.io.tmpdir")).list())
+        .toSeq.flatten.filter(_.startsWith("graft_verify_")).toSet)
+    // in-memory scans reachable from a join child without crossing an
+    // exchange or another join
+    def scansBelow(p: SparkPlan): Seq[InMemoryTableScanExec] = p match {
+      case s: InMemoryTableScanExec => Seq(s)
+      case q: TableCacheQueryStageExec => scansBelow(q.plan)
+      case _: Exchange | _: QueryStageExec | _: BaseJoinExec => Nil
+      case a: AdaptiveSparkPlanExec => scansBelow(a.executedPlan)
+      case o => o.children.flatMap(scansBelow)
+    }
+    def isDocsCache(s: InMemoryTableScanExec) =
+      deepNodes(s.relation.cachedPlan).exists(isRepartitionByNum)
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.graft.verify.broadcastMaxDocs", "10")
-    // plan capture is off by default (production runs must not pin
-    // dead executed plans) — this spec is its one consumer
-    spark.conf.set("spark.graft.verify.capturePlan", "true")
-    // keep the planner honest: without this the tiny bucketed table
-    // would be broadcast anyway and the co-location path would go
-    // untested
+    // broadcast joins off — the one switch to the co-located posture;
+    // without it the tiny fixture would be broadcast and the
+    // co-location path would go untested
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      for ((run, want, label) <- Seq(
-          (() => runContain(), wantC, "containment"),
-          (() => runJaccard(), wantJ, "jaccard"))) {
-        graft.dedup.Dedup.lastVerifyPlan = None
+      for (((label, run), want) <- runs.zip(wants)) {
+        val before = leftovers()
+        val rddsBefore = spark.sparkContext.getPersistentRDDs.keySet.toSet
         val out = run()
         assert(rows(out) == want, s"$label pairs differ above the bound")
-        val nodes = graft.dedup.Dedup.lastVerifyPlan match {
-          case Some(p) => allNodes(p)
-          case None => fail(s"$label did not take the above-bound path")
+        val nodes = allNodes(verifyPlan(out))
+        // each docs side is an in-memory scan of the id-repartitioned
+        // cache with no exchange between it and its join
+        val docsScans = nodes.collect {
+          case s: InMemoryTableScanExec if isDocsCache(s) => s
         }
-        val bucketedScans = nodes.collect {
-          case f: FileSourceScanExec if f.relation.bucketSpec.isDefined => f
-        }
-        assert(bucketedScans.size >= 2,
-          s"$label: expected both verify sides on bucketed scans:\n" +
-            nodes.map(_.nodeName).mkString(", "))
+        val joinSides = nodes.collect {
+          case j: BaseJoinExec => j.children.flatMap(scansBelow).filter(isDocsCache)
+        }.filter(_.nonEmpty)
+        assert(joinSides.size == 2 &&
+            docsScans.forall(s => joinSides.flatten.exists(_ eq s)),
+          s"$label: expected both verify joins on exchange-free scans of " +
+            s"the id-repartitioned docs cache:\n${verifyPlan(out)}")
         // the docs arrays never cross a shuffle from their scans: the
         // only exchange allowed to carry an array column is the single
         // candidate-side intermediate (one array per candidate pair)
@@ -439,22 +494,19 @@ class PlanShapeSpec extends SparkTestBase {
         assert(arrayExchanges.size <= 1,
           s"$label: ${arrayExchanges.size} array-bearing exchanges:\n" +
             arrayExchanges.mkString("\n"))
+        // the result is the only cached data the call leaves: the
+        // id-repartitioned (id, xs) copies are released
+        val kept = spark.sparkContext.getPersistentRDDs.keySet.toSet -- rddsBefore
+        assert(kept.size == 1, s"$label left cached data behind: $kept")
+        assert(leftovers() == before,
+          s"$label left a graft_verify_* table or temp dir")
         out.unpersist()
       }
-    } finally {
-      graft.dedup.Dedup.lastVerifyPlan = None
-      spark.conf.unset("spark.graft.verify.capturePlan")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      prevBound match {
-        case Some(v) => spark.conf.set("spark.graft.verify.broadcastMaxDocs", v)
-        case None => spark.conf.unset("spark.graft.verify.broadcastMaxDocs")
-      }
-    }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
   }
 
   test("containment verify above the bound on a PRE-BUCKETED corpus: no " +
-    "temp-table write, docs arrays scan-local, identical pairs") {
-    import org.apache.spark.sql.execution.FileSourceScanExec
+    "id-repartition, identical pairs") {
     val docs = graft.core.Graft.table(spark, dir, "documents")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.get(0), r.get(1), r.getLong(2),
@@ -465,46 +517,27 @@ class PlanShapeSpec extends SparkTestBase {
     val tbl = s"graft_prebucketed_docs_${System.nanoTime}"
     graft.layout.Layout.writeBucketed(
       docs.select("doc_id", "text"), tbl, "doc_id", buckets = 4)
-    val prevBound = spark.conf.getOption("spark.graft.verify.broadcastMaxDocs")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val prevAuto = spark.conf
       .getOption("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.graft.verify.broadcastMaxDocs", "10")
-    spark.conf.set("spark.graft.verify.capturePlan", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     // the engine session (Graft.session / Bench / Verify) sets this
     // false; the shared test session must match or the scan hides its
     // bucketing when planned standalone
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     try {
-      graft.dedup.Dedup.lastVerifyPlan = None
       val out = graft.dedup.Dedup.containmentPairs(
         spark.table(tbl), "doc_id", "text",
         n = 3, minContainment = 0.8, maxDf = Long.MaxValue)
       assert(rows(out) == want, "pre-bucketed pairs differ")
-      val nodes = graft.dedup.Dedup.lastVerifyPlan match {
-        case Some(p) => allNodes(p)
-        case None => fail("did not take an above-bound path")
-      }
-      // no graft_verify_docs temp table was written — every scan in
-      // the verify reads the caller's own pre-bucketed table (through
-      // the cached shingle projection) or testdata
-      val tempScans = nodes.collect {
-        case f: FileSourceScanExec
-            if f.relation.location.rootPaths.exists(
-              _.toString.contains("graft_verify_docs")) => f
-      }
-      assert(tempScans.isEmpty,
-        "pre-bucketed corpus still paid the temp-table write")
+      // both verify joins co-locate on the caller's own bucketing: no
+      // repartition of the docs, in the verify or in any cache it reads
+      val plan = verifyPlan(out)
+      assert(!deepNodes(plan).exists(isRepartitionByNum),
+        s"pre-bucketed corpus was still repartitioned by id:\n$plan")
       out.unpersist()
     } finally {
-      graft.dedup.Dedup.lastVerifyPlan = None
-      spark.conf.unset("spark.graft.verify.capturePlan")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-      prevBound match {
-        case Some(v) => spark.conf.set("spark.graft.verify.broadcastMaxDocs", v)
-        case None => spark.conf.unset("spark.graft.verify.broadcastMaxDocs")
-      }
       prevAuto match {
         case Some(v) => spark.conf
           .set("spark.sql.sources.bucketing.autoBucketedScan.enabled", v)

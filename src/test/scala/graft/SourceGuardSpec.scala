@@ -5,8 +5,9 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Source-scan guards over `src/main/scala`: session wiring stays in
-  * one file, a `*Udf` name stays a Spark UDF, and global running sums
-  * go through the one running-sum operator.
+  * one file, a `*Udf` name stays a Spark UDF, global running sums go
+  * through the one running-sum operator, and near-dup pairs go through
+  * the one exact verify.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -54,6 +55,27 @@ class SourceGuardSpec extends AnyFunSuite {
     val offenders = sources.collect {
       case (path, text) if text.contains(partitionId) => path.toString
     }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("one exact pair verify: sorted_intersect_count is called once in dedup") {
+    val call = java.util.regex.Pattern.quote("sorted_intersect_count(").r
+    val calls = for {
+      (path, text) <- sources
+      if path.startsWith(Paths.get("src/main/scala/graft/dedup"))
+    } yield path -> call.findAllIn(text).size
+    assert(calls.map(_._2).sum == 1, calls.filter(_._2 > 0).mkString("\n"))
+  }
+
+  test("no shutdown hook and no spark.graft.verify.* conf key") {
+    // spelled in parts so a grep over src finds only uses
+    val banned = Seq(Seq("add", "Shutdown", "Hook").mkString,
+      Seq("spark", "graft", "verify", "").mkString("."))
+    val offenders = for {
+      (path, text) <- sources
+      word <- banned
+      if text.contains(word)
+    } yield s"$path: $word"
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
