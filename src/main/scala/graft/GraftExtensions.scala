@@ -1,11 +1,12 @@
 package graft
 
 import graft.plans._
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.types.IntegerType
 
 /** Everything the engine adds to a Spark session: the native SQL
   * [[GraftExtensions.functions]] and the planner
@@ -45,7 +46,25 @@ object GraftExtensions {
     fn("z_order")(e => ZOrderExpr(e(0), e(1))),
     fn("script_counts")(e => ScriptCountsExpr(e.head)),
     fn("fold_diacritics")(e => FoldDiacriticsExpr(e.head)),
-    fn("sorted_intersect_count")(e => SortedIntersectCount(e(0), e(1))))
+    fn("sorted_intersect_count")(e => SortedIntersectCount(e(0), e(1))),
+    fn("fnv64")(e => FnvHashExpr(e.head)),
+    fn("gram_hashes")(e => GramHashesExpr(e(0), literalN("gram_hashes", e(1)), distinctSorted = false)),
+    fn("shingle_hashes")(e => GramHashesExpr(e(0), literalN("shingle_hashes", e(1)), distinctSorted = true)))
+
+  /** The gram width `n` of `gram_hashes`/`shingle_hashes`: the
+    * expressions take it as a plain Int, so only a foldable INT >= 1 is
+    * accepted. (`minhash_sig` is not registered for the same reason:
+    * its seed arrays are no SQL literal.)
+    */
+  private def literalN(name: String, n: Expression): Int = {
+    if (!n.foldable || n.dataType != IntegerType)
+      throw new AnalysisException("NON_FOLDABLE_ARGUMENT", Map(
+        "funcName" -> s"`$name`", "paramName" -> "`n`", "paramType" -> "\"INT\""))
+    n.eval() match {
+      case v: Int if v >= 1 => v
+      case v => throw new IllegalArgumentException(s"$name: n must be >= 1, got $v")
+    }
+  }
 
   /** Every custom planner strategy, one per custom logical node. */
   val strategies: Seq[SparkStrategy] =

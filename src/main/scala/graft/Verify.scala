@@ -17,6 +17,7 @@ object Verify {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(graft.core.Graft.codegenReuse)
       // engine bootstrap default (see Graft.session): bucket pruning
       // needs the bucketed scan even when no join wants the hash dist
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")

@@ -13,11 +13,30 @@ object Graft {
 
   def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** Session settings that let each generated class compile once per
+    * JVM. Spark keys its codegen cache by (class loader, source), so:
+    *  - artifact isolation off: every session and every streaming /
+    *    `foreachBatch` clone shares the executor's default class loader
+    *    instead of a fresh `ExecutorClassLoader` per clone (the engine
+    *    adds no per-session artifacts), so a new stream reuses the
+    *    task-side classes the last one compiled;
+    *  - a 1000-entry cache: one corpus curation batch with its refresh
+    *    increments needs about 190 (loader, source) entries, past the
+    *    100-entry default, so each rerun evicted its own classes and
+    *    compiled them again.
+    * Static confs: set when the session is built. `Graft.session`,
+    * `Verify`, `tools.ScaleBench` and the test base all apply them.
+    */
+  val codegenReuse: Map[String, String] = Map(
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "1000")
+
   def session(appName: String = "graft"): SparkSession =
     SparkSession
       .builder()
       .master(s"local[$cpus]")
       .appName(appName)
+      .config(codegenReuse)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

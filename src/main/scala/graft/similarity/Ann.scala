@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.plans.ArrayOps.quantize_1m
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
@@ -100,7 +101,7 @@ object Ann {
     * probe side broadcasts, and each candidate row costs one long-dot
     * per probe — no posexplode, no position join, nothing but the
     * candidate scan shuffles (bit-identical to the explode-join
-    * formulation; see quantizeUdf/quantDot).
+    * formulation; see quantize_1m/quantDot).
     */
   def topKExact(
       probes: DataFrame,
@@ -111,7 +112,7 @@ object Ann {
       k: Int
   ): DataFrame = {
     def prep(df: DataFrame, id: String, q: String, n: String) =
-      df.select(col(id), quantizeUdf(col(vecCol)).as(q))
+      df.select(col(id), quantize_1m(col(vecCol)).as(q))
         .withColumn(n, quantDot(col(q), col(q)))
     val p = prep(probes, idA, "qa", "na")
     val c = prep(cands, idB, "qb", "nb")
@@ -149,7 +150,7 @@ object Ann {
   ): DataFrame = {
     require(outDims >= 1 && outDims <= 256, "outDims in [1,256]")
     // native codegen projection (plans.JlProjectExpr) on the exact
-    // quantizeUdf grid; null vectors keep the UDF form's empty-array
+    // quantize_1m grid; null vectors keep the UDF form's empty-array
     // contract (the expression itself is null-intolerant)
     val proj = graft.plans.ArrayOps
       .jl_project(col(vecCol), lshPlanes(outDims), outDims, LshDimCap)
@@ -185,7 +186,7 @@ object Ann {
       k: Int
   ): DataFrame = {
     def prep(df: DataFrame, id: String, q: String, n: String, l: String) =
-      df.select(col(id), quantizeUdf(col(vecCol)).as(q), col(labelCol).as(l))
+      df.select(col(id), quantize_1m(col(vecCol)).as(q), col(labelCol).as(l))
         .withColumn(n, quantDot(col(q), col(q)))
     val p = prep(probes, idA, "qa", "na", "la")
     val c = prep(cands, idB, "qb", "nb", "lb")
@@ -257,7 +258,7 @@ object Ann {
 
   /** All sign projections run in EXACT integer arithmetic: the vector
     * quantizes to the ×2^20 grid (the same HALF_UP quantizer as
-    * quantizeUdf — round() in every engine) and each projection is a
+    * quantize_1m — round() in every engine) and each projection is a
     * long dot against the integer planes. |q| < 2^36 keeps every term
     * below 2^57 and 64-term sums below 2^63, so bucket ids are
     * engine-portable and oracle-checkable — no float sign decision
@@ -347,10 +348,10 @@ object Ann {
       .select("probe_id", "cand_id")
       .distinct()
     val cv = df
-      .select(col(idCol).as("cand_id"), quantizeUdf(col(vecCol)).as("qb"))
+      .select(col(idCol).as("cand_id"), quantize_1m(col(vecCol)).as("qb"))
       .withColumn("nb", quantDot(col("qb"), col("qb")))
     val pv = probes
-      .select(col(idCol).as("probe_id"), quantizeUdf(col(vecCol)).as("qa"))
+      .select(col(idCol).as("probe_id"), quantize_1m(col(vecCol)).as("qa"))
       .withColumn("na", quantDot(col("qa"), col("qa")))
     val scored = pairs
       .join(cv, Seq("cand_id"))
@@ -502,11 +503,11 @@ object Ann {
       nearestCentroids(toDense(v), bc.value, nProbe)
     }
     val p = probes
-      .select(col(idCol).as("probe_id"), quantizeUdf(col(vecCol)).as("qa"),
+      .select(col(idCol).as("probe_id"), quantize_1m(col(vecCol)).as("qa"),
         explode(probeLists(col(vecCol))).as("list_id"))
       .withColumn("na", quantDot(col("qa"), col("qa")))
     val cands = index.assignments
-      .select(col(idCol).as("cand_id"), quantizeUdf(col(vecCol)).as("qb"), col("list_id"))
+      .select(col(idCol).as("cand_id"), quantize_1m(col(vecCol)).as("qb"), col("list_id"))
       .withColumn("nb", quantDot(col("qb"), col("qb")))
     val scored = cands
       .join(broadcast(p), Seq("list_id"))
@@ -517,16 +518,6 @@ object Ann {
     rankTopK(scored, "probe_id", Seq(col("cos").desc, col("cand_id").asc), k)
       .select(col("probe_id"), col("rank"), col("cand_id"), col("cos"))
   }
-
-  /** Quantize a vector once (round-half-away-from-zero ×2^20 — exactly
-    * round() in Spark and DuckDB on these exactly-representable
-    * products). Since r15 a native codegen expression
-    * (plans.QuantizeExpr) rather than a Scala UDF: the pass runs
-    * corpus-sized in every quantized-cosine dedup path, and the UDF's
-    * per-row Seq[Float] boxing was measurable there. Kept name for the
-    * 10+ call sites; applies like the UDF it replaced.
-    */
-  def quantizeUdf(v: Column): Column = graft.plans.ArrayOps.quantize_1m(v)
 
   /** Dot of two quantized long vectors via the native codegen'd
     * ArrayDotProduct (double accumulation — exact under the QuantScale
@@ -556,7 +547,7 @@ object Ann {
       minCos: Double
   ): DataFrame = {
     val base = df
-      .select(col(idCol), quantizeUdf(col(vecCol)).as("qv"))
+      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"))
       .withColumn("nsq", quantDot(col("qv"), col("qv")))
     val l = base.select(col(idCol).as("a"), col("qv").as("qva"), col("nsq").as("na"))
     val r = base.select(col(idCol).as("b"), col("qv").as("qvb"), col("nsq").as("nb"))
@@ -645,7 +636,7 @@ object Ann {
   ): DataFrame = {
     val cqLit = typedLit(model.cq)
     corpus
-      .select(col(idCol), quantizeUdf(col(vecCol)).as("qv"))
+      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"))
       .withColumn("nsq", quantDot(col("qv"), col("qv")))
       .withColumn("dot_centroid", quantDot(col("qv"), cqLit).cast("long"))
       .withColumn("cos_centroid",
@@ -710,7 +701,7 @@ object Ann {
       }
     val idx = ivfBuild(df, idCol, vecCol, effLists, iters)
     val b = idx.assignments
-      .select(col(idCol), quantizeUdf(col(vecCol)).as("qv"), col("list_id"))
+      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"), col("list_id"))
       .withColumn("nsq", quantDot(col("qv"), col("qv")))
     val l = b.select(col("list_id"), col(idCol).as("a"), col("qv").as("qva"),
       col("nsq").as("na"))
@@ -819,7 +810,7 @@ object Ann {
         e
       }
     val b = signLshBuckets(df, idCol, vecCol, effBits)
-      .select(col(idCol), quantizeUdf(col(vecCol)).as("qv"), col("bucket"))
+      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"), col("bucket"))
       .withColumn("nsq", quantDot(col("qv"), col("qv")))
     val l = b.select(col(idCol).as("a"), col("qv").as("qva"), col("nsq").as("na"), col("bucket"))
     val r = b.select(col(idCol).as("b"), col("qv").as("qvb"), col("nsq").as("nb"), col("bucket"))

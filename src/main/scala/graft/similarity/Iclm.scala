@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.plans.ArrayOps.quantize_1m
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -67,7 +68,7 @@ object Iclm {
       .select(
         col("list_id").cast("int").as("li"),
         col(idCol).cast("long").as("id"),
-        Ann.quantizeUdf(col(vecCol)).as("q"))
+        quantize_1m(col(vecCol)).as("q"))
       .as[(Int, Long, Seq[Long])]
 
     ds.groupByKey(_._1)

@@ -1,5 +1,6 @@
 package graft.similarity
 
+import graft.plans.ArrayOps.quantize_1m
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -239,10 +240,10 @@ object Pq {
       kNn: Int
   ): DataFrame = {
     val c = corpus
-      .select(col(idCol).as("cand_id"), Ann.quantizeUdf(col(vecCol)).as("qb"))
+      .select(col(idCol).as("cand_id"), quantize_1m(col(vecCol)).as("qb"))
       .withColumn("nb", Ann.quantDot(col("qb"), col("qb")))
     val p = probes
-      .select(col(idCol).as("probe_id"), Ann.quantizeUdf(col(vecCol)).as("qa"))
+      .select(col(idCol).as("probe_id"), quantize_1m(col(vecCol)).as("qa"))
       .withColumn("na", Ann.quantDot(col("qa"), col("qa")))
     val rescored = sl
       .join(c, Seq("cand_id"))

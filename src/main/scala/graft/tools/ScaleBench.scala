@@ -20,6 +20,7 @@ object ScaleBench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
+      .config(graft.core.Graft.codegenReuse)
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       // splits self-scale to ~cores per scan (see Graft.session)
       .config("spark.sql.files.openCostInBytes",

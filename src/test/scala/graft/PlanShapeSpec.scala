@@ -267,7 +267,7 @@ class PlanShapeSpec extends SparkTestBase {
     assert(codesPlan.contains("pq_encode"), codesPlan)
     assert(!codesPlan.contains("UDF"), codesPlan)
     // quantizer behind every quantized-cosine dedup path
-    val qPlan = e.select(graft.similarity.Ann.quantizeUdf(col("embedding")))
+    val qPlan = e.select(graft.plans.ArrayOps.quantize_1m(col("embedding")))
       .queryExecution.executedPlan.toString
     assert(qPlan.contains("quantize_1m"), qPlan)
     assert(!qPlan.contains("UDF"), qPlan)

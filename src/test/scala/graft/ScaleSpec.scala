@@ -208,6 +208,25 @@ class ScaleSpec extends SparkTestBase {
       assert(agg.getSeq[String](0).size == 2)
       // each of the 2 sketch rows counts all 5 keys
       assert(agg.getSeq[Long](1).sum == 10L)
+      // the gram/fnv hashes from SQL equal the Column API on the same text
+      val texts = Seq("the cat sat on the mat the cat", "a b", "", "café au lait ok", null)
+      val t = s3.createDataFrame(texts.map(Tuple1(_))).toDF("text")
+      t.createOrReplaceTempView("gram_texts")
+      val fromSql = s3.sql(
+        """SELECT fnv64(text) AS f, gram_hashes(text, 2) AS g,
+          |  shingle_hashes(text, 3) AS sh FROM gram_texts""".stripMargin).collect()
+      val fromApi = t.select(
+        graft.plans.GramHash.fnv64(col("text")).as("f"),
+        graft.plans.GramHash.gram_hashes(col("text"), 2).as("g"),
+        graft.plans.GramHash.shingle_hashes(col("text"), 3).as("sh")).collect()
+      assert(fromSql.toSeq == fromApi.toSeq)
+      assert(fromSql.head.getSeq[Long](1).size == 7)
+      // n must be a literal INT >= 1
+      def sqlError(call: String): String = intercept[Exception](
+        s3.sql(s"SELECT $call FROM gram_texts").collect()).getMessage
+      assert(sqlError("gram_hashes(text, length(text))").contains("NON_FOLDABLE_ARGUMENT"))
+      assert(sqlError("shingle_hashes(text, 2L)").contains("NON_FOLDABLE_ARGUMENT"))
+      assert(sqlError("shingle_hashes(text, 0)").contains("n must be >= 1"))
       // the strategies come in through the same extension: the custom
       // execs plan, and install-on-first-use adds nothing on top
       assert(CustomExecs.planned(s3).values.forall(identity), CustomExecs.planned(s3))

@@ -14,5 +14,6 @@ trait SparkTestBase extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(graft.core.Graft.codegenReuse)
     .getOrCreate()
 }
