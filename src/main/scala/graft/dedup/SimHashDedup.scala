@@ -61,18 +61,12 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
   def simHash(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol), simHashUdf(col(textCol)).as("simhash"))
 
-  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming, found by
-    * Manku-style combinatorial blocking (WWW'07): split the 64-bit
-    * fingerprint into m = maxHamming + 2 chunks. A pair within distance
-    * k dirties ≤ k chunks, so ≥ 2 chunks are clean — banding on every
-    * C(m,2) two-chunk combination is a complete cover (same pair set as
-    * any complete cover, which is what the oracle checks). vs the
-    * minimal m = k+1 single-chunk cover, the band key widens from
-    * 64/(k+1) bits to ~2·64/(k+2) bits, so random band collisions drop
-    * from C(k+1,1)·n²/2^(64/(k+1)) to C(k+2,2)·n²/2^(128/(k+2)) — for
-    * k=7 that is 8·n²/2⁹ → 36·n²/2¹⁵, ~28× fewer candidates, and the
-    * measured sf0.1→sf1 wall ratio falls from 23× to near-linear.
-    * Join per band, verify with popcount.
+  /** SimHash near-dup pairs with Hamming distance ≤ maxHamming: 64-bit
+    * prints through [[hammingPairs64]], the Manku C(k+2,2) two-chunk
+    * cover of [[hammingCover]] (complete, so the pair set equals any
+    * complete cover's, which is what the oracle checks; against the
+    * single-chunk cover the measured sf0.1→sf1 wall ratio falls from
+    * 23× to near-linear).
     *
     * `maxPerBucket`: optional skew guard for production corpora — keep
     * only the first `cap` DISTINCT fingerprints (by value) of each band
@@ -89,13 +83,8 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     * the exact cover it replaced at sf10 (500k docs) and found the
     * cap GUARDING THE WRONG STAGE there: the per-bucket row_number
     * window costs 12.9 s while the uncapped band join it protects
-    * costs 7.7 s — and canonical-cover emission (hammingPairs64 r13)
-    * removes the exact path's distinct() on top. A 3-chunk C(k+3,3)
-    * cover (lower collision floor, 120 bands) was also measured and
-    * LOST at this scale — 65.7 s vs 17.4 s — because this corpus's
-    * band collisions are near-dup-structure-dominated, not
-    * key-width-dominated (570M candidates of the 2-chunk's 1.1B
-    * remain), so tripling the band rows just triples the join input.
+    * costs 7.7 s — and canonical-cover emission (r13) removes the
+    * exact path's distinct() on top.
     *
     * The posture is therefore: EXACT 2-chunk cover up to `autoCapDocs`
     * = 1M docs (raised from 200k — recall 100% where r12 had 99.1%,
@@ -130,13 +119,7 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       autoCapDocs: Long = 1000000L,
       autoCap: Int = 512
   ): DataFrame = {
-    // Token-less docs (null/empty/space-only text) all fingerprint to
-    // 0L — banding them would emit every such pair as a hamming-0
-    // "near-dup". They carry no similarity signal (exact dedup owns
-    // empty docs), so drop them before banding.
-    val tokenful = df.filter(
-      coalesce(translate(col(textCol), " ", ""), lit("")) =!= "")
-    val fps = simHash(tokenful, idCol, textCol).cache()
+    val fps = simHash(tokenful(df, textCol), idCol, textCol).cache()
     val cap = maxPerBucket match {
       case Some(c) if c == Int.MaxValue => None // explicit exact cover
       case Some(c)                      => Some(c)
@@ -182,212 +165,35 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
 
   /** Manku-style combinatorial-blocking Hamming join over ANY 64-bit
     * fingerprint relation (one row per id, `fpCol` LongType) — the
-    * banding core of [[simHashPairs]], factored out so non-text
-    * fingerprints (image dHash, audio energy hashes) reuse the exact
-    * same complete-cover machinery. Returns (a, b, hamming) with
-    * a < b and hamming ≤ maxHamming; the C(m, c) c-chunk cover
-    * (m = maxHamming + `bandChunks`) is complete for any c, so the
-    * UNCAPPED pair set equals the all-pairs predicate regardless of
-    * `bandChunks` — c only moves the random-collision floor vs band
-    * count trade (capped output IS banding-relative; callers that cap
-    * must pin their c).
+    * banding of [[simHashPairs]], shared with the non-text
+    * fingerprints (image dHash, audio energy hashes). Returns
+    * (a, b, hamming) with a < b and hamming ≤ maxHamming: the self face
+    * of [[hammingCover]] over one word.
     *
     * `maxPerBucket` bounds BOTH candidate and output volume: band
-    * buckets rank-limit to the first `cap` distinct prints, and
-    * identical-fingerprint groups larger than the cap emit a linear
+    * buckets rank-limit to the first `cap` distinct prints by value,
+    * and identical-fingerprint groups larger than the cap emit a linear
     * star (min-id rep → member) instead of their ~n²/2 clique —
-    * connected components are preserved exactly either way (see the
-    * `within` comment below). Unset, both are exact.
+    * connected components are preserved exactly either way. Unset,
+    * both are exact.
     */
   def hammingPairs64(
       fpDf: DataFrame,
       idCol: String,
       fpCol: String,
       maxHamming: Int,
-      maxPerBucket: Option[Int] = None,
-      bandChunks: Int = 2
-  ): DataFrame = {
-    // GENERALIZED cover (round 13): m = k + c chunks, band = every
-    // C(m, c) c-chunk combination. A pair within hamming k dirties ≤ k
-    // chunks, so ≥ c are clean, and the clean set contains (at least)
-    // one full band — completeness holds for any c ≥ 1; c picks the
-    // collision-floor/band-count trade (see the simHashPairs ladder).
-    require(bandChunks >= 1 && bandChunks <= 3,
-      s"bandChunks=$bandChunks out of range (1..3 supported)")
-    val m = maxHamming + bandChunks
-    require(m <= 64, s"maxHamming=$maxHamming too large for a 64-bit fingerprint")
-    // chunk i covers fingerprint bits [starts(i), starts(i+1))
-    val starts = (0 to m).map(i => i * 64 / m)
-    def chunk(c: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column = {
-      val lo = starts(i)
-      val w = starts(i + 1) - lo
-      val mask = if (w >= 64) -1L else (1L << w) - 1
-      shiftright(c, lo).bitwiseAND(mask)
-    }
-    // one row per doc, two longs — cached because the distinct-print
-    // banding AND both expansion joins read it
-    val fp = fpDf.select(col(idCol), col(fpCol).as("simhash")).cache()
-    // EXACT-GROUP COLLAPSE on the pair-emission path (round 11): the
-    // banded self-join runs over DISTINCT fingerprints only, then the
-    // surviving fingerprint pairs expand back to id pairs through two
-    // co-keyed equi-joins, and identical-fingerprint id pairs come
-    // from one fingerprint-keyed self-join. The emitted pair set is
-    // PROVABLY the original's: a doc pair (x, y), hamming ≤ k, has
-    // either equal prints (→ the within-group join, hamming 0) or
-    // distinct prints whose pair shares ≥1 Manku band (→ the distinct
-    // banding, expanded via x's and y's print groups — each doc pair
-    // arises from exactly ONE print pair, so no distinct over the
-    // expanded relation is needed). Candidate work collapses from
-    // Σ_buckets |bucket|² over DOCS to the same sum over distinct
-    // PRINTS — on a corpus where every payload occurs c times, a c²
-    // join reduction (measured on the stripe-PNG image face at sf0.1:
-    // 19.1M → ~0.2M band candidates, 5.1 s → sub-second).
-    val combos = (0 until m).combinations(bandChunks).map(_.toSeq).toSeq
-    val bandCols = combos.zipWithIndex.map { case (cs, idx) =>
-      // band key = the combo's chunks packed little-endian; total
-      // width ≤ c·ceil(64/m) ≤ 64 bits for every supported (k, c).
-      // `prior` is the canonical-cover mask: the chunks that would
-      // have to be DIRTY for this combo to be the lexicographically
-      // first all-clean one (every chunk below the combo's last,
-      // minus the combo's own) — see the uncapped join below.
-      val (key, _) = cs.foldLeft((lit(0L), 0)) { case ((acc, off), i) =>
-        val w = starts(i + 1) - starts(i)
-        (acc.bitwiseOR(shiftleft(chunk(col("simhash"), i), off)), off + w)
-      }
-      val prior = ((1L << cs.last) - 1L) & ~cs.map(1L << _).reduce(_ | _)
-      struct(lit(idx).as("band"), key.as("key"), lit(prior).as("prior"))
-    }
-    val bandedAll = fp
-      .select(col("simhash")).distinct()
-      .select(col("simhash"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("simhash"), col("bk.band").as("band"),
-        col("bk.key").as("key"), col("bk.prior").as("prior"))
-    val banded = maxPerBucket match {
-      case None => bandedAll
-      case Some(cap) =>
-        // rank-limit WITHIN the bucket (first `cap` DISTINCT prints by
-        // fingerprint value) rather than dropping over-cap buckets
-        // outright: a hot key keeps its first cap prints' pairs
-        // instead of losing all of them, and the candidate ceiling
-        // stays O(m·d·cap) over d distinct prints (≤ cap² join rows
-        // per bucket). The window shuffles on the same (band, key) the
-        // self-join exchanges anyway. Note the cap now counts PRINTS,
-        // not docs — strictly more recall per cap than the pre-r11
-        // doc cap, since exact duplicates no longer consume budget.
-        val wBucket = Window.partitionBy(col("band"), col("key"))
-          .orderBy(col("simhash").asc)
-        bandedAll
-          .withColumn("__bn", row_number().over(wBucket))
-          .filter(col("__bn") <= cap)
-          .drop("__bn")
-    }
-    // NEVER let the static planner broadcast a band side: Generate
-    // (the explode) keeps its CHILD's size estimate, so the banded
-    // relation looks ~8 MB when it is actually |prints|·C(m,c) rows —
-    // at 500k prints × 120 bands that is a 6 GiB broadcast build (OOM,
-    // found by SimHashStageProbe at sf10). The hint pins a shuffle
-    // merge join; AQE still re-plans splits/skew from runtime stats.
-    val l = banded.select(col("simhash").as("fa"), col("band"),
-      col("key"), col("prior"))
-    val r = banded.select(col("simhash").as("fb"), col("band"), col("key"))
-    val joined = l.hint("shuffle_merge").join(r, Seq("band", "key"))
-      .filter(col("fa") < col("fb"))
-    val fpPairs = maxPerBucket match {
-      case None =>
-        // CANONICAL-COVER EMISSION (round 13): a ≤k pair with clean
-        // chunk set S collides in C(|S|, c) bands — near-dup-dense
-        // corpora emit each surviving pair up to C(k+c-1, c) times and
-        // the distinct() that crunched them was the measured wall
-        // (~4 s of the 17.4 s exact sf10 run, over 1.1e9 raw rows,
-        // SimHashStageProbe). Instead each pair is kept ONLY in its
-        // canonical band — the lexicographically first all-clean
-        // combo, tested per row as "every chunk below the combo's
-        // last, minus the combo's own, is dirty" against the xor's
-        // clean-chunk bitmask. Pure bitops inside the join's codegen
-        // stage: the duplicates die before any exchange, the pair set
-        // is emitted exactly once, and no distinct runs at all.
-        val xorC = col("fa").bitwiseXOR(col("fb"))
-        val cleanMask = (0 until m).map { lch =>
-          val lo = starts(lch)
-          val w = starts(lch + 1) - lo
-          val mask = if (w >= 64) -1L else (1L << w) - 1
-          when(shiftright(xorC, lo).bitwiseAND(mask) === 0L,
-            lit(1L << lch)).otherwise(lit(0L))
-        }.reduce(_ bitwiseOR _)
-        joined
-          .withColumn("hamming", bit_count(xorC).cast("long"))
-          .filter(col("hamming") <= maxHamming)
-          .filter(cleanMask.bitwiseAND(col("prior")) === 0L)
-          .select(col("fa"), col("fb"), col("hamming"))
-      case Some(_) =>
-        // capped buckets prune prints PER BAND, so a pair's canonical
-        // band may be the pruned one while a later band keeps both —
-        // the capped path must keep the distinct
-        joined
-          .select(col("fa"), col("fb"))
-          .distinct()
-          .withColumn("hamming",
-            bit_count(col("fa").bitwiseXOR(col("fb"))).cast("long"))
-          .filter(col("hamming") <= maxHamming)
-    }
-    val xa = fp.select(col(idCol).as("__xa"), col("simhash").as("fa"))
-    val xb = fp.select(col(idCol).as("__xb"), col("simhash").as("fb"))
-    val cross = fpPairs.join(xa, "fa").join(xb, "fb")
-      .select(
-        least(col("__xa"), col("__xb")).as("a"),
-        greatest(col("__xa"), col("__xb")).as("b"),
-        col("hamming"))
-    // Within-group (identical-fingerprint) pairs. Uncapped, the clique
-    // is exact. With a cap set, the caller has opted into BOUNDED
-    // OUTPUT — and an exact-duplicate pileup (one print repeated n
-    // times: the adversarial/degenerate corpus the cap exists for)
-    // would otherwise emit ~n²/2 identical-print pairs no cap touches.
-    // So groups LARGER than the cap emit a linear star rep→member
-    // (min-id rep) instead of the clique: connected components — the
-    // property every downstream consumer (clusterize, drop sets) uses
-    // — are preserved exactly, output is O(n) per group, and groups at
-    // or under the cap keep their full clique so the capped pair set
-    // only changes on corpora that were already past the posture's
-    // bounds. maxPerBucket = Some(Int.MaxValue) still means the exact
-    // cover everywhere ([[simHashPairs]] maps it to cap = None).
-    val within = maxPerBucket match {
-      case None =>
-        fp.select(col(idCol).as("a"), col("simhash"))
-          .join(fp.select(col(idCol).as("b"), col("simhash")), "simhash")
-          .filter(col("a") < col("b"))
-          .select(col("a"), col("b"), lit(0L).as("hamming"))
-      case Some(cap) =>
-        // group size + rep ride one window over the same simhash
-        // exchange the self-join below uses
-        val wG = Window.partitionBy(col("simhash"))
-        val sized = fp
-          .withColumn("__gn", count(lit(1)).over(wG))
-          .withColumn("__rep", min(col(idCol)).over(wG))
-        val small = sized.filter(col("__gn") <= cap)
-        val clique = small.select(col(idCol).as("a"), col("simhash"))
-          .join(small.select(col(idCol).as("b"), col("simhash")), "simhash")
-          .filter(col("a") < col("b"))
-          .select(col("a"), col("b"))
-        val star = sized.filter(col("__gn") > cap)
-          .filter(col(idCol) =!= col("__rep"))
-          .select(col("__rep").as("a"), col(idCol).as("b"))
-        clique.unionByName(star).withColumn("hamming", lit(0L))
-    }
-    val out = within.unionByName(cross).cache()
-    out.count()
-    fp.unpersist()
-    out
-  }
+      maxPerBucket: Option[Int] = None
+  ): DataFrame =
+    hammingCover(fpDf, None, idCol, Seq(fpCol), maxHamming, maxPerBucket)
 
   /** Incremental (refresh-shape) Hamming join: every NEW fingerprint
     * against the STANDING HISTORY's, with no history-internal pairwork
     * — the T2 resumability story for 64-bit fingerprints (image dHash,
-    * SimHash), mirroring [[minHashLshPairsAgainst]]. Both sides go
-    * through the identical C(m,2) chunk bands as [[hammingPairs64]];
-    * the pigeonhole completeness argument is unchanged by the cross
-    * shape (a ≤ maxHamming pair still shares ≥2 clean chunks), so the
-    * result equals the all-pairs new×history predicate. Returns
-    * (new_id, hist_id, hamming ≤ maxHamming).
+    * SimHash), mirroring [[minHashLshPairsAgainst]]. The cross face of
+    * [[hammingCover]]: the pigeonhole completeness argument is
+    * unchanged by the cross shape, so the result equals the all-pairs
+    * new×history predicate. Returns (new_id, hist_id, hamming ≤
+    * maxHamming).
     */
   def hammingPairsAgainst64(
       newFp: DataFrame,
@@ -395,79 +201,198 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       idCol: String,
       fpCol: String,
       maxHamming: Int
+  ): DataFrame =
+    hammingCover(newFp, Some(histFp), idCol, Seq(fpCol), maxHamming, None,
+      "new_id", "hist_id")
+
+  /** Token-less docs (null/empty/space-only text) all fingerprint to
+    * zero — banding them would emit every such pair as a hamming-0
+    * "near-dup". They carry no similarity signal (exact dedup owns
+    * empty docs), so the SimHash faces drop them before banding.
+    */
+  private def tokenful(df: DataFrame, textCol: String): DataFrame =
+    df.filter(coalesce(translate(col(textCol), " ", ""), lit("")) =!= "")
+
+  /** THE Hamming pair join: Manku et al. (WWW'07) combinatorial
+    * blocking over a fingerprint of one or more 64-bit words
+    * (`fpCols`, LongType each). Every Hamming pair finder is a face of
+    * it: self (`right` = None → (outA, outB) with outA < outB) or
+    * cross (`left` × `right`, outA from left, outB from right).
+    *
+    * Layout: m = maxHamming + 2 chunks, rounded up to a multiple of
+    * the word count so no chunk straddles two words (m / words per
+    * word), banded on every C(m,2) two-chunk combination. A pair
+    * within hamming k dirties ≤ k chunks, so ≥ 2 stay clean and the
+    * pair shares at least one band — a complete cover, so the uncapped
+    * pair set equals the all-pairs predicate. Against the minimal
+    * single-chunk cover the band key widens from 64/(k+1) to
+    * ~2·64/(k+2) bits per word, so random band collisions drop from
+    * C(k+1,1)·n²/2^(64/(k+1)) to C(k+2,2)·n²/2^(128/(k+2)) — for k=7,
+    * ~28× fewer candidates (a 3-chunk C(k+3,3) cover was measured and
+    * LOST at sf10, 65.7 s vs 17.4 s: this corpus's band collisions are
+    * near-dup-structure-dominated, so tripling the band rows just
+    * triples the join input).
+    *
+    * EXACT-GROUP COLLAPSE (round 11): the band join runs over DISTINCT
+    * prints only, each carrying the list of ids that share it; a
+    * surviving print pair expands to id pairs by exploding its two
+    * lists, and (self face) identical-print id pairs come from each
+    * print's own list — no join back to the ids. A doc pair within k
+    * has either equal prints (hamming 0) or distinct prints that share
+    * a band — each doc pair arises from exactly ONE print pair, so no
+    * distinct over the expansion is needed. Candidate work collapses
+    * from Σ_buckets |bucket|² over DOCS to the same sum over distinct
+    * PRINTS (stripe-PNG image face at sf0.1: 19.1M → ~0.2M band
+    * candidates, 5.1 s → sub-second).
+    *
+    * CANONICAL-COVER EMISSION (round 13): a ≤k pair with clean chunk
+    * set S collides in C(|S|, 2) bands, and the distinct that crunched
+    * the duplicates was the measured wall (~4 s of the 17.4 s exact
+    * sf10 run). Each pair is instead kept ONLY in its canonical band —
+    * the lexicographically first all-clean combination, tested per row
+    * against the xor's clean-chunk bitmask inside the join's codegen
+    * stage, so duplicates die before any exchange (cross-face pairs
+    * with equal prints are all-clean and land in band 0).
+    *
+    * `maxPerBucket` (self face): rank-limit each band bucket to its
+    * first `cap` DISTINCT prints by value — a hot key keeps its first
+    * cap prints' pairs instead of vanishing, and the candidate ceiling
+    * is O(m·d·cap) over d distinct prints. Capped buckets prune per
+    * band, so a pair's canonical band may be the pruned one while a
+    * later band keeps both: the capped path keeps the distinct.
+    * Exact-print groups larger than the cap emit a linear min-id
+    * rep→member STAR instead of the ~n²/2 hamming-0 clique no bucket
+    * cap touches: connected components (what clusterize and drop sets
+    * consume) are preserved exactly, groups at or under the cap keep
+    * their clique.
+    */
+  private def hammingCover(
+      left: DataFrame,
+      right: Option[DataFrame],
+      idCol: String,
+      fpCols: Seq[String],
+      maxHamming: Int,
+      maxPerBucket: Option[Int],
+      outA: String = "a",
+      outB: String = "b"
   ): DataFrame = {
-    val m = maxHamming + 2
-    require(m <= 64, s"maxHamming=$maxHamming too large for a 64-bit fingerprint")
-    val starts = (0 to m).map(i => i * 64 / m)
-    def chunk(c: org.apache.spark.sql.Column, i: Int): org.apache.spark.sql.Column = {
-      val lo = starts(i)
-      val w = starts(i + 1) - lo
-      val mask = if (w >= 64) -1L else (1L << w) - 1
-      shiftright(c, lo).bitwiseAND(mask)
+    val words = fpCols.size
+    val m = (maxHamming + 2 + words - 1) / words * words
+    val per = m / words
+    // one chunk per word would pack a 128-bit band key into a long, and
+    // the canonical-cover masks are one long wide
+    require(per >= 2 && m <= 64,
+      s"maxHamming=$maxHamming out of range for a $words-word fingerprint " +
+        "(hamming-0 pairs are exact dedup on the fingerprint columns)")
+    val starts = (0 to per).map(i => i * 64 / per)
+    def width(c: Int): Int = starts(c % per + 1) - starts(c % per)
+    // chunk c of a print given as its word columns: bits
+    // [starts(c % per), starts(c % per + 1)) of word c / per
+    def chunk(ws: Seq[Column], c: Int): Column = {
+      val mask = if (width(c) >= 64) -1L else (1L << width(c)) - 1
+      shiftright(ws(c / per), starts(c % per)).bitwiseAND(mask)
     }
-    val combos = for { i <- 0 until m; j <- (i + 1) until m } yield (i, j)
-    // Exact-group collapse, cross-shape (round 11, same algebra as
-    // [[hammingPairs64]]): band-join DISTINCT prints of each side,
-    // then expand each surviving print pair through both sides' print
-    // groups. A (new, hist) doc pair has exactly one print pair, and
-    // a ≤k print pair (including fa = fb, hamming 0) shares ≥1 Manku
-    // band — so the expansion reproduces the original pair set with
-    // candidate work scaled by distinct prints, not doc counts.
-    def banded(df: DataFrame): DataFrame = {
-      val bandCols = combos.zipWithIndex.map { case ((i, j), idx) =>
-        val wi = starts(i + 1) - starts(i)
-        // canonical-cover mask, as in [[hammingPairs64]] (r13): the
-        // chunks that must be dirty for (i, j) to be the pair's
-        // lexicographically first all-clean combo
-        val prior = ((1L << j) - 1L) & ~(1L << i)
-        struct(
-          lit(idx).as("band"),
-          chunk(col("fp"), i)
-            .bitwiseOR(shiftleft(chunk(col("fp"), j), wi))
-            .as("key"),
-          lit(prior).as("prior")
-        )
+    val pw = fpCols.indices.map(w => s"__p$w")
+    val pc = pw.map(col)
+    val aw = fpCols.indices.map(w => s"__a$w")
+    val bw = fpCols.indices.map(w => s"__b$w")
+    // one row per DISTINCT print with the ids that carry it (none for a
+    // null print, which matches nothing). The explicit partition count
+    // keeps the C(m,2)-fold band explode, which runs in this stage,
+    // spread over every core: AQE would coalesce the small print
+    // relation into one task.
+    val parts = left.sparkSession.sessionState.conf.numShufflePartitions
+    def grouped(df: DataFrame) = df
+      .select(col(idCol) +: fpCols.zip(pw).map { case (f, p) => col(f).as(p) }: _*)
+      .repartition(parts, pc: _*)
+      .groupBy(pc: _*)
+      .agg(collect_list(when(pc.map(_.isNotNull).reduce(_ && _), col(idCol))).as("__ids"))
+    // band (i, j), i < j in lexicographic order: key = chunk i | chunk j
+    // << width(i), ≤ 64 bits; `prior` = the chunks below j except i —
+    // those that must be DIRTY for (i, j) to be the canonical band
+    val bandCols = (0 until m).combinations(2).zipWithIndex.map {
+      case (Seq(i, j), idx) =>
+        struct(lit(idx).as("band"),
+          chunk(pc, i).bitwiseOR(shiftleft(chunk(pc, j), width(i))).as("key"),
+          lit(((1L << j) - 1L) & ~(1L << i)).as("prior"))
+    }.toSeq
+    def banded(g: DataFrame): DataFrame = {
+      val all = g
+        .select(pc ++ Seq(col("__ids"), explode(array(bandCols: _*)).as("bk")): _*)
+        .select(pc ++ Seq(col("__ids"), col("bk.band").as("band"),
+          col("bk.key").as("key"), col("bk.prior").as("prior")): _*)
+      maxPerBucket.fold(all) { cap =>
+        // the window shuffles on the keys the join exchanges on
+        val wBucket = Window.partitionBy(col("band"), col("key"), col("prior"))
+          .orderBy(pc.map(_.asc): _*)
+        all.withColumn("__bn", row_number().over(wBucket))
+          .filter(col("__bn") <= cap)
+          .drop("__bn")
       }
-      df.select(col(fpCol).as("fp")).distinct()
-        .select(col("fp"), explode(array(bandCols: _*)).as("bk"))
-        .select(col("fp"), col("bk.band").as("band"),
-          col("bk.key").as("key"), col("bk.prior").as("prior"))
     }
-    val newC = newFp.select(col(idCol), col(fpCol)).cache()
-    val histC = histFp.select(col(idCol), col(fpCol)).cache()
-    // canonical-cover emission instead of distinct() — each surviving
-    // (fa, fb) pair (INCLUDING fa = fb, whose clean set is everything
-    // and whose canonical band is combo 0) is kept only in the band of
-    // its first two clean chunks; duplicates die inside the join's
-    // codegen stage before any exchange (see hammingPairs64 r13). The
-    // static planner must also never broadcast an exploded band side
-    // (Generate keeps its child's size estimate) — hint as there.
-    val xorC = col("fa").bitwiseXOR(col("fb"))
-    val cleanMask = (0 until m).map { lch =>
-      val lo = starts(lch)
-      val w = starts(lch + 1) - lo
-      val mask = if (w >= 64) -1L else (1L << w) - 1
-      when(shiftright(xorC, lo).bitwiseAND(mask) === 0L,
-        lit(1L << lch)).otherwise(lit(0L))
+    // cached: the band join and (self face) the within-group pairs both
+    // read it, and the input may be a fingerprint UDF over raw text
+    val lg = grouped(left).cache()
+    val lb = banded(lg)
+    val rb = right.map(r => banded(grouped(r))).getOrElse(lb)
+    // NEVER let the static planner broadcast a band side: Generate (the
+    // explode) keeps its CHILD's size estimate, so the banded relation
+    // looks ~8 MB when it is |prints|·C(m,2) rows (a 6 GiB broadcast
+    // build at sf10, found by SimHashStageProbe). The hint pins a
+    // shuffle merge join; AQE still re-plans splits/skew at runtime.
+    // `prior` is a function of `band`, so joining on it changes no
+    // match; it keeps both sides one plan, so the self face explodes
+    // and shuffles its bands once.
+    def side(s: String, to: Seq[String]) =
+      pw.zip(to).map { case (p, t) => col(s"$s.$p").as(t) }
+    val joined = lb.as("l").hint("shuffle_merge")
+      .join(rb.as("r"), Seq("band", "key", "prior"))
+      .select(side("l", aw) ++ side("r", bw) ++ Seq(col("l.__ids").as("__ia"),
+        col("r.__ids").as("__ib"), col("prior")): _*)
+    // self face: each unordered print pair once, prints ordered by value
+    val aBeforeB = aw.zip(bw).init.foldRight(col(aw.last) < col(bw.last)) {
+      case ((x, y), rest) => col(x) < col(y) || (col(x) === col(y) && rest)
+    }
+    val xors = aw.zip(bw).map { case (x, y) => col(x).bitwiseXOR(col(y)) }
+    val cleanMask = (0 until m).map { c =>
+      when(chunk(xors, c) === 0L, lit(1L << c)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
-    val fpPairs = banded(newC)
-      .select(col("fp").as("fa"), col("band"), col("key"), col("prior"))
-      .hint("shuffle_merge")
-      .join(
-        banded(histC).select(col("fp").as("fb"), col("band"), col("key")),
-        Seq("band", "key"))
-      .withColumn("hamming", bit_count(xorC).cast("long"))
+    val verified = (if (right.isEmpty) joined.filter(aBeforeB) else joined)
+      .withColumn("hamming", xors.map(bit_count(_)).reduce(_ + _).cast("long"))
       .filter(col("hamming") <= maxHamming)
-      .filter(cleanMask.bitwiseAND(col("prior")) === 0L)
-      .select(col("fa"), col("fb"), col("hamming"))
-    val out = fpPairs
-      .join(newC.select(col(idCol).as("new_id"), col(fpCol).as("fa")), "fa")
-      .join(histC.select(col(idCol).as("hist_id"), col(fpCol).as("fb")), "fb")
-      .select(col("new_id"), col("hist_id"), col("hamming"))
-      .cache()
+    val pairCols = (aw ++ bw).map(col) ++ Seq(col("__ia"), col("__ib"), col("hamming"))
+    val printPairs = maxPerBucket match {
+      case None =>
+        verified.filter(cleanMask.bitwiseAND(col("prior")) === 0L).select(pairCols: _*)
+      case Some(_) => verified.select(pairCols: _*).distinct()
+    }
+    val expanded = printPairs
+      .select(explode(col("__ia")).as("__xa"), col("__ib"), col("hamming"))
+      .select(col("__xa"), explode(col("__ib")).as("__xb"), col("hamming"))
+    val (ia, ib) =
+      if (right.isEmpty) (least(col("__xa"), col("__xb")), greatest(col("__xa"), col("__xb")))
+      else (col("__xa"), col("__xb"))
+    val cross = expanded.select(ia.as(outA), ib.as(outB), col("hamming"))
+    // identical-print id pairs (self face) from each print's own list
+    def clique(g: DataFrame) = g
+      .select(explode(col("__ids")).as(outA), col("__ids"))
+      .select(col(outA), explode(col("__ids")).as(outB))
+      .filter(col(outA) < col(outB))
+    val out = (right match {
+      case Some(_) => cross
+      case None =>
+        val within = maxPerBucket match {
+          case None => clique(lg)
+          case Some(cap) =>
+            val star = lg.filter(size(col("__ids")) > cap)
+              .select(array_min(col("__ids")).as(outA), explode(col("__ids")).as(outB))
+              .filter(col(outA) =!= col(outB))
+            clique(lg.filter(size(col("__ids")) <= cap)).unionByName(star)
+        }
+        within.withColumn("hamming", lit(0L)).unionByName(cross)
+    }).cache()
     out.count()
-    newC.unpersist()
-    histC.unpersist()
+    lg.unpersist()
     out
   }
 
@@ -501,7 +426,6 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       idCol: String,
       fpCol: String,
       maxHamming: Int,
-      maxPerBucket: Option[Int] = None,
       localThreshold: Long = 500000L): DataFrame = {
     val fp = fpDf.select(col(idCol).as("__id"), col(fpCol).as("__fp")).cache()
     val groups = fp.groupBy("__fp")
@@ -509,8 +433,7 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     // near-dup connectivity between exact groups: distinct prints only
     val repPairs = hammingPairs64(
       groups.select(col("__rep").as("__id"), col("__fp")),
-      "__id", "__fp", maxHamming, maxPerBucket)
-      .select(col("a"), col("b"))
+      "__id", "__fp", maxHamming)
     // Components are computed at the REP level only (one node per
     // distinct fingerprint — NOTES.md r13 dhash probe: 579 reps for 500k
     // images), then every member INHERITS its rep's label through one
@@ -523,8 +446,9 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     // linear data). Label equality is exact: a component's min id is
     // its min rep (each rep is its group's min), members never lower
     // it, so rep-graph labels ARE the member-graph labels.
-    val repComp = clusterize(repPairs, "__rep", localThreshold)
-      .select(col("__rep"), col("component").as("__comp"))
+    val comps = clusterize(repPairs.select(col("a"), col("b")), "__rep",
+      localThreshold)
+    val repComp = comps.select(col("__rep"), col("component").as("__comp"))
     // node set preserved exactly: docs in exact groups >= 2 (they had
     // star edges) plus members of singleton groups whose rep is
     // near-dup connected (they appeared via repPairs)
@@ -540,6 +464,10 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
         (col("__id") === col("component")).as("is_canonical"))
       .cache()
     out.count()
+    // only the result outlives the call: the rep pair cache and (on the
+    // distributed tier) clusterize's cached label table go too
+    comps.unpersist()
+    repPairs.unpersist()
     groups.unpersist()
     fp.unpersist()
     out
@@ -594,118 +522,22 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       }
     }
 
-  /** 128-bit SimHash near-dup pairs — the same Manku combinatorial
-    * blocking as [[simHashPairs]], over the wider fingerprint: m =
-    * maxHamming+2 chunks rounded up to EVEN (so chunks never straddle
-    * the two words — m/2 per word), band on every C(m,2) two-chunk
-    * combination; a ≤k pair leaves ≥2 chunks clean. At k=7 keys are
-    * ~25 bits (vs ~15 for 64-bit), pushing the random-collision floor
-    * to C(10,2)·n²/2²⁵ — the committed 10⁹-doc configuration.
-    * Verified with popcount over both words.
+  /** 128-bit SimHash near-dup pairs — the same Manku cover as
+    * [[simHashPairs]] over the wider fingerprint: the self face of
+    * [[hammingCover]] over the two words (m = maxHamming+2 chunks
+    * rounded up to EVEN, m/2 per word; maxHamming ≥ 1). At k=7 keys
+    * are ~25 bits (vs ~15 for 64-bit), pushing the random-collision
+    * floor to C(10,2)·n²/2²⁵ — the committed 10⁹-doc configuration.
     */
   def simHashPairs128(
       df: DataFrame,
       idCol: String,
       textCol: String,
-      maxHamming: Int = 7,
-      maxPerBucket: Option[Int] = None
+      maxHamming: Int = 7
   ): DataFrame = {
-    // maxHamming=0 would give m=2 single-word chunks, and the band-key
-    // pack shiftleft(chunk(j), 64) wraps to shift 0 on the JVM — the
-    // key silently degrades to f1|f2. Hamming-0 "pairs" are exact
-    // fingerprint duplicates anyway: groupBy (f1, f2) (Dedup.exact on
-    // the fingerprint) is the right operator for that question.
-    require(maxHamming >= 1,
-      s"simHashPairs128 needs maxHamming >= 1 (got $maxHamming); " +
-        "for hamming-0 use exact dedup on the (f1, f2) fingerprint")
-    val m0 = maxHamming + 2
-    val m = if (m0 % 2 == 0) m0 else m0 + 1
-    require(m <= 128, s"maxHamming=$maxHamming too large for a 128-bit fingerprint")
-    val mw = m / 2
-    val starts = (0 to mw).map(i => i * 64 / mw)
-    // chunk c (0-based over all m): word = c / mw, in-word index c % mw
-    def chunk(c: Int): org.apache.spark.sql.Column = {
-      val w = c / mw
-      val j = c % mw
-      val lo = starts(j)
-      val width = starts(j + 1) - lo
-      val mask = if (width >= 64) -1L else (1L << width) - 1
-      shiftright(col(s"f${w + 1}"), lo).bitwiseAND(mask)
-    }
-    def chunkWidth(c: Int): Int = starts(c % mw + 1) - starts(c % mw)
-    val tokenful = df.filter(
-      coalesce(translate(col(textCol), " ", ""), lit("")) =!= "")
-    val fp = tokenful
+    val fp = tokenful(df, textCol)
       .select(col(idCol), simHash128Udf(col(textCol)).as("fp"))
       .select(col(idCol), col("fp").getItem(0).as("f1"), col("fp").getItem(1).as("f2"))
-      .cache()
-    val combos = for { i <- 0 until m; j <- (i + 1) until m } yield (i, j)
-    val bandCols = combos.zipWithIndex.map { case ((i, j), idx) =>
-      // canonical-cover prior mask, as in [[hammingPairs64]] (r13) —
-      // m = k+2(+1) stays ≤ 64 for any sane k, so one long covers it
-      val prior = ((1L << j) - 1L) & ~(1L << i)
-      struct(
-        lit(idx).as("band"),
-        chunk(i).bitwiseOR(shiftleft(chunk(j), chunkWidth(i))).as("key"),
-        lit(prior).as("prior"))
-    }
-    val bandedAll = fp
-      .select(col(idCol), col("f1"), col("f2"), explode(array(bandCols: _*)).as("bk"))
-      .select(col(idCol), col("f1"), col("f2"),
-        col("bk.band").as("band"), col("bk.key").as("key"),
-        col("bk.prior").as("prior"))
-    val banded = maxPerBucket match {
-      case None => bandedAll
-      case Some(cap) =>
-        // same rank-limit-within-bucket semantics as simHashPairs
-        val wBucket = Window.partitionBy(col("band"), col("key"))
-          .orderBy(col(idCol).asc)
-        bandedAll
-          .withColumn("__bn", row_number().over(wBucket))
-          .filter(col("__bn") <= cap)
-          .drop("__bn")
-    }
-    val l = banded.select(col(idCol).as("a"), col("f1").as("a1"), col("f2").as("a2"),
-      col("band"), col("key"), col("prior"))
-    val r = banded.select(col(idCol).as("b"), col("f1").as("b1"), col("f2").as("b2"),
-      col("band"), col("key"))
-    // shuffle_merge: the exploded band relation's static size estimate
-    // is its (small, cached) child's — see the hammingPairs64 note on
-    // Generate fooling the broadcast planner (r13, found live at sf10)
-    val joined = l.hint("shuffle_merge").join(r, Seq("band", "key"))
-      .filter(col("a") < col("b"))
-      .withColumn("hamming",
-        (bit_count(col("a1").bitwiseXOR(col("b1"))) +
-          bit_count(col("a2").bitwiseXOR(col("b2")))).cast("long"))
-      .filter(col("hamming") <= maxHamming)
-    val pairs = maxPerBucket match {
-      case None =>
-        // canonical-cover emission (r13, same algebra as
-        // hammingPairs64): keep each pair only in the band of its
-        // first two clean chunks — a per-row bitmask test replaces
-        // the distinct over every duplicate band hit. Identical
-        // fingerprints (both xors zero, all chunks clean) survive
-        // exactly in band 0.
-        val cleanMask = (0 until m).map { c =>
-          val w = c / mw
-          val lo = starts(c % mw)
-          val width = starts(c % mw + 1) - lo
-          val mask = if (width >= 64) -1L else (1L << width) - 1
-          val xorW = col(s"a${w + 1}").bitwiseXOR(col(s"b${w + 1}"))
-          when(shiftright(xorW, lo).bitwiseAND(mask) === 0L,
-            lit(1L << c)).otherwise(lit(0L))
-        }.reduce(_ bitwiseOR _)
-        joined
-          .filter(cleanMask.bitwiseAND(col("prior")) === 0L)
-          .select(col("a"), col("b"), col("hamming"))
-      case Some(_) =>
-        // capped buckets prune per band — the canonical band may be
-        // the pruned one, so the capped path keeps the distinct
-        joined.select(col("a"), col("b"), col("hamming")).distinct()
-    }
-    val out = pairs.cache()
-    out.count()
-    fp.unpersist()
-    out
+    hammingCover(fp, None, idCol, Seq("f1", "f2"), maxHamming, None)
   }
 }

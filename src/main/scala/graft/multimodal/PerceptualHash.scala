@@ -91,12 +91,10 @@ object PerceptualHash {
       df: DataFrame,
       idCol: String,
       payloadCol: String,
-      maxHamming: Int = 8,
-      maxPerBucket: Option[Int] = None
+      maxHamming: Int = 8
   ): DataFrame =
     graft.dedup.Dedup.hammingPairs64(
-      imageHashes(df, idCol, payloadCol), idCol, "phash",
-      maxHamming, maxPerBucket)
+      imageHashes(df, idCol, payloadCol), idCol, "phash", maxHamming)
 
   /** Incremental image near-dup (refresh shape): the NEW batch's
     * dHashes against the STANDING history's — no history-internal

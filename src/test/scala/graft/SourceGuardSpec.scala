@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 /** Source-scan guards over `src/main/scala`: session wiring stays in
   * one file, a `*Udf` name stays a Spark UDF, global running sums go
-  * through the one running-sum operator, and near-dup pairs go through
-  * the one exact verify.
+  * through the one running-sum operator, near-dup pairs go through
+  * the one exact verify, and Hamming pairs through the one band cover.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -65,6 +65,19 @@ class SourceGuardSpec extends AnyFunSuite {
       if path.startsWith(Paths.get("src/main/scala/graft/dedup"))
     } yield path -> call.findAllIn(text).size
     assert(calls.map(_._2).sum == 1, calls.filter(_._2 > 0).mkString("\n"))
+  }
+
+  test("one Hamming band cover: one shuffle-merge band join and one popcount in dedup") {
+    val needles = Seq(""".hint("shuffle_merge")""", "bit_count(")
+    for (needle <- needles) {
+      val hit = java.util.regex.Pattern.quote(needle).r
+      val counts = for {
+        (path, text) <- sources
+        if path.startsWith(Paths.get("src/main/scala/graft/dedup"))
+      } yield path -> hit.findAllIn(text).size
+      assert(counts.map(_._2).sum == 1,
+        s"$needle:\n" + counts.filter(_._2 > 0).mkString("\n"))
+    }
   }
 
   test("no shutdown hook and no spark.graft.verify.* conf key") {

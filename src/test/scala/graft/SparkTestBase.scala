@@ -7,13 +7,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * network-free).
   */
 trait SparkTestBase extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession
-    .builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config(graft.core.Graft.codegenReuse)
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession
+      .builder()
+      .master("local[4]")
+      .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config(graft.core.Graft.codegenReuse)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

@@ -122,7 +122,7 @@ class TextDedupSpec extends SparkTestBase {
   }
 
   test("simHashPairs128 combinatorial banding is a COMPLETE cover: pair " +
-    "set equals brute-force two-word popcount at maxHamming 3 and 7") {
+    "set equals brute-force two-word popcount at maxHamming 1, 3, 4 and 7") {
     import spark.implicits._
     val base = Seq(
       "the quick brown fox jumps over the lazy dog",
@@ -138,7 +138,9 @@ class TextDedupSpec extends SparkTestBase {
       .select(col("doc_id"), graft.dedup.Dedup.simHash128Udf(col("text")).as("fp"))
       .collect()
       .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    for (k <- Seq(3, 7)) {
+    // k = 1 is the smallest legal k (m = 3 rounds up to 4), k = 4 needs
+    // no rounding (m = 6, three chunks per word)
+    for (k <- Seq(1, 3, 4, 7)) {
       val expected = (for {
         a <- fp.keys; b <- fp.keys
         if a < b &&
@@ -268,30 +270,34 @@ class TextDedupSpec extends SparkTestBase {
     assert(pairs(Some(Int.MaxValue), 10L, 2) == exact)
   }
 
-  test("hammingPairs64 bandChunks tiers all emit the identical exact " +
-    "pair set (complete covers), capped output is banding-relative " +
-    "but still a subset") {
+  test("hammingPairs64 emits the driver-side brute-force pair set at " +
+    "maxHamming 5; capped output is a subset") {
     import spark.implicits._
     // adversarial spread: clustered near-dups + random far prints
     val rnd = new scala.util.Random(7)
     val bases = Seq.fill(6)(rnd.nextLong())
-    val fps = (0 until 90).map { i =>
+    val prints = (0 until 90).map { i =>
       val b = bases(i % bases.length)
       // flip up to 5 bits deterministically
       val flipped = (0 until (i % 6)).foldLeft(b)((acc, j) =>
         acc ^ (1L << ((i * 11 + j * 7) % 64)))
       (i.toLong, flipped)
-    }.toDF("id", "fp")
-    def run(c: Int, cap: Option[Int]) = graft.dedup.Dedup
-      .hammingPairs64(fps, "id", "fp", maxHamming = 5,
-        maxPerBucket = cap, bandChunks = c)
+    }
+    val fps = prints.toDF("id", "fp")
+    def run(cap: Option[Int]) = graft.dedup.Dedup
+      .hammingPairs64(fps, "id", "fp", maxHamming = 5, maxPerBucket = cap)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val two = run(2, None)
-    assert(run(1, None) == two, "1-chunk cover diverged")
-    assert(run(3, None) == two, "3-chunk cover diverged")
-    assert(two.nonEmpty)
-    // capped 3-chunk: a subset of exact (recall bounded, never wrong)
-    assert(run(3, Some(2)).subsetOf(two))
+    val expected = (for {
+      (a, fa) <- prints; (b, fb) <- prints
+      h = java.lang.Long.bitCount(fa ^ fb).toLong
+      if a < b && h <= 5
+    } yield (a, b, h)).toSet
+    val exact = run(None)
+    assert(exact == expected,
+      s"missing=${(expected -- exact).take(3)} extra=${(exact -- expected).take(3)}")
+    assert(exact.nonEmpty)
+    // capped: a subset of exact (recall bounded, never wrong)
+    assert(run(Some(2)).subsetOf(exact))
   }
 
   test("algebraic invariants: dedup partitions rows, jaccard bounded, simhash reflexive") {
