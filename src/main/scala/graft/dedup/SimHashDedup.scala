@@ -233,17 +233,23 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     * near-dup-structure-dominated, so tripling the band rows just
     * triples the join input).
     *
-    * EXACT-GROUP COLLAPSE (round 11): the band join runs over DISTINCT
-    * prints only, each carrying the list of ids that share it; a
-    * surviving print pair expands to id pairs by exploding its two
-    * lists, and (self face) identical-print id pairs come from each
-    * print's own list — no join back to the ids. A doc pair within k
-    * has either equal prints (hamming 0) or distinct prints that share
-    * a band — each doc pair arises from exactly ONE print pair, so no
-    * distinct over the expansion is needed. Candidate work collapses
-    * from Σ_buckets |bucket|² over DOCS to the same sum over distinct
-    * PRINTS (stripe-PNG image face at sf0.1: 19.1M → ~0.2M band
-    * candidates, 5.1 s → sub-second).
+    * EXACT-GROUP COLLAPSE (round 11): the band join runs over UNITS,
+    * each a print plus one id. Where at least half the docs repeat a
+    * print (image dHash: 579 distinct prints for 500k images at sf10),
+    * or a cap is set, the units are the DISTINCT prints, keyed by their
+    * min id, and a surviving unit pair joins back to the docs on each
+    * print. An uncapped collapsed print also pairs with itself in band
+    * 0, which yields its group's identical-print doc pairs. A doc pair
+    * within k has either equal prints (hamming 0) or distinct prints
+    * that share a band: each doc pair arises from exactly ONE unit
+    * pair, so no distinct over the expansion is needed. Candidate work
+    * collapses from Σ_buckets |bucket|² over DOCS to the same sum over
+    * distinct PRINTS (stripe-PNG image face at sf0.1: 19.1M → ~0.2M
+    * band candidates, 5.1 s → sub-second). On near-unique prints (text
+    * SimHash, 64- or 128-bit) the units are the docs themselves: the
+    * print shuffle and the join back would only add stages. Band rows
+    * carry one id either way, so the band shuffle moves C(m,2) rows of
+    * one print and one id per unit.
     *
     * CANONICAL-COVER EMISSION (round 13): a ≤k pair with clean chunk
     * set S collides in C(|S|, 2) bands, and the distinct that crunched
@@ -254,8 +260,8 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     * stage, so duplicates die before any exchange (cross-face pairs
     * with equal prints are all-clean and land in band 0).
     *
-    * `maxPerBucket` (self face): rank-limit each band bucket to its
-    * first `cap` DISTINCT prints by value — a hot key keeps its first
+    * `maxPerBucket` (self face, always collapsed): rank-limit each band
+    * bucket to its first `cap` DISTINCT prints by value — a hot key keeps its first
     * cap prints' pairs instead of vanishing, and the candidate ceiling
     * is O(m·d·cap) over d distinct prints. Capped buckets prune per
     * band, so a pair's canonical band may be the pruned one while a
@@ -296,17 +302,24 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     val pc = pw.map(col)
     val aw = fpCols.indices.map(w => s"__a$w")
     val bw = fpCols.indices.map(w => s"__b$w")
-    // one row per DISTINCT print with the ids that carry it (none for a
-    // null print, which matches nothing). The explicit partition count
-    // keeps the C(m,2)-fold band explode, which runs in this stage,
-    // spread over every core: AQE would coalesce the small print
-    // relation into one task.
-    val parts = left.sparkSession.sessionState.conf.numShufflePartitions
-    def grouped(df: DataFrame) = df
-      .select(col(idCol) +: fpCols.zip(pw).map { case (f, p) => col(f).as(p) }: _*)
-      .repartition(parts, pc: _*)
-      .groupBy(pc: _*)
-      .agg(collect_list(when(pc.map(_.isNotNull).reduce(_ && _), col(idCol))).as("__ids"))
+    // each side's docs (__u = id, prints), cached: the band join and,
+    // collapsed, the grouping and the join back read them. A null print
+    // matches nothing: its band keys and join keys are null.
+    def docs(df: DataFrame) = df
+      .select(col(idCol).as("__u") +: fpCols.zip(pw).map { case (f, p) => col(f).as(p) }: _*)
+      .cache()
+    val lf = docs(left)
+    val rf = right.map(docs).getOrElse(lf)
+    // collapse when the cap is on (it counts prints) or at least half
+    // the docs repeat a print; one job counts both sides' docs and
+    // their distinct prints (HLL estimate) and materializes the caches
+    val collapse = maxPerBucket.isDefined || {
+      val st = (if (right.isEmpty) lf else lf.unionByName(rf))
+        .agg(count(lit(1)), approx_count_distinct(xxhash64(pc: _*))).head()
+      2 * st.getLong(1) <= st.getLong(0)
+    }
+    def units(fp: DataFrame) =
+      if (collapse) fp.groupBy(pc: _*).agg(min(col("__u")).as("__u")) else fp
     // band (i, j), i < j in lexicographic order: key = chunk i | chunk j
     // << width(i), ≤ 64 bits; `prior` = the chunks below j except i —
     // those that must be DIRTY for (i, j) to be the canonical band
@@ -316,10 +329,10 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
           chunk(pc, i).bitwiseOR(shiftleft(chunk(pc, j), width(i))).as("key"),
           lit(((1L << j) - 1L) & ~(1L << i)).as("prior"))
     }.toSeq
-    def banded(g: DataFrame): DataFrame = {
-      val all = g
-        .select(pc ++ Seq(col("__ids"), explode(array(bandCols: _*)).as("bk")): _*)
-        .select(pc ++ Seq(col("__ids"), col("bk.band").as("band"),
+    def banded(u: DataFrame): DataFrame = {
+      val all = u
+        .select(pc ++ Seq(col("__u"), explode(array(bandCols: _*)).as("bk")): _*)
+        .select(pc ++ Seq(col("__u"), col("bk.band").as("band"),
           col("bk.key").as("key"), col("bk.prior").as("prior")): _*)
       maxPerBucket.fold(all) { cap =>
         // the window shuffles on the keys the join exchanges on
@@ -330,69 +343,76 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
           .drop("__bn")
       }
     }
-    // cached: the band join and (self face) the within-group pairs both
-    // read it, and the input may be a fingerprint UDF over raw text
-    val lg = grouped(left).cache()
-    val lb = banded(lg)
-    val rb = right.map(r => banded(grouped(r))).getOrElse(lb)
+    val lb = banded(units(lf))
+    val rb = if (right.isEmpty) lb else banded(units(rf))
     // NEVER let the static planner broadcast a band side: Generate (the
     // explode) keeps its CHILD's size estimate, so the banded relation
     // looks ~8 MB when it is |prints|·C(m,2) rows (a 6 GiB broadcast
     // build at sf10, found by SimHashStageProbe). The hint pins a
     // shuffle merge join; AQE still re-plans splits/skew at runtime.
     // `prior` is a function of `band`, so joining on it changes no
-    // match; it keeps both sides one plan, so the self face explodes
-    // and shuffles its bands once.
-    def side(s: String, to: Seq[String]) =
+    // match; it keeps both sides one plan.
+    def from(s: String, to: Seq[String]) =
       pw.zip(to).map { case (p, t) => col(s"$s.$p").as(t) }
     val joined = lb.as("l").hint("shuffle_merge")
       .join(rb.as("r"), Seq("band", "key", "prior"))
-      .select(side("l", aw) ++ side("r", bw) ++ Seq(col("l.__ids").as("__ia"),
-        col("r.__ids").as("__ib"), col("prior")): _*)
-    // self face: each unordered print pair once, prints ordered by value
-    val aBeforeB = aw.zip(bw).init.foldRight(col(aw.last) < col(bw.last)) {
-      case ((x, y), rest) => col(x) < col(y) || (col(x) === col(y) && rest)
-    }
+      .select(from("l", aw) ++ from("r", bw) ++ Seq(col("l.__u").as("__ua"),
+        col("r.__u").as("__ub"), col("prior")): _*)
     val xors = aw.zip(bw).map { case (x, y) => col(x).bitwiseXOR(col(y)) }
     val cleanMask = (0 until m).map { c =>
       when(chunk(xors, c) === 0L, lit(1L << c)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
-    val verified = (if (right.isEmpty) joined.filter(aBeforeB) else joined)
+    // self face: each unordered unit pair once; equal prints are
+    // all-clean and land in band 0. An uncapped collapsed print also
+    // pairs with itself there, and expands to its group's doc pairs.
+    val selfPairs = collapse && maxPerBucket.isEmpty
+    val verified = (right match {
+      case None if selfPairs => joined.filter(col("__ua") <= col("__ub"))
+      case None => joined.filter(col("__ua") < col("__ub"))
+      case Some(_) => joined
+    })
       .withColumn("hamming", xors.map(bit_count(_)).reduce(_ + _).cast("long"))
       .filter(col("hamming") <= maxHamming)
-    val pairCols = (aw ++ bw).map(col) ++ Seq(col("__ia"), col("__ib"), col("hamming"))
-    val printPairs = maxPerBucket match {
+    val pairCols = (aw ++ bw ++ Seq("__ua", "__ub", "hamming")).map(col)
+    val unitPairs = maxPerBucket match {
       case None =>
         verified.filter(cleanMask.bitwiseAND(col("prior")) === 0L).select(pairCols: _*)
       case Some(_) => verified.select(pairCols: _*).distinct()
     }
-    val expanded = printPairs
-      .select(explode(col("__ia")).as("__xa"), col("__ib"), col("hamming"))
-      .select(col("__xa"), explode(col("__ib")).as("__xb"), col("hamming"))
+    // a collapsed side's print expands to its docs: each doc pair
+    // within k arises from exactly one unit pair
+    def expand(pairs: DataFrame, fp: DataFrame, ws: Seq[String], u: String) =
+      pairs.drop(u).join(
+        fp.select(col("__u").as(u) +: pw.zip(ws).map { case (p, w) => col(p).as(w) }: _*), ws)
+    val expanded =
+      if (!collapse) unitPairs
+      else expand(expand(unitPairs.withColumn("__same", col("__ua") === col("__ub")),
+        lf, aw, "__ua"), rf, bw, "__ub").filter(!col("__same") || col("__ua") < col("__ub"))
     val (ia, ib) =
-      if (right.isEmpty) (least(col("__xa"), col("__xb")), greatest(col("__xa"), col("__xb")))
-      else (col("__xa"), col("__xb"))
+      if (right.isEmpty) (least(col("__ua"), col("__ub")), greatest(col("__ua"), col("__ub")))
+      else (col("__ua"), col("__ub"))
     val cross = expanded.select(ia.as(outA), ib.as(outB), col("hamming"))
-    // identical-print id pairs (self face) from each print's own list
-    def clique(g: DataFrame) = g
-      .select(explode(col("__ids")).as(outA), col("__ids"))
-      .select(col(outA), explode(col("__ids")).as(outB))
-      .filter(col(outA) < col(outB))
-    val out = (right match {
-      case Some(_) => cross
-      case None =>
-        val within = maxPerBucket match {
-          case None => clique(lg)
-          case Some(cap) =>
-            val star = lg.filter(size(col("__ids")) > cap)
-              .select(array_min(col("__ids")).as(outA), explode(col("__ids")).as(outB))
-              .filter(col(outA) =!= col(outB))
-            clique(lg.filter(size(col("__ids")) <= cap)).unionByName(star)
-        }
-        within.withColumn("hamming", lit(0L)).unionByName(cross)
+    val out = (maxPerBucket match {
+      case Some(cap) if right.isEmpty =>
+        // identical-print doc pairs of a capped self face: the clique,
+        // or a linear min-id star for groups over the cap
+        val g = Window.partitionBy(pc: _*)
+        val sized = lf
+          .withColumn("__gn", count(lit(1)).over(g))
+          .withColumn("__rep", min(col("__u")).over(g))
+        val small = sized.filter(col("__gn") <= cap)
+        val clique = small.select(col("__u").as(outA) +: pc: _*)
+          .join(small.select(col("__u").as(outB) +: pc: _*), pw)
+          .filter(col(outA) < col(outB))
+          .select(col(outA), col(outB))
+        val star = sized.filter(col("__gn") > cap && col("__u") =!= col("__rep"))
+          .select(col("__rep").as(outA), col("__u").as(outB))
+        clique.unionByName(star).withColumn("hamming", lit(0L)).unionByName(cross)
+      case _ => cross
     }).cache()
     out.count()
-    lg.unpersist()
+    lf.unpersist()
+    rf.unpersist()
     out
   }
 
