@@ -351,7 +351,7 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     // build at sf10, found by SimHashStageProbe). The hint pins a
     // shuffle merge join; AQE still re-plans splits/skew at runtime.
     // `prior` is a function of `band`, so joining on it changes no
-    // match; it keeps both sides one plan.
+    // match.
     def from(s: String, to: Seq[String]) =
       pw.zip(to).map { case (p, t) => col(s"$s.$p").as(t) }
     val joined = lb.as("l").hint("shuffle_merge")
