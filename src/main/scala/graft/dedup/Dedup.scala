@@ -103,36 +103,51 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     *
     * For corpora without newline structure use [[windowDedup]], the
     * fixed word-count-window face of the same first-occurrence rule.
+    * Scale shape: [[firstOccurrenceCore]]. Docs whose every paragraph
+    * was seen before survive with clean_text='' (downstream length
+    * gates drop them, auditable rather than silently vanished).
     *
-    * Scale shape (shared with windowDedup): the first-occurrence rank
-    * shuffles ONLY (md5(para), id, idx) — 16-byte digests, never the
-    * paragraph text (at 100 TB a text-carrying rank shuffle would be
-    * the corpus itself); the surviving (id → kept idx set) relation is
-    * id-keyed and compact. Text moves exactly once, keyed by id, and
-    * the reassembly groupBy reuses that partitioning (no second text
-    * exchange). Docs whose every paragraph was seen before survive
-    * with clean_text='' (downstream length gates drop them, auditable
-    * rather than silently vanished).
+    * Returns (id, clean_text, n_kept, n_dropped).
     */
   def paragraphDedup(
       df: DataFrame,
       idCol: String,
       textCol: String
-  ): DataFrame = {
-    val lines = split(col(textCol), "\n")
-    val paras = df
-      .select(col(idCol), posexplode(lines).as(Seq("para_idx", "__raw")))
-      .withColumn("para", trim(col("__raw")))
-      .filter(col("para") =!= "")
-      .select(col(idCol), col("para_idx").cast("long").as("para_idx"),
-        col("para"))
-    // paragraph count is arithmetic over the doc's own lines — no
-    // second explode pass over the corpus
-    val nParas = when(col(textCol).isNotNull,
-      size(filter(lines, p => trim(p) =!= "")).cast("long"))
+  ): DataFrame =
+    keptCounts(firstOccurrenceCore(
+      df.select(col(idCol), col(textCol), paragraphCount(textCol).as("n_paras")),
+      paragraphUnits(df, idCol, textCol), idCol, textCol, lineRebuildUdf),
+      idCol)
+
+  /** (id, para_idx, __digest) of every nonblank trimmed line — the
+    * paragraph units of [[paragraphDedup]] and [[boilerplateRemove]].
+    */
+  private def paragraphUnits(
+      df: DataFrame,
+      idCol: String,
+      textCol: String
+  ): DataFrame = df
+    .select(col(idCol), posexplode(split(col(textCol), "\n")).as(Seq("para_idx", "__raw")))
+    .withColumn("para", trim(col("__raw")))
+    .filter(col("para") =!= "")
+    .select(col(idCol), col("para_idx").cast("long").as("para_idx"),
+      unitDigest(col("para")))
+
+  /** How many paragraph units a doc has — arithmetic over the doc's own
+    * lines, no second explode pass over the corpus. */
+  private def paragraphCount(textCol: String): Column =
+    when(col(textCol).isNotNull,
+      size(filter(split(col(textCol), "\n"), p => trim(p) =!= "")).cast("long"))
       .otherwise(0L)
-    firstOccurrenceDedup(df, paras, idCol, textCol, nParas, lineRebuildUdf)
-  }
+
+  /** The (id, clean_text, n_kept, n_dropped) output of the kept-units
+    * faces, over [[rebuildKept]]'s columns and an `n_paras` unit count. */
+  private def keptCounts(out: DataFrame, idCol: String): DataFrame =
+    out.select(
+      col(idCol),
+      col("__fo_clean").as("clean_text"),
+      col("__fo_kept").as("n_kept"),
+      (col("n_paras") - col("__fo_kept")).as("n_dropped"))
 
   /** In-row line rebuild shared by [[paragraphDedup]] and
     * [[boilerplateRemove]]: re-split the doc's own lines and keep the
@@ -179,8 +194,8 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * (both digest-keyed, co-partitioned by the one exchange) and
     * collapses to one compact (id, sorted kept-idx array) row per doc;
     * `clean_text` is rebuilt by the compiled in-row loop after the one
-    * id-keyed join. A doc of pure boilerplate survives with
-    * clean_text='' (auditable, not silently vanished).
+    * id-keyed join ([[rebuildKept]]). A doc of pure boilerplate
+    * survives with clean_text='' (auditable, not silently vanished).
     *
     * Returns (id, clean_text, n_kept, n_dropped).
     */
@@ -191,16 +206,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       maxDf: Long
   ): DataFrame = {
     require(maxDf >= 2L, s"maxDf < 2 would drop every line, got $maxDf")
-    val lines = split(col(textCol), "\n")
-    val paras = df
-      .select(col(idCol), posexplode(lines).as(Seq("para_idx", "__raw")))
-      .withColumn("para", trim(col("__raw")))
-      .filter(col("para") =!= "")
-      .select(col(idCol), col("para_idx").cast("long").as("para_idx"),
-        md5(col("para")).as("__digest"))
-    val nParas = when(col(textCol).isNotNull,
-      size(filter(lines, p => trim(p) =!= "")).cast("long"))
-      .otherwise(0L)
+    val paras = paragraphUnits(df, idCol, textCol)
     // document frequency = distinct docs containing the line (a doc
     // repeating its own header doesn't make it corpus boilerplate)
     val dfc = paras
@@ -208,21 +214,12 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       .distinct()
       .groupBy(col("__digest"))
       .agg(count(lit(1)).as("__df"))
-    val keptIdx = paras
-      .join(dfc, Seq("__digest"))
-      .filter(col("__df") < maxDf)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("para_idx"))).as("__kept_idx"))
-    df.select(col(idCol), col(textCol), nParas.as("n_paras"))
-      .join(keptIdx, Seq(idCol), "left")
-      .withColumn("clean_text",
-        when(col("__kept_idx").isNull, lit(""))
-          .otherwise(lineRebuildUdf(col(textCol), col("__kept_idx"))))
-      .withColumn("n_kept",
-        when(col("__kept_idx").isNull, lit(0L))
-          .otherwise(size(col("__kept_idx")).cast("long")))
-      .select(col(idCol), col("clean_text"), col("n_kept"),
-        (col("n_paras") - col("n_kept")).as("n_dropped"))
+    val kept = positionsById(
+      paras.join(dfc, Seq("__digest")).filter(col("__df") < maxDf),
+      idCol, "para_idx")
+    keptCounts(rebuildKept(
+      df.select(col(idCol), col(textCol), paragraphCount(textCol).as("n_paras")),
+      kept, idCol, textCol, lineRebuildUdf), idCol)
   }
 
   /** Fixed word-count-window exact dedup: the [[paragraphDedup]]
@@ -232,7 +229,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * under insertions (a shifted duplicate region stops matching), so
     * prefer true paragraphs whenever the text has them — or
     * [[cdcChunkDedup]], whose content-defined boundaries survive
-    * insertions.
+    * insertions. Returns (id, clean_text, n_kept, n_dropped).
     */
   def windowDedup(
       df: DataFrame,
@@ -240,15 +237,13 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       textCol: String,
       wordsPerPara: Int
   ): DataFrame = {
-    val paras = graft.text.TextAnalysis
-      .chunkByTokens(df, idCol, textCol, maxTokens = wordsPerPara, overlap = 0)
-      .select(col(idCol), col("chunk_idx").as("para_idx"), col("chunk").as("para"))
     // chunkByTokens' own nChunks formula at overlap 0
-    val nParas = greatest(
+    val nWindows = greatest(
       ceil(size(split(col(textCol), " ")).cast("double") / wordsPerPara),
       lit(1)).cast("long")
-    firstOccurrenceDedup(df, paras, idCol, textCol, nParas,
-      windowRebuildUdf(wordsPerPara))
+    keptCounts(windowDedupKeep(
+      df.select(col(idCol), col(textCol), nWindows.as("n_paras")),
+      idCol, textCol, wordsPerPara), idCol)
   }
 
   /** Content-defined chunking dedup (LBFS, Muthitacharoen et al. '01;
@@ -268,9 +263,9 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * hash for O(n), same boundary contract). UTF-16 code-unit fold —
     * the repo's documented BMP-only hashing caveat applies. One
     * compiled per-row pass produces the chunks; the dedup shuffles
-    * (16-byte digest, id, idx) triples, never chunk text; the clean
-    * doc reassembles from the row's own chunk array after one
-    * id-keyed graft join.
+    * (16-byte digest, id, idx) triples through [[firstOccurrenceRank]],
+    * never chunk text; the clean doc reassembles from the row's own
+    * chunk array after one id-keyed graft join.
     *
     * Returns (idCol, n_chunks, n_kept, n_dropped, clean_text).
     */
@@ -308,20 +303,13 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       }
     }
     val withChunks = df.select(col(idCol), chunksUdf(col(textCol)).as("__chunks"))
-    val digests = withChunks
+    val units = withChunks
       .select(col(idCol),
         posexplode(col("__chunks")).as(Seq("chunk_idx", "__chunk")))
       .select(col(idCol), col("chunk_idx").cast("long").as("chunk_idx"),
-        md5(col("__chunk")).as("__digest"))
-    val firstW = Window.partitionBy(col("__digest"))
-      .orderBy(col(idCol).asc, col("chunk_idx").asc)
-    val kept = digests
-      .withColumn("__occ", row_number().over(firstW))
-      .filter(col("__occ") === 1)
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("chunk_idx"))).as("__kept"))
-    val keptArr = coalesce(col("__kept"), array().cast("array<bigint>"))
-    withChunks.join(kept, Seq(idCol), "left")
+        unitDigest(col("__chunk")))
+    val keptArr = coalesce(col("__pos"), array().cast("array<bigint>"))
+    withChunks.join(firstOccurrences(units, idCol, "chunk_idx"), Seq(idCol), "left")
       .select(
         col(idCol),
         size(col("__chunks")).cast("long").as("n_chunks"),
@@ -359,43 +347,21 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       sb.toString
     }
 
-  /** Shared core of [[paragraphDedup]] / [[windowDedup]]: corpus-wide
-    * first-occurrence rank on paragraph digests, then per-doc IN-ROW
-    * reassembly of the survivors from the original text.
-    *
-    * Scale shape: TEXT NEVER SHUFFLES. The rank exchange carries only
-    * (digest, id, idx) — 16-byte digests, never paragraphs (ScaleSpec
-    * asserts the feeder projection); the per-doc survivor relation is
-    * one compact (id, sorted kept-idx array) row; and `clean_text` is
-    * rebuilt by the caller's compiled `rebuild(text, kept)` loop AFTER
-    * the one id-keyed join, so the corpus text stays on its own scan
-    * side end-to-end. (The previous formulation joined the exploded
-    * paragraphs back and re-aggregated — the para-granularity text
-    * exchange it cost was the whole corpus.)
-    */
-  private def firstOccurrenceDedup(
-      df: DataFrame,
-      paras: DataFrame,
-      idCol: String,
-      textCol: String,
-      nParas: Column,
-      rebuild: org.apache.spark.sql.expressions.UserDefinedFunction
-  ): DataFrame =
-    firstOccurrenceCore(df.select(col(idCol), col(textCol),
-      nParas.as("n_paras")), paras, idCol, textCol, rebuild)
-      .select(
-        col(idCol),
-        col("__fo_clean").as("clean_text"),
-        col("__fo_kept").as("n_kept"),
-        (col("n_paras") - col("__fo_kept")).as("n_dropped"))
+  // ---- the sub-document occurrence core -----------------------------
+  // Every exact sub-document face (paragraph, boilerplate line, fixed
+  // window, CDC chunk, the span scrubs, ExactSubstr) cuts a doc into
+  // units and then runs the same three steps: digest each unit
+  // ([[unitDigest]]), rank the digests corpus-wide
+  // ([[firstOccurrenceRank]]), and gather the kept or dropped positions
+  // per doc ([[positionsById]]). A face owns only its unit cut, its
+  // keep/drop rule, its output columns, and its in-row rebuild.
 
-  /** Passthrough variant of the first-occurrence core: every column of
-    * `df` survives, plus `__fo_clean` (the doc rewritten to its
-    * surviving windows) and `__fo_kept` (how many survived). Lets a
-    * composed funnel (CurationPipeline) replace the text column in the
-    * SAME join that computes the dedup instead of paying a second
-    * corpus join to graft `clean_text` back on.
-    */
+  /** The one unit digest of the sub-document family: the 16-byte
+    * binary md5 of the unit, named `__digest`. Rank exchanges carry it
+    * instead of the unit text (and instead of md5's 32-char hex). */
+  private[dedup] def unitDigest(unit: Column): Column =
+    unhex(md5(unit)).as("__digest")
+
   /** Global first-occurrence rank WITHOUT a per-digest sort: annotate
     * each `(__digest, id, pos)` occurrence with the digest's global
     * minimum `(id, pos)` so callers keep (`__k === __first`) or drop
@@ -438,29 +404,81 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     withKey.join(firsts.hint("shuffle_hash"), Seq("__digest"))
   }
 
+  /** The one position gather: `(id, __pos)`, each doc's `posCol`
+    * values over `rows` as one sorted array. Docs without rows are
+    * absent; callers left-join the result back by id. */
+  private[dedup] def positionsById(
+      rows: DataFrame,
+      idCol: String,
+      posCol: String
+  ): DataFrame =
+    rows.groupBy(col(idCol)).agg(sort_array(collect_list(col(posCol))).as("__pos"))
+
+  /** `(id, __pos)` of each doc's first occurrences in `units`
+    * (`(id, posCol, __digest)`). */
+  private def firstOccurrences(
+      units: DataFrame,
+      idCol: String,
+      posCol: String
+  ): DataFrame =
+    positionsById(firstOccurrenceRank(units, idCol, posCol)
+      .filter(col("__k") === col("__first")), idCol, posCol)
+
+  /** `(id, posCol)` of every occurrence in `units` past its digest's
+    * first — the drop rows of the span faces. */
+  private[dedup] def laterOccurrences(
+      units: DataFrame,
+      idCol: String,
+      posCol: String
+  ): DataFrame =
+    firstOccurrenceRank(units, idCol, posCol)
+      .filter(col("__k") =!= col("__first"))
+      .select(col(idCol), col(posCol))
+
+  /** First-occurrence dedup of `units` (`(id, para_idx, __digest)`)
+    * with column passthrough: every column of `df` survives, plus
+    * `__fo_clean` (the doc rewritten to its surviving units) and
+    * `__fo_kept` (how many survived). Lets a composed funnel
+    * (CurationPipeline) replace the text column in the SAME join that
+    * computes the dedup instead of paying a second corpus join to
+    * graft `clean_text` back on.
+    *
+    * Scale shape: TEXT NEVER SHUFFLES. The rank exchange carries only
+    * (digest, id, idx) — 16-byte digests, never paragraphs (ScaleSpec
+    * asserts the feeder projection); the per-doc survivor relation is
+    * one compact (id, sorted kept-idx array) row; and `clean_text` is
+    * rebuilt by the caller's compiled `rebuild(text, kept)` loop AFTER
+    * the one id-keyed join, so the corpus text stays on its own scan
+    * side end-to-end.
+    */
   private def firstOccurrenceCore(
       df: DataFrame,
-      paras: DataFrame,
+      units: DataFrame,
       idCol: String,
       textCol: String,
       rebuild: org.apache.spark.sql.expressions.UserDefinedFunction
-  ): DataFrame = {
-    val keptIdx = firstOccurrenceRank(
-      paras.select(col(idCol), col("para_idx"),
-        md5(col("para")).as("__digest")),
-      idCol, "para_idx")
-      .filter(col("__k") === col("__first"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("para_idx"))).as("__kept_idx"))
-    df.join(keptIdx, Seq(idCol), "left")
+  ): DataFrame =
+    rebuildKept(df, firstOccurrences(units, idCol, "para_idx"),
+      idCol, textCol, rebuild)
+
+  /** Graft the kept positions `(id, __pos)` onto `df` by id and
+    * rebuild each doc in-row: `df`'s columns plus `__fo_clean` ('' for
+    * a doc with nothing kept) and `__fo_kept`. */
+  private def rebuildKept(
+      df: DataFrame,
+      kept: DataFrame,
+      idCol: String,
+      textCol: String,
+      rebuild: org.apache.spark.sql.expressions.UserDefinedFunction
+  ): DataFrame =
+    df.join(kept, Seq(idCol), "left")
       .withColumn("__fo_clean",
-        when(col("__kept_idx").isNull, lit(""))
-          .otherwise(rebuild(col(textCol), col("__kept_idx"))))
+        when(col("__pos").isNull, lit(""))
+          .otherwise(rebuild(col(textCol), col("__pos"))))
       .withColumn("__fo_kept",
-        when(col("__kept_idx").isNull, lit(0L))
-          .otherwise(size(col("__kept_idx")).cast("long")))
-      .drop("__kept_idx")
-  }
+        when(col("__pos").isNull, lit(0L))
+          .otherwise(size(col("__pos")).cast("long")))
+      .drop("__pos")
 
   /** [[windowDedup]] with column passthrough (see
     * [[firstOccurrenceCore]]): returns `df`'s full schema plus
@@ -472,14 +490,13 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       textCol: String,
       wordsPerPara: Int
   ): DataFrame = {
-    val paras = graft.text.TextAnalysis
+    val units = graft.text.TextAnalysis
       .chunkByTokens(df.select(col(idCol), col(textCol)), idCol, textCol,
         maxTokens = wordsPerPara, overlap = 0)
-      .select(col(idCol), col("chunk_idx").as("para_idx"), col("chunk").as("para"))
-    firstOccurrenceCore(df, paras, idCol, textCol,
+      .select(col(idCol), col("chunk_idx").as("para_idx"), unitDigest(col("chunk")))
+    firstOccurrenceCore(df, units, idCol, textCol,
       windowRebuildUdf(wordsPerPara))
   }
-
 
   /** Letter histogram (a-z counts) in ONE compiled pass over the text
     * — the edit-distance prefilter's per-doc feature. (An expression
@@ -591,7 +608,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   /** Distinct word n-gram shingles per document: (id, shingle). The
     * exploded relation is the common substrate for Jaccard and MinHash.
     * Generation is one compiled loop per doc
-    * ([[graft.text.CorpusAudit.gramsUdf]], spec-pinned equal to the
+    * ([[graft.text.TextAnalysis.ngramsUdf]], spec-pinned equal to the
     * transform/slice/concat_ws HOF pipeline it replaced — interpreted
     * lambda trees, measured ~10× slower); a doc with fewer than n
     * tokens yields none, and shingle STRINGS are byte-identical, so
@@ -600,8 +617,8 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     */
   def shingles(df: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
     df.select(col(idCol),
-      explode(array_distinct(
-        graft.text.CorpusAudit.gramsUdf(n)(col(textCol)))).as("shingle"))
+      explode(graft.text.TextAnalysis.ngramsUdf(n, distinct = true)(
+        col(textCol))).as("shingle"))
 
   /** (idCol, xs) per doc — its sorted, distinct shingle-hash array,
     * docs with none dropped — cached: the docs side every exact pair
@@ -1798,12 +1815,17 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * overlapping/adjacent removed windows merge into spans, and each
     * document's cleaned text is the original with those spans cut.
     *
-    * Dataflow: one compiled rolling-hash pass per document → explode
-    * (doc, pos, h) → rank occurrences per hash (one shuffle on the
-    * 8-byte hash — ~16 bytes/char of shuffle, the honest cost of
-    * corpus-wide substring dedup; suffix-array builds move comparable
-    * volume) → per-doc interval merge (gaps-and-islands) → one
-    * compiled cut per document. Nothing is ever pairwise.
+    * Dataflow: one compiled rolling-hash pass per document cuts the
+    * L-char units and digests them in the same O(n) pass (the 8-byte
+    * Karp-Rabin hash stands in for [[unitDigest]] here: an md5 per
+    * character position would cost L× the hashing) → explode
+    * (doc, pos, h) → the sort-free first-occurrence rank
+    * ([[laterOccurrences]]; one shuffle on the 8-byte hash — ~16
+    * bytes/char of shuffle, the honest cost of corpus-wide substring
+    * dedup; suffix-array builds move comparable volume) → one sorted
+    * dup-position array per doc ([[positionsById]]) → one compiled
+    * in-row loop that merges positions into spans and cuts them.
+    * Nothing is ever pairwise, and nothing is windowed.
     *
     * Returns one row per input document:
     * (id, n_dup_spans, removed_chars, clean_len, clean_md5, clean_text).
@@ -1816,56 +1838,47 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   ): DataFrame = {
     val occ = df.select(
       col(idCol),
-      posexplode(rollingWindowHashesUdf(l)(col(textCol))).as(Seq("pos", "h")))
-    // non-first occurrences via the sort-free two-phase min
-    // ([[firstOccurrenceRank]]) — the same r14 de-skew the token-level
-    // span family uses: a boilerplate L-char window repeated across
-    // 10⁸ docs must not pin one sort reducer the way the old
-    // row_number()-over-h rank did
-    val dups = firstOccurrenceRank(
-      occ.withColumnRenamed("h", "__digest"), idCol, "pos")
-      .filter(col("__k") =!= col("__first"))
-      .select(col(idCol), col("pos"))
-    val wD = Window.partitionBy(idCol).orderBy("pos")
-    val spans = dups
-      .withColumn(
-        "brk",
-        when(lag("pos", 1).over(wD).isNull || col("pos") - lag("pos", 1).over(wD) > l, 1)
-          .otherwise(0))
-      .withColumn("sess",
-        sum("brk").over(wD.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .groupBy(col(idCol), col("sess"))
-      .agg(min("pos").as("s"), (max("pos") + l).as("e"))
-      .groupBy(idCol)
-      .agg(
-        sort_array(collect_list(struct(col("s"), col("e")))).as("spans"))
-    val cutUdf = udf { (text: String, ss: Seq[Int], es: Seq[Int]) =>
-      val sb = new java.lang.StringBuilder(text.length)
-      var prev = 0
-      var i = 0
-      while (i < ss.length) {
-        sb.append(text, prev, ss(i))
-        prev = es(i)
-        i += 1
-      }
-      sb.append(text, prev, text.length)
-      sb.toString
-    }
-    df.join(spans, Seq(idCol), "left")
-      .withColumn(
-        "clean_text",
-        when(col("spans").isNull, col(textCol))
-          .otherwise(cutUdf(
-            col(textCol),
-            transform(col("spans"), _.getField("s")),
-            transform(col("spans"), _.getField("e")))))
+      posexplode(rollingWindowHashesUdf(l)(col(textCol))).as(Seq("pos", "__digest")))
+    val dups = positionsById(laterOccurrences(occ, idCol, "pos"), idCol, "pos")
+    df.join(dups, Seq(idCol), "left")
+      .withColumn("__r", substringCutUdf(l)(col(textCol), col("__pos")))
+      .withColumn("clean_text", col("__r._1"))
       .select(
         col(idCol),
-        coalesce(size(col("spans")), lit(0)).cast("long").as("n_dup_spans"),
+        col("__r._2").as("n_dup_spans"),
         (length(col(textCol)) - length(col("clean_text"))).cast("long").as("removed_chars"),
         length(col("clean_text")).cast("long").as("clean_len"),
         md5(col("clean_text")).as("clean_md5"),
         col("clean_text"))
   }
+
+  /** In-row span merge and cut for [[substringDedup]]: walk the doc's
+    * sorted dup-window starts, open a new span only when
+    * `pos − prev > l` (a gap of at least one char between the windows;
+    * windows at distance ≤ l overlap or touch and extend the open
+    * span), and cut each span [first, last + l). Returns
+    * (clean_text, n_dup_spans); a doc with no dups (or null text)
+    * passes through with 0 spans.
+    */
+  private def substringCutUdf(l: Int)
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (text: String, pos: Seq[Int]) =>
+      if (text == null || pos == null || pos.isEmpty) (text, 0L)
+      else {
+        val sb = new java.lang.StringBuilder(text.length)
+        var from = 0
+        var start = pos.head; var prev = start; var spans = 1L
+        pos.iterator.drop(1).foreach { p =>
+          if (p - prev > l) {
+            sb.append(text, from, start); from = prev + l
+            start = p; spans += 1
+          }
+          prev = p
+        }
+        sb.append(text, from, start)
+        sb.append(text, prev + l, text.length)
+        (sb.toString, spans)
+      }
+    }
 
 }

@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   * the span-removal third of the exact-dedup family, split from
   * Dedup.scala for file hygiene (VERDICT r14 #6). Mixed into
   * [[Dedup]]; every call site keeps the `Dedup.removeDuplicateSpans*`
-  * API. The shared first-occurrence rank machinery stays in
-  * Dedup.scala (paragraph/window dedup use it too).
+  * API. The shared occurrence core (unit digest, first-occurrence
+  * rank, position gather) stays in Dedup.scala, where the other
+  * sub-document faces use it too.
   */
 private[dedup] trait SpanRemovalOps { self: Dedup.type =>
 
@@ -44,35 +45,22 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
     * reducer; the
     * removal relation is duplication-bound and id-keyed; text moves
     * once, and each doc is rebuilt by one compiled pass. Window
-    * generation is one compiled loop per doc
-    * ([[graft.text.CorpusAudit.gramsUdf]]).
+    * generation is one compiled loop per doc ([[spanWindows]]).
     */
   def removeDuplicateSpans(
       df: DataFrame,
       idCol: String,
       textCol: String,
       windowTokens: Int = 50
-  ): DataFrame = {
-    require(windowTokens >= 1, "windowTokens >= 1")
-    val wins = df
-      .select(col(idCol),
-        posexplode(
-          graft.text.CorpusAudit.gramsUdf(windowTokens)(col(textCol)))
-          .as(Seq("pos", "__win")))
-      .select(col(idCol), col("pos").cast("long").as("pos"),
-        unhex(md5(col("__win"))).as("__digest"))
-    val drops = firstOccurrenceRank(wins, idCol, "pos")
-      .filter(col("__k") =!= col("__first"))
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("pos"))).as("__drop_pos"))
-    spanRebuild(df, drops, idCol, textCol, windowTokens)
-  }
+  ): DataFrame =
+    spanScrub(df, None, idCol, textCol, windowTokens, batchInternal = true)
 
   /** Shared tail of the span-removal family: graft the id-keyed drop
-    * relation `(id, __drop_pos)` back onto the corpus and rebuild each
-    * doc in one compiled pass. NULL text passes through as NULL
-    * (clean_text/n_tokens/n_removed all NULL — null in, null out),
-    * matching the SQL oracle's semantics instead of coercing to "".
+    * relation `(id, __pos)` ([[positionsById]]) back onto the corpus
+    * and rebuild each doc in one compiled pass. NULL text passes
+    * through as NULL (clean_text/n_tokens/n_removed all NULL — null
+    * in, null out), matching the SQL oracle's semantics instead of
+    * coercing to "".
     */
   private def spanRebuild(
       df: DataFrame,
@@ -86,7 +74,7 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
     df.select(col(idCol), col(textCol), nToks.as("n_tokens"))
       .join(drops, Seq(idCol), "left")
       .withColumn("__r",
-        spanRemoveUdf(windowTokens)(col(textCol), col("__drop_pos")))
+        spanRemoveUdf(windowTokens)(col(textCol), col("__pos")))
       .select(col(idCol),
         when(col(textCol).isNotNull, col("__r._1")).as("clean_text"),
         col("n_tokens"),
@@ -152,36 +140,45 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
       textCol: String,
       windowTokens: Int = 50,
       batchInternal: Boolean = true
+  ): DataFrame =
+    spanScrub(newDf, Some(histIdx), idCol, textCol, windowTokens, batchInternal)
+
+  /** The one span scrub: drop from each doc of `df` every window known
+    * to the history digest index (when there is one) plus, when
+    * `batchInternal`, every window past its first occurrence in `df`
+    * itself; gather the drop positions per doc and rebuild.
+    * [[removeDuplicateSpans]] is the no-history case.
+    */
+  private def spanScrub(
+      df: DataFrame,
+      histIdx: Option[DataFrame],
+      idCol: String,
+      textCol: String,
+      windowTokens: Int,
+      batchInternal: Boolean
   ): DataFrame = {
     require(windowTokens >= 1, "windowTokens >= 1")
-    val newWins = spanWindows(newDf, idCol, textCol, windowTokens)
+    val wins = spanWindows(df, idCol, textCol, windowTokens)
     // window known to history (semi-join on 16-byte digests)
-    val inHist = newWins
-      .join(histIdx, Seq("__digest"), "left_semi")
-      .select(col(idCol), col("pos"))
+    val inHist = histIdx.map(h =>
+      wins.join(h, Seq("__digest"), "left_semi").select(col(idCol), col("pos")))
     // `batchInternal = false` is the STREAMING posture: each doc's
     // scrub is then a pure function of (doc, static history), so any
     // micro-batching of the input emits the same rows — the rank
-    // window (and its shuffle) is skipped entirely
-    val dropRows =
-      if (!batchInternal) inHist
-      else {
-        val inBatch = firstOccurrenceRank(newWins, idCol, "pos")
-          .filter(col("__k") =!= col("__first"))
-          .select(col(idCol), col("pos"))
-        // duplicate (id, pos) rows across the two branches are fine —
-        // spanRemoveUdf's coverage-array union is idempotent on
-        // repeated positions, so no distinct (and its shuffle) needed
-        inHist.union(inBatch)
-      }
-    val drops = dropRows
-      .groupBy(col(idCol))
-      .agg(sort_array(collect_list(col("pos"))).as("__drop_pos"))
-    spanRebuild(newDf, drops, idCol, textCol, windowTokens)
+    // (and its shuffle) is skipped entirely
+    val inBatch =
+      if (batchInternal) Some(laterOccurrences(wins, idCol, "pos")) else None
+    // duplicate (id, pos) rows across the two branches are fine —
+    // spanRemoveUdf's coverage-array union is idempotent on repeated
+    // positions, so no distinct (and its shuffle) needed
+    val drops = (inHist ++ inBatch).reduce(_ union _)
+    spanRebuild(df, positionsById(drops, idCol, "pos"), idCol, textCol,
+      windowTokens)
   }
 
-  /** (id, pos, md5-digest) of every `windowTokens`-token window —
-    * the shared projection of the against/index span faces. */
+  /** (id, pos, __digest) of every `windowTokens`-token window — the
+    * unit cut of the span faces ([[graft.text.TextAnalysis.ngramsUdf]],
+    * one compiled loop per doc). */
   private def spanWindows(
       df: DataFrame,
       idCol: String,
@@ -190,10 +187,10 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
   ): DataFrame = df
     .select(col(idCol),
       posexplode(
-        graft.text.CorpusAudit.gramsUdf(windowTokens)(col(textCol)))
-        .as(Seq("pos", "__win")))
+        graft.text.TextAnalysis.ngramsUdf(windowTokens, distinct = false)(
+          col(textCol))).as(Seq("pos", "__win")))
     .select(col(idCol), col("pos").cast("long").as("pos"),
-      unhex(md5(col("__win"))).as("__digest"))
+      unitDigest(col("__win")))
 
   /** In-row span scrub for [[removeDuplicateSpans]]: union the dropped
     * windows' [pos, pos+w) token ranges, emit surviving tokens joined

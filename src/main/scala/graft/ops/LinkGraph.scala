@@ -53,15 +53,6 @@ import org.apache.spark.sql.functions._
   */
 object LinkGraph {
 
-  /** Executed plan of the final pre-checkpoint rank build, captured
-    * ONLY when `spark.graft.pagerank.capturePlan=true` (test-only):
-    * production runs never pin dead executed plans. PlanShapeSpec reads it to prove the
-    * broadcast posture's per-round plan is exchange-free and clears it
-    * after the read.
-    */
-  private[graft] var lastRanksPlan
-      : Option[org.apache.spark.sql.execution.SparkPlan] = None
-
   /** @param edges  (src: Long, dst: Long) — caller pre-distincts.
     * @return (node: Long, rank: Long) after `iters` rounds.
     */
@@ -94,12 +85,6 @@ object LinkGraph {
       checkpointEvery: Int = 5): (DataFrame, () => Unit) = {
     require(iters >= 1, "iters >= 1")
     val spark = edges.sparkSession
-    // stale-capture guard (ADVICE r13): clear unconditionally at entry
-    // so a failed test that set capturePlan but died before its
-    // clearing read can't leak a pinned executed plan (and its
-    // broadcast references) into the next caller's assertions — or
-    // hold them for the JVM lifetime
-    lastRanksPlan = None
     // the edge input is scanned three times before the rounds even
     // start (out-degrees, sink-node distinct, degree annotation) — an
     // uncached relational preamble would re-execute per scan, so pin
@@ -176,9 +161,6 @@ object LinkGraph {
     // materialize before dropping the shared caches (localCheckpoint is
     // eager) so the returned frame never recomputes the edge build
     val out = ranks.localCheckpoint()
-    if (spark.conf.getOption("spark.graft.pagerank.capturePlan")
-        .contains("true"))
-      lastRanksPlan = Some(ranks.queryExecution.executedPlan)
     releasePrev(out)
     eo.unpersist()
     nodes.unpersist()

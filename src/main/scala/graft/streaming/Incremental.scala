@@ -373,19 +373,8 @@ object Incremental {
       n: Int = 3,
       minContainment: Double = 0.8,
       maxDf: Long = 1000L): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pairs = graft.dedup.Dedup.containmentPairsAgainst(
-          batch, history, idCol, textCol, n, minContainment, maxDf)
-        pairs.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outPath/batch=$batchId")
-        pairs.unpersist()
-        ()
-      }
-      .start()
+    containmentBatches(docs, history, idCol, textCol, outPath,
+      checkpointDir, n, minContainment, maxDf)((_, pairs) => pairs)
 
   /** The DROP action of [[containmentStream]] — what a real ingest
     * wants from the containment front door: each micro-batch's output
@@ -409,14 +398,37 @@ object Incremental {
       checkpointDir: String,
       n: Int = 3,
       minContainment: Double = 0.8,
-      maxDf: Long = 1000L): StreamingQuery = {
-    // The history (containing) side — shingle pass, posting explode,
-    // hot-set aggregation — is a pure function of (history, n, maxDf):
-    // build it ONCE per stream, cached, instead of once per micro-batch
-    // (each batch previously re-ran the standing corpus's shingle UDF
-    // and posting build — the dominant per-batch cost, and at 100 TB a
-    // full corpus pass per ingest drop). Released when the stream
-    // terminates, via the self-removing listener below.
+      maxDf: Long = 1000L): StreamingQuery =
+    containmentBatches(docs, history, idCol, textCol, outPath,
+      checkpointDir, n, minContainment, maxDf) { (batch, pairs) =>
+      // containmentDedupAgainst's anti-join, over the held pair frame
+      batch.join(pairs.select(col("new_id").as(idCol)).distinct(),
+        Seq(idCol), "left_anti")
+    }
+
+  /** The one `foreachBatch` body of the containment streams: probe each
+    * micro-batch against the stream-lifetime history index and write
+    * `emit(batch, pairs)` to the batch's idempotent Overwrite slot.
+    * The history (containing) side — shingle pass, posting explode,
+    * hot-set aggregation — is a pure function of (history, n, maxDf):
+    * it is built ONCE per stream, cached, instead of once per
+    * micro-batch (a per-batch rebuild re-ran the standing corpus's
+    * shingle UDF and posting build — the dominant per-batch cost, and
+    * at 100 TB a full corpus pass per ingest drop). It is released when
+    * the stream terminates ([[unpersistOnTermination]]); each batch's
+    * pair frame is released after its write, so a long-running ingest
+    * never pins one pair-list cache per batch.
+    */
+  private def containmentBatches(
+      docs: DataFrame,
+      history: DataFrame,
+      idCol: String,
+      textCol: String,
+      outPath: String,
+      checkpointDir: String,
+      n: Int,
+      minContainment: Double,
+      maxDf: Long)(emit: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
     val hist = graft.dedup.Dedup.prepareContainmentHistory(
       history, idCol, textCol, n, maxDf)
     val query = docs.writeStream
@@ -424,14 +436,9 @@ object Incremental {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // inline containmentDedupAgainst, holding the pair frame so
-        // its cache can be released after the write — a long-running
-        // ingest would otherwise pin one pair-list cache per batch
         val pairs = graft.dedup.Dedup.containmentPairsAgainstPrepared(
           batch, textCol, minContainment, hist)
-        val doomed = pairs.select(col("new_id").as(idCol)).distinct()
-        batch.join(doomed, Seq(idCol), "left_anti")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+        emit(batch, pairs).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
           .parquet(s"$outPath/batch=$batchId")
         pairs.unpersist()
         ()

@@ -20,13 +20,13 @@ object CorpusAudit {
     * a quotable exemplar. Only grams seen more than once survive.
     *
     * Scale shape: occurrences are generated per-row by ONE compiled
-    * loop per document ([[gramsUdf]] — the same HOF-replacement
+    * loop per document ([[TextAnalysis.ngramsUdf]] — the same HOF-replacement
     * discipline as `GramHash.shingle_hashes`: transform/slice/concat_ws
     * lambdas are interpreted expression trees in Spark, measured ~4×
     * slower than the loop at 26M grams), then one count-by-gram
     * shuffle and a TakeOrderedAndProject top-k. At 100 TB the gram
     * STRING would dominate the exchange, so the aggregation keys on
-    * the md5 digest (16 bytes regardless of n) and carries one
+    * the md5 digest (32 hex chars regardless of n) and carries one
     * exemplar gram via `min` — the same digests-not-text discipline as
     * `Dedup.paragraphDedup`.
     */
@@ -39,7 +39,7 @@ object CorpusAudit {
     require(n >= 1 && k >= 1, "n >= 1 and k >= 1")
     val grams = docs
       .select(col(idCol).as("doc_id"),
-        explode(gramsUdf(n)(col(textCol))).as("gram"))
+        explode(TextAnalysis.ngramsUdf(n, distinct = false)(col(textCol))).as("gram"))
       .where(length(col("gram")) > 0)
       .select(col("doc_id"), md5(col("gram")).as("g"), col("gram"))
     grams
@@ -53,43 +53,6 @@ object CorpusAudit {
       .select("gram", "occurrences", "n_docs", "example_doc")
       .orderBy(col("occurrences").desc, col("gram").asc)
       .limit(k)
-  }
-
-  /** All word n-grams of one document as strings — ONE compiled loop
-    * per row, replacing the interpreted transform/slice/concat_ws HOF
-    * pipeline. Token split matches Spark's `split(text, " ")` (Java
-    * regex, trailing empties KEPT); each gram is built once into a
-    * shared StringBuilder. Unlike [[graft.plans.GramHash.shingle_hashes]]
-    * this keeps the STRINGS (the audit's output is quotable gram text,
-    * not a set-arithmetic digest) and keeps duplicates (occurrence
-    * counting needs multiplicity, shingling wants distinct).
-    */
-  private[graft] def gramsUdf(
-      n: Int): org.apache.spark.sql.expressions.UserDefinedFunction = udf {
-    (text: String) =>
-      if (text == null) Array.empty[String]
-      else {
-        val toks = text.split(" ", -1)
-        if (toks.length < n) Array.empty[String]
-        else {
-          val m = toks.length - n + 1
-          val out = new Array[String](m)
-          val sb = new java.lang.StringBuilder
-          var i = 0
-          while (i < m) {
-            sb.setLength(0)
-            var j = 0
-            while (j < n) {
-              if (j > 0) sb.append(' ')
-              sb.append(toks(i + j))
-              j += 1
-            }
-            out(i) = sb.toString
-            i += 1
-          }
-          out
-        }
-      }
   }
 
   /** Robust length-outlier gate: median / MAD over an integer length

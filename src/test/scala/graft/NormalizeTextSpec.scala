@@ -90,7 +90,7 @@ class NormalizeTextSpec extends SparkTestBase {
       import org.apache.spark.sql.expressions.Window
       val ex = docs
         .select(col("doc_id"),
-          graft.text.CorpusAudit.gramsUdf(3)(col("text")).as("g"))
+          graft.text.TextAnalysis.ngramsUdf(3, distinct = false)(col("text")).as("g"))
         .select(col("doc_id"), array_distinct(col("g")).as("shs"))
         .select(col("doc_id"), size(col("shs")).cast("long").as("n_sh"),
           explode(col("shs")).as("shingle"))

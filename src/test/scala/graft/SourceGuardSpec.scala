@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Source-scan guards over `src/main/scala`: session wiring stays in
   * one file, a `*Udf` name stays a Spark UDF, global running sums go
   * through the one running-sum operator, near-dup pairs go through
-  * the one exact verify, and Hamming pairs through the one band cover.
+  * the one exact verify, Hamming pairs through the one band cover, and
+  * the exact sub-document faces through the one occurrence core.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -78,6 +79,22 @@ class SourceGuardSpec extends AnyFunSuite {
       assert(counts.map(_._2).sum == 1,
         s"$needle:\n" + counts.filter(_._2 > 0).mkString("\n"))
     }
+  }
+
+  test("one sub-document occurrence core") {
+    // the one position gather of the exact sub-document faces
+    val gather = java.util.regex.Pattern.quote("sort_array(collect_list(").r
+    val counts = for {
+      (path, text) <- sources
+      if path.startsWith(Paths.get("src/main/scala/graft/dedup"))
+    } yield path -> gather.findAllIn(text).size
+    assert(counts.map(_._2).sum == 1, counts.filter(_._2 > 0).mkString("\n"))
+    // one word-gram UDF: TextAnalysis.ngramsUdf
+    val twin = """\bgramsUdf\b""".r
+    val offenders = sources.collect {
+      case (path, text) if twin.findFirstIn(text).isDefined => path
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
   test("no shutdown hook and no spark.graft.verify.* conf key") {

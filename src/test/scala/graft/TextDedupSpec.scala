@@ -1055,7 +1055,7 @@ class TextDedupSpec extends SparkTestBase {
     import org.apache.spark.sql.expressions.Window
     val w = 4
     val wins = df.select(col("doc_id"),
-        posexplode(graft.text.CorpusAudit.gramsUdf(w)(col("text")))
+        posexplode(TextAnalysis.ngramsUdf(w, distinct = false)(col("text")))
           .as(Seq("pos", "win")))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         md5(col("win")).as("d"))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.LinkGraph
-import graft.text.{CorpusAudit, Html}
+import graft.text.{CorpusAudit, Html, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Hand-computed cases for the web front-door + audit + graph family
@@ -131,12 +131,25 @@ class WebOpsSpec extends SparkTestBase {
     }
     val e = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L))
       .toDF("src", "dst")
-    spark.conf.set("spark.graft.pagerank.capturePlan", "true")
+    // the final round's rank build runs as the returned frame's
+    // localCheckpoint action; a query execution listener sees its plan
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
     try {
-      LinkGraph.lastRanksPlan = None
       LinkGraph.pageRank(e, iters = 2).collect()
-      val plan = LinkGraph.lastRanksPlan.getOrElse(
-        fail("capturePlan=true but no plan captured"))
+      // the listener bus delivers asynchronously: bounded wait
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+      val plan = Option(plans.peek()).getOrElse(
+        fail("no localCheckpoint plan reached the listener within 30 s"))
       val nodes = allNodes(plan)
       // every exchange in the round plan would be edge- or node-sized
       // work repeated per iteration; the broadcast posture needs none —
@@ -148,10 +161,7 @@ class WebOpsSpec extends SparkTestBase {
           shuffles.mkString("\n"))
       assert(nodes.exists(_.nodeName.contains("BroadcastHashJoin")),
         nodes.map(_.nodeName).mkString(", "))
-    } finally {
-      LinkGraph.lastRanksPlan = None
-      spark.conf.unset("spark.graft.pagerank.capturePlan")
-    }
+    } finally spark.listenerManager.unregister(listener)
   }
 
   // ------------------------------------------------------------------
@@ -170,7 +180,7 @@ class WebOpsSpec extends SparkTestBase {
     assert(!out.exists(_._1.startsWith("x")))
   }
 
-  test("gramsUdf matches the HOF transform/slice/concat_ws pipeline, " +
+  test("ngramsUdf matches the HOF transform/slice/concat_ws pipeline, " +
     "including empty-token and short-doc edges") {
     val docs = Seq(
       (1L, "a b c d"), (2L, "x  y z"), // double space: empty token kept
@@ -185,7 +195,7 @@ class WebOpsSpec extends SparkTestBase {
             i => concat_ws(" ", slice(col("toks"), i + 1, lit(n))))).as("gram"))
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       val viaUdf = docs.select(col("doc_id"),
-          explode(CorpusAudit.gramsUdf(n)(col("text"))).as("gram"))
+          explode(TextAnalysis.ngramsUdf(n, distinct = false)(col("text"))).as("gram"))
         .collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
       assert(viaUdf == viaHof, s"n=$n")
     }
