@@ -709,11 +709,5 @@ object ArrayOps {
   def array_dot(a: Column, b: Column): Column =
     toColumn(ArrayDotProduct(toExpr(a), toExpr(b)))
 
-  /** Codegen'd cosine from three native dots. */
-  def array_cosine(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.sqrt
-    array_dot(a, b) / (sqrt(array_dot(a, a)) * sqrt(array_dot(b, b)))
-  }
-
   def wada_snr_native(c: Column): Column = toColumn(WadaSnrExpr(toExpr(c)))
 }

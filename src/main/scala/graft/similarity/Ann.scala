@@ -5,23 +5,25 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
 /** Similarity search over an `array<float>` embedding column.
   *
-  * Three tiers:
-  *  - [[cosineExact]] / [[topKExact]]: brute-force baseline. The dot
-  *    product is accumulated as exact quantized-integer longs so
-  *    results are bit-identical regardless of partitioning or engine
-  *    (needed for the DuckDB oracle).
-  *  - [[topKFast]]: the throughput path — broadcast probe matrix, one
-  *    `mapPartitions`-free relational pass using the codegen'd
-  *    decimal-explode plan is replaced by a plain double HOF dot; use
-  *    when exactness-of-last-bit doesn't matter.
-  *  - [[signLshBuckets]] + [[topKLsh]]: the 100 TB path — random
-  *    hyperplane sign bits bucket the corpus; a probe only scans its
-  *    bucket (and optional multi-probe neighbors), turning a full scan
-  *    into a 1/2^bits scan at some recall cost.
+  * Every cosine here is the exact quantized cosine: components round to
+  * the ×2^20 integer grid ([[QuantScale]]), dots accumulate exactly and
+  * the divide keeps one association order, so results are bit-identical
+  * regardless of partitioning or engine (needed for the DuckDB oracle).
+  * One private core computes it — a per-vector prep, one cosine
+  * column, a probe-ranking tail, an exact re-rank of a pair set and a
+  * self-pair tail — and the faces differ only in which pairs they
+  * score:
+  *  - [[topKExact]], [[hardNegatives]], [[cosineExactPairs]]: brute
+  *    force against a broadcast side.
+  *  - [[signLshBuckets]] + [[topKLsh]] / [[cosineNearDupPairs]]: the
+  *    100 TB path — random hyperplane sign bits bucket the corpus; a
+  *    probe only scans its bucket(s), turning a full scan into a
+  *    1/2^bits scan at some recall cost.
+  *  - [[ivfBuild]] + [[topKIvf]] / [[semanticDedup]] (and [[Pq]]):
+  *    k-means lists restrict each probe or pair to its cells.
   */
 object Ann {
 
@@ -64,44 +66,91 @@ object Ann {
     */
   val QuantScale: Double = 1048576.0d // 2^20
 
-  private def explodeVecQ(df: DataFrame, idCol: String, vecCol: String) =
-    df.select(col(idCol), posexplode(col(vecCol)).as(Seq("pos", "x")))
-      .withColumn("xq", round(col("x").cast("double") * QuantScale, 0).cast("long"))
+  // ------------------------------------------------------------------
+  // The one exact quantized-cosine core. A face is its join key, its
+  // pair predicate and its output columns over these pieces.
+  // ------------------------------------------------------------------
 
-  /** Exact pairwise cosine between two embedding relations via
-    * position-join + long-accumulated dot products (see QuantScale).
-    * Deterministic to the last bit — the oracle-checkable formulation.
+  /** Per-vector prep: `keys`, the quantized vector `q<side>`
+    * (quantize_1m) and its exact self-dot `n<side>` — computed once per
+    * vector, so each scored pair costs one long-dot.
     */
-  def cosineExact(
+  private def prepQ(df: DataFrame, vecCol: String, side: String, keys: Column*): DataFrame = {
+    val q = "q" + side
+    df.select(keys :+ quantize_1m(col(vecCol)).as(q): _*)
+      .withColumn("n" + side, quantDot(col(q), col(q)))
+  }
+
+  /** Cosine of a row carrying both preps: the exact long dot divided
+    * as dot / (sqrt(na)·sqrt(nb)), the association order the oracle
+    * replays.
+    */
+  private def cosCol: Column =
+    quantDot(col("qa"), col("qb")) / (sqrt(col("na")) * sqrt(col("nb")))
+
+  /** Probe-ranking tail: the top `k` candidates per probe by cosine,
+    * ties to the smaller candidate id; emits (probe, rank, cand,
+    * extra..., cos).
+    */
+  private def rankByCos(
+      pairs: DataFrame,
+      probe: String,
+      cand: String,
+      k: Int,
+      extra: Column*
+  ): DataFrame =
+    rankTopK(pairs.withColumn("cos", cosCol), probe,
+      Seq(col("cos").desc, col(cand).asc), k)
+      .select(Seq(col(probe), col("rank"), col(cand)) ++ extra :+ col("cos"): _*)
+
+  /** Exact re-rank of a (probe_id, cand_id) pair set — [[topKExact]]'s
+    * metric and tie-break restricted to those pairs. Vectors enter
+    * late: the corpus join is id-keyed (bucketable at scale) and the
+    * probe side broadcasts, so the pair set can be formed and deduped
+    * over ids alone.
+    */
+  private[similarity] def exactRerank(
+      pairs: DataFrame,
+      corpus: DataFrame,
       probes: DataFrame,
-      cands: DataFrame,
-      idA: String,
-      idB: String,
-      vecCol: String
+      idCol: String,
+      vecCol: String,
+      k: Int
   ): DataFrame = {
-    def norms(df: DataFrame, id: String, out: String) =
-      explodeVecQ(df, id, vecCol)
-        .groupBy(id)
-        .agg(sqrt(sum(col("xq") * col("xq")).cast(DoubleType)).as(out))
-    val a = explodeVecQ(probes, idA, vecCol).withColumnRenamed("xq", "xa")
-    val b = explodeVecQ(cands, idB, vecCol).withColumnRenamed("xq", "xb")
-    val dots = a
-      .join(b, Seq("pos"))
-      .groupBy(idA, idB)
-      .agg(sum(col("xa") * col("xb")).cast(DoubleType).as("dot"))
-    dots
-      .join(norms(probes, idA, "na"), Seq(idA))
-      .join(norms(cands, idB, "nb"), Seq(idB))
-      .withColumn("cos", col("dot") / (col("na") * col("nb")))
-      .select(col(idA), col(idB), col("cos"))
+    val c = prepQ(corpus, vecCol, "b", col(idCol).as("cand_id"))
+    val p = prepQ(probes, vecCol, "a", col(idCol).as("probe_id"))
+    rankByCos(pairs.join(c, Seq("cand_id")).join(broadcast(p), Seq("probe_id")),
+      "probe_id", "cand_id", k)
+  }
+
+  /** Self-pair tail: (a, b, cos) for a < b with cos ≥ minCos. With a
+    * join `key` only rows sharing it pair up (an equi-join on the key);
+    * without one the whole prepped relation broadcasts into a theta
+    * join.
+    */
+  private def selfPairs(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      minCos: Double,
+      key: Option[String]
+  ): DataFrame = {
+    def side(s: String) =
+      prepQ(df, vecCol, s, key.map(col).toSeq :+ col(idCol).as(s): _*)
+    val joined = key match {
+      case Some(k) => side("a").join(side("b"), Seq(k)).filter(col("a") < col("b"))
+      case None => side("a").join(broadcast(side("b")), col("a") < col("b"))
+    }
+    joined.withColumn("cos", cosCol)
+      .filter(col("cos") >= minCos)
+      .select("a", "b", "cos")
   }
 
   /** Brute-force top-k neighbors for each probe (exact, oracle-safe):
-    * both sides quantize and self-norm once per vector, the (small)
-    * probe side broadcasts, and each candidate row costs one long-dot
-    * per probe — no posexplode, no position join, nothing but the
-    * candidate scan shuffles (bit-identical to the explode-join
-    * formulation; see quantize_1m/quantDot).
+    * both sides prep once per vector, the (small) probe side
+    * broadcasts, and each candidate row costs one long-dot per probe —
+    * no posexplode, no position join, nothing but the candidate scan
+    * shuffles.
     */
   def topKExact(
       probes: DataFrame,
@@ -111,20 +160,9 @@ object Ann {
       vecCol: String,
       k: Int
   ): DataFrame = {
-    def prep(df: DataFrame, id: String, q: String, n: String) =
-      df.select(col(id), quantize_1m(col(vecCol)).as(q))
-        .withColumn(n, quantDot(col(q), col(q)))
-    val p = prep(probes, idA, "qa", "na")
-    val c = prep(cands, idB, "qb", "nb")
-    val cos = c
-      .crossJoin(broadcast(p))
-      .filter(col(idA) =!= col(idB))
-      .withColumn(
-        "cos",
-        quantDot(col("qa"), col("qb")) /
-          (sqrt(col("na")) * sqrt(col("nb"))))
-    rankTopK(cos, idA, Seq(col("cos").desc, col(idB).asc), k)
-      .select(col(idA), col("rank"), col(idB), col("cos"))
+    val p = prepQ(probes, vecCol, "a", col(idA))
+    val c = prepQ(cands, vecCol, "b", col(idB))
+    rankByCos(c.crossJoin(broadcast(p)).filter(col(idA) =!= col(idB)), idA, idB, k)
   }
 
   /** Johnson-Lindenstrauss random projection (Achlioptas '01 — the
@@ -185,61 +223,10 @@ object Ann {
       labelCol: String,
       k: Int
   ): DataFrame = {
-    def prep(df: DataFrame, id: String, q: String, n: String, l: String) =
-      df.select(col(id), quantize_1m(col(vecCol)).as(q), col(labelCol).as(l))
-        .withColumn(n, quantDot(col(q), col(q)))
-    val p = prep(probes, idA, "qa", "na", "la")
-    val c = prep(cands, idB, "qb", "nb", "lb")
-    val cos = c
-      .crossJoin(broadcast(p))
-      .filter(col("la") =!= col("lb"))
-      .withColumn(
-        "cos",
-        quantDot(col("qa"), col("qb")) /
-          (sqrt(col("na")) * sqrt(col("nb"))))
-    rankTopK(cos, idA, Seq(col("cos").desc, col(idB).asc), k)
-      .select(col(idA), col("rank"), col(idB), col("la").as("probe_label"),
-        col("lb").as("neg_label"), col("cos"))
-  }
-
-  /** Fast double-precision cosine via the native codegen'd
-    * ArrayDotProduct expression (graft.plans) — a tight primitive loop
-    * inside WholeStageCodegen instead of per-element HOF lambda calls.
-    * Candidate × probe pairing happens through a broadcast crossJoin of
-    * the (small) probe side.
-    */
-  def cosineFast(vecA: Column, vecB: Column): Column =
-    graft.plans.ArrayOps.array_cosine(vecA, vecB)
-
-  /** HOF formulation kept for comparison/tests: zip_with + aggregate —
-    * correct and shuffle-free, but interprets a lambda per element.
-    */
-  def cosineHof(vecA: Column, vecB: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(
-        zip_with(x, y, (a, b) => a.cast("double") * b.cast("double")),
-        lit(0.0d),
-        (acc, v) => acc + v
-      )
-    dot(vecA, vecB) / (sqrt(dot(vecA, vecA)) * sqrt(dot(vecB, vecB)))
-  }
-
-  def topKFast(
-      probes: DataFrame,
-      cands: DataFrame,
-      idA: String,
-      idB: String,
-      vecCol: String,
-      k: Int
-  ): DataFrame = {
-    val p = probes.select(col(idA), col(vecCol).as("va"))
-    val c = cands.select(col(idB), col(vecCol).as("vb"))
-    val scored = c
-      .crossJoin(broadcast(p))
-      .filter(col(idA) =!= col(idB))
-      .withColumn("cos", cosineFast(col("va"), col("vb")))
-    rankTopK(scored, idA, Seq(col("cos").desc, col(idB).asc), k)
-      .select(col(idA), col("rank"), col(idB), col("cos"))
+    val p = prepQ(probes, vecCol, "a", col(idA), col(labelCol).as("la"))
+    val c = prepQ(cands, vecCol, "b", col(idB), col(labelCol).as("lb"))
+    rankByCos(c.crossJoin(broadcast(p)).filter(col("la") =!= col("lb")), idA, idB, k,
+      col("la").as("probe_label"), col("lb").as("neg_label"))
   }
 
   /** Deterministic pseudo-random hyperplanes: component j of plane i is
@@ -283,9 +270,13 @@ object Ann {
     p
   }
 
-  /** All tables' bucket ids as one native codegen pass (see
-    * plans.SignLshExpr): quantize once, `tables`·`bits` exact long
-    * dots, sign bits packed per table.
+  /** One bucket id PER HASH TABLE, all tables as one native codegen
+    * pass (see plans.SignLshExpr): quantize once, `tables`·`bits` exact
+    * long dots, sign bits packed per table. Table t projects onto
+    * hyperplane rows t·bits .. t·bits+bits−1 of the same planeInt grid,
+    * so table 0 is [[signLshBuckets]] exactly and extra tables are new
+    * independent projections — the standard LSH recall knob (union of
+    * per-table candidates).
     */
   private def tableBucketsCol(vecCol: Column, bits: Int, tables: Int): Column =
     graft.plans.ArrayOps.sign_lsh_buckets(
@@ -297,30 +288,20 @@ object Ann {
   def signLshBuckets(df: DataFrame, idCol: String, vecCol: String, bits: Int): DataFrame =
     df.withColumn("bucket", tableBucketsCol(col(vecCol), bits, 1).getItem(0))
 
-  /** One bucket id PER HASH TABLE: table t projects onto hyperplane
-    * rows t·bits .. t·bits+bits−1 of the same planeInt grid, so table
-    * 0 reproduces [[signLshBuckets]] exactly and extra tables are new
-    * independent projections — the standard LSH recall knob (union of
-    * per-table candidates). Same exact-integer sign decisions as
-    * bucketUdf.
-    */
-
   /** LSH-bucketed top-k: probes only compare against candidates
     * sharing a bucket in ANY of `tables` independent hash tables.
     * 2^bits controls the per-table scan fraction; `tables` is the
     * recall knob (candidate union grows, misses shrink — the
     * multi-table construction of Indyk–Motwani / E2LSH). With
     * tables=1 this is exactly the single-table shape. In-bucket
-    * scoring uses the quantized-exact cosine (same machinery as
-    * topKExact), so ranks are bit-stable and the whole query —
-    * including the per-table bucket routing — is oracle-checkable.
+    * scoring is the exact re-rank of the candidate pairs, so ranks
+    * are bit-stable and the whole query — including the per-table
+    * bucket routing — is oracle-checkable.
     *
     * Scale: the candidate join and the pair dedup move (t, bucket,
     * id) and (probe_id, cand_id) ONLY — no vector ever rides a
     * shuffle (ScaleSpec asserts the distinct's exchange feeder is
-    * array-free). Vectors enter late: the deduped pair set joins the
-    * corpus once for candidate vectors (co-partitioned by id) and
-    * broadcasts the probe vectors.
+    * array-free). Vectors enter late, in the re-rank.
     */
   def topKLsh(
       df: DataFrame,
@@ -347,20 +328,7 @@ object Ann {
       .filter(col("probe_id") =!= col("cand_id"))
       .select("probe_id", "cand_id")
       .distinct()
-    val cv = df
-      .select(col(idCol).as("cand_id"), quantize_1m(col(vecCol)).as("qb"))
-      .withColumn("nb", quantDot(col("qb"), col("qb")))
-    val pv = probes
-      .select(col(idCol).as("probe_id"), quantize_1m(col(vecCol)).as("qa"))
-      .withColumn("na", quantDot(col("qa"), col("qa")))
-    val scored = pairs
-      .join(cv, Seq("cand_id"))
-      .join(broadcast(pv), Seq("probe_id"))
-      .withColumn(
-        "cos",
-        quantDot(col("qa"), col("qb")) / (sqrt(col("na")) * sqrt(col("nb"))))
-    rankTopK(scored, "probe_id", Seq(col("cos").desc, col("cand_id").asc), k)
-      .select(col("probe_id"), col("rank"), col("cand_id"), col("cos"))
+    exactRerank(pairs, df, probes, idCol, vecCol, k)
   }
 
   // ------------------------------------------------------------------
@@ -372,14 +340,14 @@ object Ann {
 
   final case class IvfIndex(centroids: Array[Array[Double]], assignments: DataFrame)
 
-  private[similarity] def toDense(v: Seq[Float]): Array[Double] = {
+  private def toDense(v: Seq[Float]): Array[Double] = {
     val out = new Array[Double](v.length)
     var i = 0
     while (i < v.length) { out(i) = v(i).toDouble; i += 1 }
     out
   }
 
-  private[similarity] def nearestCentroids(x: Array[Double], cs: Array[Array[Double]], n: Int): Seq[Int] =
+  private def nearestCentroids(x: Array[Double], cs: Array[Array[Double]], n: Int): Seq[Int] =
     cs.indices
       .map { c =>
         var d = 0.0
@@ -392,19 +360,57 @@ object Ann {
       .take(n)
       .map(_._1)
 
+  /** The probe lists of the IVF faces: one `list_id` row per each of a
+    * probe's `nProbe` nearest centroids (squared L2, ties to the
+    * smaller list), the centroids broadcast once.
+    */
+  private[similarity] def probeLists(
+      ivf: IvfIndex,
+      probes: DataFrame,
+      vecCol: String,
+      nProbe: Int
+  ): Column = {
+    val bc = probes.sparkSession.sparkContext.broadcast(ivf.centroids)
+    val lists = udf { (v: Seq[Float]) =>
+      nearestCentroids(toDense(v), bc.value, nProbe)
+    }
+    explode(lists(col(vecCol))).as("list_id")
+  }
+
+  /** Vector components as (keys..., pos, x, xq) rows, where xq is the
+    * one scalar quantizer: x on the ×2^20 grid, HALF_UP rounded like
+    * quantize_1m.
+    */
+  private[similarity] def components(df: DataFrame, vecCol: String, keys: Column*): DataFrame =
+    df.select(keys :+ posexplode(col(vecCol)).as(Seq("pos", "x")): _*)
+      .withColumn("xq", round(col("x").cast("double") * QuantScale, 0).cast("long"))
+
+  /** The Lloyd mean step of [[ivfBuild]] and [[Pq.pqBuild]]: for each
+    * cell (its int coordinates `cell`) of the [[components]] rows, the
+    * INTEGER-EXACT mean sum(xq) / (2^20·count). The long sum is
+    * order-free — a float avg() would depend on partial-aggregation
+    * order and make the index nondeterministic on a cluster — and the
+    * mean is one double division, so the means are bit-reproducible at
+    * any parallelism AND replayable by a SQL oracle. Cells are
+    * codebook-sized, so collecting them is cheap at any corpus size.
+    */
+  private[similarity] def cellMeans(comps: DataFrame, cell: String*): Array[(Seq[Int], Double)] = {
+    val n = cell.length
+    comps
+      .groupBy(cell.map(col): _*)
+      .agg(sum(col("xq")), count(lit(1)))
+      .collect()
+      .map(r => ((0 until n).map(r.getInt),
+        r.getLong(n).toDouble / (QuantScale * r.getLong(n + 1).toDouble)))
+  }
+
   /** Build an IVF index: deterministic init (the `nLists` smallest ids
     * seed the centroids), `iters` Lloyd steps computed relationally
-    * (posexplode → per-(list,dim) mean), assignments as (id, list).
+    * ([[cellMeans]] per (list, dim)), assignments as (id, vec,
+    * list_id). The whole index is bit-reproducible at any parallelism
+    * and replayable by a SQL oracle.
     *
-    * Centroid means are INTEGER-EXACT: each component quantizes to the
-    * ×2^20 grid, the per-(list,dim) SUM is an exact long (order-free —
-    * a float avg() would depend on partial-aggregation order and make
-    * the index nondeterministic on a cluster), and the mean is one
-    * double division sum/(2^20·count). The whole index is therefore
-    * bit-reproducible at any parallelism AND replayable by a SQL
-    * oracle.
-    */
-  /** Training bound for the Lloyd iterations, `trainCap` semantics:
+    * Training bound for the Lloyd iterations, `trainCap` semantics:
     * -1 (default) auto-sizes to max(Pq.DefaultTrainCap, 64·nLists) —
     * the FAISS max_points_per_centroid posture, growing with the list
     * count so auto-scaled SemDeDup clusterings (nLists ≈ n/2048)
@@ -433,8 +439,6 @@ object Ann {
       else trainCap
     require(cap <= 0 || cap >= nLists,
       s"ivfBuild needs trainCap >= nLists (every list needs a chance at members), got $cap < $nLists")
-    val spark = df.sparkSession
-    import spark.implicits._
     var centroids: Array[Array[Double]] = df
       .orderBy(col(idCol).asc)
       .limit(nLists)
@@ -468,17 +472,11 @@ object Ann {
       if (it == iters - 1)
         assignments =
           df.select(col(idCol), col(vecCol), assign.as("list_id"))
-      val sums = trainDf
-        .select(assign.as("list_id"), col(vecCol))
-        .select(col("list_id"), posexplode(col(vecCol)).as(Seq("pos", "x")))
-        .withColumn("xq", round(col("x").cast("double") * QuantScale, 0).cast("long"))
-        .groupBy("list_id", "pos")
-        .agg(sum(col("xq")).as("m"), count(lit(1)).as("cnt"))
-        .collect()
+      val comps = components(
+        trainDf.select(assign.as("list_id"), col(vecCol)), vecCol, col("list_id"))
       val next = centroids.map(_.clone())
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1)) =
-          r.getLong(2).toDouble / (QuantScale * r.getLong(3).toDouble)
+      cellMeans(comps, "list_id", "pos").foreach { case (Seq(l, d), mean) =>
+        next(l)(d) = mean
       }
       centroids = next
     }
@@ -497,26 +495,11 @@ object Ann {
       k: Int,
       nProbe: Int = 4
   ): DataFrame = {
-    val spark = probes.sparkSession
-    val bc = spark.sparkContext.broadcast(index.centroids)
-    val probeLists = udf { (v: Seq[Float]) =>
-      nearestCentroids(toDense(v), bc.value, nProbe)
-    }
-    val p = probes
-      .select(col(idCol).as("probe_id"), quantize_1m(col(vecCol)).as("qa"),
-        explode(probeLists(col(vecCol))).as("list_id"))
-      .withColumn("na", quantDot(col("qa"), col("qa")))
-    val cands = index.assignments
-      .select(col(idCol).as("cand_id"), quantize_1m(col(vecCol)).as("qb"), col("list_id"))
-      .withColumn("nb", quantDot(col("qb"), col("qb")))
-    val scored = cands
-      .join(broadcast(p), Seq("list_id"))
-      .filter(col("probe_id") =!= col("cand_id"))
-      .withColumn(
-        "cos",
-        quantDot(col("qa"), col("qb")) / (sqrt(col("na")) * sqrt(col("nb"))))
-    rankTopK(scored, "probe_id", Seq(col("cos").desc, col("cand_id").asc), k)
-      .select(col("probe_id"), col("rank"), col("cand_id"), col("cos"))
+    val p = prepQ(probes, vecCol, "a", col(idCol).as("probe_id"),
+      probeLists(index, probes, vecCol, nProbe))
+    val c = prepQ(index.assignments, vecCol, "b", col(idCol).as("cand_id"), col("list_id"))
+    rankByCos(c.join(broadcast(p), Seq("list_id")).filter(col("probe_id") =!= col("cand_id")),
+      "probe_id", "cand_id", k)
   }
 
   /** Dot of two quantized long vectors via the native codegen'd
@@ -528,37 +511,23 @@ object Ann {
     graft.plans.ArrayOps.array_dot(x, y)
 
   /** Exact all-pairs near-dup (a<b, quantized cos ≥ minCos) over one
-    * relation: vectors quantize and self-norm ONCE, then a broadcast
-    * self theta-join leaves only one long-dot per pair — the
+    * relation: the keyless self-pair tail — vectors prep ONCE, then a
+    * broadcast self theta-join leaves only one long-dot per pair — the
     * oracle-checkable brute-force face of embedding dedup. SCALE
-    * CEILING: `broadcast(r)` ships the ENTIRE quantized relation to
+    * CEILING: the broadcast side is the ENTIRE quantized relation, sent to
     * every executor — hard limit ~8 GB serialized / available driver
     * and executor memory, i.e. audit/oracle workloads only (≲ a few
     * million small vectors). Never run this on a corpus; use
     * cosineNearDupPairs' LSH buckets, which shuffle only bucket-local
-    * candidates. Bit-identical
-    * to the posexplode+join formulation: long sums are exact and the
-    * final divide keeps the dot/(sqrt(na)·sqrt(nb)) association order.
+    * candidates.
     */
   def cosineExactPairs(
       df: DataFrame,
       idCol: String,
       vecCol: String,
       minCos: Double
-  ): DataFrame = {
-    val base = df
-      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"))
-      .withColumn("nsq", quantDot(col("qv"), col("qv")))
-    val l = base.select(col(idCol).as("a"), col("qv").as("qva"), col("nsq").as("na"))
-    val r = base.select(col(idCol).as("b"), col("qv").as("qvb"), col("nsq").as("nb"))
-    l.join(broadcast(r), col("a") < col("b"))
-      .withColumn(
-        "cos",
-        quantDot(col("qva"), col("qvb")) /
-          (sqrt(col("na")) * sqrt(col("nb"))))
-      .filter(col("cos") >= minCos)
-      .select("a", "b", "cos")
-  }
+  ): DataFrame =
+    selfPairs(df, idCol, vecCol, minCos, None)
 
   /** Seed-centroid similarity gate: score every corpus embedding by
     * cosine to the CENTROID of a small curated seed set — the
@@ -607,7 +576,7 @@ object Ann {
     val half = 2097152L // 2 * QuantScale: |xq| <= 2^21, so csum+n*half >= 0
     val nSeeds = seeds.count()
     require(nSeeds > 0, "seedCentroidFit needs a non-empty seed set")
-    val centRows = explodeVecQ(seeds, idCol, vecCol)
+    val centRows = components(seeds, vecCol)
       .groupBy("pos")
       .agg(sum(col("xq")).as("csum"))
       .select(col("pos"),
@@ -635,12 +604,10 @@ object Ann {
       minCos: Double
   ): DataFrame = {
     val cqLit = typedLit(model.cq)
-    corpus
-      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"))
-      .withColumn("nsq", quantDot(col("qv"), col("qv")))
-      .withColumn("dot_centroid", quantDot(col("qv"), cqLit).cast("long"))
+    prepQ(corpus, vecCol, "a", col(idCol))
+      .withColumn("dot_centroid", quantDot(col("qa"), cqLit).cast("long"))
       .withColumn("cos_centroid",
-        col("dot_centroid").cast("double") / (sqrt(col("nsq")) * lit(model.norm)))
+        col("dot_centroid").cast("double") / (sqrt(col("na")) * lit(model.norm)))
       .withColumn("keep", col("cos_centroid") >= minCos)
       .select(col(idCol), col("dot_centroid"), col("cos_centroid"), col("keep"))
   }
@@ -700,20 +667,7 @@ object Ann {
         e
       }
     val idx = ivfBuild(df, idCol, vecCol, effLists, iters)
-    val b = idx.assignments
-      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"), col("list_id"))
-      .withColumn("nsq", quantDot(col("qv"), col("qv")))
-    val l = b.select(col("list_id"), col(idCol).as("a"), col("qv").as("qva"),
-      col("nsq").as("na"))
-    val r = b.select(col("list_id"), col(idCol).as("b"), col("qv").as("qvb"),
-      col("nsq").as("nb"))
-    val pairs = l
-      .join(r, Seq("list_id"))
-      .filter(col("a") < col("b"))
-      .withColumn(
-        "cos",
-        quantDot(col("qva"), col("qvb")) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .filter(col("cos") >= minCos)
+    val pairs = selfPairs(idx.assignments, idCol, vecCol, minCos, Some("list_id"))
     val wb = Window.partitionBy(col("b")).orderBy(col("a").asc)
     pairs
       .withColumn("__rn", row_number().over(wb))
@@ -809,18 +763,8 @@ object Ann {
           s"sign-LSH bits $bits -> $e (bounded recall; see scaladoc)")
         e
       }
-    val b = signLshBuckets(df, idCol, vecCol, effBits)
-      .select(col(idCol), quantize_1m(col(vecCol)).as("qv"), col("bucket"))
-      .withColumn("nsq", quantDot(col("qv"), col("qv")))
-    val l = b.select(col(idCol).as("a"), col("qv").as("qva"), col("nsq").as("na"), col("bucket"))
-    val r = b.select(col(idCol).as("b"), col("qv").as("qvb"), col("nsq").as("nb"), col("bucket"))
-    l.join(r, Seq("bucket"))
-      .filter(col("a") < col("b"))
-      .withColumn(
-        "cos",
-        quantDot(col("qva"), col("qvb")) / (sqrt(col("na")) * sqrt(col("nb"))))
-      .filter(col("cos") >= minCos)
-      .select("a", "b", "cos")
+    selfPairs(signLshBuckets(df, idCol, vecCol, effBits), idCol, vecCol, minCos,
+      Some("bucket"))
       .distinct()
   }
 }

@@ -1,8 +1,6 @@
 package graft.similarity
 
-import graft.plans.ArrayOps.quantize_1m
-import org.apache.spark.sql.{DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Product quantization (Jégou et al. TPAMI'11, the FAISS IVF-PQ
@@ -14,9 +12,8 @@ import org.apache.spark.sql.functions._
   * search is asymmetric distance computation (ADC): each probe builds
   * an m×k lookup table once, then every candidate costs m table adds.
   *
-  * Determinism discipline matches ivfBuild: codebook means are exact
-  * long sums of ×2^20-quantized components divided once (order-free →
-  * bit-reproducible at any parallelism), every distance is an
+  * Determinism discipline matches ivfBuild: codebook means are the
+  * same integer-exact Lloyd step (`Ann.cellMeans`), every distance is an
   * identical-order double chain, ties break on the smallest code /
   * candidate id. The whole path — both the k-means and the ADC
   * ranking — is replayable by a SQL oracle.
@@ -111,31 +108,20 @@ object Pq {
       if (it == iters - 1)
         codes = df.select(col(idCol), encode.as("codes"))
       // per-(subspace, code, local-dim) integer-exact means
-      val sums = trainDf
-        .select(encode.as("codes"), col(vecCol))
-        .select(col("codes"), posexplode(col(vecCol)).as(Seq("pos", "x")))
+      val comps = Ann
+        .components(trainDf.select(encode.as("codes"), col(vecCol)), vecCol, col("codes"))
         .withColumn("s", (col("pos") / sd).cast("int"))
         .withColumn("d", (col("pos") % sd).cast("int"))
         .withColumn("code", element_at(col("codes"), col("s") + 1))
-        .withColumn("xq", round(col("x").cast("double") * Ann.QuantScale, 0).cast("long"))
-        .groupBy("s", "code", "d")
-        .agg(sum(col("xq")).as("mq"), count(lit(1)).as("cnt"))
-        .collect()
       val next = codebooks.map(_.map(_.clone()))
-      sums.foreach { r =>
-        next(r.getInt(0))(r.getInt(1))(r.getInt(2)) =
-          r.getLong(3).toDouble / (Ann.QuantScale * r.getLong(4).toDouble)
+      Ann.cellMeans(comps, "s", "code", "d").foreach { case (Seq(s, c, d), mean) =>
+        next(s)(c)(d) = mean
       }
       codebooks = next
     }
     PqIndex(codebooks, codes)
   }
 
-  /** ADC top-k: every probe materializes its m×k distance table once
-    * (a per-row compiled loop over the broadcast codebooks), then a
-    * candidate's approximate squared L2 is m table adds in subspace
-    * order. Ranks ascend by distance with cand-id ties — bit-stable.
-    */
   /** Per-probe ADC table: m×k squared distances probe-subvector →
     * codebook entry (identical-order double chains).
     */
@@ -175,6 +161,11 @@ object Pq {
       .map(s => element_at(element_at(table, s + 1), element_at(codes, s + 1) + 1))
       .reduce(_ + _)
 
+  /** ADC top-k: every probe materializes its m×k distance table once
+    * (a per-row compiled loop over the broadcast codebooks), then a
+    * candidate's approximate squared L2 is m table adds in subspace
+    * order. Ranks ascend by distance with cand-id ties — bit-stable.
+    */
   def pqTopK(
       index: PqIndex,
       probes: DataFrame,
@@ -206,9 +197,9 @@ object Pq {
     * the shortlist join is id-keyed against the (bucketable) corpus
     * table and moves shortlist·|probes| rows.
     *
-    * The re-rank metric is the same ×2^20-quantized cosine as
-    * [[Ann.topKExact]] (identical-order chains, ties to smallest
-    * cand_id), so the final ranks are bit-replayable by composing the
+    * The re-rank is `Ann.exactRerank` — [[Ann.topKExact]]'s
+    * ×2^20-quantized cosine and tie-break restricted to the shortlist
+    * pairs — so the final ranks are bit-replayable by composing the
     * two existing oracle chains: pq-ADC at rank ≤ shortlist, then the
     * exact-cosine formula restricted to those pairs.
     */
@@ -221,39 +212,10 @@ object Pq {
       kNn: Int,
       shortlist: Int = 64
   ): DataFrame =
-    exactRerank(
+    Ann.exactRerank(
       pqTopK(index, probes, idCol, vecCol, shortlist)
         .select(col("probe_id"), col("cand_id")),
       corpus, probes, idCol, vecCol, kNn)
-
-  /** Exact quantized-cosine re-rank of a (probe_id, cand_id) shortlist
-    * — [[Ann.topKExact]]'s metric and tie-break, restricted to the
-    * shortlist pairs. The corpus join is id-keyed (bucketable at
-    * scale); the probe side broadcasts.
-    */
-  private def exactRerank(
-      sl: DataFrame,
-      corpus: DataFrame,
-      probes: DataFrame,
-      idCol: String,
-      vecCol: String,
-      kNn: Int
-  ): DataFrame = {
-    val c = corpus
-      .select(col(idCol).as("cand_id"), quantize_1m(col(vecCol)).as("qb"))
-      .withColumn("nb", Ann.quantDot(col("qb"), col("qb")))
-    val p = probes
-      .select(col(idCol).as("probe_id"), quantize_1m(col(vecCol)).as("qa"))
-      .withColumn("na", Ann.quantDot(col("qa"), col("qa")))
-    val rescored = sl
-      .join(c, Seq("cand_id"))
-      .join(broadcast(p), Seq("probe_id"))
-      .withColumn(
-        "cos",
-        Ann.quantDot(col("qa"), col("qb")) / (sqrt(col("na")) * sqrt(col("nb"))))
-    Ann.rankTopK(rescored, "probe_id", Seq(col("cos").desc, col("cand_id").asc), kNn)
-      .select(col("probe_id"), col("rank"), col("cand_id"), col("cos"))
-  }
 
   /** Full FAISS production chain: IVF coarse pruning → PQ ADC ranking
     * over compressed codes → exact re-rank of the shortlist (the
@@ -272,7 +234,7 @@ object Pq {
       nProbe: Int = 4,
       shortlist: Int = 64
   ): DataFrame =
-    exactRerank(
+    Ann.exactRerank(
       topKIvfPq(ivf, pq, probes, idCol, vecCol, shortlist, nProbe)
         .select(col("probe_id"), col("cand_id")),
       corpus, probes, idCol, vecCol, kNn)
@@ -305,14 +267,10 @@ object Pq {
   ): DataFrame = {
     val spark = probes.sparkSession
     val tableUdf = mkTableUdf(pq, spark)
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val probeLists = udf { (v: Seq[Float]) =>
-      Ann.nearestCentroids(Ann.toDense(v), bcC.value, nProbe)
-    }
     val p = probes.select(
       col(idCol).as("probe_id"),
       tableUdf(col(vecCol)).as("t"),
-      explode(probeLists(col(vecCol))).as("list_id"))
+      Ann.probeLists(ivf, probes, vecCol, nProbe))
     val cands = ivf.assignments
       .select(col(idCol).as("cand_id"), col("list_id"))
       .join(pq.codes.select(col(idCol).as("cand_id"), col("codes")), Seq("cand_id"))

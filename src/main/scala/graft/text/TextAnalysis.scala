@@ -1249,23 +1249,6 @@ object TextAnalysis {
     h
   }
 
-  /** Relational winnowing (Schleimer et al. SIGMOD'03) with md5 gram
-    * hashes — the oracle-checkable formulation: md5 is identical in
-    * every engine and the window-min over hex strings is a plain
-    * lexicographic min. Per document: hash every char k-gram, take the
-    * min hash of each window of w consecutive grams (full windows
-    * only), dedupe — the selected set is the document fingerprint.
-    * Output: (id, n_fp, min_fp, max_fp). The Scala `winnow` below is
-    * the faster scale path (rolling hash, no per-gram md5).
-    */
-  /** Per-document winnowing selection as ONE compiled loop: md5 every
-    * char k-gram (MessageDigest — bit-identical to SQL md5 on the same
-    * UTF-8 bytes), take the min hex of each window of w consecutive
-    * grams (full windows only), dedupe. Selection is document-LOCAL,
-    * so doing it in-row removes the posexplode and both window
-    * shuffles the relational formulation needs (~10×). O(m·w) min
-    * scan — w is small by construction.
-    */
   /** Per-gram md5 for the winnowing hot loops (30M+ grams at sf10):
     * pure-ASCII text — the overwhelmingly common case — encodes to
     * UTF-8 ONCE and each gram hashes a slice of the shared buffer,
@@ -1293,6 +1276,14 @@ object TextAnalysis {
     }
   }
 
+  /** Per-document winnowing selection as ONE compiled loop: md5 every
+    * char k-gram (MessageDigest — bit-identical to SQL md5 on the same
+    * UTF-8 bytes), take the min hex of each window of w consecutive
+    * grams (full windows only), dedupe. Selection is document-LOCAL,
+    * so doing it in-row removes the posexplode and both window
+    * shuffles the relational formulation needs (~10×). O(m·w) min
+    * scan — w is small by construction.
+    */
   def winnowUdf(k: Int, w: Int)
       : org.apache.spark.sql.expressions.UserDefinedFunction = udf {
     (text: String) =>
@@ -1400,6 +1391,15 @@ object TextAnalysis {
   ): DataFrame =
     df.select(col(idCol), explode(winnowUdf(k, w)(col(textCol))).as("wm"))
 
+  /** Relational winnowing (Schleimer et al. SIGMOD'03) with md5 gram
+    * hashes — the oracle-checkable formulation: md5 is identical in
+    * every engine and the window-min over hex strings is a plain
+    * lexicographic min. Per document: hash every char k-gram, take the
+    * min hash of each window of w consecutive grams (full windows
+    * only), dedupe — the selected set is the document fingerprint.
+    * Output: (id, n_fp, min_fp, max_fp). The Scala `winnow` below is
+    * the faster scale path (rolling hash, no per-gram md5).
+    */
   def winnowRelational(
       df: DataFrame,
       idCol: String,

@@ -180,4 +180,23 @@ class AnnLshSpec extends SparkTestBase {
         s"($keeperId,$dropId): engine cos $cos vs truth ${truth.get((keeperId, dropId))}")
     }
   }
+
+  test("semanticDedup with nLists = 1 equals the cosineExactPairs drop chain") {
+    // one cluster holds every vector, so the within-cluster pairs are
+    // all pairs: each dropped b keeps its smallest qualifying a
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val pairs = Ann.cosineExactPairs(e, "vec_id", "embedding", minCos = 0.3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val want = pairs.groupBy(_._2).map { case (b, ps) =>
+      val (a, _, cos) = ps.minBy(_._1)
+      (b, a, ps.length.toLong, cos)
+    }.toSet
+    val got = Ann.semanticDedup(e, "vec_id", "embedding", minCos = 0.3,
+        nLists = 1, iters = 1)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    assert(got.length == got.toSet.size)
+    assert(want.nonEmpty)
+    // the cos doubles compare with ==: bit-equal, not within a tolerance
+    assert(got.toSet == want, s"${(want -- got.toSet).take(3)} / ${(got.toSet -- want).take(3)}")
+  }
 }

@@ -26,7 +26,7 @@ class IvfSpec extends SparkTestBase {
     val idx = Ann.ivfBuild(e, "vec_id", "embedding", nLists = 8, iters = 2)
     val ivf = Ann.topKIvf(idx, probes, "vec_id", "embedding", k = 5, nProbe = 4)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    val exact = Ann.topKFast(
+    val exact = Ann.topKExact(
       probes.withColumnRenamed("vec_id", "probe_id"),
       e.withColumnRenamed("vec_id", "cand_id"),
       "probe_id", "cand_id", "embedding", 5

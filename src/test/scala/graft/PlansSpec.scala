@@ -2,7 +2,6 @@ package graft
 
 import graft.plans.{ArrayOps, GramHash}
 import graft.signal.Signal
-import graft.similarity.Ann
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Alias, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.Project
@@ -32,12 +31,21 @@ class PlansSpec extends SparkTestBase {
   }
 
   test("array_dot matches HOF cosine on real embeddings") {
+    // reference: zip_with + aggregate, a lambda per element
+    def hofDot(x: Column, y: Column): Column =
+      aggregate(
+        zip_with(x, y, (a, b) => a.cast("double") * b.cast("double")),
+        lit(0.0d),
+        (acc, v) => acc + v
+      )
+    def cosine(dot: (Column, Column) => Column, a: Column, b: Column): Column =
+      dot(a, b) / (sqrt(dot(a, a)) * sqrt(dot(b, b)))
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(20)
     val pairs = e.as("a").crossJoin(e.as("b"))
       .filter($"a.vec_id" < $"b.vec_id")
       .select(
-        Ann.cosineFast($"a.embedding", $"b.embedding").as("native"),
-        Ann.cosineHof($"a.embedding", $"b.embedding").as("hof")
+        cosine(ArrayOps.array_dot, $"a.embedding", $"b.embedding").as("native"),
+        cosine(hofDot, $"a.embedding", $"b.embedding").as("hof")
       )
       .collect()
     pairs.foreach { r =>

@@ -101,6 +101,28 @@ class PqSpec extends SparkTestBase {
       s"refine-at-full-shortlist diverged from exact: ${(exact -- reranked).take(3)}")
   }
 
+  test("topKIvfPqRerank with nProbe = nLists and shortlist ≥ corpus equals topKExact") {
+    // every list probed and every candidate shortlisted and kept: the
+    // IVF prune and the ADC rank drop out, leaving only the exact
+    // re-rank of every (probe, candidate) pair
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val probes = e.filter(col("vec_id") < 8L)
+    val n = e.count().toInt
+    val ivf = Ann.ivfBuild(e, "vec_id", "embedding", nLists = 8, iters = 2)
+    val pqi = Pq.pqBuild(e, "vec_id", "embedding", m = 4, k = 16, iters = 1)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
+    val reranked = rows(Pq.topKIvfPqRerank(ivf, pqi, e, probes, "vec_id", "embedding",
+      kNn = n, nProbe = 8, shortlist = n))
+    val exact = rows(Ann.topKExact(
+      probes.withColumnRenamed("vec_id", "probe_id"),
+      e.withColumnRenamed("vec_id", "cand_id"),
+      "probe_id", "cand_id", "embedding", k = n))
+    assert(exact.size == 8 * (n - 1))
+    assert(reranked == exact,
+      s"full-probe IVF-PQ refine diverged from exact: ${(exact -- reranked).take(3)}")
+  }
+
   test("pqTopKRerank recall at a tight shortlist dominates raw ADC recall") {
     val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val probes = e.filter(col("vec_id") < 8L)

@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 /** Source-scan guards over `src/main/scala`: session wiring stays in
   * one file, a `*Udf` name stays a Spark UDF, global running sums go
   * through the one running-sum operator, near-dup pairs go through
-  * the one exact verify, Hamming pairs through the one band cover, and
-  * the exact sub-document faces through the one occurrence core.
+  * the one exact verify, Hamming pairs through the one band cover, the
+  * exact sub-document faces through the one occurrence core, and the
+  * similarity faces through the one exact quantized cosine.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -95,6 +96,24 @@ class SourceGuardSpec extends AnyFunSuite {
       case (path, text) if twin.findFirstIn(text).isDefined => path
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("one exact quantized cosine") {
+    val needles = Seq(
+      // the one cosine divide
+      java.util.regex.Pattern.quote("""sqrt(col("na")) * sqrt(col("nb"))""").r,
+      // the one scalar quantizer
+      java.util.regex.Pattern.quote("QuantScale, 0)").r,
+      // the one probe-lists UDF: one call of the nearest-list search
+      """(?<!def )\bnearestCentroids\(""".r)
+    for (needle <- needles) {
+      val counts = for {
+        (path, text) <- sources
+        if path.startsWith(Paths.get("src/main/scala/graft/similarity"))
+      } yield path -> needle.findAllIn(text).size
+      assert(counts.map(_._2).sum == 1,
+        s"$needle:\n" + counts.filter(_._2 > 0).mkString("\n"))
+    }
   }
 
   test("no shutdown hook and no spark.graft.verify.* conf key") {

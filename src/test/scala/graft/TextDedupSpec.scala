@@ -435,19 +435,14 @@ class TextDedupSpec extends SparkTestBase {
     assert(got == Seq("en", "fr", "de", "und", "zh"))
   }
 
-  test("cosineFast agrees with exact computation") {
+  test("cosineExactPairs agrees with the exact cosine") {
     val e = Seq(
       (1L, Array(1.0f, 0.0f, 0.0f, 0.0f)),
       (2L, Array(0.6f, 0.8f, 0.0f, 0.0f)),
       (3L, Array(0.0f, 0.0f, 1.0f, 0.0f))
     ).toDF("vec_id", "embedding")
-    val got = e.as("a")
-      .crossJoin(e.as("b"))
-      .filter($"a.vec_id" < $"b.vec_id")
-      .select(
-        $"a.vec_id", $"b.vec_id",
-        Ann.cosineFast($"a.embedding", $"b.embedding").as("cos")
-      )
+    val got = Ann
+      .cosineExactPairs(e, "vec_id", "embedding", minCos = -1.0)
       .collect()
       .map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
       .toMap
@@ -456,7 +451,7 @@ class TextDedupSpec extends SparkTestBase {
     assert(math.abs(got((1L, 3L))) < 1e-6)
   }
 
-  test("topKFast ranks by cosine") {
+  test("topKExact ranks by cosine") {
     val e = Seq(
       (1L, Array(1.0f, 0.0f)),
       (2L, Array(0.9f, 0.1f)),
@@ -466,7 +461,7 @@ class TextDedupSpec extends SparkTestBase {
     val probes = e.filter($"id" === 1L).withColumnRenamed("id", "probe_id")
     val cands = e.withColumnRenamed("id", "cand_id")
     val got = Ann
-      .topKFast(probes, cands, "probe_id", "cand_id", "embedding", 2)
+      .topKExact(probes, cands, "probe_id", "cand_id", "embedding", 2)
       .orderBy("rank")
       .select("cand_id")
       .as[Long]
