@@ -1741,11 +1741,12 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     if (hist.isEmpty) return newDf
     // Build and probe MUST hash the same representation: stat
     // .bloomFilter hashes integral columns as longs and strings as
-    // bytes, so the probe is typed to match (a string probe against a
+    // bytes, so the probe is typed to match: integral keys as longs,
+    // every other key as its string form (a string probe against a
     // long-built filter never hits -> every history row would leak
     // through as "definitely novel"; caught by the refresh composite,
     // regression-pinned in TextDedupSpec).
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
+    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
     val mightContain = newDf.schema(keyCol).dataType match {
       case LongType | IntegerType | ShortType | ByteType =>
         val bc = spark.sparkContext.broadcast(
@@ -1754,12 +1755,6 @@ object Dedup extends SpanRemovalOps with SimHashOps {
         udf { (k: java.lang.Long) =>
           k != null && bc.value.mightContainLong(k)
         }.apply(col(keyCol).cast("long"))
-      case StringType =>
-        val bc = spark.sparkContext.broadcast(
-          hist.stat.bloomFilter(keyCol, expectedItems, fpp))
-        udf { (k: String) =>
-          k != null && bc.value.mightContainString(k)
-        }.apply(col(keyCol))
       case _ =>
         val bc = spark.sparkContext.broadcast(
           hist.select(col(keyCol).cast("string").as(keyCol))

@@ -4,20 +4,24 @@ import graft.signal.Signal
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import scala.collection.immutable.ArraySeq
 
-/** Catalyst-native expressions for the similarity hot path (SURVEY §7.3
-  * tier (b): custom Expression where built-ins interpret lambdas).
+/** Catalyst-native array and text kernels (SURVEY §7.3 tier (b):
+  * custom Expression where built-ins interpret lambdas): the integer
+  * dot, the ×2^20 quantizer, the sign-LSH and JL projections and PQ
+  * encode of the similarity faces, the sorted merge-intersect of the
+  * exact pair verify, the WADA SNR and the text normalizer.
   *
   * `zip_with`+`aggregate` HOFs evaluate one boxed lambda call per
   * element; for a 64-float dot product inside an O(n·k) candidate scan
-  * that interpretation dominates. These expressions compile to a tight
-  * primitive loop inside WholeStageCodegen.
+  * that interpretation dominates. These expressions run a tight
+  * primitive loop inside WholeStageCodegen. Each kernel's loop is one
+  * static method on its companion, called by both `nullSafeEval` and
+  * the generated code, so interpreted and compiled eval cannot drift.
   */
 
 /** dot(a, b) over two array<float|double|long> columns → double (long
@@ -43,46 +47,15 @@ case class ArrayDotProduct(left: Expression, right: Expression)
       s"array_dot needs array<float|double|long> inputs, got " +
         s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
 
-  private def elemType(e: Expression): DataType =
-    e.dataType.asInstanceOf[ArrayType].elementType
+  import ArrayDotProduct.kind
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val n = math.min(a.numElements(), b.numElements())
-    def get(arr: ArrayData, e: Expression, i: Int): Double = elemType(e) match {
-      case FloatType => arr.getFloat(i).toDouble
-      case LongType => arr.getLong(i).toDouble
-      case _ => arr.getDouble(i)
-    }
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      acc += get(a, left, i) * get(b, right, i)
-      i += 1
-    }
-    acc
-  }
+  override def nullSafeEval(l: Any, r: Any): Any = ArrayDotProduct.evalDot(
+    l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], kind(left), kind(right))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      def get(arr: String, e: Expression, idx: String): String = elemType(e) match {
-        case FloatType => s"(double) $arr.getFloat($idx)"
-        case LongType => s"(double) $arr.getLong($idx)"
-        case _ => s"$arr.getDouble($idx)"
-      }
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $acc += ${get(a, left, i)} * ${get(b, right, i)};
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.ArrayDotProduct.evalDot(" +
+        s"$a, $b, ${kind(left)}, ${kind(right)});")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -91,10 +64,35 @@ case class ArrayDotProduct(left: Expression, right: Expression)
   override def prettyName: String = "array_dot"
 }
 
+object ArrayDotProduct {
+  // element kinds: long first, the quantized inputs of every caller
+  private def kind(e: Expression): Int = e.dataType.asInstanceOf[ArrayType].elementType match {
+    case LongType => 0
+    case FloatType => 1
+    case _ => 2
+  }
+
+  private def get(arr: ArrayData, kind: Int, i: Int): Double =
+    if (kind == 0) arr.getLong(i).toDouble
+    else if (kind == 1) arr.getFloat(i).toDouble
+    else arr.getDouble(i)
+
+  /** Called from generated code. */
+  def evalDot(a: ArrayData, b: ArrayData, ka: Int, kb: Int): Double = {
+    val n = math.min(a.numElements(), b.numElements())
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      acc += get(a, ka, i) * get(b, kb, i)
+      i += 1
+    }
+    acc
+  }
+}
+
 /** WADA blind SNR (graft.signal.Signal.wadaSnr) as an expression:
-  * no Scala-UDF encoder round-trip — ArrayData in, double out.
-  * Interpreted eval only (the table interpolation isn't worth
-  * hand-written codegen; the loop cost dominates either way).
+  * no Scala-UDF encoder round-trip — ArrayData in, double out. Both
+  * eval paths widen the array to doubles and call the Scala function.
   */
 case class WadaSnrExpr(child: Expression)
     extends UnaryExpression {
@@ -109,24 +107,15 @@ case class WadaSnrExpr(child: Expression)
       s"wada_snr needs array<float|double> input, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val isFloat = child.dataType.asInstanceOf[ArrayType].elementType == FloatType
-    val out = new Array[Double](arr.numElements())
-    var i = 0
-    while (i < out.length) {
-      out(i) = if (isFloat) arr.getFloat(i).toDouble else arr.getDouble(i)
-      i += 1
-    }
-    Signal.wadaSnr(out)
-  }
+  private def isFloat: Boolean =
+    child.dataType.asInstanceOf[ArrayType].elementType == FloatType
+
+  override def nullSafeEval(input: Any): Any =
+    WadaSnrExpr.evalArray(input.asInstanceOf[ArrayData], isFloat)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      val arrCls = classOf[ArrayData].getName
-      s"${ev.value} = graft.plans.WadaSnrExpr.evalArray(($arrCls) $c, " +
-        s"${child.dataType.asInstanceOf[ArrayType].elementType == FloatType});"
-    })
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.WadaSnrExpr.evalArray($c, $isFloat);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -174,9 +163,23 @@ case class SortedIntersectCount(left: Expression, right: Expression)
       s"sorted_intersect_count needs array<long> inputs, got " +
         s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any = SortedIntersectCount.evalCount(
+    l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.plans.SortedIntersectCount.evalCount($a, $b);")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "sorted_intersect_count"
+}
+
+object SortedIntersectCount {
+  /** Called from generated code. */
+  def evalCount(a: ArrayData, b: ArrayData): Long = {
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < na && j < nb) {
@@ -187,35 +190,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     }
     c
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val c = ctx.freshName("c")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; long $c = 0L;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i);
-         |  long $y = $b.getLong($j);
-         |  if ($x == $y) { $c++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $c;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-
-  override def prettyName: String = "sorted_intersect_count"
 }
 
 /** ×2^20 round-half-away-from-zero quantizer: array<float> →
@@ -238,8 +212,24 @@ case class QuantizeExpr(child: Expression) extends UnaryExpression {
       s"quantize_1m needs array<float> input, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
+  override def nullSafeEval(input: Any): Any =
+    QuantizeExpr.evalQuantize(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v =>
+      s"${ev.value} = graft.plans.QuantizeExpr.evalQuantize($v);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "quantize_1m"
+}
+
+object QuantizeExpr {
+  /** The quantize step of this expression and of [[JlProjectExpr]] /
+    * [[SignLshExpr]]: each float of `v` on the ×2^20 grid.
+    */
+  def quantize(v: ArrayData): Array[Long] = {
     val n = v.numElements()
     val out = new Array[Long](n)
     var i = 0
@@ -248,30 +238,11 @@ case class QuantizeExpr(child: Expression) extends UnaryExpression {
       out(i) = (if (x >= 0) x + 0.5d else x - 0.5d).toLong
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    out
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      s"""
-         |int $n = $v.numElements();
-         |long[] $out = new long[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = (double) $v.getFloat($i) * 1048576.0D;
-         |  $out[$i] = (long) ($x >= 0 ? $x + 0.5D : $x - 0.5D);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "quantize_1m"
+  /** Called from generated code. */
+  def evalQuantize(v: ArrayData): ArrayData = new GenericArrayData(quantize(v))
 }
 
 /** Sign-random-projection LSH bucket ids, one per hash table:
@@ -280,11 +251,13 @@ case class QuantizeExpr(child: Expression) extends UnaryExpression {
   * plane grid, embedded flattened at `(t·bits+i)·dimCap + j`), and
   * set bit i of table t's bucket when the EXACT long dot is ≥ 0 — no
   * float sign decision anywhere, so bucket ids stay engine-portable.
-  * Replaces the Scala-UDF form, which paid per-row Seq[Float] boxing
-  * AND re-derived every plane component by hashing (XXH64 per (i, j)
-  * per row); here the planes are plan metadata computed once.
-  * Vectors longer than `dimCap` fail loudly — widen the cap at the
-  * call site rather than silently truncating the projection.
+  * That is [[JlProjectExpr]]'s projection over `tables·bits` rows,
+  * packed to sign bits. Replaces the Scala-UDF form, which paid
+  * per-row Seq[Float] boxing AND re-derived every plane component by
+  * hashing (XXH64 per (i, j) per row); here the planes are plan
+  * metadata computed once. Vectors longer than `dimCap` fail loudly —
+  * widen the cap at the call site rather than silently truncating the
+  * projection.
   */
 case class SignLshExpr(
     child: Expression,
@@ -303,79 +276,41 @@ case class SignLshExpr(
       s"sign_lsh needs array<float> input, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (n > dimCap) throw new IllegalArgumentException(
-      s"sign_lsh: vector has $n dims > plane cap $dimCap — raise dimCap")
-    val pl = planes.unsafeArray
-    val q = new Array[Long](n)
-    var j = 0
-    while (j < n) {
-      val x = v.getFloat(j).toDouble * 1048576.0d
-      q(j) = (if (x >= 0) x + 0.5d else x - 0.5d).toLong
-      j += 1
-    }
-    val out = new Array[Long](tables)
-    var t = 0
-    while (t < tables) {
-      var bucket = 0L
-      var i = 0
-      while (i < bits) {
-        val base = (t * bits + i) * dimCap
-        var s = 0L
-        j = 0
-        while (j < n) { s += q(j) * pl(base + j); j += 1 }
-        if (s >= 0L) bucket |= (1L << i)
-        i += 1
-      }
-      out(t) = bucket
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any = SignLshExpr.evalBuckets(
+    input.asInstanceOf[ArrayData], planes.unsafeArray, tables, bits, dimCap)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
       val pl = ctx.addReferenceObj("lshPlanes", planes.unsafeArray, "long[]")
-      val n = ctx.freshName("n")
-      val q = ctx.freshName("q")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      val t = ctx.freshName("t")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      val bucket = ctx.freshName("bucket")
-      s"""
-         |int $n = $v.numElements();
-         |if ($n > $dimCap) throw new IllegalArgumentException(
-         |  "sign_lsh: vector has " + $n + " dims > plane cap $dimCap — raise dimCap");
-         |long[] $q = new long[$n];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  double $x = (double) $v.getFloat($j) * 1048576.0D;
-         |  $q[$j] = (long) ($x >= 0 ? $x + 0.5D : $x - 0.5D);
-         |}
-         |long[] $out = new long[$tables];
-         |for (int $t = 0; $t < $tables; $t++) {
-         |  long $bucket = 0L;
-         |  for (int $i = 0; $i < $bits; $i++) {
-         |    int $base = ($t * $bits + $i) * $dimCap;
-         |    long $s = 0L;
-         |    for (int $j = 0; $j < $n; $j++) { $s += $q[$j] * $pl[$base + $j]; }
-         |    if ($s >= 0L) $bucket |= (1L << $i);
-         |  }
-         |  $out[$t] = $bucket;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
+      s"${ev.value} = graft.plans.SignLshExpr.evalBuckets(" +
+        s"$v, $pl, $tables, $bits, $dimCap);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 
   override def prettyName: String = "sign_lsh"
+}
+
+object SignLshExpr {
+  /** Called from generated code. */
+  def evalBuckets(
+      v: ArrayData, planes: Array[Long], tables: Int, bits: Int, dimCap: Int): ArrayData = {
+    val y = JlProjectExpr.project(v, planes, tables * bits, dimCap, "sign_lsh")
+    val out = new Array[Long](tables)
+    var t = 0
+    while (t < tables) {
+      var bucket = 0L
+      var i = 0
+      while (i < bits) {
+        if (y(t * bits + i) >= 0L) bucket |= (1L << i)
+        i += 1
+      }
+      out(t) = bucket
+      t += 1
+    }
+    new GenericArrayData(out)
+  }
 }
 
 /** Johnson–Lindenstrauss integer projection (the randomProject core):
@@ -401,67 +336,49 @@ case class JlProjectExpr(
       s"jl_project needs array<float> input, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val n = v.numElements()
-    if (n > dimCap) throw new IllegalArgumentException(
-      s"jl_project: vector has $n dims > plane cap $dimCap — raise dimCap")
-    val pl = planes.unsafeArray
-    val q = new Array[Long](n)
-    var j = 0
-    while (j < n) {
-      val x = v.getFloat(j).toDouble * 1048576.0d
-      q(j) = (if (x >= 0) x + 0.5d else x - 0.5d).toLong
-      j += 1
-    }
-    val out = new Array[Long](outDims)
-    var i = 0
-    while (i < outDims) {
-      val base = i * dimCap
-      var s = 0L
-      j = 0
-      while (j < n) { s += q(j) * pl(base + j); j += 1 }
-      out(i) = s
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
+  override def nullSafeEval(input: Any): Any = JlProjectExpr.evalProject(
+    input.asInstanceOf[ArrayData], planes.unsafeArray, outDims, dimCap)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, v => {
       val pl = ctx.addReferenceObj("jlPlanes", planes.unsafeArray, "long[]")
-      val n = ctx.freshName("n")
-      val q = ctx.freshName("q")
-      val x = ctx.freshName("x")
-      val out = ctx.freshName("out")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val s = ctx.freshName("s")
-      val base = ctx.freshName("base")
-      s"""
-         |int $n = $v.numElements();
-         |if ($n > $dimCap) throw new IllegalArgumentException(
-         |  "jl_project: vector has " + $n + " dims > plane cap $dimCap — raise dimCap");
-         |long[] $q = new long[$n];
-         |for (int $j = 0; $j < $n; $j++) {
-         |  double $x = (double) $v.getFloat($j) * 1048576.0D;
-         |  $q[$j] = (long) ($x >= 0 ? $x + 0.5D : $x - 0.5D);
-         |}
-         |long[] $out = new long[$outDims];
-         |for (int $i = 0; $i < $outDims; $i++) {
-         |  int $base = $i * $dimCap;
-         |  long $s = 0L;
-         |  for (int $j = 0; $j < $n; $j++) { $s += $q[$j] * $pl[$base + $j]; }
-         |  $out[$i] = $s;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
+      s"${ev.value} = graft.plans.JlProjectExpr.evalProject($v, $pl, $outDims, $dimCap);"
     })
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 
   override def prettyName: String = "jl_project"
+}
+
+object JlProjectExpr {
+  /** The quantize-then-project loop of this expression and
+    * [[SignLshExpr]]: `rows` exact long dots of the quantized `v`
+    * against the plane grid. `name` heads the loud failure when `v`
+    * has more than `dimCap` dims.
+    */
+  def project(
+      v: ArrayData, planes: Array[Long], rows: Int, dimCap: Int, name: String): Array[Long] = {
+    val n = v.numElements()
+    if (n > dimCap) throw new IllegalArgumentException(
+      s"$name: vector has $n dims > plane cap $dimCap — raise dimCap")
+    val q = QuantizeExpr.quantize(v)
+    val out = new Array[Long](rows)
+    var i = 0
+    while (i < rows) {
+      val base = i * dimCap
+      var s = 0L
+      var j = 0
+      while (j < n) { s += q(j) * planes(base + j); j += 1 }
+      out(i) = s
+      i += 1
+    }
+    out
+  }
+
+  /** Called from generated code. */
+  def evalProject(v: ArrayData, planes: Array[Long], outDims: Int, dimCap: Int): ArrayData =
+    new GenericArrayData(project(v, planes, outDims, dimCap, "jl_project"))
 }
 
 /** PQ / k-means encoder: per subspace `s`, the argmin code over `k`
@@ -495,9 +412,24 @@ case class PqEncodeExpr(
       s"pq_encode needs array<float> input, got ${other.simpleString}")
   }
 
-  override def nullSafeEval(input: Any): Any = {
-    val v = input.asInstanceOf[ArrayData]
-    val cb = flat.unsafeArray
+  override def nullSafeEval(input: Any): Any = PqEncodeExpr.evalEncode(
+    input.asInstanceOf[ArrayData], flat.unsafeArray, m, k, sd)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, v => {
+      val cb = ctx.addReferenceObj("pqCodebooks", flat.unsafeArray, "double[]")
+      s"${ev.value} = graft.plans.PqEncodeExpr.evalEncode($v, $cb, $m, $k, $sd);"
+    })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+
+  override def prettyName: String = "pq_encode"
+}
+
+object PqEncodeExpr {
+  /** Called from generated code. */
+  def evalEncode(v: ArrayData, cb: Array[Double], m: Int, k: Int, sd: Int): ArrayData = {
     val out = new Array[Int](m)
     var s = 0
     while (s < m) {
@@ -520,47 +452,8 @@ case class PqEncodeExpr(
       out(s) = best
       s += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val cb = ctx.addReferenceObj("pqCodebooks", flat.unsafeArray, "double[]")
-      val out = ctx.freshName("out")
-      val s = ctx.freshName("s")
-      val c = ctx.freshName("c")
-      val j = ctx.freshName("j")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      val d = ctx.freshName("d")
-      val t = ctx.freshName("t")
-      val cbase = ctx.freshName("cbase")
-      val vbase = ctx.freshName("vbase")
-      s"""
-         |int[] $out = new int[$m];
-         |for (int $s = 0; $s < $m; $s++) {
-         |  int $vbase = $s * $sd;
-         |  int $best = 0;
-         |  double $bestD = Double.MAX_VALUE;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    int $cbase = ($s * $k + $c) * $sd;
-         |    double $d = 0.0;
-         |    for (int $j = 0; $j < $sd; $j++) {
-         |      double $t = (double) $v.getFloat($vbase + $j) - $cb[$cbase + $j];
-         |      $d += $t * $t;
-         |    }
-         |    if ($d < $bestD) { $bestD = $d; $best = $c; }
-         |  }
-         |  $out[$s] = $best;
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-
-  override def prettyName: String = "pq_encode"
 }
 
 /** Single-pass text normalizer — the
@@ -652,7 +545,9 @@ object NormalizeTextExpr {
   }
 }
 
-/** Column-level API + SQL registration for the native expressions. */
+/** Column-level API for the native expressions (their SQL names are
+  * registered in [[graft.GraftExtensions]]).
+  */
 object ArrayOps {
 
   /** Native one-pass normalizer (see [[NormalizeTextExpr]]). */

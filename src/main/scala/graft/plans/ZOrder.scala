@@ -49,9 +49,7 @@ case class ZOrderExpr(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) =>
-      // MODULE$ access: the case class suppresses static forwarders
-      s"${ev.value} = graft.plans.ZOrderExpr$$.MODULE$$" +
-        s".interleave((long) $a, (long) $b);")
+      s"${ev.value} = graft.plans.ZOrderExpr.interleave((long) $a, (long) $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =

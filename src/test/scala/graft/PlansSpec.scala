@@ -134,11 +134,7 @@ class PlansSpec extends SparkTestBase {
     assert(viaSql == grid)
   }
 
-  test("sorted_intersect_count: codegen parity with a reference merge, " +
-    "null propagation, SQL registration, and a non-codegen (interpreted) " +
-    "eval check") {
-    import graft.plans.SortedIntersectCount
-    import org.apache.spark.sql.graft.bridge.toExpr
+  test("sorted_intersect_count: reference-merge parity, nulls and SQL registration") {
     val rnd = new scala.util.Random(7)
     def sortedArr(n: Int): Array[Long] =
       Array.fill(n)(rnd.nextLong() % 1000).distinct.sorted
@@ -153,13 +149,6 @@ class PlansSpec extends SparkTestBase {
       .orderBy("id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     rows.foreach { case (i, x, y) =>
       assert(got(i) == refCount(x, y), s"row $i")
-    }
-    // interpreted eval (nullSafeEval) must agree with codegen
-    val expr = SortedIntersectCount(toExpr($"xa"), toExpr($"xb"))
-    rows.take(5).foreach { case (_, x, y) =>
-      val ad = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(x)
-      val bd = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(y)
-      assert(expr.nullSafeEval(ad, bd) == refCount(x, y))
     }
     // null propagation
     val withNull = Seq(
@@ -181,6 +170,124 @@ class PlansSpec extends SparkTestBase {
     }
     assert(err.getMessage.toLowerCase.contains("sorted_intersect_count") ||
       err.getMessage.toLowerCase.contains("type"))
+  }
+
+  test("array kernels: interpreted eval equals WholeStageCodegen, errors included") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+    import org.apache.spark.sql.catalyst.expressions.BindReferences
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.types._
+    import scala.util.Try
+
+    // a failure's outcome is the message of the first
+    // IllegalArgumentException in its cause chain: a failed task
+    // reaches collect() wrapped in a SparkException
+    def outcome(run: => Seq[Any]): Either[String, Seq[Any]] =
+      Try(run).toEither.left.map { e =>
+        Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case x: IllegalArgumentException => x.getMessage }
+          .getOrElse(throw e)
+      }
+    // doubles compare by bit pattern
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case xs: Seq[_] => xs.map(bits)
+      case o => o
+    }
+    def check(kernel: String, schema: StructType, rows: Seq[Row], c: Column,
+        fails: Boolean = false): Unit = {
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+      val q = df.select(c)
+      assert(q.queryExecution.executedPlan.find {
+        case w: WholeStageCodegenExec => w.child.isInstanceOf[ProjectExec]
+        case _ => false
+      }.isDefined, kernel)
+      val compiled = outcome(q.collect().toSeq.map(r => bits(r.get(0))))
+      val e = q.queryExecution.analyzed match {
+        case Project(Seq(Alias(e, _)), _) => e
+        case p => fail(s"unexpected plan $p")
+      }
+      val bound = BindReferences.bindReference(e, df.queryExecution.analyzed.output)
+      val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+      val toScala = CatalystTypeConverters.createToScalaConverter(e.dataType)
+      val interpreted = outcome(rows.map(r =>
+        bits(toScala(bound.eval(toRow(r).asInstanceOf[InternalRow])))))
+      assert(interpreted == compiled, kernel)
+      assert(compiled.isLeft == fails, s"$kernel: $compiled")
+    }
+    def arr(elem: DataType, names: String*): StructType =
+      StructType(names.map(StructField(_, ArrayType(elem))))
+
+    val codegen = Seq(
+      "spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = codegen.map { case (k, _) => k -> spark.conf.getOption(k) }
+    codegen.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      // array_dot: float, double and long elements; the shorter prefix
+      val dotSchema = StructType(Seq(
+        StructField("f", ArrayType(FloatType)), StructField("d", ArrayType(DoubleType)),
+        StructField("l", ArrayType(LongType))))
+      val dotRows = Seq(
+        Row(null, Seq(1.0), Seq(1L)),
+        Row(Seq(1.0f), null, Seq(2L)),
+        Row(Seq(), Seq(), Seq()),
+        Row(Seq(1.5f, -2.25f, 3.0f), Seq(0.5, 4.0), Seq(7L, -3L, 11L, 5L)),
+        Row(Seq(0.1f, -0.2f), Seq(1e300, -1e-300, 2.5), Seq(1L << 40, -(1L << 41))))
+      Seq(("f", "d"), ("d", "l"), ("l", "f"), ("l", "l"), ("f", "f")).foreach {
+        case (x, y) =>
+          check(s"array_dot($x, $y)", dotSchema, dotRows, ArrayOps.array_dot(col(x), col(y)))
+      }
+
+      check("sorted_intersect_count", arr(LongType, "a", "b"), Seq(
+        Row(null, Seq(1L)), Row(Seq(), Seq()), Row(Seq(2L), Seq()),
+        Row(Seq(1L, 3L, 5L, 7L), Seq(3L, 4L, 5L, 8L)),
+        Row(Seq(-5L, 0L, 9L), Seq(-5L, 9L))),
+        ArrayOps.sorted_intersect_count(col("a"), col("b")))
+
+      // quantize_1m: ±k.5 on the ×2^20 grid (exact floats) round away
+      // from zero; plain negatives round to the nearest grid point
+      val halves = (-3 to 3).map(k => (k + 0.5f) / 1048576.0f)
+      val vRows = Seq(Row(null), Row(Seq()), Row(halves),
+        Row(Seq(-0.3f, -1.7f, -123.456f, 0.0f, -0.0f, 1000.25f)))
+      check("quantize_1m", arr(FloatType, "v"), vRows, ArrayOps.quantize_1m(col("v")))
+
+      // projections at n = dimCap, below it, and one past it (throws)
+      val planes = Array.tabulate(24)(i => (i * 37L % 11L) - 5L)
+      val projRows = Seq(Row(null), Row(Seq()), Row(Seq(0.25f, -1.5f)),
+        Row(Seq(0.5f, -0.75f, 2.0f, -0.125f)), Row(halves.take(4)))
+      val tooLong = Seq(Row(Seq(1.0f, 2.0f, 3.0f, 4.0f, 5.0f)))
+      val lsh = ArrayOps.sign_lsh_buckets(col("v"), planes, 2, 3, 4)
+      val jl = ArrayOps.jl_project(col("v"), planes.take(12), 3, 4)
+      check("sign_lsh", arr(FloatType, "v"), projRows, lsh)
+      check("sign_lsh past dimCap", arr(FloatType, "v"), tooLong, lsh, fails = true)
+      check("jl_project", arr(FloatType, "v"), projRows, jl)
+      check("jl_project past dimCap", arr(FloatType, "v"), tooLong, jl, fails = true)
+
+      // pq_encode: equidistant codes go to the smallest (an empty
+      // vector is outside its contract: the encoder reads m·sd floats)
+      val codebooks = Array(
+        Array(Array(0.0, 0.0), Array(2.0, 0.0), Array(0.0, 0.0)),
+        Array(Array(1.0, 1.0), Array(-1.0, -1.0), Array(1.0, 1.0)))
+      check("pq_encode", arr(FloatType, "v"), Seq(Row(null),
+        Row(Seq(1.0f, 0.0f, 0.0f, 0.0f)), Row(Seq(2.0f, 0.0f, -1.0f, -1.0f)),
+        Row(Seq(1.9f, 0.0f, 1.0f, 1.0f))),
+        ArrayOps.pq_encode(col("v"), codebooks))
+
+      val wave = (0 until 2000).map { i =>
+        val t = math.sin(0.19634954 * (i + 1)); t * t * t + 0.01 * math.sin(78.233 * i)
+      }
+      val short = (0 until 64).map(i => math.sin(0.3 * i))
+      check("wada_snr(double)", arr(DoubleType, "w"), Seq(Row(null), Row(wave), Row(short)),
+        ArrayOps.wada_snr_native(col("w")))
+      check("wada_snr(float)", arr(FloatType, "w"),
+        Seq(Row(null), Row(wave.map(_.toFloat)), Row(short.map(_.toFloat))),
+        ArrayOps.wada_snr_native(col("w")))
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   test("array-parameter expressions compare structurally: independently " +

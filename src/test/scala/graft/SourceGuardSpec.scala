@@ -8,8 +8,9 @@ import scala.jdk.CollectionConverters._
   * one file, a `*Udf` name stays a Spark UDF, global running sums go
   * through the one running-sum operator, near-dup pairs go through
   * the one exact verify, Hamming pairs through the one band cover, the
-  * exact sub-document faces through the one occurrence core, and the
-  * similarity faces through the one exact quantized cosine.
+  * exact sub-document faces through the one occurrence core, the
+  * similarity faces through the one exact quantized cosine, and each
+  * native array kernel's loop is written once.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -112,6 +113,24 @@ class SourceGuardSpec extends AnyFunSuite {
         if path.startsWith(Paths.get("src/main/scala/graft/similarity"))
       } yield path -> needle.findAllIn(text).size
       assert(counts.map(_._2).sum == 1,
+        s"$needle:\n" + counts.filter(_._2 > 0).mkString("\n"))
+    }
+  }
+
+  test("each native kernel's loop is written once") {
+    // Java loop spellings inside codegen templates: a kernel's loop is
+    // one companion method that eval and generated code both call
+    val needles = Seq(
+      java.util.regex.Pattern.quote("for (int ").r -> 0,
+      java.util.regex.Pattern.quote("while ($").r -> 0,
+      // the one ×2^20 quantize step
+      "1048576\\.0[dD]".r -> 1)
+    for ((needle, allowed) <- needles) {
+      val counts = for {
+        (path, text) <- sources
+        if path.startsWith(Paths.get("src/main/scala/graft/plans"))
+      } yield path -> needle.findAllIn(text).size
+      assert(counts.map(_._2).sum == allowed,
         s"$needle:\n" + counts.filter(_._2 > 0).mkString("\n"))
     }
   }
