@@ -1,6 +1,7 @@
 package graft.dedup
 
-import graft.plans.GramHash
+import graft.plans.{ArrayOps, GramHash}
+import graft.plans.RebuildUnitsExpr.{Chars, Lines, Tokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -116,7 +117,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
   ): DataFrame =
     keptCounts(firstOccurrenceCore(
       df.select(col(idCol), col(textCol), paragraphCount(textCol).as("n_paras")),
-      paragraphUnits(df, idCol, textCol), idCol, textCol, lineRebuildUdf),
+      paragraphUnits(df, idCol, textCol), idCol, textCol, Lines, 1),
       idCol)
 
   /** (id, para_idx, __digest) of every nonblank trimmed line — the
@@ -141,43 +142,13 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       .otherwise(0L)
 
   /** The (id, clean_text, n_kept, n_dropped) output of the kept-units
-    * faces, over [[rebuildKept]]'s columns and an `n_paras` unit count. */
-  private def keptCounts(out: DataFrame, idCol: String): DataFrame =
-    out.select(
-      col(idCol),
-      col("__fo_clean").as("clean_text"),
-      col("__fo_kept").as("n_kept"),
-      (col("n_paras") - col("__fo_kept")).as("n_dropped"))
-
-  /** In-row line rebuild shared by [[paragraphDedup]] and
-    * [[boilerplateRemove]]: re-split the doc's own lines and keep the
-    * surviving raw indices (kept indices only ever point at nonempty
-    * trimmed paras, so the emptiness re-check is unnecessary). Trim
-    * matches Spark's trim(): the space character only.
-    */
-  private val lineRebuildUdf
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String, kept: Seq[Long]) =>
-      if (text == null) ""
-      else {
-        val ls = text.split("\n", -1)
-        val ks = kept.toSet
-        val sb = new java.lang.StringBuilder(text.length)
-        var i = 0; var first = true
-        while (i < ls.length) {
-          if (ks.contains(i.toLong)) {
-            val l = ls(i)
-            var a = 0; var b = l.length
-            while (a < b && l.charAt(a) == ' ') a += 1
-            while (b > a && l.charAt(b - 1) == ' ') b -= 1
-            if (first) first = false else sb.append('\n')
-            sb.append(l, a, b)
-          }
-          i += 1
-        }
-        sb.toString
-      }
-    }
+    * faces, over a keep-mode [[rebuildAt]] and an `n_paras` unit count;
+    * n_kept counts kept positions (paragraphs or windows). */
+  private def keptCounts(out: DataFrame, idCol: String): DataFrame = {
+    val nKept = when(col("__pos").isNull, lit(0L)).otherwise(size(col("__pos")).cast("long"))
+    out.select(col(idCol), col("__r.text").as("clean_text"), nKept.as("n_kept"),
+      (col("n_paras") - nKept).as("n_dropped"))
+  }
 
   /** CCNet-style boilerplate line REMOVAL (Wenzek et al. '20 §3.1
     * line-level dedup; RefinedWeb's repeated-line scrub): drop EVERY
@@ -193,8 +164,8 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * pairs; the kept-index relation joins digests to per-digest counts
     * (both digest-keyed, co-partitioned by the one exchange) and
     * collapses to one compact (id, sorted kept-idx array) row per doc;
-    * `clean_text` is rebuilt by the compiled in-row loop after the one
-    * id-keyed join ([[rebuildKept]]). A doc of pure boilerplate
+    * `clean_text` is rebuilt in-row by the native unit rebuild after the
+    * one id-keyed join ([[rebuildAt]]). A doc of pure boilerplate
     * survives with clean_text='' (auditable, not silently vanished).
     *
     * Returns (id, clean_text, n_kept, n_dropped).
@@ -217,9 +188,9 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     val kept = positionsById(
       paras.join(dfc, Seq("__digest")).filter(col("__df") < maxDf),
       idCol, "para_idx")
-    keptCounts(rebuildKept(
+    keptCounts(rebuildAt(
       df.select(col(idCol), col(textCol), paragraphCount(textCol).as("n_paras")),
-      kept, idCol, textCol, lineRebuildUdf), idCol)
+      kept, idCol, textCol, Lines, 1, 1, keep = true), idCol)
   }
 
   /** Fixed word-count-window exact dedup: the [[paragraphDedup]]
@@ -321,40 +292,15 @@ object Dedup extends SpanRemovalOps with SimHashOps {
           "").as("clean_text"))
   }
 
-  /** In-row rebuild mirroring chunkByTokens at overlap 0: window i
-    * covers tokens [i·w, i·w+w); kept windows' tokens re-join with
-    * the same single space the chunk/window reassembly used. A null
-    * text chunks to one empty window (chunkByTokens contract), so
-    * kept = [0] rebuilds "".
-    */
-  private def windowRebuildUdf(w: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String, kept: Seq[Long]) =>
-      val toks = if (text == null) Array("") else text.split(" ", -1)
-      val sb = new java.lang.StringBuilder(if (text == null) 0 else text.length)
-      var first = true
-      kept.foreach { ki =>
-        val from = (ki * w).toInt
-        val until = math.min(toks.length, from + w)
-        var j = from
-        while (j < until) {
-          if (first) first = false else sb.append(' ')
-          sb.append(toks(j)); j += 1
-        }
-        // a null-text doc's single chunk is the empty string: keeping
-        // it appends nothing, matching the reassembled '' exactly
-      }
-      sb.toString
-    }
-
   // ---- the sub-document occurrence core -----------------------------
   // Every exact sub-document face (paragraph, boilerplate line, fixed
   // window, CDC chunk, the span scrubs, ExactSubstr) cuts a doc into
   // units and then runs the same three steps: digest each unit
   // ([[unitDigest]]), rank the digests corpus-wide
   // ([[firstOccurrenceRank]]), and gather the kept or dropped positions
-  // per doc ([[positionsById]]). A face owns only its unit cut, its
-  // keep/drop rule, its output columns, and its in-row rebuild.
+  // per doc ([[positionsById]]). All but CDC then rebuild each doc in
+  // one tail ([[rebuildAt]]). A face owns only its unit cut, its
+  // keep/drop rule, its unit geometry and its output columns.
 
   /** The one unit digest of the sub-document family: the 16-byte
     * binary md5 of the unit, named `__digest`. Rank exchanges carry it
@@ -437,8 +383,9 @@ object Dedup extends SpanRemovalOps with SimHashOps {
 
   /** First-occurrence dedup of `units` (`(id, para_idx, __digest)`)
     * with column passthrough: every column of `df` survives, plus
-    * `__fo_clean` (the doc rewritten to its surviving units) and
-    * `__fo_kept` (how many survived). Lets a composed funnel
+    * `__pos` (the kept positions, null when none survived) and `__r`,
+    * whose `text` is the doc rewritten to its surviving units (see
+    * [[rebuildAt]]). Lets a composed funnel
     * (CurationPipeline) replace the text column in the SAME join that
     * computes the dedup instead of paying a second corpus join to
     * graft `clean_text` back on.
@@ -447,42 +394,43 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * (digest, id, idx) — 16-byte digests, never paragraphs (ScaleSpec
     * asserts the feeder projection); the per-doc survivor relation is
     * one compact (id, sorted kept-idx array) row; and `clean_text` is
-    * rebuilt by the caller's compiled `rebuild(text, kept)` loop AFTER
-    * the one id-keyed join, so the corpus text stays on its own scan
-    * side end-to-end.
+    * rebuilt in-row (position p keeps units [p·stride, (p+1)·stride))
+    * AFTER the one id-keyed join, so the corpus text stays on its own
+    * scan side end-to-end.
     */
   private def firstOccurrenceCore(
       df: DataFrame,
       units: DataFrame,
       idCol: String,
       textCol: String,
-      rebuild: org.apache.spark.sql.expressions.UserDefinedFunction
+      unit: Int,
+      stride: Int
   ): DataFrame =
-    rebuildKept(df, firstOccurrences(units, idCol, "para_idx"),
-      idCol, textCol, rebuild)
+    rebuildAt(df, firstOccurrences(units, idCol, "para_idx"),
+      idCol, textCol, unit, stride, stride, keep = true)
 
-  /** Graft the kept positions `(id, __pos)` onto `df` by id and
-    * rebuild each doc in-row: `df`'s columns plus `__fo_clean` ('' for
-    * a doc with nothing kept) and `__fo_kept`. */
-  private def rebuildKept(
+  /** The one join-and-rebuild tail of the sub-document faces: left-join
+    * the per-doc positions `(id, __pos)` ([[positionsById]]) onto `df`
+    * and rebuild each doc in-row ([[graft.plans.RebuildUnitsExpr]]).
+    * Returns `df`'s columns plus `__pos` and `__r` = (text, kept, runs).
+    */
+  private[dedup] def rebuildAt(
       df: DataFrame,
-      kept: DataFrame,
+      pos: DataFrame,
       idCol: String,
       textCol: String,
-      rebuild: org.apache.spark.sql.expressions.UserDefinedFunction
+      unit: Int,
+      stride: Int,
+      width: Int,
+      keep: Boolean
   ): DataFrame =
-    df.join(kept, Seq(idCol), "left")
-      .withColumn("__fo_clean",
-        when(col("__pos").isNull, lit(""))
-          .otherwise(rebuild(col(textCol), col("__pos"))))
-      .withColumn("__fo_kept",
-        when(col("__pos").isNull, lit(0L))
-          .otherwise(size(col("__pos")).cast("long")))
-      .drop("__pos")
+    df.join(pos, Seq(idCol), "left")
+      .withColumn("__r",
+        ArrayOps.rebuild_units(col(textCol), col("__pos"), unit, stride, width, keep))
 
   /** [[windowDedup]] with column passthrough (see
     * [[firstOccurrenceCore]]): returns `df`'s full schema plus
-    * `__fo_clean`/`__fo_kept`. The composed-funnel face.
+    * `__pos`/`__r`. The composed-funnel face.
     */
   private[graft] def windowDedupKeep(
       df: DataFrame,
@@ -494,8 +442,7 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       .chunkByTokens(df.select(col(idCol), col(textCol)), idCol, textCol,
         maxTokens = wordsPerPara, overlap = 0)
       .select(col(idCol), col("chunk_idx").as("para_idx"), unitDigest(col("chunk")))
-    firstOccurrenceCore(df, units, idCol, textCol,
-      windowRebuildUdf(wordsPerPara))
+    firstOccurrenceCore(df, units, idCol, textCol, Tokens, wordsPerPara)
   }
 
   /** Letter histogram (a-z counts) in ONE compiled pass over the text
@@ -1818,8 +1765,9 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * ([[laterOccurrences]]; one shuffle on the 8-byte hash — ~16
     * bytes/char of shuffle, the honest cost of corpus-wide substring
     * dedup; suffix-array builds move comparable volume) → one sorted
-    * dup-position array per doc ([[positionsById]]) → one compiled
-    * in-row loop that merges positions into spans and cuts them.
+    * dup-position array per doc ([[positionsById]]) → the in-row
+    * rebuild ([[rebuildAt]], char units): windows that overlap or touch
+    * merge into one cut span (a new span starts iff `pos − prev > l`).
     * Nothing is ever pairwise, and nothing is windowed.
     *
     * Returns one row per input document:
@@ -1835,45 +1783,14 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       col(idCol),
       posexplode(rollingWindowHashesUdf(l)(col(textCol))).as(Seq("pos", "__digest")))
     val dups = positionsById(laterOccurrences(occ, idCol, "pos"), idCol, "pos")
-    df.join(dups, Seq(idCol), "left")
-      .withColumn("__r", substringCutUdf(l)(col(textCol), col("__pos")))
-      .withColumn("clean_text", col("__r._1"))
+    rebuildAt(df, dups, idCol, textCol, Chars, 1, l, keep = false)
+      .withColumn("clean_text", col("__r.text"))
       .select(
         col(idCol),
-        col("__r._2").as("n_dup_spans"),
+        col("__r.runs").as("n_dup_spans"),
         (length(col(textCol)) - length(col("clean_text"))).cast("long").as("removed_chars"),
         length(col("clean_text")).cast("long").as("clean_len"),
         md5(col("clean_text")).as("clean_md5"),
         col("clean_text"))
   }
-
-  /** In-row span merge and cut for [[substringDedup]]: walk the doc's
-    * sorted dup-window starts, open a new span only when
-    * `pos − prev > l` (a gap of at least one char between the windows;
-    * windows at distance ≤ l overlap or touch and extend the open
-    * span), and cut each span [first, last + l). Returns
-    * (clean_text, n_dup_spans); a doc with no dups (or null text)
-    * passes through with 0 spans.
-    */
-  private def substringCutUdf(l: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String, pos: Seq[Int]) =>
-      if (text == null || pos == null || pos.isEmpty) (text, 0L)
-      else {
-        val sb = new java.lang.StringBuilder(text.length)
-        var from = 0
-        var start = pos.head; var prev = start; var spans = 1L
-        pos.iterator.drop(1).foreach { p =>
-          if (p - prev > l) {
-            sb.append(text, from, start); from = prev + l
-            start = p; spans += 1
-          }
-          prev = p
-        }
-        sb.append(text, from, start)
-        sb.append(text, prev + l, text.length)
-        (sb.toString, spans)
-      }
-    }
-
 }

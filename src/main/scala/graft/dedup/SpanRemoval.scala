@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.plans.RebuildUnitsExpr.Tokens
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -8,8 +9,9 @@ import org.apache.spark.sql.functions._
   * Dedup.scala for file hygiene (VERDICT r14 #6). Mixed into
   * [[Dedup]]; every call site keeps the `Dedup.removeDuplicateSpans*`
   * API. The shared occurrence core (unit digest, first-occurrence
-  * rank, position gather) stays in Dedup.scala, where the other
-  * sub-document faces use it too.
+  * rank, position gather) and the one join-and-rebuild tail
+  * ([[Dedup.rebuildAt]], token units in drop mode here) stay in
+  * Dedup.scala, where the other sub-document faces use them too.
   */
 private[dedup] trait SpanRemovalOps { self: Dedup.type =>
 
@@ -42,10 +44,10 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
     * pos) triples — one row per corpus token, never the text — and is
     * the sort-free two-phase min of [[firstOccurrenceRank]], so a hot
     * boilerplate window repeated across 10⁸ docs cannot pin one sort
-    * reducer; the
-    * removal relation is duplication-bound and id-keyed; text moves
-    * once, and each doc is rebuilt by one compiled pass. Window
-    * generation is one compiled loop per doc ([[spanWindows]]).
+    * reducer; the removal relation is duplication-bound and id-keyed;
+    * text moves once, and each doc is rebuilt in-row by the native unit
+    * rebuild ([[rebuildAt]]). Window generation is one compiled loop
+    * per doc ([[spanWindows]]).
     */
   def removeDuplicateSpans(
       df: DataFrame,
@@ -54,32 +56,6 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
       windowTokens: Int = 50
   ): DataFrame =
     spanScrub(df, None, idCol, textCol, windowTokens, batchInternal = true)
-
-  /** Shared tail of the span-removal family: graft the id-keyed drop
-    * relation `(id, __pos)` ([[positionsById]]) back onto the corpus
-    * and rebuild each doc in one compiled pass. NULL text passes
-    * through as NULL (clean_text/n_tokens/n_removed all NULL — null
-    * in, null out), matching the SQL oracle's semantics instead of
-    * coercing to "".
-    */
-  private def spanRebuild(
-      df: DataFrame,
-      drops: DataFrame,
-      idCol: String,
-      textCol: String,
-      windowTokens: Int
-  ): DataFrame = {
-    val nToks = when(col(textCol).isNotNull,
-      size(split(col(textCol), " ")).cast("long"))
-    df.select(col(idCol), col(textCol), nToks.as("n_tokens"))
-      .join(drops, Seq(idCol), "left")
-      .withColumn("__r",
-        spanRemoveUdf(windowTokens)(col(textCol), col("__pos")))
-      .select(col(idCol),
-        when(col(textCol).isNotNull, col("__r._1")).as("clean_text"),
-        col("n_tokens"),
-        (col("n_tokens") - col("__r._2")).as("n_removed"))
-  }
 
   /** Incremental [[removeDuplicateSpans]] — the refresh/ingest shape:
     * scrub from each NEW document every `windowTokens`-token window
@@ -100,7 +76,7 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
     * refresh loop maintains incrementally, the same posture as
     * [[containmentPairsAgainst]]'s history postings); the join keys
     * new-batch digests against it — batch-sized, not corpus-sized —
-    * and the rebuild is the batch-only compiled pass.
+    * and the rebuild runs over the batch only.
     */
   def removeDuplicateSpansAgainst(
       newDf: DataFrame,
@@ -146,7 +122,8 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
   /** The one span scrub: drop from each doc of `df` every window known
     * to the history digest index (when there is one) plus, when
     * `batchInternal`, every window past its first occurrence in `df`
-    * itself; gather the drop positions per doc and rebuild.
+    * itself; gather the drop positions per doc and rebuild in-row
+    * ([[rebuildAt]]: token units, each position drops `windowTokens`).
     * [[removeDuplicateSpans]] is the no-history case.
     */
   private def spanScrub(
@@ -168,12 +145,17 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
     // (and its shuffle) is skipped entirely
     val inBatch =
       if (batchInternal) Some(laterOccurrences(wins, idCol, "pos")) else None
-    // duplicate (id, pos) rows across the two branches are fine —
-    // spanRemoveUdf's coverage-array union is idempotent on repeated
+    // duplicate (id, pos) rows across the two branches are fine — the
+    // rebuild marks covered tokens, which is idempotent on repeated
     // positions, so no distinct (and its shuffle) needed
     val drops = (inHist ++ inBatch).reduce(_ union _)
-    spanRebuild(df, positionsById(drops, idCol, "pos"), idCol, textCol,
-      windowTokens)
+    val nToks = when(col(textCol).isNotNull,
+      size(split(col(textCol), " ")).cast("long"))
+    rebuildAt(df.select(col(idCol), col(textCol), nToks.as("n_tokens")),
+      positionsById(drops, idCol, "pos"), idCol, textCol,
+      Tokens, 1, windowTokens, keep = false)
+      .select(col(idCol), col("__r.text").as("clean_text"), col("n_tokens"),
+        (col("n_tokens") - col("__r.kept")).as("n_removed"))
   }
 
   /** (id, pos, __digest) of every `windowTokens`-token window — the
@@ -191,37 +173,4 @@ private[dedup] trait SpanRemovalOps { self: Dedup.type =>
           col(textCol))).as(Seq("pos", "__win")))
     .select(col(idCol), col("pos").cast("long").as("pos"),
       unitDigest(col("__win")))
-
-  /** In-row span scrub for [[removeDuplicateSpans]]: union the dropped
-    * windows' [pos, pos+w) token ranges, emit surviving tokens joined
-    * by single spaces (identity when nothing is dropped — split on
-    * ' ' keeps empty tokens, so rejoining reproduces the original
-    * byte-for-byte), and report the kept count.
-    */
-  private def spanRemoveUdf(w: Int)
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (text: String, drops: Seq[Long]) =>
-      if (text == null) ("", 0L)
-      else if (drops == null || drops.isEmpty)
-        (text, text.split(" ", -1).length.toLong)
-      else {
-        val toks = text.split(" ", -1)
-        val covered = new Array[Boolean](toks.length)
-        drops.foreach { p =>
-          var i = p.toInt
-          val end = math.min(toks.length, p.toInt + w)
-          while (i < end) { covered(i) = true; i += 1 }
-        }
-        val sb = new java.lang.StringBuilder(text.length)
-        var kept = 0L; var first = true; var i = 0
-        while (i < toks.length) {
-          if (!covered(i)) {
-            if (first) first = false else sb.append(' ')
-            sb.append(toks(i)); kept += 1
-          }
-          i += 1
-        }
-        (sb.toString, kept)
-      }
-    }
 }

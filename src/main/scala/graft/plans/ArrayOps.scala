@@ -2,19 +2,23 @@ package graft.plans
 
 import graft.signal.Signal
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpr}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.immutable.ArraySeq
 
 /** Catalyst-native array and text kernels (SURVEY §7.3 tier (b):
   * custom Expression where built-ins interpret lambdas): the integer
   * dot, the ×2^20 quantizer, the sign-LSH and JL projections and PQ
   * encode of the similarity faces, the sorted merge-intersect of the
-  * exact pair verify, the WADA SNR and the text normalizer.
+  * exact pair verify, the WADA SNR, the text normalizer and the
+  * in-row unit rebuild of the sub-document dedup faces.
   *
   * `zip_with`+`aggregate` HOFs evaluate one boxed lambda call per
   * element; for a 64-float dot product inside an O(n·k) candidate scan
@@ -242,7 +246,7 @@ object QuantizeExpr {
   }
 
   /** Called from generated code. */
-  def evalQuantize(v: ArrayData): ArrayData = new GenericArrayData(quantize(v))
+  def evalQuantize(v: ArrayData): ArrayData = UnsafeArrayData.fromPrimitiveArray(quantize(v))
 }
 
 /** Sign-random-projection LSH bucket ids, one per hash table:
@@ -309,7 +313,7 @@ object SignLshExpr {
       out(t) = bucket
       t += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
@@ -378,7 +382,7 @@ object JlProjectExpr {
 
   /** Called from generated code. */
   def evalProject(v: ArrayData, planes: Array[Long], outDims: Int, dimCap: Int): ArrayData =
-    new GenericArrayData(project(v, planes, outDims, dimCap, "jl_project"))
+    UnsafeArrayData.fromPrimitiveArray(project(v, planes, outDims, dimCap, "jl_project"))
 }
 
 /** PQ / k-means encoder: per subspace `s`, the argmin code over `k`
@@ -452,7 +456,7 @@ object PqEncodeExpr {
       out(s) = best
       s += 1
     }
-    new GenericArrayData(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 }
 
@@ -545,6 +549,122 @@ object NormalizeTextExpr {
   }
 }
 
+/** The in-row cut-and-rejoin of the exact sub-document dedup faces
+  * ([[graft.dedup.Dedup]]): split `text` into `split(sep, -1)` lines
+  * (`'\n'`, emitted trimmed of spaces only, as Spark's trim()), tokens
+  * (`' '`) or UTF-16 chars (no separator); mark the units covered by
+  * `[p·stride, p·stride + width)` for each position `p` of `pos`
+  * (array<int|long>; repeats and past-the-end positions allowed); and
+  * rejoin the covered units (`keep`) or the rest, in order. Result:
+  * (text, kept units, maximal runs of units left out). A null or empty
+  * `pos` covers nothing; a null `text` gives "" in keep mode and null
+  * in drop mode, with 0 counts. Declared nullable, though never null,
+  * so the fields read from it keep the nullability of the UDF columns
+  * it replaced.
+  */
+case class RebuildUnitsExpr(
+    left: Expression,
+    right: Expression,
+    unit: Int,
+    stride: Int,
+    width: Int,
+    keep: Boolean)
+    extends BinaryExpression {
+
+  override def nullable: Boolean = true
+  override def dataType: DataType = RebuildUnitsExpr.ResultType
+
+  private def intPos: Boolean =
+    right.dataType.asInstanceOf[ArrayType].elementType == IntegerType
+
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (StringType, ArrayType(IntegerType | LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (t, p) => TypeCheckResult.TypeCheckFailure(
+      s"rebuild_units needs (string, array<int|long>) inputs, got " +
+        s"${t.simpleString} / ${p.simpleString}")
+  }
+
+  override def eval(input: InternalRow): Any = RebuildUnitsExpr.evalRebuild(
+    left.eval(input).asInstanceOf[UTF8String], right.eval(input).asInstanceOf[ArrayData],
+    intPos, unit, stride, width, keep)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = left.genCode(ctx)
+    val p = right.genCode(ctx)
+    ev.copy(
+      code = code"""
+        ${t.code}
+        ${p.code}
+        org.apache.spark.sql.catalyst.InternalRow ${ev.value} =
+          graft.plans.RebuildUnitsExpr.evalRebuild(
+            ${t.isNull} ? null : ${t.value}, ${p.isNull} ? null : ${p.value},
+            $intPos, $unit, $stride, $width, $keep);
+      """,
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+
+  override def prettyName: String = "rebuild_units"
+}
+
+object RebuildUnitsExpr {
+  val Lines = 0
+  val Tokens = 1
+  val Chars = 2
+
+  private val ResultType: StructType = StructType(Seq(
+    StructField("text", StringType),
+    StructField("kept", LongType, nullable = false),
+    StructField("runs", LongType, nullable = false)))
+
+  /** Called from generated code. */
+  def evalRebuild(
+      text: UTF8String, pos: ArrayData, intPos: Boolean,
+      unit: Int, stride: Int, width: Int, keep: Boolean): InternalRow = {
+    if (text == null)
+      return new GenericInternalRow(Array[Any](if (keep) UTF8String.EMPTY_UTF8 else null, 0L, 0L))
+    val s = text.toString
+    val sep = if (unit == Lines) '\n' else ' '
+    val sepLen = if (unit == Chars) 0 else 1
+    // n chars make at most n + 1 units
+    val covered = new Array[Boolean](s.length + 1)
+    val np = if (pos == null) 0 else pos.numElements()
+    var k = 0
+    while (k < np) {
+      val from = (if (intPos) pos.getInt(k).toLong else pos.getLong(k)) * stride
+      val until = math.min(covered.length.toLong, from + width)
+      var i = from
+      while (i < until) { covered(i.toInt) = true; i += 1 }
+      k += 1
+    }
+    val sb = new java.lang.StringBuilder(s.length)
+    var kept = 0L
+    var runs = 0L
+    var a = 0 // where unit u starts
+    var u = 0
+    while (a < s.length + sepLen) {
+      val b = if (unit == Chars) a + 1 else { val j = s.indexOf(sep, a); if (j < 0) s.length else j }
+      if (covered(u) == keep) {
+        var x = a
+        var y = b
+        if (unit == Lines) {
+          while (x < y && s.charAt(x) == ' ') x += 1
+          while (y > x && s.charAt(y - 1) == ' ') y -= 1
+        }
+        if (kept > 0 && sepLen > 0) sb.append(sep)
+        sb.append(s, x, y)
+        kept += 1
+      } else if (u == 0 || covered(u - 1) == keep) runs += 1 // left out after a kept unit
+      a = b + sepLen
+      u += 1
+    }
+    new GenericInternalRow(Array[Any](UTF8String.fromString(sb.toString), kept, runs))
+  }
+}
+
 /** Column-level API for the native expressions (their SQL names are
   * registered in [[graft.GraftExtensions]]).
   */
@@ -605,4 +725,12 @@ object ArrayOps {
     toColumn(ArrayDotProduct(toExpr(a), toExpr(b)))
 
   def wada_snr_native(c: Column): Column = toColumn(WadaSnrExpr(toExpr(c)))
+
+  /** Native cut-and-rejoin of `text` at the unit positions `pos` (see
+    * [[RebuildUnitsExpr]]; `unit` is one of its `Lines`, `Tokens`,
+    * `Chars`): struct(text, kept, runs).
+    */
+  def rebuild_units(
+      text: Column, pos: Column, unit: Int, stride: Int, width: Int, keep: Boolean): Column =
+    toColumn(RebuildUnitsExpr(toExpr(text), toExpr(pos), unit, stride, width, keep))
 }

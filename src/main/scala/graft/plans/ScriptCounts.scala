@@ -2,9 +2,9 @@ package graft.plans
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.bridge.{toColumn, toExpr}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -85,7 +85,7 @@ object ScriptCountsExpr {
       counts(scriptClass(cp)) += 1
       i += Character.charCount(cp)
     }
-    new GenericArrayData(counts)
+    UnsafeArrayData.fromPrimitiveArray(counts)
   }
 }
 

@@ -222,9 +222,9 @@ object CurationPipeline {
         // second corpus join to graft clean_text back on. Cached:
         // consumed by BOTH the near-dup cluster build and the anti-join.
         Dedup.windowDedupKeep(exactDeduped, idCol, textCol, wpp)
-          .filter(col("__fo_kept") > 0L)
-          .withColumn(textCol, col("__fo_clean"))
-          .drop("__fo_clean", "__fo_kept")
+          .filter(col("__pos").isNotNull)
+          .withColumn(textCol, col("__r.text"))
+          .drop("__pos", "__r")
           .cache()
       case None => exactDeduped
     }

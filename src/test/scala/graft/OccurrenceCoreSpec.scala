@@ -9,7 +9,8 @@ import scala.collection.mutable
   * (units compared as strings, first occurrence = smallest (id, pos)).
   * The corpus has a line repeated in 70 docs, repeats inside a doc,
   * blank and space-padded lines, char-level dup windows at gaps of
-  * exactly l and l + 1, and null and empty text.
+  * exactly l and l + 1, and null and empty text. The faces' one in-row
+  * rebuild kernel is also held against the four UDFs it replaced.
   */
 class OccurrenceCoreSpec extends SparkTestBase {
   import spark.implicits._
@@ -171,6 +172,157 @@ class OccurrenceCoreSpec extends SparkTestBase {
     assert(want(1002L).head == 1L, "x and y dup windows l apart merge into one span")
     assert(want(1003L).head == 2L, "x and y dup windows l + 1 apart stay two spans")
     assert(rows(Dedup.substringDedup(df, "doc_id", "text", l)) == want)
+  }
+
+  test("the one rebuild kernel gives the four replaced UDFs' strings and " +
+    "counts, bit for bit") {
+    import graft.plans.ArrayOps.rebuild_units
+    import graft.plans.RebuildUnitsExpr.{Chars, Lines, Tokens}
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+
+    // ---- the four old UDF bodies, verbatim ----
+    val lineRebuildUdf =
+      udf { (text: String, kept: Seq[Long]) =>
+        if (text == null) ""
+        else {
+          val ls = text.split("\n", -1)
+          val ks = kept.toSet
+          val sb = new java.lang.StringBuilder(text.length)
+          var i = 0; var first = true
+          while (i < ls.length) {
+            if (ks.contains(i.toLong)) {
+              val l = ls(i)
+              var a = 0; var b = l.length
+              while (a < b && l.charAt(a) == ' ') a += 1
+              while (b > a && l.charAt(b - 1) == ' ') b -= 1
+              if (first) first = false else sb.append('\n')
+              sb.append(l, a, b)
+            }
+            i += 1
+          }
+          sb.toString
+        }
+      }
+    def windowRebuildUdf(w: Int) =
+      udf { (text: String, kept: Seq[Long]) =>
+        val toks = if (text == null) Array("") else text.split(" ", -1)
+        val sb = new java.lang.StringBuilder(if (text == null) 0 else text.length)
+        var first = true
+        kept.foreach { ki =>
+          val from = (ki * w).toInt
+          val until = math.min(toks.length, from + w)
+          var j = from
+          while (j < until) {
+            if (first) first = false else sb.append(' ')
+            sb.append(toks(j)); j += 1
+          }
+        }
+        sb.toString
+      }
+    def spanRemoveUdf(w: Int) =
+      udf { (text: String, drops: Seq[Long]) =>
+        if (text == null) ("", 0L)
+        else if (drops == null || drops.isEmpty)
+          (text, text.split(" ", -1).length.toLong)
+        else {
+          val toks = text.split(" ", -1)
+          val covered = new Array[Boolean](toks.length)
+          drops.foreach { p =>
+            var i = p.toInt
+            val end = math.min(toks.length, p.toInt + w)
+            while (i < end) { covered(i) = true; i += 1 }
+          }
+          val sb = new java.lang.StringBuilder(text.length)
+          var kept = 0L; var first = true; var i = 0
+          while (i < toks.length) {
+            if (!covered(i)) {
+              if (first) first = false else sb.append(' ')
+              sb.append(toks(i)); kept += 1
+            }
+            i += 1
+          }
+          (sb.toString, kept)
+        }
+      }
+    def substringCutUdf(l: Int) =
+      udf { (text: String, pos: Seq[Int]) =>
+        if (text == null || pos == null || pos.isEmpty) (text, 0L)
+        else {
+          val sb = new java.lang.StringBuilder(text.length)
+          var from = 0
+          var start = pos.head; var prev = start; var spans = 1L
+          pos.iterator.drop(1).foreach { p =>
+            if (p - prev > l) {
+              sb.append(text, from, start); from = prev + l
+              start = p; spans += 1
+            }
+            prev = p
+          }
+          sb.append(text, from, start)
+          sb.append(text, prev + l, text.length)
+          (sb.toString, spans)
+        }
+      }
+
+    // each (kernel, oracle) pair agrees on every row, strings also on
+    // their raw UTF-8 bytes (a lone surrogate encodes as '?')
+    def agree(face: String, rows: Seq[(String, Option[Seq[Long]])],
+        pairs: (Column, Column)*): Unit = {
+      val df = rows.toDF("t", "p").withColumn("pi", col("p").cast("array<int>"))
+      val cols = pairs.flatMap { case (k, o) => Seq(k, o) } ++
+        pairs.take(1).flatMap { case (k, o) => Seq(hex(k.cast("binary")), hex(o.cast("binary"))) }
+      df.select(cols: _*).collect().zip(rows).foreach { case (r, in) =>
+        (0 until r.length by 2).foreach { i =>
+          assert(r.get(i) == r.get(i + 1), s"$face on $in: column $i: $r")
+        }
+      }
+    }
+    val t = col("t"); val p = col("p"); val pi = col("pi")
+    val none = Option.empty[Seq[Long]]
+    def at(xs: Long*) = Some(xs.toSeq)
+
+    // lines: keep mode, space-only trim (tabs and '\r' stay)
+    val lines = rebuild_units(t, p, Lines, 1, 1, keep = true)
+    agree("lines", Seq(
+      (null, at(0)), (null, none), ("a\nb", none), ("a\nb", at()), ("", at(0)),
+      ("  lead\ntrail  \n   \n\tx\t \n a b \r\nend\r", at(0, 1, 2, 3, 4, 5, 9)),
+      ("\n\n\nx\n", at(1, 3)), ("x", at(0)), ("  \n  ", at(0, 1))),
+      lines.getField("text") ->
+        when(p.isNull, lit("")).otherwise(lineRebuildUdf(t, p)))
+
+    // word windows of 3: keep mode, empty tokens, windows past the end
+    val windows = rebuild_units(t, p, Tokens, 3, 3, keep = true)
+    agree("windows", Seq(
+      (null, at(0)), (null, none), ("", at(0)), ("", none), (" a  b ", at(0, 1)),
+      ("one two three four five six seven", at(0, 2, 5)), ("a b c d e f g", at()),
+      ("x\ty  z\r\nw", at(1)), ("  ", at(0)), ("😀 b 😀", at(0))),
+      windows.getField("text") ->
+        when(p.isNull, lit("")).otherwise(windowRebuildUdf(3)(t, p)))
+
+    // token spans of 2: drop mode, repeated and past-the-end positions
+    val spans = rebuild_units(t, p, Tokens, 1, 2, keep = false)
+    val spanOld = spanRemoveUdf(2)(t, p)
+    agree("spans", Seq(
+      (null, at(0)), (null, none), ("", none), ("", at(0)), ("a b c d", none),
+      ("a b c d", at()), (" a  b c ", at(0, 0, 3)), ("a b c d e", at(1, 1, 2, 7)),
+      ("😀 x 😀", at(1)), ("a\tb c\r\nd", at(0))),
+      spans.getField("text") -> when(t.isNotNull, spanOld.getField("_1")),
+      spans.getField("kept") -> spanOld.getField("_2"))
+
+    // chars, l = 3: drop mode, int and long positions, merged spans,
+    // surrogate pairs cut in half
+    val cutOld = substringCutUdf(3)(t, pi)
+    for (positions <- Seq(pi, p)) {
+      val chars = rebuild_units(t, positions, Chars, 1, 3, keep = false)
+      agree("chars", Seq(
+        (null, none), (null, at(0)), ("", none), ("abc", at()), ("abcdef", at(0)),
+        ("abcdefghij", at(0, 0, 3, 7)), ("abcdefghij", at(1, 5)),
+        ("a😀b😀c", at(2)), ("a😀bc", at(2)), ("  a  b  ", at(1, 4)),
+        ("x\r\ny\tz", at(1)), ("😀😀", at(1))),
+        chars.getField("text") -> cutOld.getField("_1"),
+        chars.getField("runs") -> cutOld.getField("_2"))
+    }
   }
 
   test("cdcChunkDedup and substringDedup plan no window operator") {

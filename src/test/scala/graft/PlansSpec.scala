@@ -275,6 +275,14 @@ class PlansSpec extends SparkTestBase {
         Row(Seq(1.9f, 0.0f, 1.0f, 1.0f))),
         ArrayOps.pq_encode(col("v"), codebooks))
 
+      // rebuild_units: token spans of 2 dropped, null text and
+      // positions, repeated and past-the-end positions
+      check("rebuild_units", StructType(Seq(StructField("t", StringType),
+        StructField("p", ArrayType(LongType)))), Seq(Row(null, Seq(0L)), Row("a b", null),
+        Row("", Seq()), Row(" a  b c ", Seq(0L, 0L, 3L)), Row("a b c d e", Seq(1L, 7L))),
+        ArrayOps.rebuild_units(col("t"), col("p"), graft.plans.RebuildUnitsExpr.Tokens,
+          1, 2, keep = false))
+
       val wave = (0 until 2000).map { i =>
         val t = math.sin(0.19634954 * (i + 1)); t * t * t + 0.01 * math.sin(78.233 * i)
       }

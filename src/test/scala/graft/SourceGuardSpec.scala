@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
   * one file, a `*Udf` name stays a Spark UDF, global running sums go
   * through the one running-sum operator, near-dup pairs go through
   * the one exact verify, Hamming pairs through the one band cover, the
-  * exact sub-document faces through the one occurrence core, the
-  * similarity faces through the one exact quantized cosine, and each
-  * native array kernel's loop is written once.
+  * exact sub-document faces through the one occurrence core and the one
+  * in-row rebuild, the similarity faces through the one exact quantized
+  * cosine, and each native array kernel's loop is written once.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -97,6 +97,26 @@ class SourceGuardSpec extends AnyFunSuite {
       case (path, text) if twin.findFirstIn(text).isDefined => path
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("one in-row rebuild") {
+    val dedup = sources.filter(_._1.startsWith(Paths.get("src/main/scala/graft/dedup")))
+    // the four rebuild UDFs the native kernel replaced, spelled in
+    // parts so a grep over src finds only uses
+    val gone = Seq("lineRebuild", "windowRebuild", "spanRemove", "substringCut").map(_ + "Udf")
+    val offenders = for {
+      (path, text) <- sources
+      name <- gone
+      if text.contains(name)
+    } yield s"$path: $name"
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    val udfs = dedup.map { case (path, text) =>
+      path -> java.util.regex.Pattern.quote("udf {").r.findAllIn(text).size }
+    assert(udfs.map(_._2).sum == 8, udfs.mkString("\n"))
+    // the kernel's column builder: called from the one rebuild tail
+    val calls = dedup.map { case (path, text) =>
+      path -> java.util.regex.Pattern.quote("rebuild_units(").r.findAllIn(text).size }
+    assert(calls.map(_._2).sum == 1, calls.filter(_._2 > 0).mkString("\n"))
   }
 
   test("one exact quantized cosine") {

@@ -140,4 +140,40 @@ class TopKPerKeySpec extends SparkTestBase {
       assert(got == expected)
     } finally spark.conf.unset(key)
   }
+
+  test("iterators stay exhausted once drained, partial and final phase " +
+    "(repeated hasNext, next throws)") {
+    import graft.plans.TopKPerKeyExec
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, SortOrder}
+    import org.apache.spark.sql.execution.SparkPlan
+    import spark.implicits._
+    // key 1 holds three rows (one past k), key 2 two
+    val child = Seq((1L, 5L), (1L, 3L), (2L, 7L), (1L, 4L), (2L, 1L)).toDF("k", "v")
+      .coalesce(1).queryExecution.executedPlan
+    val Seq(k, v) = child.output
+    def phase(partial: Boolean, input: SparkPlan): TopKPerKeyExec =
+      TopKPerKeyExec(Seq(k), Seq(SortOrder(v, Ascending)), 2, partial, input)
+    // drives one exec's own partition iterator past its end
+    def probe(exec: SparkPlan): Seq[(Int, Seq[Boolean], Boolean)] =
+      exec.execute().mapPartitions { it =>
+        var emitted = 0
+        while (it.hasNext) { it.next(); emitted += 1 }
+        val again = Seq.fill(3)(it.hasNext)
+        val nextThrows =
+          try { it.next(); false }
+          catch { case _: NoSuchElementException => true }
+        Iterator((emitted, again, nextThrows))
+      }.collect().toSeq
+    val partial = phase(partial = true, child)
+    assert(probe(partial) == Seq((4, Seq(false, false, false), true)))
+    assert(probe(phase(partial = false, partial)) == Seq((4, Seq(false, false, false), true)))
+    // a key budget of 1 makes the partial phase evict heaps to output
+    // from inside its fill loop: the iterator still ends for good
+    val key = "spark.graft.topk.partialKeyBudget"
+    spark.conf.set(key, "1")
+    try {
+      val Seq((emitted, again, nextThrows)) = probe(phase(partial = true, child))
+      assert(emitted >= 4 && again == Seq(false, false, false) && nextThrows)
+    } finally spark.conf.unset(key)
+  }
 }
