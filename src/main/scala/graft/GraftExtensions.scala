@@ -19,7 +19,7 @@ import org.apache.spark.sql.types.IntegerType
   *    the session is built;
   *  - [[GraftExtensions.install]] adds both lists to a session built
   *    without the extension. Every entry point that plans a custom
-  *    exec (`TopKPerKey.topKPerKey`, `PostingPairs.pairs`,
+  *    exec (`TopKPerKey.topKPerKey`, `GroupPairs.pairs`,
   *    `GlobalSeq.withRunningSum`) calls it first, so any session —
   *    `Graft.session`, a caller's own, a test's — plans them.
   */
@@ -68,7 +68,7 @@ object GraftExtensions {
 
   /** Every custom planner strategy, one per custom logical node. */
   val strategies: Seq[SparkStrategy] =
-    Seq(TopKPerKeyStrategy, PostingPairsStrategy, RunningSumStrategy)
+    Seq(TopKPerKeyStrategy, GroupPairsStrategy, RunningSumStrategy)
 
   /** Add [[functions]] and [[strategies]] to `spark`. A no-op once the
     * session's planner has every strategy — through the extension or

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.plans.{ArrayOps, GramHash}
+import graft.plans.{ArrayOps, GramHash, GroupPairs}
 import graft.plans.RebuildUnitsExpr.{Chars, Lines, Tokens}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -586,14 +586,14 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     * shingle inverted index: postings shuffle ONCE into shingle-
     * clustered, (shingle, id)-sorted runs and every co-occurring pair
     * is emitted in-stage by the streaming
-    * [[graft.plans.PostingPairsExec]]; common = |A∩B| falls out of the
+    * [[graft.plans.GroupPairsExec]]; common = |A∩B| falls out of the
     * (a,b) count; |A|,|B| ride along as per-doc counts,
     * J = common/(|A|+|B|−common). No cross product, no self-join.
     * Skew guard: shingles shared by more than `maxDf` docs are dropped
     * (stopword shingles explode quadratically and carry no dedup
     * signal) — the exec skips overflowing groups as it streams.
-    * Null ids are dropped up front (the pre-r15 join's a<b filter
-    * dropped them silently; the exec's id buffer requires non-null).
+    * Null ids are dropped up front, so they do not count toward a
+    * shingle's df.
     */
   def ngramJaccardPairs(
       df: DataFrame,
@@ -603,28 +603,18 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       minJaccard: Double,
       maxDf: Long = 1000L
   ): DataFrame = {
-    // per-doc distinct-shingle count rides along through the explode, so
-    // |A| and |B| come out of the group itself — no sizes join.
-    //
-    // ONE-EXCHANGE STREAMING SHAPE (round 16): the round-15 form built
-    // each shingle group as ONE collect_list array and materialized all
-    // d(d−1)/2 pair structs through PostingPairsExpr — ObjectHashAggregate
-    // falls back to sort-based aggregation past 128 map keys (so the
-    // capped funnel point paid a sort anyway AND the array build), and
-    // an uncapped hot shingle threw past d ≈ 92k where the pre-r15
-    // self-join streamed. PostingPairsExec keeps the one-exchange shape
-    // (Catalyst inserts the shingle exchange + (shingle, id) sort) but
-    // buffers only the d-sized (id, n) postings of the current group
-    // and emits pairs lazily — no d² array, overflowing groups skipped
-    // at maxDf+1 buffered entries. Ascending id order in the sorted run
-    // gives a < b by construction, exactly as the join's filter did.
+    // per-doc distinct-shingle count rides along through the explode as
+    // the pair payload, so |A| and |B| come out of the group itself —
+    // no sizes join. The group-pairs exec buffers only the current
+    // group's postings and emits pairs lazily (no d² array), skipping
+    // groups past maxDf.
     val ex = df
       .filter(col(idCol).isNotNull)
       .select(col(idCol), GramHash.shingle_hashes(col(textCol), n).as("xs"))
-      .select(col(idCol), size(col("xs")).cast("long").as("n_sh"),
+      .select(col(idCol), size(col("xs")).cast("long").as("n"),
         explode(col("xs")).as("shingle"))
-    val pairs = graft.plans.PostingPairs
-      .pairs(ex, col("shingle"), col(idCol), col("n_sh"), maxDf)
+    val pairs = GroupPairs
+      .pairs(ex, Seq(col("shingle")), col(idCol), Seq(col("n")), maxDf)
       .groupBy("a", "b", "n_a", "n_b")
       .agg(count(lit(1)).as("n_common"))
       .withColumn("jaccard", jaccard)
@@ -692,56 +682,41 @@ object Dedup extends SpanRemovalOps with SimHashOps {
       .withColumn("sz", size(col("xs")).cast("long"))
       .select(col(idCol), col("sz"),
         posexplode(prefixSlice(col("xs"), t)).as(Seq("pos", "shingle")))
-    val rare =
-      if (maxDf == Long.MaxValue) pre
-      else
-        pre.withColumn("df", count(lit(1)).over(Window.partitionBy("shingle")))
-          .filter(col("df") <= maxDf)
-          .drop("df")
     // PPJoin candidate pruning (Xiao et al., WWW'08) — both filters
     // LOSSLESS at any t when maxDf = Long.MaxValue (1e-9 slack absorbs
     // the float boundary; the exact merge-intersect verify below is
     // unchanged; for finite maxDf the positional filter's recall
     // caveat is in the scaladoc above):
-    //  * length filter, inside the join condition so pruned rows never
-    //    reach the pair aggregation: J ≥ t forces
-    //    min(sa,sb) ≥ t·max(sa,sb);
+    //  * length filter, per posting pair so pruned rows never reach
+    //    the pair aggregation: J ≥ t forces min(sa,sb) ≥ t·max(sa,sb);
     //  * positional filter: both shingle arrays are sorted in the SAME
     //    global order, so the first prefix-prefix match (min pa / min
     //    pb — simultaneously minimized by the smallest common element)
     //    has zero common elements before it, bounding the achievable
     //    overlap by 1 + min(sa−pa−1, sb−pb−1), which must reach the
-    //    t/(1+t)·(sa+sb) overlap a ≥t pair needs.
-    // The pair aggregation replaces the old DISTINCT — the same
-    // (a, b) shuffle, now carrying four small ints and followed by a
-    // filter that keeps the expensive array-fetch verify joins off
-    // every pair the bounds kill.
-    val la = rare.select(col(idCol).as("a"), col("sz").as("sa"),
-      col("pos").as("pa"), col("shingle"))
-    val lb = rare.select(col(idCol).as("b"), col("sz").as("sb"),
-      col("pos").as("pb"), col("shingle").as("shingle_b"))
-    val cand = la
-      .join(lb,
-        col("shingle") === col("shingle_b") && col("a") < col("b") &&
-          least(col("sa"), col("sb")).cast("double") >=
-            lit(t) * greatest(col("sa"), col("sb")).cast("double") - lit(1e-9) &&
-          // positional bound PER POSTING, ahead of the pair-agg
-          // shuffle (lossless: the first common element's posting —
-          // the simultaneous minimizer of pa and pb for a qualifying
-          // pair — always satisfies it, so the min-aggregated values
-          // and the post-agg filter outcome are unchanged; pruned
-          // rows are redundant-for-min or belong to non-qualifying
-          // pairs)
-          (lit(1L) + least(col("sa") - col("pa") - 1L,
-            col("sb") - col("pb") - 1L)).cast("double") >=
-            lit(t / (1.0 + t)) * (col("sa") + col("sb")).cast("double") - lit(1e-9))
+    //    t/(1+t)·(sa+sb) overlap a ≥t pair needs. It runs PER POSTING
+    //    PAIR too, ahead of the pair-agg shuffle (lossless: the first
+    //    common element's posting — the simultaneous minimizer of pa
+    //    and pb for a qualifying pair — always satisfies it, so the
+    //    min-aggregated values and the post-agg filter outcome are
+    //    unchanged; pruned rows are redundant-for-min or belong to
+    //    non-qualifying pairs).
+    // Postings pair up inside each shingle group of at most maxDf rows;
+    // the pair aggregation carries four small ints, and its filter keeps
+    // the array-fetch verify joins off every pair the bounds kill.
+    val positional =
+      (lit(1L) + least(col("sa") - col("pa") - 1L, col("sb") - col("pb") - 1L)).cast("double") >=
+        lit(t / (1.0 + t)) * (col("sa") + col("sb")).cast("double") - lit(1e-9)
+    val cand = GroupPairs
+      .pairs(pre, Seq(col("shingle")), col(idCol), Seq(col("sz"), col("pos")), maxDf)
+      .select(col("a"), col("b"), col("sz_a").as("sa"), col("pos_a").as("pa"),
+        col("sz_b").as("sb"), col("pos_b").as("pb"))
+      .filter(least(col("sa"), col("sb")).cast("double") >=
+        lit(t) * greatest(col("sa"), col("sb")).cast("double") - lit(1e-9) && positional)
       .groupBy("a", "b")
       .agg(min("pa").as("pa"), min("pb").as("pb"),
         min("sa").as("sa"), min("sb").as("sb"))
-      .filter(
-        (lit(1L) + least(col("sa") - col("pa") - 1L,
-          col("sb") - col("pb") - 1L)).cast("double") >=
-          lit(t / (1.0 + t)) * (col("sa") + col("sb")).cast("double") - lit(1e-9))
+      .filter(positional)
       .select("a", "b")
     val out = verifyPairs(docs, docs, cand, idCol) { v =>
       v.withColumn("jaccard", jaccard)
@@ -1221,30 +1196,24 @@ object Dedup extends SpanRemovalOps with SimHashOps {
     // array column (built by the compiled shingle_hashes loop, not an
     // interpreted HOF chain); signatures are per-row primitive loops
     // and exact verification counts on the (few) candidate pairs. The
-    // only shuffles are the tiny band-bucket join and the verify.
-    // cache: tiny (|docs| × shingle-count longs) and referenced by three
-    // plan branches — without it Spark recomputes the hashes per branch
-    // (no cross-branch CSE)
+    // only shuffles are the band-bucket pairs' one exchange and the
+    // verify.
+    // cache: tiny (|docs| × shingle-count longs) and read by the band
+    // buckets and both verify sides — without it Spark recomputes the
+    // hashes per branch (no cross-branch CSE)
     val base = shingleHashDocs(df, idCol, textCol, n)
-    val buckets = lshBuckets(base, idCol, bands, rowsPerBand)
-      .cache() // bands × |docs| rows of three longs — the self-join
-               // below would otherwise compute the signatures twice
-    val l = buckets.select(col(idCol).as("a"), col("band"), col("h"))
-    val r = buckets.select(col(idCol).as("b"), col("band"), col("h"))
-    val cand = l
-      .join(r, Seq("band", "h"))
-      .filter(col("a") < col("b"))
-      .select("a", "b")
+    val cand = GroupPairs
+      .pairs(lshBuckets(base, idCol, bands, rowsPerBand),
+        Seq(col("band"), col("h")), col(idCol), Nil, Long.MaxValue)
       .distinct()
     // the verified pairs are orders of magnitude smaller than the
-    // corpus; release the corpus-sized intermediates — the caches must
+    // corpus; release the corpus-sized intermediate — the cache must
     // not outlive the call in a long-lived session
     val out = verifyPairs(base, base, cand, idCol)(
       _.withColumn("jaccard", jaccard)
         .filter(col("jaccard") >= minJaccard)
         .select("a", "b", "jaccard"))
     base.unpersist()
-    buckets.unpersist()
     out
   }
 

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.plans.GroupPairs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -238,18 +239,20 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
     * print (image dHash: 579 distinct prints for 500k images at sf10),
     * or a cap is set, the units are the DISTINCT prints, keyed by their
     * min id, and a surviving unit pair joins back to the docs on each
-    * print. An uncapped collapsed print also pairs with itself in band
-    * 0, which yields its group's identical-print doc pairs. A doc pair
-    * within k has either equal prints (hamming 0) or distinct prints
-    * that share a band: each doc pair arises from exactly ONE unit
-    * pair, so no distinct over the expansion is needed. Candidate work
+    * print. The identical-print doc pairs are the a < b pairs inside
+    * each print group of the docs. A doc pair within k has either
+    * equal prints (hamming 0) or distinct prints that share a band:
+    * each doc pair arises from exactly ONE unit pair or print group,
+    * so no distinct over the expansion is needed. Candidate work
     * collapses from Σ_buckets |bucket|² over DOCS to the same sum over
     * distinct PRINTS (stripe-PNG image face at sf0.1: 19.1M → ~0.2M
     * band candidates, 5.1 s → sub-second). On near-unique prints (text
     * SimHash, 64- or 128-bit) the units are the docs themselves: the
     * print shuffle and the join back would only add stages. Band rows
     * carry one id either way, so the band shuffle moves C(m,2) rows of
-    * one print and one id per unit.
+    * one print and one id per unit. The self face pairs the band rows
+    * inside each band group with the group-pairs exec (one band
+    * shuffle); the cross face joins its two band relations.
     *
     * CANONICAL-COVER EMISSION (round 13): a ≤k pair with clean chunk
     * set S collides in C(|S|, 2) bands, and the distinct that crunched
@@ -344,33 +347,35 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       }
     }
     val lb = banded(units(lf))
-    val rb = if (right.isEmpty) lb else banded(units(rf))
-    // NEVER let the static planner broadcast a band side: Generate (the
-    // explode) keeps its CHILD's size estimate, so the banded relation
-    // looks ~8 MB when it is |prints|·C(m,2) rows (a 6 GiB broadcast
-    // build at sf10, found by SimHashStageProbe). The hint pins a
-    // shuffle merge join; AQE still re-plans splits/skew at runtime.
-    // `prior` is a function of `band`, so joining on it changes no
-    // match.
-    def from(s: String, to: Seq[String]) =
-      pw.zip(to).map { case (p, t) => col(s"$s.$p").as(t) }
-    val joined = lb.as("l").hint("shuffle_merge")
-      .join(rb.as("r"), Seq("band", "key", "prior"))
-      .select(from("l", aw) ++ from("r", bw) ++ Seq(col("l.__u").as("__ua"),
-        col("r.__u").as("__ub"), col("prior")): _*)
+    val bandKeys = Seq("band", "key", "prior")
+    def named(from: Seq[String], to: Seq[String]) =
+      from.zip(to).map { case (f, t) => col(f).as(t) }
+    val joined = right match {
+      case None =>
+        // self face: the a < b unit pairs inside each band group, one
+        // band shuffle; the prints and `prior` ride along as payload
+        GroupPairs.pairs(lb, bandKeys.map(col), col("__u"), pc :+ col("prior"), Long.MaxValue)
+          .select(named(pw.map(_ + "_a"), aw) ++ named(pw.map(_ + "_b"), bw) ++
+            named(Seq("a", "b", "prior_a"), Seq("__ua", "__ub", "prior")): _*)
+      case Some(_) =>
+        // NEVER let the static planner broadcast a band side: Generate
+        // (the explode) keeps its CHILD's size estimate, so the banded
+        // relation looks ~8 MB when it is |prints|·C(m,2) rows (a 6 GiB
+        // broadcast build at sf10, found by SimHashStageProbe). The hint
+        // pins a shuffle merge join; AQE still re-plans splits/skew at
+        // runtime. `prior` is a function of `band`, so joining on it
+        // changes no match.
+        lb.as("l").hint("shuffle_merge")
+          .join(banded(units(rf)).as("r"), bandKeys)
+          .select(named(pw.map("l." + _), aw) ++ named(pw.map("r." + _), bw) ++
+            named(Seq("l.__u", "r.__u", "prior"), Seq("__ua", "__ub", "prior")): _*)
+    }
     val xors = aw.zip(bw).map { case (x, y) => col(x).bitwiseXOR(col(y)) }
     val cleanMask = (0 until m).map { c =>
       when(chunk(xors, c) === 0L, lit(1L << c)).otherwise(lit(0L))
     }.reduce(_ bitwiseOR _)
-    // self face: each unordered unit pair once; equal prints are
-    // all-clean and land in band 0. An uncapped collapsed print also
-    // pairs with itself there, and expands to its group's doc pairs.
-    val selfPairs = collapse && maxPerBucket.isEmpty
-    val verified = (right match {
-      case None if selfPairs => joined.filter(col("__ua") <= col("__ub"))
-      case None => joined.filter(col("__ua") < col("__ub"))
-      case Some(_) => joined
-    })
+    // equal prints are all-clean and land in band 0
+    val verified = joined
       .withColumn("hamming", xors.map(bit_count(_)).reduce(_ + _).cast("long"))
       .filter(col("hamming") <= maxHamming)
     val pairCols = (aw ++ bw ++ Seq("__ua", "__ub", "hamming")).map(col)
@@ -392,22 +397,28 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       if (right.isEmpty) (least(col("__ua"), col("__ub")), greatest(col("__ua"), col("__ub")))
       else (col("__ua"), col("__ub"))
     val cross = expanded.select(ia.as(outA), ib.as(outB), col("hamming"))
-    val out = (maxPerBucket match {
-      case Some(cap) if right.isEmpty =>
-        // identical-print doc pairs of a capped self face: the clique,
-        // or a linear min-id star for groups over the cap
-        val g = Window.partitionBy(pc: _*)
-        val sized = lf
-          .withColumn("__gn", count(lit(1)).over(g))
-          .withColumn("__rep", min(col("__u")).over(g))
-        val small = sized.filter(col("__gn") <= cap)
-        val clique = small.select(col("__u").as(outA) +: pc: _*)
-          .join(small.select(col("__u").as(outB) +: pc: _*), pw)
-          .filter(col(outA) < col(outB))
-          .select(col(outA), col(outB))
-        val star = sized.filter(col("__gn") > cap && col("__u") =!= col("__rep"))
-          .select(col("__rep").as(outA), col("__u").as(outB))
-        clique.unionByName(star).withColumn("hamming", lit(0L)).unionByName(cross)
+    val out = (right match {
+      case None if collapse =>
+        // identical-print doc pairs of a collapsed self face: the a < b
+        // pairs inside each print group (a print with a null word
+        // pairs nothing); a capped face keeps that clique only for
+        // groups of at most `cap` docs and links larger groups by a
+        // linear min-id star
+        def clique(docs: DataFrame, maxDf: Long) =
+          GroupPairs.pairs(docs, pc, col("__u"), Nil, maxDf)
+            .select(col("a").as(outA), col("b").as(outB))
+        val same = maxPerBucket match {
+          case None => clique(lf, Long.MaxValue)
+          case Some(cap) =>
+            val g = Window.partitionBy(pc: _*)
+            val sized = lf
+              .withColumn("__gn", count(lit(1)).over(g))
+              .withColumn("__rep", min(col("__u")).over(g))
+            val star = sized.filter(col("__gn") > cap && col("__u") =!= col("__rep"))
+              .select(col("__rep").as(outA), col("__u").as(outB))
+            clique(sized, cap).unionByName(star)
+        }
+        same.withColumn("hamming", lit(0L)).unionByName(cross)
       case _ => cross
     }).cache()
     out.count()

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.plans.ArrayOps.quantize_1m
+import graft.plans.GroupPairs
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.functions._
@@ -124,9 +125,10 @@ object Ann {
   }
 
   /** Self-pair tail: (a, b, cos) for a < b with cos ≥ minCos. With a
-    * join `key` only rows sharing it pair up (an equi-join on the key);
-    * without one the whole prepped relation broadcasts into a theta
-    * join.
+    * `key` only rows sharing it pair up: the relation preps once and
+    * the group-pairs exec pairs it inside each key group, the prep
+    * riding along as the payload. Without one the whole prepped
+    * relation broadcasts into a theta join.
     */
   private def selfPairs(
       df: DataFrame,
@@ -135,10 +137,13 @@ object Ann {
       minCos: Double,
       key: Option[String]
   ): DataFrame = {
-    def side(s: String) =
-      prepQ(df, vecCol, s, key.map(col).toSeq :+ col(idCol).as(s): _*)
+    def side(s: String) = prepQ(df, vecCol, s, col(idCol).as(s))
     val joined = key match {
-      case Some(k) => side("a").join(side("b"), Seq(k)).filter(col("a") < col("b"))
+      case Some(k) =>
+        GroupPairs.pairs(prepQ(df, vecCol, "", col(k), col(idCol)),
+          Seq(col(k)), col(idCol), Seq(col("q"), col("n")), Long.MaxValue)
+          .select(col("a"), col("b"), col("q_a").as("qa"), col("n_a").as("na"),
+            col("q_b").as("qb"), col("n_b").as("nb"))
       case None => side("a").join(broadcast(side("b")), col("a") < col("b"))
     }
     joined.withColumn("cos", cosCol)

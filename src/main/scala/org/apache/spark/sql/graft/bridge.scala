@@ -1,14 +1,17 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Ascending, Expression, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.util.AccumulatorV2
 
 /** Bridge into Spark's package-private Column ↔ Expression converters
   * (Spark 4 moved Column onto ColumnNode; libraries adding native
-  * expressions need this hop).
+  * expressions need this hop) and accumulator registration.
   */
 object bridge {
   def toColumn(e: Expression): Column = ExpressionUtils.column(e)
@@ -44,4 +47,18 @@ object bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A sum-typed [[SQLMetric]] whose task values merge by max: a
+    * "largest seen" figure, `set` by each task.
+    */
+  def maxMetric(sc: SparkContext, name: String): SQLMetric = {
+    val m = new MaxMetric
+    m.register(sc, Some(name), countFailedValues = false)
+    m
+  }
+
+  private class MaxMetric extends SQLMetric("sum") {
+    override def copy(): SQLMetric = { val m = new MaxMetric; m.set(value); m }
+    override def merge(o: AccumulatorV2[Long, Long]): Unit = set(math.max(value, o.value))
+  }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.GlobalSeq
-import graft.plans.{PostingPairs, PostingPairsExec, RunningSumExec, TopKPerKey, TopKPerKeyExec}
+import graft.plans.{GroupPairs, GroupPairsExec, RunningSumExec, TopKPerKey, TopKPerKeyExec}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
@@ -17,9 +17,9 @@ object CustomExecs {
       "TopKPerKeyExec" -> TopKPerKey
         .topKPerKey(df, Seq(col("k")), Seq(col("id").desc), 1)
         .queryExecution.sparkPlan.exists(_.isInstanceOf[TopKPerKeyExec]),
-      "PostingPairsExec" -> PostingPairs
-        .pairs(df, col("k"), col("id"), col("n"), 10L)
-        .queryExecution.sparkPlan.exists(_.isInstanceOf[PostingPairsExec]),
+      "GroupPairsExec" -> GroupPairs
+        .pairs(df, Seq(col("k")), col("id"), Seq(col("n")), 10L)
+        .queryExecution.sparkPlan.exists(_.isInstanceOf[GroupPairsExec]),
       "RunningSumExec" -> GlobalSeq
         .withRunningSum(df, Seq(col("id")), col("n"), "sum")
         .queryExecution.sparkPlan.exists(_.isInstanceOf[RunningSumExec]))

@@ -547,4 +547,54 @@ class PlanShapeSpec extends SparkTestBase {
       graft.layout.Layout.dropWithLocation(spark, tbl)
     }
   }
+
+  test("keyed self pair faces pair inside key groups: each pair step is " +
+    "one GroupPairsExec over one shuffle, and no join pairs on a group key") {
+    import graft.plans.GroupPairsExec
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, HashJoin, SortMergeJoinExec}
+    val groupKeys = Set("band", "h", "key", "prior", "shingle", "shingle_b", "list_id", "bucket")
+    def shufflesUnder(p: SparkPlan): Seq[SparkPlan] = p match {
+      case s @ (_: ShuffleQueryStageExec | _: ShuffleExchangeExec) => Seq(s)
+      case o => o.children.flatMap(shufflesUnder)
+    }
+    for (face <- Seq("q_dedup_ngram_jaccard", "q_dedup_jaccard_prefix",
+        "q_dedup_minhash_lsh", "q_dedup_semantic", "q_dedup_embedding_cosine",
+        "q_dedup_simhash", "q_dedup_simhash128", "q_mm_dhash_neardup",
+        "q_audio_fingerprint_pairs")) {
+      val df = Registry.byName(face).fn(spark, dir)
+      df.collect()
+      val nodes = deepNodes(df.queryExecution.executedPlan)
+      val execs = nodes.collect { case e: GroupPairsExec => e }
+      assert(execs.nonEmpty, s"$face plans no GroupPairsExec")
+      for (e <- execs)
+        assert(shufflesUnder(e.child).size == 1, s"$face:\n$e")
+      val keyed = nodes.collect {
+        case j: HashJoin => j.leftKeys ++ j.rightKeys
+        case j: SortMergeJoinExec => j.leftKeys ++ j.rightKeys
+      }.flatten.flatMap(_.collect { case a: AttributeReference => a.name })
+      assert(!keyed.exists(groupKeys), s"$face joins on a group key: $keyed")
+      assert(!nodes.exists(n => n.isInstanceOf[BroadcastNestedLoopJoinExec] ||
+        n.isInstanceOf[CartesianProductExec]), s"$face plans a nested-loop join")
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("keyed Ann self faces quantize each vector once: one quantize_1m, " +
+    "in a projection, no isnotnull filter over it") {
+    import graft.plans.QuantizeExpr
+    import org.apache.spark.sql.execution.ProjectExec
+    for (face <- Seq("q_dedup_semantic", "q_dedup_embedding_cosine")) {
+      val df = Registry.byName(face).fn(spark, dir)
+      df.collect()
+      val quantizing = allNodes(df.queryExecution.executedPlan).filter(
+        _.expressions.exists(_.exists(_.isInstanceOf[QuantizeExpr])))
+      assert(quantizing.size == 1 && quantizing.head.isInstanceOf[ProjectExec] &&
+        quantizing.head.expressions.map(_.collect { case q: QuantizeExpr => q }.size).sum == 1,
+        s"$face:\n${df.queryExecution.executedPlan}")
+    }
+  }
 }

@@ -7,7 +7,8 @@ import scala.jdk.CollectionConverters._
 /** Source-scan guards over `src/main/scala`: session wiring stays in
   * one file, a `*Udf` name stays a Spark UDF, global running sums go
   * through the one running-sum operator, near-dup pairs go through
-  * the one exact verify, Hamming pairs through the one band cover, the
+  * the one exact verify, Hamming pairs through the one band cover,
+  * keyed self pairs through the one group-pairs operator, the
   * exact sub-document faces through the one occurrence core and the one
   * in-row rebuild, the similarity faces through the one exact quantized
   * cosine, and each native array kernel's loop is written once.
@@ -165,5 +166,22 @@ class SourceGuardSpec extends AnyFunSuite {
       if text.contains(word)
     } yield s"$path: $word"
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("one group-pairs operator") {
+    // the old posting-pair operator's name, spelled in parts so a grep
+    // over src finds only uses
+    val gone = Seq("Posting", "Pairs").mkString
+    val offenders = sources.collect {
+      case (path, text) if text.contains(gone) => path.toString
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // a keyed self join's a < b filter: self pairs come from the exec
+    val selfJoin = java.util.regex.Pattern.quote(""".filter(col("a") < col("b"))""").r
+    val counts = for {
+      (path, text) <- sources
+      if Seq("dedup", "similarity").exists(d => path.startsWith(Paths.get(s"src/main/scala/graft/$d")))
+    } yield path -> selfJoin.findAllIn(text).size
+    assert(counts.map(_._2).sum == 0, counts.filter(_._2 > 0).mkString("\n"))
   }
 }

@@ -1019,7 +1019,7 @@ class TextDedupSpec extends SparkTestBase {
     assert(out(0).getString(1) == "a b c d e f")
     assert(out(1).isNullAt(1) && out(1).isNullAt(2) && out(1).isNullAt(3))
     assert(out(2) .getString(1) == "" && out(2).getLong(3) == 6L)
-    // the incremental path shares spanRebuild — same passthrough
+    // the incremental path shares rebuildAt — same passthrough
     val inc = Dedup.removeDuplicateSpansAgainst(
         Seq((10L, null.asInstanceOf[String])).toDF("doc_id", "text"),
         Seq((1L, "a b c")).toDF("doc_id", "text"),
