@@ -385,14 +385,15 @@ private[dedup] trait SimHashOps { self: Dedup.type =>
       case Some(_) => verified.select(pairCols: _*).distinct()
     }
     // a collapsed side's print expands to its docs: each doc pair
-    // within k arises from exactly one unit pair
+    // within k arises from exactly one unit pair (self-face unit pairs
+    // have distinct prints; a cross unit pair expands to every new ×
+    // history doc pair of its two prints, a shared id included)
     def expand(pairs: DataFrame, fp: DataFrame, ws: Seq[String], u: String) =
       pairs.drop(u).join(
         fp.select(col("__u").as(u) +: pw.zip(ws).map { case (p, w) => col(p).as(w) }: _*), ws)
     val expanded =
       if (!collapse) unitPairs
-      else expand(expand(unitPairs.withColumn("__same", col("__ua") === col("__ub")),
-        lf, aw, "__ua"), rf, bw, "__ub").filter(!col("__same") || col("__ua") < col("__ub"))
+      else expand(expand(unitPairs, lf, aw, "__ua"), rf, bw, "__ub")
     val (ia, ib) =
       if (right.isEmpty) (least(col("__ua"), col("__ub")), greatest(col("__ua"), col("__ub")))
       else (col("__ua"), col("__ub"))

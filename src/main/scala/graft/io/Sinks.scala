@@ -154,10 +154,7 @@ object Sinks {
     val spark = df.sparkSession
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (batchId >= 0L &&
-      lastAppliedShardBatch(fs, root).exists {
-        case (tag, id) => tag == batchTag && batchId <= id
-      }) {
+    if (batchId >= 0L && applied(fs, root, batchTag, batchId)) {
       // replayed micro-batch: already on disk, emit an empty summary
       val schema = org.apache.spark.sql.types.StructType(
         Seq("shard", "n_docs", "n_tokens", "min_start", "max_end").map(
@@ -173,7 +170,7 @@ object Sinks {
         spark.read.parquet(path).agg(max(col("end_off"))).first().getLong(0)
       else 0L
     val summary = writeShards(df, idCol, textCol, path, tokensPerShard, base, "append")
-    if (batchId >= 0L) recordShardBatch(fs, root, batchId, batchTag)
+    if (batchId >= 0L) recordBatch(fs, root, batchId, batchTag)
     summary
   }
 
@@ -219,15 +216,27 @@ object Sinks {
     df.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), summary.schema)
   }
 
-  /** Last (batchTag, batchId) applied to the shard corpus at `root`,
-    * or None if the `_last_batch` manifest is absent (cold start /
-    * pre-manifest corpus) OR unreadable/malformed — a truncated or
-    * torn manifest (non-atomic object-store rename, partial create)
-    * must degrade to the documented at-least-once re-append window,
-    * not permanently crash every subsequent micro-batch. Manifest
-    * format: tag line, then id line.
+  /** Whether `_last_batch` at `root` records `batchTag` at or past
+    * `batchId` — the shard sink's and the streaming driver's replay rule.
     */
-  private[graft] def lastAppliedShardBatch(
+  private[graft] def applied(
+      fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path,
+      batchTag: String,
+      batchId: Long): Boolean =
+    lastAppliedBatch(fs, root).exists {
+      case (tag, id) => tag == batchTag && batchId <= id
+    }
+
+  /** Last (batchTag, batchId) applied at `root`, or None if the
+    * `_last_batch` manifest is absent (cold start / pre-manifest
+    * corpus) OR unreadable/malformed — a truncated or torn manifest
+    * (non-atomic object-store rename, partial create) must degrade to
+    * the documented at-least-once re-append window, not permanently
+    * crash every subsequent micro-batch. Manifest format: tag line,
+    * then id line.
+    */
+  private[graft] def lastAppliedBatch(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): Option[(String, Long)] = {
     val m = new org.apache.hadoop.fs.Path(root, "_last_batch")
@@ -252,9 +261,9 @@ object Sinks {
     * all). Caveat: object stores (s3a) implement rename as
     * copy+delete, so no manifest scheme is atomic there — a torn read
     * degrades to the at-least-once re-append window via
-    * [[lastAppliedShardBatch]]'s fail-open parse.
+    * [[lastAppliedBatch]]'s fail-open parse.
     */
-  private def recordShardBatch(
+  private[graft] def recordBatch(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path,
       batchId: Long,

@@ -373,7 +373,7 @@ object Pipeline {
 
     Outputs(
       segments = segDf,
-      metaAll = ChannelMeta.build(segDf, selectedOnly = false),
+      metaAll = ChannelMeta.build(segDf),
       metaSelected = ChannelMeta.buildSelected(segDf),
       skips = gateSkips.union(abortSkips),
       videoErrors = videoErrors,

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.io.{Publisher, Retry}
+import graft.io.{Publisher, Retry, Sinks}
 import graft.plans.GramHash
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
@@ -41,18 +41,7 @@ object Incremental {
       tries: Int = 10,
       sleepMs: Long = 0L
   ): StreamingQuery =
-    stream.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Retry.withRetry(tries, sleepMs)(publisher.publish(batchId, branch, batch)) match {
-          case Right(_) => ()
-          case Left(err) =>
-            throw new RuntimeException(s"publish failed after $tries tries: $err")
-        }
-      }
-      .start()
+    publishBatches(stream, publisher, branch, checkpointDir, tries, sleepMs)(identity)
 
   /** T2 — the ingested-id set as streaming state: exact dedup by key
     * with watermark-bounded state instead of a hardcoded 370-entry
@@ -78,23 +67,64 @@ object Incremental {
       tries: Int = 10,
       sleepMs: Long = 0L
   ): StreamingQuery =
-    segments
-      .filter(col("selected"))
-      .writeStream
+    publishBatches(segments.filter(col("selected")), publisher, branch,
+      checkpointDir, tries, sleepMs) { batch =>
+      graft.meta.ChannelMeta.toJsonDocs(graft.meta.ChannelMeta.buildSelected(batch))
+    }
+
+  /** The one publish body: `docs(batch)` through the retried Publisher. */
+  private def publishBatches(
+      stream: DataFrame,
+      publisher: Publisher,
+      branch: String,
+      checkpointDir: String,
+      tries: Int,
+      sleepMs: Long)(docs: DataFrame => DataFrame): StreamingQuery =
+    eachBatch(stream, checkpointDir) { (batch, batchId) =>
+      Retry.withRetry(tries, sleepMs)(publisher.publish(batchId, branch, docs(batch))) match {
+        case Right(_) => ()
+        case Left(err) =>
+          throw new RuntimeException(s"publish failed after $tries tries: $err")
+      }
+    }
+
+  /** The one micro-batch driver of every sink face: Append output, the
+    * checkpoint at `checkpointDir`, an AvailableNow trigger, and `body`
+    * per micro-batch; `release` frees stream-lifetime caches when the
+    * query terminates ([[unpersistOnTermination]]).
+    *
+    * Replay guard: foreachBatch is at-least-once, so each finished
+    * batch id is recorded in the checkpoint's `_last_batch` record (tag
+    * = `checkpointDir`), and a batch at or below it skips `body`. It
+    * still runs into the no-op sink: the engine requires every stateful
+    * operator to commit each batch. A crash between `body` and the
+    * record replays the batch into the sink, which absorbs it on its
+    * own terms (Overwrite slot, shard manifest, idempotent Publisher) —
+    * all but the bucketed append of [[refreshStream]]. A torn record
+    * reads as absent (fails open); idle drains write nothing.
+    */
+  private def eachBatch(
+      df: DataFrame,
+      checkpointDir: String,
+      release: Option[() => Unit] = None)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    val query = df.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val meta = graft.meta.ChannelMeta.buildSelected(batch)
-        Retry.withRetry(tries, sleepMs)(
-          publisher.publish(batchId, branch, graft.meta.ChannelMeta.toJsonDocs(meta))
-        ) match {
-          case Right(_) => ()
-          case Left(err) =>
-            throw new RuntimeException(s"meta publish failed after $tries tries: $err")
+        val root = new org.apache.hadoop.fs.Path(checkpointDir)
+        val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+        if (Sinks.applied(fs, root, checkpointDir, batchId))
+          batch.write.format("noop").mode("overwrite").save()
+        else {
+          body(batch, batchId)
+          Sinks.recordBatch(fs, root, batchId, checkpointDir)
         }
       }
       .start()
+    release.fold(query)(r => unpersistOnTermination(df.sparkSession, query)(r()))
+  }
 
   /** Streaming face of the text-curation funnel: the per-row stages
     * (language/quality/token gates, PII redaction, chunking) are
@@ -159,26 +189,20 @@ object Incremental {
       expectedItems = math.max(1000000L, history.count()))
     val curated = curationStream(novel, idCol, textCol, eventTimeCol, cfg, watermarkDelay)
       .select(col(idCol), col("lang_pred"), col("clean_text"))
-    curated.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        if (s.catalog.tableExists(tableName))
-          graft.layout.Layout.appendBucketed(batch, tableName)
-        else
-          graft.layout.Layout.writeBucketed(batch, tableName, idCol, buckets)
-        // foreachBatch executes in a CLONED session whose insertInto
-        // auto-refresh touches only the clone's relation cache — the
-        // OWNING session (which started the query and will read the
-        // table) would otherwise keep a stale file listing for any
-        // table it had already scanned before this append (bit us as
-        // "restart appended nothing": the append was on disk, the
-        // reader's cached listing predated it)
-        owner.catalog.refreshTable(tableName)
-      }
-      .start()
+    eachBatch(curated, checkpointDir) { (batch, _) =>
+      if (batch.sparkSession.catalog.tableExists(tableName))
+        graft.layout.Layout.appendBucketed(batch, tableName)
+      else
+        graft.layout.Layout.writeBucketed(batch, tableName, idCol, buckets)
+      // foreachBatch executes in a CLONED session whose insertInto
+      // auto-refresh touches only the clone's relation cache — the
+      // OWNING session (which started the query and will read the
+      // table) would otherwise keep a stale file listing for any
+      // table it had already scanned before this append (bit us as
+      // "restart appended nothing": the append was on disk, the
+      // reader's cached listing predated it)
+      owner.catalog.refreshTable(tableName)
+    }
   }
 
   /** Streaming face of the training-shard sink: every micro-batch of
@@ -191,11 +215,8 @@ object Incremental {
     * table is identical to one batch `writeTrainingShards` over the
     * accumulated corpus (StreamBatchParitySpec proves it).
     *
-    * The batchId is passed through to the sink's `_last_batch`
-    * manifest, so an at-least-once replay of a committed micro-batch
-    * (crash between parquet append and checkpoint commit) is a no-op
-    * instead of a silent double-append at fresh offsets
-    * (StreamBatchParitySpec drives the replay).
+    * The batchId also goes to the sink's own `_last_batch` manifest,
+    * which closes the driver's crash window for this sink.
     */
   def shardStream(
       docs: DataFrame, // streaming; (idCol, textCol)
@@ -204,20 +225,13 @@ object Incremental {
       path: String,
       checkpointDir: String,
       tokensPerShard: Long): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // checkpointDir as the manifest tag: batchIds are only
-        // monotone within one checkpoint lineage — a fresh checkpoint
-        // restarts at 0 and must not be swallowed by a stale manifest
-        graft.io.Sinks
-          .appendTrainingShards(batch, idCol, textCol, path, tokensPerShard,
-            batchId = batchId, batchTag = checkpointDir)
-        ()
-      }
-      .start()
+    eachBatch(docs, checkpointDir) { (batch, batchId) =>
+      // checkpointDir as the manifest tag: batchIds restart at 0 under
+      // a fresh checkpoint, which a stale manifest must not swallow
+      Sinks.appendTrainingShards(batch, idCol, textCol, path, tokensPerShard,
+        batchId = batchId, batchTag = checkpointDir)
+      ()
+    }
 
   /** Streaming NEAR-DUP front door — the stage the lambda split
     * deferred to batch, as bounded LSH bucket state: each arriving
@@ -355,13 +369,8 @@ object Incremental {
     * cannot change the pair set: the union of per-batch outputs equals
     * the one-shot batch join over the accumulated new docs, under ANY
     * batching (StreamBatchParitySpec proves it, including a
-    * kill+resume from the checkpoint).
-    *
-    * Each batch's pairs land in a batchId-keyed subdirectory written
-    * with Overwrite, so an at-least-once replay of a committed
-    * micro-batch (crash between write and checkpoint commit) rewrites
-    * the same rows instead of double-appending — read the result as
-    * one partitioned relation at `outPath`.
+    * kill+resume from the checkpoint). Each batch's pairs land in its
+    * Overwrite slot ([[slotStream]]).
     */
   def containmentStream(
       docs: DataFrame, // streaming; (idCol, textCol)
@@ -373,7 +382,7 @@ object Incremental {
       n: Int = 3,
       minContainment: Double = 0.8,
       maxDf: Long = 1000L): StreamingQuery =
-    containmentBatches(docs, history, idCol, textCol, outPath,
+    containmentSlots(docs, history, idCol, textCol, outPath,
       checkpointDir, n, minContainment, maxDf)((_, pairs) => pairs)
 
   /** The DROP action of [[containmentStream]] — what a real ingest
@@ -385,9 +394,7 @@ object Incremental {
     * (doc, STATIC history), so the union of per-batch survivors equals
     * the one-shot batch filter over the accumulated input under ANY
     * batching — StreamBatchParitySpec proves it, including kill+resume.
-    * Same idempotent batchId-keyed Overwrite sink as the pairs face:
-    * an at-least-once replay rewrites the same rows. Read the clean
-    * corpus as one partitioned relation at `outPath`.
+    * Survivors land in the batch's Overwrite slot ([[slotStream]]).
     */
   def containmentFilterStream(
       docs: DataFrame, // streaming; (idCol, textCol, ...) — rows pass through
@@ -399,27 +406,19 @@ object Incremental {
       n: Int = 3,
       minContainment: Double = 0.8,
       maxDf: Long = 1000L): StreamingQuery =
-    containmentBatches(docs, history, idCol, textCol, outPath,
+    containmentSlots(docs, history, idCol, textCol, outPath,
       checkpointDir, n, minContainment, maxDf) { (batch, pairs) =>
       // containmentDedupAgainst's anti-join, over the held pair frame
       batch.join(pairs.select(col("new_id").as(idCol)).distinct(),
         Seq(idCol), "left_anti")
     }
 
-  /** The one `foreachBatch` body of the containment streams: probe each
-    * micro-batch against the stream-lifetime history index and write
-    * `emit(batch, pairs)` to the batch's idempotent Overwrite slot.
-    * The history (containing) side — shingle pass, posting explode,
-    * hot-set aggregation — is a pure function of (history, n, maxDf):
-    * it is built ONCE per stream, cached, instead of once per
-    * micro-batch (a per-batch rebuild re-ran the standing corpus's
-    * shingle UDF and posting build — the dominant per-batch cost, and
-    * at 100 TB a full corpus pass per ingest drop). It is released when
-    * the stream terminates ([[unpersistOnTermination]]); each batch's
-    * pair frame is released after its write, so a long-running ingest
-    * never pins one pair-list cache per batch.
+  /** The containment slots: the history index (shingle pass, posting
+    * explode, hot set — a pure function of (history, n, maxDf)) is
+    * built and cached once per stream; each batch's pair frame against
+    * it feeds `emit` and is released after the batch's write.
     */
-  private def containmentBatches(
+  private def containmentSlots(
       docs: DataFrame,
       history: DataFrame,
       idCol: String,
@@ -431,21 +430,29 @@ object Incremental {
       maxDf: Long)(emit: (DataFrame, DataFrame) => DataFrame): StreamingQuery = {
     val hist = graft.dedup.Dedup.prepareContainmentHistory(
       history, idCol, textCol, n, maxDf)
-    val query = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val pairs = graft.dedup.Dedup.containmentPairsAgainstPrepared(
-          batch, textCol, minContainment, hist)
-        emit(batch, pairs).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outPath/batch=$batchId")
-        pairs.unpersist()
-        ()
-      }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query)(hist.unpersist())
+    slotStream(docs, outPath, checkpointDir, () => hist.unpersist()) { batch =>
+      val pairs = graft.dedup.Dedup.containmentPairsAgainstPrepared(
+        batch, textCol, minContainment, hist)
+      (emit(batch, pairs), Seq(pairs))
+    }
   }
+
+  /** The one slot body: each batch's rows from `emit` are written with
+    * Overwrite to `outPath/batch=<id>` (read the result as one
+    * partitioned relation at `outPath`; a replay rewrites the same
+    * rows), then the per-batch caches `emit` returned are released.
+    */
+  private def slotStream(
+      docs: DataFrame,
+      outPath: String,
+      checkpointDir: String,
+      releaseIndex: () => Unit)(
+      emit: DataFrame => (DataFrame, Seq[DataFrame])): StreamingQuery =
+    eachBatch(docs, checkpointDir, Some(releaseIndex)) { (batch, batchId) =>
+      val (rows, held) = emit(batch)
+      rows.write.mode(SaveMode.Overwrite).parquet(s"$outPath/batch=$batchId")
+      held.foreach(_.unpersist())
+    }
 
   /** Release stream-lifetime caches when `query` terminates. Two
     * complementary paths, both draining one idempotent release guard:
@@ -534,8 +541,8 @@ object Incremental {
     * of the accumulated input under ANY batching — batch-internal
     * ranking would make a doc's output depend on which batch its
     * duplicate landed in (StreamBatchParitySpec proves the parity,
-    * kill+resume, and replay idempotence). Same batchId-keyed
-    * Overwrite sink as the containment faces.
+    * kill+resume, and replay idempotence). Same slot as the
+    * containment faces ([[slotStream]]).
     */
   def spanScrubStream(
       docs: DataFrame, // streaming; (idCol, textCol)
@@ -545,29 +552,14 @@ object Incremental {
       outPath: String,
       checkpointDir: String,
       windowTokens: Int = 50): StreamingQuery = {
-    // The standing corpus's distinct window-digest index is a pure
-    // function of (history, windowTokens): build and cache it once per
-    // stream — each micro-batch previously re-windowed the full
-    // history (the scaladoc's "persisted window index a refresh loop
-    // maintains" posture, now actually held across batches). Released
-    // on stream termination.
+    // the standing corpus's distinct window digests, cached once per stream
     val histIdx = graft.dedup.Dedup
       .historySpanIndex(history, idCol, textCol, windowTokens)
       .cache()
-    val query = docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Dedup
-          .removeDuplicateSpansAgainstIndex(batch, histIdx, idCol,
-            textCol, windowTokens, batchInternal = false)
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(s"$outPath/batch=$batchId")
-        ()
-      }
-      .start()
-    unpersistOnTermination(docs.sparkSession, query)(histIdx.unpersist(): Unit)
+    slotStream(docs, outPath, checkpointDir, () => histIdx.unpersist(): Unit) { batch =>
+      (graft.dedup.Dedup.removeDuplicateSpansAgainstIndex(batch, histIdx, idCol,
+        textCol, windowTokens, batchInternal = false), Nil)
+    }
   }
 
   /** Streaming face of the native bottom-k sampler

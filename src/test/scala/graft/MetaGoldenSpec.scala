@@ -18,7 +18,7 @@ class MetaGoldenSpec extends SparkTestBase {
 
   test("metaAll JSON is byte-stable with sorted videos and ordered segments") {
     val json = ChannelMeta
-      .toJsonDocs(ChannelMeta.build(segs, selectedOnly = false))
+      .toJsonDocs(ChannelMeta.build(segs))
       .orderBy("channel_id")
       .collect()
       .map(r => s"${r.getString(0)}\t${r.getString(1)}")

@@ -11,7 +11,8 @@ import scala.jdk.CollectionConverters._
   * keyed self pairs through the one group-pairs operator, the
   * exact sub-document faces through the one occurrence core and the one
   * in-row rebuild, the similarity faces through the one exact quantized
-  * cosine, and each native array kernel's loop is written once.
+  * cosine, each native array kernel's loop is written once, and every
+  * streaming sink face starts through the one micro-batch driver.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -183,5 +184,18 @@ class SourceGuardSpec extends AnyFunSuite {
       if Seq("dedup", "similarity").exists(d => path.startsWith(Paths.get(s"src/main/scala/graft/$d")))
     } yield path -> selfJoin.findAllIn(text).size
     assert(counts.map(_._2).sum == 0, counts.filter(_._2 > 0).mkString("\n"))
+  }
+
+  test("one streaming front door") {
+    // the one micro-batch driver: one writeStream, one trigger policy,
+    // and one caller of the stream-lifetime release
+    val needles = Seq(
+      java.util.regex.Pattern.quote("writeStream").r,
+      java.util.regex.Pattern.quote("Trigger.AvailableNow()").r,
+      """(?<!def )\bunpersistOnTermination\(""".r)
+    for (needle <- needles) {
+      val counts = sources.map { case (path, text) => path -> needle.findAllIn(text).size }
+      assert(counts.map(_._2).sum == 1, s"$needle:\n" + counts.filter(_._2 > 0).mkString("\n"))
+    }
   }
 }

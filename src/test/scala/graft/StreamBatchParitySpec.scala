@@ -718,7 +718,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     // 5. manifest recorded the final batch of the lineage
     val fs = org.apache.hadoop.fs.FileSystem.getLocal(
       spark.sparkContext.hadoopConfiguration)
-    val last = graft.io.Sinks.lastAppliedShardBatch(
+    val last = graft.io.Sinks.lastAppliedBatch(
       fs, new org.apache.hadoop.fs.Path(streamPath))
     assert(last.exists(_._2 == 1L), s"manifest should end at batch 1, got $last")
   }
@@ -794,7 +794,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     for (corrupt <- Seq("ck1", "", "ck1\nnot-a-number")) {
       val out = fs.create(manifest, true)
       try out.write(corrupt.getBytes("UTF-8")) finally out.close()
-      assert(graft.io.Sinks.lastAppliedShardBatch(
+      assert(graft.io.Sinks.lastAppliedBatch(
         fs, new org.apache.hadoop.fs.Path(path)).isEmpty,
         s"malformed manifest ${corrupt.replace("\n", "\\n")} did not fail open")
     }
@@ -804,7 +804,7 @@ class StreamBatchParitySpec extends SparkTestBase {
     val hi = src.filter($"doc_id" >= 100L && $"doc_id" < 150L)
     graft.io.Sinks.appendTrainingShards(
       hi, "doc_id", "text", path, 512L, batchId = 1L, batchTag = "ck1")
-    assert(graft.io.Sinks.lastAppliedShardBatch(
+    assert(graft.io.Sinks.lastAppliedBatch(
       fs, new org.apache.hadoop.fs.Path(path)).contains(("ck1", 1L)))
     val n = spark.read.parquet(path).count()
     assert(n == lo.count() + hi.count())
@@ -1235,5 +1235,102 @@ class StreamBatchParitySpec extends SparkTestBase {
     assert(want.exists(_._3 == 0), "fixture sanity: some doc is untouched")
     assert(r2.toSet == want,
       s"stream ${r2.size} vs batch ${want.size}")
+  }
+
+  test("every sink face: a replayed micro-batch leaves the sink's rows unchanged") {
+    import spark.implicits._
+    // each face drains once, then loses its last checkpoint commit —
+    // the crash window between the sink write and the commit — and
+    // restarts on the same checkpoint, which replays that batch under
+    // the same id
+    // seeded English documents: every third history doc quotes a new
+    // doc whole, so the containment and span faces have hits
+    val words = ("the of and to in is that it for on with as was by at from this " +
+      "data table hash sort corpus paper model river city music garden").split(" ")
+    def text(i: Long): String = {
+      val r = new scala.util.Random(i)
+      Seq.fill(24 + (i % 17).toInt)(words(r.nextInt(words.length))).mkString(" ")
+    }
+    val docs = (0L until 90L).map(i => (i, text(i))).toDF("doc_id", "text")
+    val history = (100L until 190L).map { i =>
+      (i, if (i % 3L == 0L) s"${text(i)} ${text(i - 100L)} ${text(i + 1000L)}" else text(i))
+    }.toDF("doc_id", "text")
+    val root = Files.createTempDirectory("graftreplay")
+    def input(name: String, df: org.apache.spark.sql.DataFrame) = {
+      val dir = root.resolve(s"in_$name")
+      df.write.parquet(dir.resolve("a").toString)
+      spark.readStream.schema(df.schema).parquet(dir.toString + "/*")
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).toSeq.sorted
+    val refreshTable = "graft_replay_refresh_t"
+    val changed = scala.collection.mutable.ListBuffer[String]()
+    def replay(face: String)(start: String => org.apache.spark.sql.streaming.StreamingQuery)(
+        sink: => org.apache.spark.sql.DataFrame): Unit = {
+      val ckpt = root.resolve(s"ckpt_$face")
+      start(ckpt.toString).awaitTermination()
+      val before = rows(sink)
+      assert(before.nonEmpty, s"$face: fixture sanity, the sink holds rows")
+      val commits = ckpt.resolve("commits")
+      val last = commits.toFile.list().filter(_.forall(_.isDigit)).map(_.toLong).max
+      Files.delete(commits.resolve(last.toString))
+      Files.deleteIfExists(commits.resolve(s".$last.crc"))
+      start(ckpt.toString).awaitTermination()
+      assert(Files.exists(commits.resolve(last.toString)), s"$face: batch $last was not replayed")
+      val after = rows(sink)
+      if (after != before) changed += s"$face: ${before.size} -> ${after.size} rows"
+    }
+
+    val pub = root.resolve("pub").toString
+    val videos = input("videos", Seq((1L, "a"), (2L, "a"), (3L, "b")).toDF("video_id", "channel_id"))
+    replay("publishStream") { ck =>
+      Incremental.publishStream(videos, new graft.io.LocalPublisher(s"$pub/v"), "main", ck)
+    }(spark.read.parquet(s"$pub/v/main/batch_*"))
+
+    val segs = input("segs", Seq(
+      graft.schema.SegmentRow("ch1", "vidA", 0, graft.schema.VadSpan(0, 16000),
+        Seq.empty, 25.0, 0.95, selected = true),
+      graft.schema.SegmentRow("ch1", "vidA", 1, graft.schema.VadSpan(32000, 48000),
+        Seq.empty, 8.0, 0.2, selected = false),
+      graft.schema.SegmentRow("ch2", "vidB", 0, graft.schema.VadSpan(0, 16000),
+        Seq.empty, 22.0, 0.91, selected = true)).toDF())
+    replay("publishSelectedSegments") { ck =>
+      Incremental.publishSelectedSegments(segs, new graft.io.LocalPublisher(s"$pub/s"), "main", ck)
+    }(spark.read.parquet(s"$pub/s/main/batch_*"))
+
+    val timed = input("timed",
+      docs.withColumn("ets", timestamp_micros((col("doc_id") + 1L) * 1000L)))
+    try {
+      replay("refreshStream") { ck =>
+        Incremental.refreshStream(timed, history.select("doc_id"), "doc_id", "text", "ets",
+          refreshTable, ck)
+      }(graft.layout.Layout.readTable(spark, refreshTable))
+    } finally graft.layout.Layout.dropWithLocation(spark, refreshTable)
+
+    val plain = input("plain", docs)
+    val shards = root.resolve("shards").toString
+    replay("shardStream") { ck =>
+      Incremental.shardStream(plain, "doc_id", "text", shards, ck, tokensPerShard = 512L)
+    }(spark.read.parquet(shards))
+
+    val pairs = root.resolve("pairs").toString
+    replay("containmentStream") { ck =>
+      Incremental.containmentStream(plain, history, "doc_id", "text", pairs, ck,
+        maxDf = Long.MaxValue)
+    }(spark.read.parquet(pairs))
+
+    val kept = root.resolve("kept").toString
+    replay("containmentFilterStream") { ck =>
+      Incremental.containmentFilterStream(plain, history, "doc_id", "text", kept, ck,
+        maxDf = Long.MaxValue)
+    }(spark.read.parquet(kept))
+
+    val scrubbed = root.resolve("scrubbed").toString
+    replay("spanScrubStream") { ck =>
+      Incremental.spanScrubStream(plain, history, "doc_id", "text", scrubbed, ck,
+        windowTokens = 8)
+    }(spark.read.parquet(scrubbed))
+
+    assert(changed.isEmpty, changed.mkString("; "))
   }
 }

@@ -786,6 +786,37 @@ class TextDedupSpec extends SparkTestBase {
     assert(cross.forall { case (a, b, _) => a % 3 == 0 || b % 3 == 0 })
   }
 
+  test("hammingPairsAgainst64: the collapsed and the uncollapsed cover both " +
+    "equal the brute-force new x history predicate") {
+    import spark.implicits._
+    // a re-delivered doc (id 3 on both sides) sharing its print with
+    // other docs on both sides, plus a 2-bit neighbour in the history
+    val p = 0x0123456789ABCDEFL
+    val newCore = Seq((3L, p), (5L, p))
+    val histCore = Seq((3L, p), (4L, p), (6L, p ^ 5L))
+    // far, distinct prints: past half the docs distinct, the cover
+    // runs on the docs themselves instead of their distinct prints
+    val rnd = new scala.util.Random(7)
+    def pad(from: Long) = (0L until 12L).map(i => (from + i, rnd.nextLong()))
+    def brute(nw: Seq[(Long, Long)], hs: Seq[(Long, Long)]) = (for {
+      (a, x) <- nw
+      (b, y) <- hs
+      h = java.lang.Long.bitCount(x ^ y).toLong
+      if h <= 3L
+    } yield (a, b, h)).toSet
+    val cases = Seq(
+      "collapsed" -> (newCore, histCore),
+      "uncollapsed" -> (newCore ++ pad(100L), histCore ++ pad(200L)))
+    for ((label, (nw, hs)) <- cases) {
+      val got = Dedup
+        .hammingPairsAgainst64(nw.toDF("id", "fp"), hs.toDF("id", "fp"), "id", "fp",
+          maxHamming = 3)
+        .select("new_id", "hist_id", "hamming").as[(Long, Long, Long)].collect().toSet
+      assert(got == brute(nw, hs), s"$label: got $got")
+    }
+    assert(brute(newCore, histCore).size == 6)
+  }
+
   test("exactNormalized collapses reformatted copies, keeps real edits") {
     val corpus = Seq(
       (1L, "Hello, World! This is fine."),
